@@ -101,3 +101,41 @@ def test_text_bridge():
     t = build_avro_text([("id", "long")], [[5], [6]])
     text, fields = avro_extract_text(t)
     assert fields == "id" and text == "id\n5\n6"
+
+
+def test_deflate_bomb_block_hits_the_shared_cap():
+    """A deflate block that inflates past the 64 MiB cap must stop at the
+    cap and land in the ``bomb`` class, never inflate in full."""
+    import zlib
+
+    from tika_wrap_spark.core.avrobin import MAX_TOTAL_BYTES
+
+    header = build_avro([("id", "long")], [], codec="deflate")
+    sync = header[-16:]
+    c = zlib.compressobj(9, zlib.DEFLATED, -15)
+    body = c.compress(b"\x00" * (65 * 1024 * 1024)) + c.flush()
+    data = header + _w_zigzag(1) + _w_zigzag(len(body)) + body + sync
+    with pytest.raises(ExtractError, match="avro: inflated payload exceeds %d" % MAX_TOTAL_BYTES):
+        avro_extract(data)
+
+
+def test_truncated_deflate_block_raises():
+    import zlib
+
+    header = build_avro([("id", "long")], [], codec="deflate")
+    c = zlib.compressobj(6, zlib.DEFLATED, -15)
+    body = (c.compress(b"\x02" * 64) + c.flush())[:-2]  # no end-of-stream
+    data = header + _w_zigzag(64) + _w_zigzag(len(body)) + body + header[-16:]
+    with pytest.raises(ExtractError, match="avro: truncated deflate block"):
+        avro_extract(data)
+
+
+@pytest.mark.parametrize("ftype", ["?string", "string?"])
+def test_null_union_in_either_order(ftype):
+    """The union branch indexes the schema as written: ["null","string"]
+    encodes a string as branch 1, ["string","null"] as branch 0."""
+    data = build_avro([("tag", ftype)], [["x"], [None], ["yz"]])
+    string_branch = b"\x02" if ftype == "?string" else b"\x00"
+    assert string_branch + b"\x02x" in data  # branch, zigzag length 1, 'x'
+    text, _f = avro_extract(data)
+    assert text.split("\n") == ["tag", "x", "", "yz"]

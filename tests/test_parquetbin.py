@@ -129,3 +129,19 @@ def test_text_bridge():
     t = build_parquet_text(["id"], [[5], [6]], ["long"])
     text, cols = parquet_extract_text(t)
     assert cols == "id" and text == "id\n5\n6"
+
+
+@pytest.mark.parametrize(
+    "ptype,width", [("INT32", 4), ("INT64", 8), ("FLOAT", 4), ("DOUBLE", 8)]
+)
+def test_truncated_fixed_width_page_raises(ptype, width):
+    """INT32/INT64/FLOAT/DOUBLE values past the end of the page are a
+    'parquet:' error, not an escaping struct.error (-> 'internal:')."""
+    from tika_wrap_spark.core import parquetbin
+
+    ptype = getattr(parquetbin, "_P_" + ptype)
+    _plain_values = parquetbin._plain_values
+    values, end = _plain_values(b"\x00" * (3 * width), ptype, 3)
+    assert len(values) == 3 and end == 3 * width
+    with pytest.raises(ExtractError, match="parquet: values overrun page"):
+        _plain_values(b"\x00" * (3 * width - 1), ptype, 3)

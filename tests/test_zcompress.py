@@ -226,3 +226,24 @@ class TestConcatenatedMembers:
         two = extract_document([{"kind": "gzip", "text": split, "media_ref": "", "offset": 0}])
         assert one["parse_ok"] and two["parse_ok"]
         assert [s["text"] for s in one["spans"]] == [s["text"] for s in two["spans"]]
+
+
+_HAS_XZ = shutil.which("xz") is not None
+
+
+@pytest.mark.skipif(not _HAS_XZ, reason="no system xz")
+@pytest.mark.parametrize("between", [True, False], ids=["between", "trailing"])
+@pytest.mark.parametrize("pad", [1, 3, 4])
+def test_xz_stream_padding_matches_cli(pad, between):
+    """Stream padding must be a multiple of 4 bytes (xz file format §2.2):
+    unxz accepts and rejects exactly what ``xz -dc`` does."""
+    from tika_wrap_spark.core.gzipbin import unxz, xz_bytes
+
+    data = xz_bytes(b"alpha ") + b"\x00" * pad + (xz_bytes(b"beta") if between else b"")
+    cli = subprocess.run(["xz", "-dc"], input=data, capture_output=True)
+    if cli.returncode == 0:
+        assert unxz(data) == cli.stdout
+    else:
+        with pytest.raises(ExtractError, match="xz: stream padding"):
+            unxz(data)
+    assert (cli.returncode == 0) == (pad % 4 == 0)

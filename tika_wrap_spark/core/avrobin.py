@@ -19,14 +19,17 @@ natively (Avro 1.11 specification, "Object Container Files"):
 
 Schema support is the practical tabular subset: a top-level ``record``
 whose fields are primitives (null/boolean/int/long/float/double/
-bytes/string) or a ``["null", primitive]`` union — the shape tabular
-exports actually use. Anything else raises an honest seam. Rows flatten
+bytes/string) or a two-branch null union in either order
+(``["null", primitive]`` or ``[primitive, "null"]``; the encoded branch
+number indexes the union as written) — the shape tabular exports
+actually use. Anything else raises an honest seam. Rows flatten
 to one csv-shaped text block (field-name header + one comma-joined line
 per record), the dbf/sqlite convention; field names land in the
 ``avro_fields`` meta key.
 
 Malformed files (bad magic, missing schema, sync mismatch, truncated
-varint/block, unsupported schema/codec, over-budget inflation) raise
+varint/block, unsupported schema/codec, deflate blocks inflating past the
+shared 64 MiB cap in total) raise
 :class:`ExtractError` ("avro:" prefix) -> ``parse_ok=false`` rows, never
 task failures. Payloads travel bytes-as-text (latin-1) like zip/tar.
 """
@@ -106,32 +109,31 @@ def _read_meta_map(r: _Reader) -> dict[str, bytes]:
 
 
 def _field_type(ftype) -> str:
-    """Normalize a field schema to its primitive name; '?'-prefixed for a
-    ["null", primitive] union. Raises on anything deeper."""
+    """Normalize a field schema to its primitive name: '?'-prefixed for a
+    ["null", primitive] union, '?'-suffixed for [primitive, "null"].
+    Raises on anything deeper."""
     if isinstance(ftype, str) and ftype in _PRIMITIVES:
         return ftype
     if isinstance(ftype, dict) and ftype.get("type") in _PRIMITIVES:
         return ftype["type"]
-    if (
-        isinstance(ftype, list)
-        and len(ftype) == 2
-        and "null" in ftype
-    ):
-        other = ftype[0] if ftype[1] == "null" else ftype[1]
+    if isinstance(ftype, list) and len(ftype) == 2 and "null" in ftype:
+        null_first = ftype[0] == "null"
+        other = ftype[1] if null_first else ftype[0]
         if isinstance(other, str) and other in _PRIMITIVES:
-            return "?" + other
+            return "?" + other if null_first else other + "?"
     raise ExtractError("avro: unsupported field schema %r" % (ftype,))
 
 
 def _decode_value(r: _Reader, ftype: str):
-    if ftype.startswith("?"):
+    if "?" in ftype:
         branch = r.zigzag()
         if branch not in (0, 1):
             raise ExtractError("avro: bad union branch %d" % branch)
-        # ["null", X]: branch indexes the schema list as written
-        if branch == 0:
+        # the branch indexes the union as written: the null branch is 0
+        # for ["null", X] ('?X') and 1 for [X, "null"] ('X?')
+        if branch == (0 if ftype[0] == "?" else 1):
             return None
-        return _decode_value(r, ftype[1:])
+        return _decode_value(r, ftype.strip("?"))
     if ftype == "null":
         return None
     if ftype == "boolean":
@@ -189,6 +191,7 @@ def avro_extract(data: bytes) -> tuple[str, str]:
 
     lines = [",".join(name for name, _t in fields)]
     n_records = 0
+    inflated = 0
     while r.pos < len(r.data):
         count = r.zigzag()
         size = r.zigzag()
@@ -196,16 +199,20 @@ def avro_extract(data: bytes) -> tuple[str, str]:
             raise ExtractError("avro: negative block framing")
         block = r.take(size)
         if codec == "deflate":
+            # capped like gunzip: never flush() past the budget, and a
+            # block that stops short of its end marker is truncated
             d = zlib.decompressobj(-15)
             try:
-                block = d.decompress(block, MAX_TOTAL_BYTES)
-                block += d.flush()
+                block = d.decompress(block, MAX_TOTAL_BYTES + 1 - inflated)
             except zlib.error as exc:
                 raise ExtractError("avro: deflate failed: %s" % exc)
-            if d.unconsumed_tail:
+            inflated += len(block)
+            if inflated > MAX_TOTAL_BYTES:
                 raise ExtractError(
-                    "avro: block inflates past %d bytes" % MAX_TOTAL_BYTES
+                    "avro: inflated payload exceeds %d bytes" % MAX_TOTAL_BYTES
                 )
+            if not d.eof:
+                raise ExtractError("avro: truncated deflate block")
         if r.take(16) != sync:
             raise ExtractError("avro: sync marker mismatch after block")
         br = _Reader(block)
@@ -245,10 +252,11 @@ def _w_bytes(b: bytes) -> bytes:
 
 
 def _encode_value(v, ftype: str) -> bytes:
-    if ftype.startswith("?"):
+    if "?" in ftype:
+        null_branch = 0 if ftype[0] == "?" else 1
         if v is None:
-            return _w_zigzag(0)
-        return _w_zigzag(1) + _encode_value(v, ftype[1:])
+            return _w_zigzag(null_branch)
+        return _w_zigzag(1 - null_branch) + _encode_value(v, ftype.strip("?"))
     if ftype == "null":
         return b""
     if ftype == "boolean":
@@ -271,7 +279,8 @@ def build_avro(
     block_records: int = 64,
 ) -> bytes:
     """Serialize rows as an Avro object container file. ``fields`` uses the
-    same type notation the reader emits ('long', 'string', '?string', ...);
+    same type notation the reader emits ('long', 'string', '?string',
+    'string?', ...);
     the sync marker derives deterministically from the schema+row count."""
     schema = {
         "type": "record",
@@ -279,7 +288,11 @@ def build_avro(
         "fields": [
             {
                 "name": n,
-                "type": (["null", t[1:]] if t.startswith("?") else t),
+                "type": (
+                    ["null", t[1:]] if t.startswith("?")
+                    else [t[:-1], "null"] if t.endswith("?")
+                    else t
+                ),
             }
             for n, t in fields
         ],

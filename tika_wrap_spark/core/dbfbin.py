@@ -5,7 +5,8 @@ The reference reaches DBF through Tika's DBFParser
 parse the 32-byte file header, the 32-byte field descriptors, and the
 fixed-width record array, and emit one csv-shaped text block (header line
 of field names, one comma-joined line per active record) — the same
-table-to-text shape the sqlite path uses.
+table-to-text shape the sqlite path uses. Field names land in the
+``dbf_fields`` meta key.
 
 Layout (dBase III+, the format every xBase tool writes):
   byte 0        version (0x03 plain table; 0x83/0x8B memo variants parse

@@ -8,6 +8,23 @@ This is the analog of the reference's whole parse path
   * flat string/string metadata    (``meta.txt`` JSON flatten, :290-305)
   * per-document boolean status    (:316-325; failures are data, not crashes)
 
+Container subkinds land in the ``container_format`` meta key:
+  * a CFB document lands 'ole-doc'/'ole-xls'/'ole-ppt'/'ole-msg'
+    (core/olebin.py);
+  * a zip whose ``mimetype`` marker member (ODF 1.3 §3.3 / EPUB OCF,
+    ``ODF_MARKER``) names an OpenDocument type lands 'odf-odt'/'odf-ods'/
+    'odf-odp' ('odf-other' for unknown subtypes), ``application/epub+zip``
+    lands 'epub'; content.xml strips through the generic xml-member path,
+    epub chapters ride the html extractor, and the marker member is never
+    emitted as content;
+  * an OPC zip with .fdseq/.fpage members lands 'xps', checked BEFORE the
+    OOXML marker (a real .xps also carries [Content_Types].xml); page text
+    comes from Glyphs/@UnicodeString attributes (html.xps_fpage_text) and
+    the fdseq/fdoc structure members are never emitted or counted;
+  * a PDF carrying /EmbeddedFiles (PDF 32000-1 §7.7.4 name tree, §7.11.4
+    embedded file streams) lands 'pdf-attach': each attachment recurses
+    like an archive member, counted in ``n_container_entries``.
+
 Output span contract (the north_star invariant): an ``offset``-ordered
 ``array<struct<kind,text,media_ref,offset>>`` where ``offset`` is the running
 sum of preceding kept-text lengths; per-document equality is exact on

@@ -1,6 +1,14 @@
 """Real compressed-stream wrapper decode: gzip (RFC 1952), xz, bz2 —
 pure stdlib (zlib / lzma / bz2) — and UNIX compress ``.Z`` (LZW), a
-hand-rolled variable-width decoder/encoder pair.
+hand-rolled variable-width decoder/encoder pair — and the legacy LZMA
+alone format (``.lzma``, stdlib liblzma FORMAT_ALONE behind strict header
+validation).
+
+The ``.Z`` decoder keeps the reference unlzw's 8-code group alignment,
+relative to the last width change/CLEAR; both directions are
+cross-validated against the system ``gzip -dc`` (tests/test_zcompress.py),
+and ``.lzma`` both directions against ``xz --format=lzma``
+(tests/test_lzma_alone.py).
 
 These are the wrapper shapes a real corpus carries around tar streams and
 single documents (.tar.gz / .tar.xz / .log.bz2 ...). gzip uses ``zlib``
@@ -76,8 +84,9 @@ def gzip_bytes(data: bytes) -> bytes:
 
 def unxz(data: bytes) -> bytes:
     """Decode one or more CONCATENATED xz streams (xz(1): "it is possible
-    to concatenate .xz files as is"; 4-byte-aligned NUL stream padding
-    between streams is legal and stripped)."""
+    to concatenate .xz files as is"). NUL stream padding after a stream is
+    stripped when its length is a multiple of 4 and rejected otherwise,
+    as the xz file format spec (§2.2) and ``xz -dc`` do."""
     if not data.startswith(XZ_MAGIC):
         raise ExtractError("xz: bad magic")
     out = bytearray()
@@ -97,6 +106,8 @@ def unxz(data: bytes) -> bytes:
                 else "xz: inflated payload exceeds %d bytes" % MAX_INFLATED
             )
         remaining = d.unused_data.lstrip(b"\x00")  # inter-stream padding
+        if (len(d.unused_data) - len(remaining)) % 4:
+            raise ExtractError("xz: stream padding is not a multiple of 4 bytes")
         if not remaining:
             return bytes(out)
         if not remaining.startswith(XZ_MAGIC):

@@ -14,6 +14,8 @@ Extraction contract (deterministic):
     the mailto:-stripped value), joined by newlines, in property order.
   * VCF: one text block per VCARD — FN, N/ORG/ADR (structured fields:
     unescaped ';' parts joined by spaces), TITLE, EMAIL, TEL, NOTE.
+  * The first event SUMMARY / first card FN surfaces as the
+    ``ical_summary`` meta key.
   * An unterminated component (BEGIN without its END) raises
     ``ExtractError`` — malformed calendars become ``parse_ok=false``
     rows, never task failures (§2A seq_fail_fast policy).

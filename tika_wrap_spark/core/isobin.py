@@ -26,7 +26,9 @@ the same discipline as :mod:`core.tarbin`/:mod:`core.arbin`:
 Both directions are cross-validated against the system bsdtar
 (libarchive's independent ISO implementation) in tests/test_isobin.py:
 our reader walks bsdtar-written images (SP/RR/PX/NM/TF layout), and
-bsdtar lists/extracts images this builder writes.
+bsdtar lists/extracts images this builder writes. libarchive honors NM
+names only once an ``RR`` entry marks the tree, so the builder's root
+``.`` record carries one.
 
 Malformed images (missing PVD, record/extent overruns, cycles,
 over-budget member bytes) raise :class:`ExtractError` ("iso:" prefix)

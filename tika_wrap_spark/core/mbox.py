@@ -7,7 +7,8 @@ endpoint, /root/reference/src/java-env.cpp:313-314). The rebuild splits
 the mailbox natively and routes each message through the SAME rfc822/MIME
 core the eml kind uses (:mod:`core.eml`), so mbox is a container of
 message containers — bodies and attachments re-sniff and recurse exactly
-like standalone .eml documents.
+like standalone .eml documents. The first message's subject/sender land
+in the shared ``eml_subject``/``eml_from`` meta keys.
 
 Split rules (the mboxrd convention every Unix MUA agrees on):
   * a message starts at a line beginning ``From `` at offset 0 of the line;

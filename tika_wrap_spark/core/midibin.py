@@ -14,7 +14,9 @@ types 0x01-0x06 are extracted; 0x2F ends the track), SysEx ``F0/F7
 <len:varint>`` (skipped by length), and channel messages sized by status
 nibble (2 data bytes, or 1 for program-change/channel-pressure) with
 RUNNING STATUS honored — a data-range byte reuses the previous status,
-the detail naive walkers get wrong. Malformed files raise
+the detail naive walkers get wrong. One text block per carrying track;
+the track count and first track name surface as the ``midi_tracks`` /
+``midi_track_name`` meta keys. Malformed files raise
 :class:`ExtractError` -> ``parse_ok=false`` rows, never task failures.
 
 The builder twin :func:`build_midi` emits real note events between the

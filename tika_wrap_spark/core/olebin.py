@@ -19,6 +19,11 @@ real formats natively, pure stdlib:
     walk (8-byte headers, recVer 0xF containers recurse) collecting
     TextCharsAtom (utf-16le) / TextBytesAtom (cp1252) / CString payloads
     in record order.
+  * Outlook .msg ([MS-OXMSG]): __substg1.0 property streams -> subject +
+    body (subject/sender share the eml_subject/eml_from meta keys).
+
+The subkind ('doc'/'xls'/'ppt'/'msg') lands in ``container_format`` as
+'ole-<subkind>'.
 
 Malformed input raises :class:`ExtractError` (the extraction core converts
 it to a ``parse_ok=false`` row, never a task failure); structural walks are

@@ -199,22 +199,21 @@ def _rle_hybrid_levels(data: bytes, bit_width: int, count: int) -> list[int]:
     return out[:count]
 
 
+_FIXED_WIDTH = {_P_INT32: "i", _P_INT64: "q", _P_FLOAT: "f", _P_DOUBLE: "d"}
+
+
 def _plain_values(data: bytes, ptype: int, n: int) -> tuple[list, int]:
     """Decode n PLAIN values of the physical type; -> (values, consumed)."""
-    if ptype == _P_INT32:
-        end = 4 * n
-        return list(struct.unpack_from("<%di" % n, data, 0)), end
-    if ptype == _P_INT64:
-        end = 8 * n
-        return list(struct.unpack_from("<%dq" % n, data, 0)), end
-    if ptype == _P_FLOAT:
-        end = 4 * n
-        return list(struct.unpack_from("<%df" % n, data, 0)), end
-    if ptype == _P_DOUBLE:
-        end = 8 * n
-        return list(struct.unpack_from("<%dd" % n, data, 0)), end
+    code = _FIXED_WIDTH.get(ptype)
+    if code is not None:
+        end = n * struct.calcsize(code)
+        if n < 0 or end > len(data):
+            raise ExtractError("parquet: values overrun page")
+        return list(struct.unpack_from("<%d%s" % (n, code), data, 0)), end
     if ptype == _P_BOOLEAN:
         end = (n + 7) // 8
+        if n < 0 or end > len(data):
+            raise ExtractError("parquet: values overrun page")
         bits = int.from_bytes(data[:end], "little")
         return [bool((bits >> i) & 1) for i in range(n)], end
     if ptype == _P_BYTE_ARRAY:

@@ -27,8 +27,10 @@ StartHeader, NextHeader, and per-substream digests.
 The builder twin :func:`build_7z` writes solid single-folder archives
 (Copy or LZMA2, optional EncodedHeader) the decoder and — by
 construction from the same public spec — any 7z tool can read; tests
-cross-validate against ``py7zr``/CLI when available and pin hand-built
-spec vectors otherwise. Malformed archives raise :class:`ExtractError`
+cross-validate BOTH directions against the system bsdtar (libarchive's
+independent 7z reader, incl. its LZMA1 coder and the kEncodedHeader
+layout) when available and pin hand-built spec vectors otherwise.
+Malformed archives raise :class:`ExtractError`
 -> ``parse_ok=false`` rows, never task failures.
 """
 

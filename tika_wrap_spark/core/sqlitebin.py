@@ -19,6 +19,9 @@ the untrusted-bytes path:
     column names come from its stored CREATE TABLE sql; an INTEGER
     PRIMARY KEY column is a rowid alias (stored as NULL, value = rowid).
 
+One text block per user table; the first database's table names land
+comma-joined in the ``sqlite_tables`` meta key.
+
 Malformed input raises :class:`ExtractError` (the extraction core turns
 it into a ``parse_ok=false`` row, never a task failure); all page/chain
 walks are bounded and cycle-guarded.

@@ -11,8 +11,8 @@ signature, a 2-byte legacy key, then a flat sequence of attributes
     data  (length bytes)
     checksum (2B LE: sum of data bytes mod 65536)
 
-per MS-OXTNEF §2.1. This core surfaces the message subject and plain
-body, and recurses attachment payloads like archive members (the
+per MS-OXTNEF §2.1. This core surfaces the message subject (in the
+``eml_subject`` meta key shared with eml) and plain body, and recurses attachment payloads like archive members (the
 winmail.dat-hides-the-real-attachment failure mode Tika exists to fix).
 Strings are codepage bytes with a trailing NUL; payloads travel
 bytes-as-text latin-1. Malformed streams raise :class:`ExtractError`

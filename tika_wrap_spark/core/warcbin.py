@@ -21,7 +21,9 @@ HTTP envelope is stripped and the payload surfaces as the member body.
 are skipped (no document content), but still tallied.
 
 Members are named by ``WARC-Target-URI`` (falling back to the record id /
-sequence number) so extraction's archive back-pointers stay meaningful.
+sequence number) so extraction's archive back-pointers stay meaningful;
+the first payload record's target URI surfaces as the ``warc_target``
+meta key.
 Malformed records (bad version line, missing/garbled Content-Length, a
 content block that overruns the payload, missing terminator) raise
 :class:`ExtractError` -> ``parse_ok=false`` rows, never task failures.

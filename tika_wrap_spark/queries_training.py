@@ -9,10 +9,17 @@ integer/string arithmetic.
 
 from __future__ import annotations
 
+import functools
+import hashlib
+import operator
+from pathlib import Path
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from tika_wrap_spark import formats as fm
+from tika_wrap_spark.core.procmemo import proc_memo
 from tika_wrap_spark.operators import curation as cu
 from tika_wrap_spark.operators import dedup as dd
 from tika_wrap_spark.operators import similarity as sim
@@ -1784,8 +1791,6 @@ ORDER BY cos_q DESC, vec_a, vec_b LIMIT 50
 """
 
 
-
-
 def q_dedup_clusters(spark, d):
     """Near-dup CLUSTERS: connected components (min-label propagation) over
     verified STAR edges (member vs bucket-hub, quantized Jaccard >= 0.5) —
@@ -3486,34 +3491,36 @@ def _corpus_df(spark, d):
     )
 
 
-# bump when a corpus/extraction change isn't visible in the 40-doc canary
-# (e.g. a rare-kind-only behavior change) — the store key below hashes the
-# canary docs so most semantic changes invalidate automatically
-_EXTRACT_STORE_VERSION = "14"  # r5 continuation: + parquet
+# the modules whose source decides the store's rows: editing any of them
+# (a fix in a rare-kind parser included) moves the key and rebuilds the store
+_STORE_SOURCES = (
+    "core/*.py", "corpus.py", "data.py", "pipeline.py", "schemas.py",
+    "catalog.py", "operators/extract_ops.py", "operators/skew.py",
+)
+
+
+def _store_source_digest() -> str:
+    """md5 over the ``_STORE_SOURCES`` files, read once per process."""
+    memo = proc_memo("extract_store_sources")
+    if "md5" not in memo:
+        root = Path(__file__).parent
+        h = hashlib.md5()
+        for pattern in _STORE_SOURCES:
+            for path in sorted(root.glob(pattern)):
+                h.update(path.relative_to(root).as_posix().encode() + b"\0")
+                h.update(path.read_bytes())
+        memo["md5"] = h.hexdigest()
+    return memo["md5"]
 
 
 def _extract_store_key(n_docs: int) -> str:
-    """Content key for the shared extracted store: n_docs + adversarial
-    count + a 40-doc extraction canary (driver-side, pure core, ~100 ms).
-    Any change to sniffing/extraction/corpus that touches a common path
-    changes the canary and forces a rebuild; rare-kind-only changes bump
-    ``_EXTRACT_STORE_VERSION`` by hand (CLAUDE.md invariant)."""
-    import hashlib  # noqa: PLC0415
+    """Content key for the shared extracted store: a hash of the source
+    bytes of the modules that produce its rows plus n_docs and the
+    adversarial count."""
+    from tika_wrap_spark.corpus import N_ADVERSARIAL  # noqa: PLC0415
 
-    from tika_wrap_spark import corpus as cp  # noqa: PLC0415
-    from tika_wrap_spark.core.extract import extract_document  # noqa: PLC0415
-
-    h = hashlib.md5()
-    h.update(
-        ("%s|%d|%d" % (_EXTRACT_STORE_VERSION, n_docs, cp.N_ADVERSARIAL)).encode()
-    )
-    for i in range(40):
-        res = extract_document(cp.gen_doc(i, 42)["spans"])
-        h.update(repr((res["parse_ok"], res["error"])).encode())
-        h.update(repr(sorted(res["meta"].items())).encode())
-        for s in res["spans"]:
-            h.update(repr((s["kind"], s["text"], s["media_ref"])).encode())
-    return h.hexdigest()[:16]
+    key = "%s|%d|%d" % (_store_source_digest(), n_docs, N_ADVERSARIAL)
+    return hashlib.md5(key.encode()).hexdigest()[:16]
 
 
 def _extracted_df(spark, d):
@@ -3609,16 +3616,15 @@ def q_container_extract(spark, d):
         F.filter("spans", lambda s: s["media_ref"].startswith("zip://"))
     )
     # try_element_at: failed docs carry meta={} (ANSI element_at would raise)
-    meta_at = lambda k: F.coalesce(F.try_element_at("meta", F.lit(k)), F.lit(""))  # noqa: E731
     return ext.filter(
-        ~meta_at("n_containers").isin("", "0") | F.col("error").contains("container")
+        ~_meta_at("n_containers").isin("", "0") | F.col("error").contains("container")
     ).select(
         "doc_id",
         "parse_ok",
         "error",
-        meta_at("n_containers").alias("n_containers"),
-        meta_at("n_container_entries").alias("n_entries"),
-        meta_at("container_depth").alias("depth"),
+        _meta_at("n_containers").alias("n_containers"),
+        _meta_at("n_container_entries").alias("n_entries"),
+        _meta_at("container_depth").alias("depth"),
         zip_refs.alias("n_zip_media_refs"),
         F.size("spans").alias("n_spans"),
         tw.span_seq_hash("spans").alias("span_seq_hash"),
@@ -3645,70 +3651,24 @@ def q_error_taxonomy(spark, d):
 
 
 def _error_class_col():
-    """The when-chain mapping an extraction error string to its monitoring
-    class — shared by q_error_taxonomy and the soak tool (single source)."""
-    return (
+    """The first-match chain mapping an extraction error string to its
+    monitoring class, generated from ``formats.FORMATS`` between the
+    fixed timeout/bomb head and internal/other tail — shared by
+    q_error_taxonomy and the soak tool (single source)."""
+    err = F.col("error")
+    chain = (
         F.when(F.col("parse_ok"), F.lit("ok"))
-        .when(F.col("error").startswith("timeout:"), F.lit("timeout"))
+        .when(err.startswith("timeout:"), F.lit("timeout"))
         .when(
-            F.col("error").contains("inflated payload exceeds")
-            | F.col("error").contains("exceeds cap"),
+            err.contains("inflated payload exceeds") | err.contains("exceeds cap"),
             F.lit("bomb"),
         )
-        .when(F.col("error").contains("container"), F.lit("container"))
-        .when(
-            F.col("error").startswith("zip:")
-            | F.col("error").startswith("tar:")
-            | F.col("error").startswith("ar:")
-            | F.col("error").startswith("cpio:")
-            | F.col("error").startswith("gzip:")
-            | F.col("error").startswith("xz:")
-            | F.col("error").startswith("bz2:")
-            | F.col("error").startswith("z:")
-            | F.col("error").startswith("lz4:")
-            | F.col("error").startswith("7z:")
-            | F.col("error").startswith("rar:")
-            | F.col("error").startswith("zstd:")
-            | F.col("error").startswith("lzma:")
-            | F.col("error").startswith("iso:")
-            | F.col("error").startswith("cab:"),
-            F.lit("archive"),
-        )
-        .when(
-            F.col("error").contains("PDF") | F.col("error").startswith("pdf:"),
-            F.lit("pdf"),
-        )
-        .when(F.col("error").startswith("rtf:"), F.lit("rtf"))
-        .when(F.col("error").startswith("eml:"), F.lit("eml"))
-        .when(
-            F.col("error").startswith("ole:")
-            | F.col("error").startswith("doc:")
-            | F.col("error").startswith("xls:")
-            | F.col("error").startswith("ppt:")
-            | F.col("error").startswith("msg:"),
-            F.lit("ole"),
-        )
-        .when(
-            F.col("error").startswith("ics:") | F.col("error").startswith("vcf:"),
-            F.lit("ical"),
-        )
-        .when(F.col("error").startswith("sqlite:"), F.lit("sqlite"))
-        .when(F.col("error").startswith("dbf:"), F.lit("dbf"))
-        .when(F.col("error").startswith("avro:"), F.lit("avro"))
-        .when(F.col("error").startswith("parquet:"), F.lit("parquet"))
-        .when(F.col("error").startswith("midi:"), F.lit("midi"))
-        .when(F.col("error").startswith("tnef:"), F.lit("tnef"))
-        .when(F.col("error").startswith("font:"), F.lit("font"))
-        .when(F.col("error").startswith("warc:"), F.lit("warc"))
-        .when(F.col("error").startswith("mbox:"), F.lit("mbox"))
-        .when(F.col("error").startswith("plist:"), F.lit("plist"))
-        .when(
-            F.col("error").contains("tag") | F.col("error").contains("comment")
-            | F.col("error").contains("declaration"),
-            F.lit("html"),
-        )
-        .when(F.col("error").startswith("internal:"), F.lit("internal"))
-        .otherwise(F.lit("other"))
+    )
+    for cls, prefixes, needles in fm.error_classes():
+        conds = [err.startswith(p) for p in prefixes] + [err.contains(n) for n in needles]
+        chain = chain.when(functools.reduce(operator.or_, conds), F.lit(cls))
+    return chain.when(err.startswith("internal:"), F.lit("internal")).otherwise(
+        F.lit("other")
     )
 
 
@@ -3788,14 +3748,13 @@ def q_charset_stats(spark, d):
     Shift-JIS/GBK). The reference inherits this from Tika's text parse path
     (/root/reference/src/java-env.cpp:313)."""
     ext = _extracted_df(spark, d)
-    meta_at = lambda k: F.coalesce(F.try_element_at("meta", F.lit(k)), F.lit(""))  # noqa: E731
     return (
-        ext.filter(meta_at("charset") != "")
+        ext.filter(_meta_at("charset") != "")
         .select(
-            meta_at("charset").alias("charset"),
-            meta_at("n_transcoded").cast("int").alias("n_transcoded"),
+            _meta_at("charset").alias("charset"),
+            _meta_at("n_transcoded").cast("int").alias("n_transcoded"),
             # re-route evidence: the decoded payload sniffed non-text
-            (~F.split(meta_at("kinds"), ",").getItem(0).isin("text", "csv", "json"))
+            (~F.split(_meta_at("kinds"), ",").getItem(0).isin("text", "csv", "json"))
             .cast("int")
             .alias("rerouted"),
         )
@@ -3808,710 +3767,64 @@ def q_charset_stats(spark, d):
     )
 
 
-def q_ole_route(spark, d):
-    """Legacy binary Office (CFB/OLE2) extraction tallies (r5): .doc
-    piece-table, .xls BIFF8, .ppt record-walk, and Outlook .msg
-    property-stream docs route via the CFB magic (core/olebin.py —
-    Tika's POI analog), land their subkind in container_format
-    ('ole-doc'/'ole-xls'/'ole-ppt'/'ole-msg'), and malformed CFB becomes
-    an 'ole' error-taxonomy row, never a task failure."""
+
+def _meta_at(key: str):
+    """A meta value as a string column, '' when the key is absent."""
+    return F.coalesce(F.try_element_at("meta", F.lit(key)), F.lit(""))
+
+
+def _in_store(f: fm.Format):
+    """The store rows of format ``f``: its container_format values or
+    prefix, a ``kinds`` entry, its marker meta key, or one of its error
+    prefixes."""
+    cf = _meta_at("container_format")
+    kinds = F.split(_meta_at("kinds"), ",")
+    conds = [cf.isin(*f.formats)] if f.formats else []
+    conds += [cf.startswith(f.format_prefix)] if f.format_prefix else []
+    conds += [F.array_contains(kinds, k) for k in f.kinds]
+    conds += [_meta_at(f.meta_key) != ""] if f.meta_key else []
+    conds += [F.col("error").startswith(p + ":") for p in f.prefixes]
+    return functools.reduce(operator.or_, conds)
+
+
+def _tally_col(kind: str, key: str):
+    """One column of the formats.py tally vocabulary."""
     from tika_wrap_spark import functions as tw  # noqa: PLC0415
 
-    ext = _extracted_df(spark, d)
-    meta_at = lambda k: F.coalesce(F.try_element_at("meta", F.lit(k)), F.lit(""))  # noqa: E731
-    return (
-        ext.filter(
-            meta_at("container_format").startswith("ole-")
-            | F.col("error").startswith("ole:")
-            | F.col("error").startswith("doc:")
-            | F.col("error").startswith("xls:")
-            | F.col("error").startswith("ppt:")
-            | F.col("error").startswith("msg:")
+    if kind == "parse_ok":
+        return F.col("parse_ok")
+    if kind == "n_spans":
+        return F.size("spans")
+    if kind == "span_seq_hash":
+        return tw.span_seq_hash("spans")
+    if kind == "int":  # un-coalesced: NULL-safe on failed rows under ANSI
+        return F.try_element_at("meta", F.lit(key)).cast("int")
+    v = _meta_at(key)
+    if kind == "count":
+        return F.when(v == "", 0).otherwise(F.size(F.split(v, ",")))
+    if kind == "flag":
+        return (v != "").cast("int")
+    return v  # str
+
+
+def route_tally(name: str):
+    """The registry entry ``<name>_route``: one pruned scan of the
+    extract-once store keeping format ``name``'s rows (formats.py), one
+    row per document: doc_id, then the format's tally columns. Malformed
+    inputs show up as parse_ok=false rows under the format's error
+    prefixes, never as task failures."""
+    f = fm.BY_NAME[name]
+
+    def q(spark, d):
+        return (
+            _extracted_df(spark, d)
+            .filter(_in_store(f))
+            .select(
+                "doc_id", *[_tally_col(k, key).alias(a) for a, k, key in fm.columns(f)]
+            )
         )
-        .select(
-            "doc_id",
-            "parse_ok",
-            meta_at("container_format").alias("ole_kind"),
-            F.size("spans").alias("n_spans"),
-            tw.span_seq_hash("spans").alias("span_seq_hash"),
-        )
-    )
 
-
-def q_odf_route(spark, d):
-    """Mimetype-marker package extraction tallies (late r5): OpenDocument
-    odt/ods/odp and EPUB OCF packages route by their zip ``mimetype``
-    marker member (ODF 1.3 §3.3 / EPUB OCF; core/extract.py ODF_MARKER —
-    Tika's OpenDocumentParser/EpubParser analog,
-    /root/reference/src/java-env.cpp:313), land the subkind in
-    container_format ('odf-odt'/'odf-ods'/'odf-odp'/'epub'), strip
-    content.xml through the generic xml-member path (epub chapters ride
-    the REAL html extractor), and never emit the mimetype member as
-    content."""
-    from tika_wrap_spark import functions as tw  # noqa: PLC0415
-
-    ext = _extracted_df(spark, d)
-    meta_at = lambda k: F.coalesce(F.try_element_at("meta", F.lit(k)), F.lit(""))  # noqa: E731
-    return (
-        ext.filter(
-            meta_at("container_format").startswith("odf-")
-            | (meta_at("container_format") == "epub")
-        )
-        .select(
-            "doc_id",
-            "parse_ok",
-            meta_at("container_format").alias("odf_kind"),
-            F.size("spans").alias("n_spans"),
-            tw.span_seq_hash("spans").alias("span_seq_hash"),
-        )
-    )
-
-
-def q_ical_route(spark, d):
-    """Calendar/contact extraction tallies (late r5): ics/vcf docs route
-    by their RFC 5545/6350 openers (two more sniffer kinds, both forms),
-    extract one text block per VEVENT/VCARD (core/ical.py — Tika's
-    ICalParser/VCardParser analog, /root/reference/src/java-env.cpp:313),
-    surface the first SUMMARY/FN as `ical_summary`, and an unterminated
-    component lands in the 'ical' error-taxonomy class."""
-    from tika_wrap_spark import functions as tw  # noqa: PLC0415
-
-    ext = _extracted_df(spark, d)
-    meta_at = lambda k: F.coalesce(F.try_element_at("meta", F.lit(k)), F.lit(""))  # noqa: E731
-    kinds = F.split(meta_at("kinds"), ",")
-    return (
-        ext.filter(
-            F.array_contains(kinds, "ics")
-            | F.array_contains(kinds, "vcf")
-            | F.col("error").startswith("ics:")
-            | F.col("error").startswith("vcf:")
-        )
-        .select(
-            "doc_id",
-            "parse_ok",
-            meta_at("kinds").alias("kinds"),
-            (meta_at("ical_summary") != "").cast("int").alias("has_summary"),
-            F.size("spans").alias("n_spans"),
-            tw.span_seq_hash("spans").alias("span_seq_hash"),
-        )
-    )
-
-
-def q_sqlite_route(spark, d):
-    """SQLite database extraction tallies (final r5): database files route
-    by the 16-byte offset-0 header magic (sniffer kind 18, both forms) and
-    extract one text block per user table via the hand-rolled b-tree
-    reader (core/sqlitebin.py — Tika's SQLite3Parser analog,
-    /root/reference/src/java-env.cpp:313); table names surface in the
-    `sqlite_tables` meta key and a truncated database lands in the
-    'sqlite' error-taxonomy class, never a task failure."""
-    from tika_wrap_spark import functions as tw  # noqa: PLC0415
-
-    ext = _extracted_df(spark, d)
-    meta_at = lambda k: F.coalesce(F.try_element_at("meta", F.lit(k)), F.lit(""))  # noqa: E731
-    kinds = F.split(meta_at("kinds"), ",")
-    tables = meta_at("sqlite_tables")
-    return (
-        ext.filter(
-            F.array_contains(kinds, "sqlite")
-            | F.col("error").startswith("sqlite:")
-        )
-        .select(
-            "doc_id",
-            "parse_ok",
-            F.when(tables == "", 0)
-            .otherwise(F.size(F.split(tables, ",")))
-            .alias("n_tables"),
-            F.size("spans").alias("n_spans"),
-            tw.span_seq_hash("spans").alias("span_seq_hash"),
-        )
-    )
-
-
-def q_warc_route(spark, d):
-    """WARC web-archive extraction tallies (final r5): crawl files route
-    by the offset-0 'WARC/' version magic (sniffer kind 20, both forms)
-    and extract as one more container kind — each payload-bearing record's
-    HTTP envelope is stripped and the body re-sniffs/recurses, so crawled
-    html pages run the REAL boilerplate stripper (core/warcbin.py — Tika's
-    WARCParser analog, /root/reference/src/java-env.cpp:313-314; this is
-    the Common Crawl ingestion shape a web-scale training pipeline reads).
-    The first record's target URI surfaces in the `warc_target` meta key;
-    a record whose Content-Length overruns the payload lands in the 'warc'
-    error-taxonomy class, never a task failure."""
-    from tika_wrap_spark import functions as tw  # noqa: PLC0415
-
-    ext = _extracted_df(spark, d)
-    meta_at = lambda k: F.coalesce(F.try_element_at("meta", F.lit(k)), F.lit(""))  # noqa: E731
-    return (
-        ext.filter(
-            F.array_contains(F.split(meta_at("kinds"), ","), "warc")
-            | F.col("error").startswith("warc:")
-        )
-        .select(
-            "doc_id",
-            "parse_ok",
-            meta_at("warc_target").alias("warc_target"),
-            F.try_element_at("meta", F.lit("n_container_entries"))
-            .cast("int")
-            .alias("n_records"),
-            F.size("spans").alias("n_spans"),
-            tw.span_seq_hash("spans").alias("span_seq_hash"),
-        )
-    )
-
-
-def q_ar_route(spark, d):
-    """Unix ar / Debian .deb extraction tallies: ar archives route by the
-    offset-0 '!<arch>\\n' global magic (sniffer kind 23, both forms) and
-    extract as one more container kind (core/arbin.py — Tika's
-    commons-compress ArArchiveInputStream analog,
-    /root/reference/src/java-env.cpp:313-314). A .deb's control.tar.gz /
-    data.tar.xz members recurse through the existing gzip/xz wrapper and
-    tar paths — the deepest container chain in the corpus (ar -> wrapper ->
-    tar -> text) — and the ``debian-binary`` marker lands the 'deb' subkind
-    in container_format; a truncated member lands an 'ar:' error in the
-    'archive' taxonomy class, never a task failure."""
-    from tika_wrap_spark import functions as tw  # noqa: PLC0415
-
-    ext = _extracted_df(spark, d)
-    meta_at = lambda k: F.coalesce(F.try_element_at("meta", F.lit(k)), F.lit(""))  # noqa: E731
-    fmt = meta_at("container_format")
-    return (
-        ext.filter(
-            fmt.isin("ar", "deb") | F.col("error").startswith("ar:")
-        )
-        .select(
-            "doc_id",
-            "parse_ok",
-            fmt.alias("container_format"),
-            F.try_element_at("meta", F.lit("container_depth"))
-            .cast("int")
-            .alias("container_depth"),
-            F.size("spans").alias("n_spans"),
-            tw.span_seq_hash("spans").alias("span_seq_hash"),
-        )
-    )
-
-
-def q_cpio_route(spark, d):
-    """cpio archive extraction tallies: SVR4 newc/crc archives route by the
-    guarded offset-0 '07070x' magic (sniffer kind 24, both forms — the
-    next 8 chars must be hex so digits-opener prose never misroutes) and
-    extract as one more container kind (core/cpiobin.py — Tika's
-    commons-compress CpioArchiveInputStream analog,
-    /root/reference/src/java-env.cpp:313-314); members re-sniff and
-    recurse like zip/tar/ar entries; a truncated entry lands a 'cpio:'
-    error in the 'archive' taxonomy class, never a task failure."""
-    from tika_wrap_spark import functions as tw  # noqa: PLC0415
-
-    ext = _extracted_df(spark, d)
-    meta_at = lambda k: F.coalesce(F.try_element_at("meta", F.lit(k)), F.lit(""))  # noqa: E731
-    return (
-        ext.filter(
-            (meta_at("container_format") == "cpio")
-            | F.col("error").startswith("cpio:")
-        )
-        .select(
-            "doc_id",
-            "parse_ok",
-            F.try_element_at("meta", F.lit("n_container_entries"))
-            .cast("int")
-            .alias("n_members"),
-            F.try_element_at("meta", F.lit("container_depth"))
-            .cast("int")
-            .alias("container_depth"),
-            F.size("spans").alias("n_spans"),
-            tw.span_seq_hash("spans").alias("span_seq_hash"),
-        )
-    )
-
-
-def q_z_route(spark, d):
-    """UNIX compress .Z wrapper tallies: streams route by the offset-0
-    '\\x1f\\x9d' magic (sniffer kind 25, both forms) and decode through a
-    hand-rolled variable-width LZW with the reference decoder's 8-code
-    group alignment (core/gzipbin.py unz — Tika's commons-compress
-    ZCompressorInputStream analog,
-    /root/reference/src/java-env.cpp:313-314; the builder twin is
-    cross-validated against the system gzip -dc). The inner stream
-    re-sniffs and recurses (the corpus carries tar.Z); a corrupt stream
-    lands a 'z:' error in the 'archive' taxonomy class, never a task
-    failure."""
-    from tika_wrap_spark import functions as tw  # noqa: PLC0415
-
-    ext = _extracted_df(spark, d)
-    meta_at = lambda k: F.coalesce(F.try_element_at("meta", F.lit(k)), F.lit(""))  # noqa: E731
-    return (
-        ext.filter(
-            (meta_at("container_format") == "z") | F.col("error").startswith("z:")
-        )
-        .select(
-            "doc_id",
-            "parse_ok",
-            F.try_element_at("meta", F.lit("n_container_entries"))
-            .cast("int")
-            .alias("n_members"),
-            F.try_element_at("meta", F.lit("container_depth"))
-            .cast("int")
-            .alias("container_depth"),
-            F.size("spans").alias("n_spans"),
-            tw.span_seq_hash("spans").alias("span_seq_hash"),
-        )
-    )
-
-
-def q_xps_route(spark, d):
-    """XPS/OpenXPS package tallies (continuation r5): an OPC zip whose
-    .fdseq/.fpage member names route container_format to 'xps' BEFORE
-    the OOXML-marker check (a real .xps also carries
-    [Content_Types].xml); page text is read from Glyphs/@UnicodeString
-    ATTRIBUTES (core/html.py xps_fpage_text — the generic element-text
-    strip yields nothing for FixedPages; Tika's XPSParser analog,
-    reached through the AutoParser the reference calls,
-    /root/reference/src/java-env.cpp:313-314). The fdseq/fdoc structure
-    members are package metadata — never emitted, never counted, like
-    the ODF mimetype marker. One pruned store scan."""
-    from tika_wrap_spark import functions as tw  # noqa: PLC0415
-
-    ext = _extracted_df(spark, d)
-    meta_at = lambda k: F.coalesce(F.try_element_at("meta", F.lit(k)), F.lit(""))  # noqa: E731
-    return (
-        ext.filter(meta_at("container_format") == "xps")
-        .select(
-            "doc_id",
-            "parse_ok",
-            F.try_element_at("meta", F.lit("n_container_entries"))
-            .cast("int")
-            .alias("n_members"),
-            F.size("spans").alias("n_spans"),
-            tw.span_seq_hash("spans").alias("span_seq_hash"),
-        )
-    )
-
-
-def q_cab_route(spark, d):
-    """MS Cabinet tallies (continuation r5): cabinets route by the 'MSCF'
-    + zero-reserved1 signature (sniffer kind 35, both forms — the NULs
-    keep 'MSCF'-opener prose out) and extract through the hand-rolled
-    [MS-CAB] walk (core/cabbin.py — CFHEADER/CFFOLDER/CFFILE/CFDATA,
-    the §2.9 XOR-fold checksum VERIFIED per block, Copy and MSZIP
-    folders with the 32 KiB deflate history persisting across blocks;
-    Tika reads cabinets via commons-compress through the same AutoParser
-    the reference calls, /root/reference/src/java-env.cpp:313-314). The
-    builder twin is pinned against the system bsdtar (libarchive's
-    independent cab reader) in tests/test_cabbin.py — Copy and MSZIP
-    both byte-extract. Members re-sniff and recurse ('cab'
-    container_format); a checksum-corrupt block lands a 'cab:' error in
-    the 'archive' taxonomy class, never a task failure. One pruned store
-    scan."""
-    from tika_wrap_spark import functions as tw  # noqa: PLC0415
-
-    ext = _extracted_df(spark, d)
-    meta_at = lambda k: F.coalesce(F.try_element_at("meta", F.lit(k)), F.lit(""))  # noqa: E731
-    return (
-        ext.filter(
-            (meta_at("container_format") == "cab")
-            | F.col("error").startswith("cab:")
-        )
-        .select(
-            "doc_id",
-            "parse_ok",
-            F.try_element_at("meta", F.lit("n_container_entries"))
-            .cast("int")
-            .alias("n_members"),
-            F.try_element_at("meta", F.lit("container_depth"))
-            .cast("int")
-            .alias("container_depth"),
-            F.size("spans").alias("n_spans"),
-            tw.span_seq_hash("spans").alias("span_seq_hash"),
-        )
-    )
-
-
-def q_iso_route(spark, d):
-    """ISO 9660 disc-image tallies (continuation r5): images route by the
-    'CD001' volume-descriptor signature at its fixed past-the-system-area
-    offset 32769 (sniffer kind 34, both forms — the same full-payload
-    fixed-offset shape as the tar rule) and extract through the
-    hand-rolled ECMA-119 walk (core/isobin.py — primary volume
-    descriptor, directory-record recursion with both-endian fields,
-    SUSP/Rock Ridge NM names with continue-flag concatenation; Tika
-    routes application/x-iso9660-image through the same AutoParser the
-    reference calls, /root/reference/src/java-env.cpp:313-314).
-    Cross-validated BOTH directions against the system bsdtar
-    (libarchive's independent ISO implementation) in tests/test_isobin.py
-    — including the RR-entry activation quirk libarchive requires before
-    it honors NM names. Members re-sniff and recurse ('iso'
-    container_format); a truncated image lands an 'iso:' error in the
-    'archive' taxonomy class, never a task failure. One pruned store
-    scan."""
-    from tika_wrap_spark import functions as tw  # noqa: PLC0415
-
-    ext = _extracted_df(spark, d)
-    meta_at = lambda k: F.coalesce(F.try_element_at("meta", F.lit(k)), F.lit(""))  # noqa: E731
-    return (
-        ext.filter(
-            (meta_at("container_format") == "iso")
-            | F.col("error").startswith("iso:")
-        )
-        .select(
-            "doc_id",
-            "parse_ok",
-            F.try_element_at("meta", F.lit("n_container_entries"))
-            .cast("int")
-            .alias("n_members"),
-            F.try_element_at("meta", F.lit("container_depth"))
-            .cast("int")
-            .alias("container_depth"),
-            F.size("spans").alias("n_spans"),
-            tw.span_seq_hash("spans").alias("span_seq_hash"),
-        )
-    )
-
-
-def q_lzma_route(spark, d):
-    """Legacy LZMA alone-format (.lzma) wrapper tallies (continuation
-    r5): streams route by the guarded 0x5D header rule (sniffer kind 33,
-    both forms — properties byte + 64KiB-aligned dictionary + plausible
-    declared size, so ']'-opener prose/binary never misroutes) and
-    decode through stdlib liblzma FORMAT_ALONE with strict header
-    validation and the shared 64 MiB inflation cap (core/gzipbin.py
-    unlzma — Tika's commons-compress LZMACompressorInputStream analog,
-    /root/reference/src/java-env.cpp:313-314). Cross-validated BOTH
-    directions against the system ``xz --format=lzma`` CLI in
-    tests/test_lzma_alone.py. The inner stream re-sniffs and recurses
-    (the corpus carries tar.lzma); a truncated stream lands an 'lzma:'
-    error in the 'archive' taxonomy class, never a task failure. One
-    pruned store scan."""
-    from tika_wrap_spark import functions as tw  # noqa: PLC0415
-
-    ext = _extracted_df(spark, d)
-    meta_at = lambda k: F.coalesce(F.try_element_at("meta", F.lit(k)), F.lit(""))  # noqa: E731
-    return (
-        ext.filter(
-            (meta_at("container_format") == "lzma")
-            | F.col("error").startswith("lzma:")
-        )
-        .select(
-            "doc_id",
-            "parse_ok",
-            F.try_element_at("meta", F.lit("n_container_entries"))
-            .cast("int")
-            .alias("n_members"),
-            F.try_element_at("meta", F.lit("container_depth"))
-            .cast("int")
-            .alias("container_depth"),
-            F.size("spans").alias("n_spans"),
-            tw.span_seq_hash("spans").alias("span_seq_hash"),
-        )
-    )
-
-
-def q_zstd_route(spark, d):
-    """Zstandard wrapper tallies (continuation r5): frames route by the
-    offset-0 0xFD2FB528 LE magic (sniffer kind 32, both forms) and
-    decode through the hand-rolled FULL RFC 8878 decoder
-    (core/zstdbin.py — FSE normalized-count tables, canonical Huffman
-    literals in 1- and 4-stream layouts, interleaved-state weight
-    decode, predefined/RLE/compressed/repeat sequence tables, the
-    three-slot repeat-offset history, skippable frames, xxHash64
-    checksums; Tika's commons-compress ZstdCompressorInputStream analog,
-    /root/reference/src/java-env.cpp:313-314). Cross-validated BOTH
-    directions against the system zstd CLI in tests/test_zstd.py —
-    levels 1..22/--ultra, --long windows, multithreaded multi-frame
-    output. Zstd is the wrapper modern web corpora actually ship
-    (Common Crawl .warc.zst), so the inner stream re-sniffs and recurses
-    (the corpus carries tar.zst); a corrupt frame lands a 'zstd:' error
-    in the 'archive' taxonomy class, never a task failure. One pruned
-    store scan."""
-    from tika_wrap_spark import functions as tw  # noqa: PLC0415
-
-    ext = _extracted_df(spark, d)
-    meta_at = lambda k: F.coalesce(F.try_element_at("meta", F.lit(k)), F.lit(""))  # noqa: E731
-    return (
-        ext.filter(
-            (meta_at("container_format") == "zstd")
-            | F.col("error").startswith("zstd:")
-        )
-        .select(
-            "doc_id",
-            "parse_ok",
-            F.try_element_at("meta", F.lit("n_container_entries"))
-            .cast("int")
-            .alias("n_members"),
-            F.try_element_at("meta", F.lit("container_depth"))
-            .cast("int")
-            .alias("container_depth"),
-            F.size("spans").alias("n_spans"),
-            tw.span_seq_hash("spans").alias("span_seq_hash"),
-        )
-    )
-
-
-def q_rar_route(spark, d):
-    """RAR5 archive extraction tallies (continuation r5): archives route
-    by the offset-0 'Rar!\\x1a\\x07' marker (sniffer kind 31, both forms
-    — v4 and v5 signatures both route here, v4 raising the honest
-    unsupported error) and extract through the header walk in
-    core/rarbin.py (Tika's junrar analog,
-    /root/reference/src/java-env.cpp:313-314): vint-coded header blocks
-    with CRC32 over size-field+data, STORED members extracted with
-    per-member CRC verification, the proprietary compressed methods 1-5
-    raising the declared seam (commons-compress takes the same
-    position). Builder archives are pinned against the system
-    bsdtar/libarchive rar5 reader in tests/test_rarbin.py. Members
-    re-sniff and recurse; a CRC-corrupt member lands a 'rar:' error in
-    the 'archive' taxonomy class, never a task failure. One pruned store
-    scan."""
-    from tika_wrap_spark import functions as tw  # noqa: PLC0415
-
-    ext = _extracted_df(spark, d)
-    meta_at = lambda k: F.coalesce(F.try_element_at("meta", F.lit(k)), F.lit(""))  # noqa: E731
-    return (
-        ext.filter(
-            (meta_at("container_format") == "rar")
-            | F.col("error").startswith("rar:")
-        )
-        .select(
-            "doc_id",
-            "parse_ok",
-            F.try_element_at("meta", F.lit("n_container_entries"))
-            .cast("int")
-            .alias("n_members"),
-            F.try_element_at("meta", F.lit("container_depth"))
-            .cast("int")
-            .alias("container_depth"),
-            F.size("spans").alias("n_spans"),
-            tw.span_seq_hash("spans").alias("span_seq_hash"),
-        )
-    )
-
-
-def q_sevenz_route(spark, d):
-    """7z archive extraction tallies (continuation r5): archives route by
-    the offset-0 '7z\\xbc\\xaf\\x27\\x1c' signature (sniffer kind 30, both
-    forms) and extract through the hand-rolled header walk + stdlib-LZMA
-    folder decode (core/sevenzip.py — Tika's commons-compress SevenZFile
-    analog, /root/reference/src/java-env.cpp:313-314; cross-validated
-    BOTH directions against the system bsdtar/libarchive in
-    tests/test_sevenzip.py, including its LZMA1 coder and the
-    kEncodedHeader layout). Members re-sniff and recurse like zip/tar
-    entries; a CRC-corrupt archive lands a '7z:' error in the 'archive'
-    taxonomy class, never a task failure. One pruned store scan."""
-    from tika_wrap_spark import functions as tw  # noqa: PLC0415
-
-    ext = _extracted_df(spark, d)
-    meta_at = lambda k: F.coalesce(F.try_element_at("meta", F.lit(k)), F.lit(""))  # noqa: E731
-    return (
-        ext.filter(
-            (meta_at("container_format") == "7z")
-            | F.col("error").startswith("7z:")
-        )
-        .select(
-            "doc_id",
-            "parse_ok",
-            F.try_element_at("meta", F.lit("n_container_entries"))
-            .cast("int")
-            .alias("n_members"),
-            F.try_element_at("meta", F.lit("container_depth"))
-            .cast("int")
-            .alias("container_depth"),
-            F.size("spans").alias("n_spans"),
-            tw.span_seq_hash("spans").alias("span_seq_hash"),
-        )
-    )
-
-
-def q_midi_route(spark, d):
-    """Standard-MIDI extraction tallies (continuation r5): files route by
-    the guarded offset-0 'MThd' magic (sniffer kind 29, both forms —
-    header-length high byte must be NUL so 'MThd'-opener prose never
-    misroutes) and extract through the SMF chunk walk (core/midibin.py —
-    Tika's MidiParser analog, /root/reference/src/java-env.cpp:313-314):
-    the six text-class meta events (text/copyright/track name/instrument/
-    lyric/marker) emit one block per carrying track, note/sysex/tempo
-    events are skipped with running status honored; a truncated file
-    lands a 'midi' taxonomy row, never a task failure. One pruned store
-    scan."""
-    from tika_wrap_spark import functions as tw  # noqa: PLC0415
-
-    ext = _extracted_df(spark, d)
-    meta_at = lambda k: F.coalesce(F.try_element_at("meta", F.lit(k)), F.lit(""))  # noqa: E731
-    return (
-        ext.filter(
-            (meta_at("midi_tracks") != "") | F.col("error").startswith("midi:")
-        )
-        .select(
-            "doc_id",
-            "parse_ok",
-            F.try_element_at("meta", F.lit("midi_tracks"))
-            .cast("int")
-            .alias("n_tracks"),
-            meta_at("midi_track_name").alias("track_name"),
-            F.size("spans").alias("n_spans"),
-            tw.span_seq_hash("spans").alias("span_seq_hash"),
-        )
-    )
-
-
-def q_lz4_route(spark, d):
-    """LZ4 frame wrapper tallies: streams route by the offset-0
-    0x184D2204 LE magic (sniffer kind 28, both forms) and decode through
-    a hand-rolled LZ4 block codec + xxHash32 frame checksums
-    (core/lz4bin.py — Tika's commons-compress
-    FramedLZ4CompressorInputStream analog,
-    /root/reference/src/java-env.cpp:313-314; builder AND decoder are
-    cross-validated against the system lz4 CLI in both directions,
-    including block-linked and checksummed layouts). The inner stream
-    re-sniffs and recurses (the corpus carries tar.lz4); a corrupt frame
-    lands an 'lz4:' error in the 'archive' taxonomy class, never a task
-    failure. One pruned store scan."""
-    from tika_wrap_spark import functions as tw  # noqa: PLC0415
-
-    ext = _extracted_df(spark, d)
-    meta_at = lambda k: F.coalesce(F.try_element_at("meta", F.lit(k)), F.lit(""))  # noqa: E731
-    return (
-        ext.filter(
-            (meta_at("container_format") == "lz4")
-            | F.col("error").startswith("lz4:")
-        )
-        .select(
-            "doc_id",
-            "parse_ok",
-            F.try_element_at("meta", F.lit("n_container_entries"))
-            .cast("int")
-            .alias("n_members"),
-            F.try_element_at("meta", F.lit("container_depth"))
-            .cast("int")
-            .alias("container_depth"),
-            F.size("spans").alias("n_spans"),
-            tw.span_seq_hash("spans").alias("span_seq_hash"),
-        )
-    )
-
-
-def q_tnef_route(spark, d):
-    """TNEF winmail.dat extraction tallies (continuation r5): streams
-    route by the offset-0 0x223E9F78 signature (sniffer kind 27, both
-    forms) and extract through the MS-OXTNEF attribute walk
-    (core/tnefbin.py — Tika's TNEFParser analog,
-    /root/reference/src/java-env.cpp:313-314): subject shares the eml
-    meta key, the plain body emits as text, attachments re-sniff and
-    recurse like archive members; a checksum-corrupt stream lands a
-    'tnef:' error in its own taxonomy class, never a task failure. One
-    pruned store scan."""
-    from tika_wrap_spark import functions as tw  # noqa: PLC0415
-
-    ext = _extracted_df(spark, d)
-    meta_at = lambda k: F.coalesce(F.try_element_at("meta", F.lit(k)), F.lit(""))  # noqa: E731
-    return (
-        ext.filter(
-            (meta_at("container_format") == "tnef")
-            | F.col("error").startswith("tnef:")
-        )
-        .select(
-            "doc_id",
-            "parse_ok",
-            meta_at("eml_subject").alias("subject"),
-            F.try_element_at("meta", F.lit("n_container_entries"))
-            .cast("int")
-            .alias("n_attachments"),
-            F.size("spans").alias("n_spans"),
-            tw.span_seq_hash("spans").alias("span_seq_hash"),
-        )
-    )
-
-
-def q_parquet_route(spark, d):
-    """Parquet file tallies (continuation r5): .parquet files route by
-    the 'PAR1'-at-both-ends rule (sniffer kind 37, both forms — the
-    JVM side uses a negative-start substring for the tail check) and
-    decode through the hand-rolled footer walk (core/parquetbin.py —
-    Thrift compact protocol, flat-schema PLAIN v1 data pages,
-    RLE/bit-packed definition levels for nullable columns; dictionary
-    pages, compression codecs and nested schemas raise honest seams).
-    The builder twin is pyarrow — the reference Arrow C++ writer — so
-    every fixture cross-validates the reader against the reference
-    implementation (the sqlite/plist discipline). Columns flatten to
-    one csv-shaped text block, names -> ``parquet_columns`` meta; a
-    corrupt footer lands a 'parquet:' error in its own taxonomy class,
-    never a task failure. One pruned store scan."""
-    from tika_wrap_spark import functions as tw  # noqa: PLC0415
-
-    ext = _extracted_df(spark, d)
-    meta_at = lambda k: F.coalesce(F.try_element_at("meta", F.lit(k)), F.lit(""))  # noqa: E731
-    return (
-        ext.filter(
-            (meta_at("parquet_columns") != "")
-            | F.col("error").startswith("parquet:")
-        )
-        .select(
-            "doc_id",
-            "parse_ok",
-            meta_at("parquet_columns").alias("parquet_columns"),
-            F.size("spans").alias("n_spans"),
-            tw.span_seq_hash("spans").alias("span_seq_hash"),
-        )
-    )
-
-
-def q_avro_route(spark, d):
-    """Avro object-container tallies (continuation r5): .avro files route
-    by the offset-0 'Obj\\x01' magic (sniffer kind 36, both forms) and
-    decode through the hand-rolled varint/zigzag record reader
-    (core/avrobin.py — header metadata map, null/deflate codecs,
-    per-block sync-marker VERIFY; records flatten to one csv-shaped text
-    block, the dbf/sqlite convention; Tika routes avro containers via
-    the AutoParser the reference calls,
-    /root/reference/src/java-env.cpp:313-314). Field names land in the
-    ``avro_fields`` meta key; a sync-corrupt container lands an 'avro:'
-    error in its own taxonomy class, never a task failure. One pruned
-    store scan."""
-    from tika_wrap_spark import functions as tw  # noqa: PLC0415
-
-    ext = _extracted_df(spark, d)
-    meta_at = lambda k: F.coalesce(F.try_element_at("meta", F.lit(k)), F.lit(""))  # noqa: E731
-    return (
-        ext.filter(
-            (meta_at("avro_fields") != "") | F.col("error").startswith("avro:")
-        )
-        .select(
-            "doc_id",
-            "parse_ok",
-            meta_at("avro_fields").alias("avro_fields"),
-            F.size("spans").alias("n_spans"),
-            tw.span_seq_hash("spans").alias("span_seq_hash"),
-        )
-    )
-
-
-def q_dbf_route(spark, d):
-    """dBase table extraction tallies (continuation r5): .dbf files route
-    by the guarded 0x03 version byte (sniffer kind 26, both forms — a
-    plausible last-update date and an xBase field-type letter at offset
-    43 keep other binary out) and extract as one csv-shaped text block
-    per table (core/dbfbin.py — Tika's DBFParser analog,
-    /root/reference/src/java-env.cpp:313-314); deleted records skip; a
-    truncated table lands a 'dbf:' error in its own taxonomy class,
-    never a task failure. One pruned store scan."""
-    from tika_wrap_spark import functions as tw  # noqa: PLC0415
-
-    ext = _extracted_df(spark, d)
-    meta_at = lambda k: F.coalesce(F.try_element_at("meta", F.lit(k)), F.lit(""))  # noqa: E731
-    return (
-        ext.filter(
-            (meta_at("dbf_fields") != "") | F.col("error").startswith("dbf:")
-        )
-        .select(
-            "doc_id",
-            "parse_ok",
-            meta_at("dbf_fields").alias("dbf_fields"),
-            F.size("spans").alias("n_spans"),
-            tw.span_seq_hash("spans").alias("span_seq_hash"),
-        )
-    )
-
+    return q
 
 def q_xml_route(spark, d):
     """XML subkind tallies (continuation r5): the root element of the
@@ -4523,102 +3836,13 @@ def q_xml_route(spark, d):
     ``xml_root`` meta key and tallied per root over the extract-once
     store. One pruned scan + one partial-aggregable groupBy."""
     ext = _extracted_df(spark, d)
-    meta_at = lambda k: F.coalesce(F.try_element_at("meta", F.lit(k)), F.lit(""))  # noqa: E731
     return (
-        ext.filter(meta_at("xml_root") != "")
-        .groupBy(meta_at("xml_root").alias("xml_root"))
+        ext.filter(_in_store(fm.BY_NAME["xml"]))
+        .groupBy(_meta_at("xml_root").alias("xml_root"))
         .agg(
             F.count("*").alias("n_docs"),
             F.sum(F.size("spans")).cast("long").alias("n_spans"),
             F.min("doc_id").alias("first_doc"),
-        )
-    )
-
-
-def q_mbox_route(spark, d):
-    """mbox mailbox extraction tallies (final r5): mailboxes route by the
-    guarded From_ separator (offset-0 'From ' + '@' in the separator line
-    + an rfc5322 header corroborator — sniffer kind 21, both forms) and
-    extract as a container of rfc822 messages, each routed through the
-    SAME eml core (core/mbox.py — Tika's MboxParser analog,
-    /root/reference/src/java-env.cpp:313-314); the first message's
-    subject/sender land in the shared eml_subject/eml_from meta keys and
-    an empty envelope sender lands in the 'mbox' error-taxonomy class."""
-    from tika_wrap_spark import functions as tw  # noqa: PLC0415
-
-    ext = _extracted_df(spark, d)
-    meta_at = lambda k: F.coalesce(F.try_element_at("meta", F.lit(k)), F.lit(""))  # noqa: E731
-    return (
-        ext.filter(
-            (meta_at("container_format") == "mbox")
-            | F.col("error").startswith("mbox:")
-        )
-        .select(
-            "doc_id",
-            "parse_ok",
-            meta_at("eml_subject").alias("first_subject"),
-            F.try_element_at("meta", F.lit("n_containers"))
-            .cast("int")
-            .alias("n_containers"),
-            F.size("spans").alias("n_spans"),
-            tw.span_seq_hash("spans").alias("span_seq_hash"),
-        )
-    )
-
-
-def q_plist_route(spark, d):
-    """Binary property-list extraction tallies (final r5): bplist00
-    payloads route by the offset-0 magic (sniffer kind 22, both forms)
-    and flatten to one keypath-per-line text block via the hand-rolled
-    object-table reader (core/plistbin.py — Tika's PListParser analog,
-    /root/reference/src/java-env.cpp:313; the builder twin is stdlib
-    plistlib, so tests cross-validate the reader against the reference
-    implementation itself). Top-level dict keys land in the `plist_keys`
-    meta key; a truncated plist lands in the 'plist' taxonomy class."""
-    from tika_wrap_spark import functions as tw  # noqa: PLC0415
-
-    ext = _extracted_df(spark, d)
-    meta_at = lambda k: F.coalesce(F.try_element_at("meta", F.lit(k)), F.lit(""))  # noqa: E731
-    keys = meta_at("plist_keys")
-    return (
-        ext.filter(
-            F.array_contains(F.split(meta_at("kinds"), ","), "plist")
-            | F.col("error").startswith("plist:")
-        )
-        .select(
-            "doc_id",
-            "parse_ok",
-            F.when(keys == "", 0)
-            .otherwise(F.size(F.split(keys, ",")))
-            .alias("n_top_keys"),
-            F.size("spans").alias("n_spans"),
-            tw.span_seq_hash("spans").alias("span_seq_hash"),
-        )
-    )
-
-
-def q_font_route(spark, d):
-    """Font-file routing tallies (final r5): sfnt (TrueType/OTTO) and WOFF
-    payloads route by their guarded magics (sniffer kind 19, both forms)
-    and surface naming metadata — `font_family`/`font_name` meta keys, no
-    body spans (core/fontbin.py — Tika's TrueTypeParser analog,
-    /root/reference/src/java-env.cpp:313); a truncated font lands in the
-    'font' error-taxonomy class. Fonts ride archives in this corpus, so
-    the filter keys on the meta/error surfaces, not top-level kinds."""
-    ext = _extracted_df(spark, d)
-    meta_at = lambda k: F.coalesce(F.try_element_at("meta", F.lit(k)), F.lit(""))  # noqa: E731
-    return (
-        ext.filter(
-            (meta_at("font_family") != "")
-            | F.array_contains(F.split(meta_at("kinds"), ","), "font")
-            | F.col("error").startswith("font:")
-        )
-        .select(
-            "doc_id",
-            "parse_ok",
-            meta_at("font_family").alias("font_family"),
-            meta_at("font_name").alias("font_name"),
-            F.size("spans").alias("n_spans"),
         )
     )
 
@@ -4632,35 +3856,15 @@ def q_pdf_security_stats(spark, d):
     (/root/reference/src/java-env.cpp:313); core/pdfbin.py implements
     them natively (core/aes.py FIPS-197 AES underneath)."""
     ext = _extracted_df(spark, d)
-    meta_at = lambda k: F.coalesce(F.try_element_at("meta", F.lit(k)), F.lit(""))  # noqa: E731
     crypt = (
         F.when(F.col("error").startswith("pdf: encrypted"), F.lit("locked"))
-        .otherwise(meta_at("pdf_crypt"))
+        .otherwise(_meta_at("pdf_crypt"))
     )
     return (
         ext.select(crypt.alias("crypt"), F.col("parse_ok").cast("int").alias("ok"))
         .filter(F.col("crypt") != "")
         .groupBy("crypt")
         .agg(F.count("*").alias("n_docs"), F.sum("ok").alias("n_opened"))
-    )
-
-
-def q_pdf_attach_route(spark, d):
-    """PDF /EmbeddedFiles observability (late r5): documents whose PDF
-    carried attachments (PDF 32000-1 §7.7.4 name tree, §7.11.4 embedded
-    file streams) recurse each payload like an archive member — Tika's
-    embedded-document walk (/root/reference/src/java-env.cpp:313). Rows:
-    one per attachment-carrying doc with its entry count and the ordered
-    span hash (the recursion is part of the north_star sequence)."""
-    from tika_wrap_spark import functions as tw  # noqa: PLC0415
-
-    ext = _extracted_df(spark, d)
-    meta_at = lambda k: F.coalesce(F.try_element_at("meta", F.lit(k)), F.lit(""))  # noqa: E731
-    return ext.filter(meta_at("container_format") == "pdf-attach").select(
-        "doc_id",
-        meta_at("n_container_entries").cast("int").alias("n_attachments"),
-        F.size("spans").alias("n_spans"),
-        tw.span_seq_hash("spans").alias("span_seq_hash"),
     )
 
 
@@ -4675,12 +3879,11 @@ def q_pdf_meta_stats(spark, d):
     `pdf_security_stats`: one fused extraction, one partial-aggregable
     groupBy."""
     ext = _extracted_df(spark, d)
-    meta_at = lambda k: F.coalesce(F.try_element_at("meta", F.lit(k)), F.lit(""))  # noqa: E731
-    outline = meta_at("pdf_outline")
+    outline = _meta_at("pdf_outline")
     return (
         ext.filter(F.col("parse_ok"))
         .select(
-            (meta_at("pdf_title") != "").cast("int").alias("has_title"),
+            (_meta_at("pdf_title") != "").cast("int").alias("has_title"),
             (outline != "").cast("int").alias("has_outline"),
             F.when(outline == "", F.lit(0))
             .otherwise(F.size(F.split(outline, " / ")))

@@ -23,34 +23,34 @@ from tika_wrap_spark import queries_training as qt
 
 REGISTRY: dict[str, tuple[Callable, str | None]] = {
     # ---- block 1: round-5 debuts + semantics-changed (star/cap rework) ----
-    "parquet_route": (qt.q_parquet_route, None),
-    "avro_route": (qt.q_avro_route, None),
-    "xps_route": (qt.q_xps_route, None),
+    "parquet_route": (qt.route_tally("parquet"), None),
+    "avro_route": (qt.route_tally("avro"), None),
+    "xps_route": (qt.route_tally("xps"), None),
     "collocations": (qt.q_collocations, qt.SQL_COLLOCATIONS),
     "length_gini": (qt.q_length_gini, qt.SQL_LENGTH_GINI),
     "token_burstiness": (qt.q_token_burstiness, qt.SQL_TOKEN_BURSTINESS),
-    "cab_route": (qt.q_cab_route, None),
-    "iso_route": (qt.q_iso_route, None),
-    "lzma_route": (qt.q_lzma_route, None),
-    "zstd_route": (qt.q_zstd_route, None),
-    "rar_route": (qt.q_rar_route, None),
-    "sevenz_route": (qt.q_sevenz_route, None),
-    "midi_route": (qt.q_midi_route, None),
-    "lz4_route": (qt.q_lz4_route, None),
+    "cab_route": (qt.route_tally("cab"), None),
+    "iso_route": (qt.route_tally("iso"), None),
+    "lzma_route": (qt.route_tally("lzma"), None),
+    "zstd_route": (qt.route_tally("zstd"), None),
+    "rar_route": (qt.route_tally("rar"), None),
+    "sevenz_route": (qt.route_tally("sevenz"), None),
+    "midi_route": (qt.route_tally("midi"), None),
+    "lz4_route": (qt.route_tally("lz4"), None),
     "line_dedup": (qt.q_line_dedup, qt.SQL_LINE_DEDUP),
     "readability": (qt.q_readability, qt.SQL_READABILITY),
     "url_domain_stats": (qt.q_url_domain_stats, qt.SQL_URL_DOMAIN_STATS),
-    "dbf_route": (qt.q_dbf_route, None),
-    "tnef_route": (qt.q_tnef_route, None),
+    "dbf_route": (qt.route_tally("dbf"), None),
+    "tnef_route": (qt.route_tally("tnef"), None),
     "xml_route": (qt.q_xml_route, None),
-    "z_route": (qt.q_z_route, None),
-    "ar_route": (qt.q_ar_route, None),
-    "cpio_route": (qt.q_cpio_route, None),
-    "warc_route": (qt.q_warc_route, None),
-    "mbox_route": (qt.q_mbox_route, None),
-    "plist_route": (qt.q_plist_route, None),
-    "sqlite_route": (qt.q_sqlite_route, None),
-    "font_route": (qt.q_font_route, None),
+    "z_route": (qt.route_tally("z"), None),
+    "ar_route": (qt.route_tally("ar"), None),
+    "cpio_route": (qt.route_tally("cpio"), None),
+    "warc_route": (qt.route_tally("warc"), None),
+    "mbox_route": (qt.route_tally("mbox"), None),
+    "plist_route": (qt.route_tally("plist"), None),
+    "sqlite_route": (qt.route_tally("sqlite"), None),
+    "font_route": (qt.route_tally("font"), None),
     "source_divergence": (qt.q_source_divergence, qt.SQL_SOURCE_DIVERGENCE),
     "ngram_novelty": (qt.q_ngram_novelty, qt.SQL_NGRAM_NOVELTY),
     "lexical_diversity": (qt.q_lexical_diversity, qt.SQL_LEXICAL_DIVERSITY),
@@ -59,12 +59,12 @@ REGISTRY: dict[str, tuple[Callable, str | None]] = {
     "tokenizer_fertility": (qt.q_tokenizer_fertility, qt.SQL_TOKENIZER_FERTILITY),
     "source_vocab_overlap": (qt.q_source_vocab_overlap, qt.SQL_SOURCE_VOCAB_OVERLAP),
     "pdf_security_stats": (qt.q_pdf_security_stats, None),
-    "pdf_attach_route": (qt.q_pdf_attach_route, None),
+    "pdf_attach_route": (qt.route_tally("pdf_attach"), None),
     "pdf_meta_stats": (qt.q_pdf_meta_stats, None),
     "charset_stats": (qt.q_charset_stats, None),
-    "ole_route": (qt.q_ole_route, None),
-    "odf_route": (qt.q_odf_route, None),
-    "ical_route": (qt.q_ical_route, None),
+    "ole_route": (qt.route_tally("ole"), None),
+    "odf_route": (qt.route_tally("odf"), None),
+    "ical_route": (qt.route_tally("ical"), None),
     "exif_meta": (qt.q_exif_meta, None),
     "dedup_edit_distance": (qt.q_dedup_edit_distance, qt.SQL_DEDUP_EDIT_DISTANCE),
     "vocab_growth": (qt.q_vocab_growth, qt.SQL_VOCAB_GROWTH),
