@@ -139,3 +139,41 @@ def test_null_union_in_either_order(ftype):
     assert string_branch + b"\x02x" in data  # branch, zigzag length 1, 'x'
     text, _f = avro_extract(data)
     assert text.split("\n") == ["tag", "x", "", "yz"]
+
+
+def _schema_file(fields) -> bytes:
+    import json
+
+    schema = json.dumps({"type": "record", "name": "r", "fields": fields})
+    meta = b"\x02" + b"\x16avro.schema" + _w_zigzag(len(schema)) + schema.encode()
+    return b"Obj\x01" + meta + b"\x00" + b"\x00" * 16
+
+
+@pytest.mark.parametrize(
+    "fields",
+    [
+        ["id"],  # not a dict
+        [{"type": "long"}],  # no name
+        [{"name": "id"}],  # no type
+        [{"name": 7, "type": "long"}],  # name not a string
+        "id",  # fields not a list
+    ],
+)
+def test_bad_field_schema_raises(fields):
+    with pytest.raises(ExtractError, match="avro: bad field schema"):
+        avro_extract(_schema_file(fields))
+
+
+def test_corpus_bitflip_in_field_schema_is_a_row():
+    """Bit 0 of byte 51 of a corpus avro payload turns a field's "name" key
+    into "oame": the schema error must be an ``avro:`` row, not escape as an
+    ``internal:`` KeyError."""
+    from tika_wrap_spark.core.extract import extract_document
+    from tika_wrap_spark.corpus import gen_doc
+
+    (span,) = gen_doc(422, 42)["spans"]
+    text = span["text"]
+    flipped = text[:51] + chr(ord(text[51]) ^ 1) + text[52:]
+    res = extract_document([{"text": flipped, "media_ref": ""}])
+    assert not res["parse_ok"]
+    assert res["error"].startswith("avro: bad field schema")

@@ -1,0 +1,115 @@
+"""Pins of the extraction dispatch in ``core/extract.py``.
+
+* The whole output of ``extract_document`` over the seed-42 corpus is
+  pinned by one digest, so a dispatch change that moves any span, status,
+  error or meta item (key order included — meta flows through Arrow into
+  the store) fails here. The goldens cannot catch such drift: they are
+  generated by the same ``extract_document``.
+* Every container and wrapper kind, reached 8 gzip layers deep, must
+  report the depth cap (pdf parses first and reports its own error).
+* Truncated and bit-flipped payloads of every dispatched kind must never
+  escape a parser as an ``internal:`` error.
+"""
+
+import hashlib
+import json
+import random
+
+import pytest
+
+from tika_wrap_spark.core.extract import (
+    _ARCHIVE_PARSERS,
+    _HANDLERS,
+    _WRAPPER_DECODERS,
+    extract_document,
+)
+from tika_wrap_spark.core.gzipbin import gzip_text
+from tika_wrap_spark.core.sniff import sniff_kind
+from tika_wrap_spark.corpus import generate_corpus
+
+# md5 over json.dumps([spans, parse_ok, error, list(meta.items())]) of
+# every document of generate_corpus(2000, seed=42), in corpus order
+CORPUS_42_DIGEST = "8270a1cdf715fa48fa750b571b3ff1d8"
+
+_DEPTH_ERROR = "container nesting exceeds depth 8"
+# error of a truncated sample of each kind under 8 gzip layers; a pdf
+# only checks depth once it has parsed (and only for attachments)
+DEPTH_CAP_ERRORS = {
+    **{
+        kind: _DEPTH_ERROR
+        for kind in (
+            "zip tar ar cpio 7z rar iso cab gzip xz bz2 z lz4 zstd lzma"
+            " eml tnef mbox warc"
+        ).split()
+    },
+    "pdf": "truncated PDF stream: missing %%EOF",
+}
+
+DISPATCH_KINDS = sorted({*_ARCHIVE_PARSERS, *_WRAPPER_DECODERS, *_HANDLERS})
+
+
+@pytest.fixture(scope="module")
+def corpus42():
+    return generate_corpus(2000, seed=42)
+
+
+@pytest.fixture(scope="module")
+def samples(corpus42):
+    """kind -> (doc_id, text, media_ref) of the first 3 corpus payloads
+    sniffing as that kind."""
+    out: dict[str, list[tuple[str, str, str]]] = {}
+    for row in corpus42:
+        for span in row["spans"]:
+            text = span.get("text") or ""
+            media_ref = span.get("media_ref") or ""
+            group = out.setdefault(sniff_kind(text, media_ref), [])
+            if len(group) < 3:
+                group.append((row["doc_id"], text, media_ref))
+    return out
+
+
+def test_corpus_output_digest(corpus42):
+    h = hashlib.md5()
+    for row in corpus42:
+        res = extract_document(row["spans"])
+        h.update(
+            json.dumps(
+                [res["spans"], res["parse_ok"], res["error"], list(res["meta"].items())]
+            ).encode()
+        )
+    assert len(corpus42) == 2040
+    assert h.hexdigest() == CORPUS_42_DIGEST
+
+
+@pytest.mark.parametrize("kind", sorted(DEPTH_CAP_ERRORS))
+def test_depth_cap_order(samples, kind):
+    text = next(t for _d, t, _m in samples[kind] if sniff_kind(t, "") == kind)
+    # cut short, but keep the magic: ISO's CD001 sits at offset 32769
+    cut = text[: 32769 + 64] if kind == "iso" else text[:300]
+    assert sniff_kind(cut, "") == kind
+    for _ in range(8):
+        cut = gzip_text(cut)
+    res = extract_document([{"text": cut, "media_ref": ""}])
+    assert not res["parse_ok"]
+    assert res["error"] == DEPTH_CAP_ERRORS[kind]
+
+
+@pytest.mark.parametrize("kind", DISPATCH_KINDS)
+def test_structural_robustness(samples, kind):
+    """Truncations at 1/4, 1/2, 3/4 and 8 seeded single-bit flips of up to
+    3 corpus payloads per kind: bad input is a row, never ``internal:``."""
+    assert samples.get(kind), "no corpus sample sniffs as %s" % kind
+    escaped = []
+    for doc_id, text, media_ref in samples[kind]:
+        n = len(text)
+        variants = [text[: n * q // 4] for q in (1, 2, 3)]
+        rng = random.Random("%s/%s" % (kind, doc_id))
+        for _ in range(8 if n else 0):
+            pos, bit = rng.randrange(n), rng.randrange(8)
+            flipped = chr(ord(text[pos]) ^ (1 << bit))
+            variants.append(text[:pos] + flipped + text[pos + 1 :])
+        for v, payload in enumerate(variants):
+            res = extract_document([{"text": payload, "media_ref": media_ref}])
+            if res["error"].startswith("internal:"):
+                escaped.append((doc_id, v, res["error"]))
+    assert escaped == []

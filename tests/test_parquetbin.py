@@ -145,3 +145,48 @@ def test_truncated_fixed_width_page_raises(ptype, width):
     assert len(values) == 3 and end == 3 * width
     with pytest.raises(ExtractError, match="parquet: values overrun page"):
         _plain_values(b"\x00" * (3 * width - 1), ptype, 3)
+
+
+# single-bit flips of one corpus parquet payload (gen_doc(390, 42)), one
+# per place where a mistyped footer or page-header field used to escape as
+# a TypeError/AttributeError (-> 'internal:') instead of a 'parquet:' row
+_FOOTER_FLIPS = {
+    "page offset is a double": (818, 0),
+    "physical type is binary": (728, 2),
+    "schema list holds binaries": (709, 2),
+    "column name is a list": (727, 0),
+    "row groups is an i32": (777, 4),
+    "row groups is a binary": (778, 2),
+    "row count is a list": (792, 5),
+    "column chunks is a bool": (792, 3),
+    "column chunks hold binaries": (793, 2),
+    "page offset is a list": (804, 0),
+    "value count is a list": (803, 5),
+    "page size is a struct": (12, 0),
+    "page size is a double": (8, 1),
+    "page type is missing": (4, 5),
+}
+
+
+@pytest.mark.parametrize("pos,bit", _FOOTER_FLIPS.values(), ids=list(_FOOTER_FLIPS))
+def test_corpus_bitflip_in_footer_is_a_row(pos, bit):
+    from tika_wrap_spark.core.extract import extract_document
+    from tika_wrap_spark.corpus import gen_doc
+
+    (span,) = gen_doc(390, 42)["spans"]
+    text = span["text"]
+    flipped = text[:pos] + chr(ord(text[pos]) ^ (1 << bit)) + text[pos + 1 :]
+    with pytest.raises(ExtractError, match="parquet: "):
+        parquet_extract_text(flipped)
+    assert extract_document([{"text": flipped, "media_ref": ""}])["error"].startswith(
+        "parquet: "
+    )
+
+
+def test_struct_map_key_raises():
+    """A thrift map keyed by a struct cannot become a dict key."""
+    from tika_wrap_spark.core.parquetbin import _T_MAP, _TReader
+
+    # one entry, key type struct (an empty one), value type i32
+    with pytest.raises(ExtractError, match="parquet: unhashable thrift map key"):
+        _TReader(b"\x01\xc5\x00\x02").value(_T_MAP)

@@ -179,9 +179,14 @@ def avro_extract(data: bytes) -> tuple[str, str]:
         raise ExtractError("avro: bad schema json: %s" % exc)
     if not (isinstance(schema, dict) and schema.get("type") == "record"):
         raise ExtractError("avro: only record schemas are supported")
-    fields = [
-        (f["name"], _field_type(f["type"])) for f in schema.get("fields", [])
-    ]
+    raw_fields = schema.get("fields", [])
+    if not isinstance(raw_fields, list):
+        raise ExtractError("avro: bad field schema list %r" % (raw_fields,))
+    fields = []
+    for f in raw_fields:
+        if not (isinstance(f, dict) and isinstance(f.get("name"), str) and "type" in f):
+            raise ExtractError("avro: bad field schema %r" % (f,))
+        fields.append((f["name"], _field_type(f["type"])))
     if not fields:
         raise ExtractError("avro: record schema has no fields")
     codec = meta.get("avro.codec", b"null").decode("latin-1")

@@ -2,7 +2,7 @@
 ordered span assembly + flat metadata map.
 
 This is the analog of the reference's whole parse path
-(``JavaEnvPrivate::autoParserParserFile``, /root/reference/src/java-env.cpp:192-328):
+(``JavaEnvPrivate::autoParserParserFile``, src/java-env.cpp:192-328):
   * routing by content detection   (src/java-env.cpp:233-248 + server-side)
   * ordered text output            (``ctx.txt`` chunk append, :268-271,310)
   * flat string/string metadata    (``meta.txt`` JSON flatten, :290-305)
@@ -33,12 +33,19 @@ sum of preceding kept-text lengths; per-document equality is exact on
 
 from __future__ import annotations
 
-from typing import Any
+from typing import Any, Callable
 
+from tika_wrap_spark.core.arbin import parse_ar_text
+from tika_wrap_spark.core.avrobin import avro_extract_text
+from tika_wrap_spark.core.cabbin import parse_cab_text
 from tika_wrap_spark.core.charset import decode_charset, decode_html_charset
 from tika_wrap_spark.core.container import MAX_CONTAINER_DEPTH, parse_container
+from tika_wrap_spark.core.cpiobin import parse_cpio_text
+from tika_wrap_spark.core.dbfbin import dbf_extract_text
+from tika_wrap_spark.core.eml import parse_eml
 from tika_wrap_spark.core.errors import ExtractError
 from tika_wrap_spark.core.exifbin import jpeg_exif_text
+from tika_wrap_spark.core.fontbin import font_meta_text
 from tika_wrap_spark.core.gzipbin import (
     gunzip_text,
     unbz2_text,
@@ -53,84 +60,65 @@ from tika_wrap_spark.core.html import (
     xml_root_tag,
     xps_fpage_text,
 )
+from tika_wrap_spark.core.ical import parse_ical, parse_vcard
+from tika_wrap_spark.core.isobin import parse_iso_text
+from tika_wrap_spark.core.lz4bin import unlz4_text
+from tika_wrap_spark.core.mbox import parse_mbox
 from tika_wrap_spark.core.media import image_dims_text, png_text_meta_text
+from tika_wrap_spark.core.midibin import midi_extract_text_str
 from tika_wrap_spark.core.olebin import ole_extract_text
+from tika_wrap_spark.core.parquetbin import parquet_extract_text
 from tika_wrap_spark.core.pdf import page_dims, pages_to_texts, parse_pdf_pages
 from tika_wrap_spark.core.pdfbin import is_real_pdf_text, parse_real_pdf_text_full
-from tika_wrap_spark.core.eml import parse_eml
-from tika_wrap_spark.core.mbox import parse_mbox
+from tika_wrap_spark.core.plistbin import plist_extract_text
+from tika_wrap_spark.core.rarbin import parse_rar_text
 from tika_wrap_spark.core.rtf import rtf_to_text
-from tika_wrap_spark.core.ical import parse_ical, parse_vcard
-from tika_wrap_spark.core.fontbin import font_meta_text
+from tika_wrap_spark.core.sevenzip import parse_7z_text
 from tika_wrap_spark.core.sniff import (
     KIND_AR,
+    KIND_AVRO,
     KIND_BZ2,
+    KIND_CAB,
     KIND_CPIO,
     KIND_CSV,
+    KIND_DBF,
     KIND_EML,
     KIND_FONT,
-    KIND_ICS,
-    KIND_JSON,
     KIND_GZIP,
     KIND_HTML,
+    KIND_ICS,
+    KIND_ISO,
+    KIND_JSON,
+    KIND_LZ4,
+    KIND_LZMA,
     KIND_MBOX,
     KIND_MEDIA,
+    KIND_MIDI,
     KIND_OLE,
+    KIND_PARQUET,
     KIND_PDF,
     KIND_PLIST,
+    KIND_RAR,
     KIND_RTF,
+    KIND_SEVENZ,
     KIND_SQLITE,
     KIND_TAR,
     KIND_TEXT,
+    KIND_TNEF,
     KIND_VCF,
     KIND_WARC,
     KIND_XML,
-    KIND_AVRO,
-    KIND_CAB,
-    KIND_PARQUET,
-    KIND_DBF,
-    KIND_ISO,
-    KIND_TNEF,
     KIND_XZ,
     KIND_Z,
-    KIND_LZ4,
-    KIND_LZMA,
-    KIND_MIDI,
-    KIND_SEVENZ,
-    KIND_RAR,
-    KIND_ZSTD,
     KIND_ZIP,
+    KIND_ZSTD,
     sniff_kind,
 )
-from tika_wrap_spark.core.lz4bin import unlz4_text
-from tika_wrap_spark.core.midibin import midi_extract_text_str
-from tika_wrap_spark.core.rarbin import parse_rar_text
-from tika_wrap_spark.core.zstdbin import unzstd_text
-from tika_wrap_spark.core.sevenzip import parse_7z_text
-from tika_wrap_spark.core.plistbin import plist_extract_text
 from tika_wrap_spark.core.sqlitebin import sqlite_extract_text
-from tika_wrap_spark.core.warcbin import parse_warc_text
-
-# compressed-stream wrappers: decompress and re-sniff the inner stream
-# (each counts as one container level with a single unnamed member)
-_WRAPPER_DECODERS = {
-    KIND_GZIP: (gunzip_text, "gz"),
-    KIND_XZ: (unxz_text, "xz"),
-    KIND_BZ2: (unbz2_text, "bz2"),
-    KIND_Z: (unz_text, "z"),
-    KIND_LZ4: (unlz4_text, "lz4"),
-    KIND_ZSTD: (unzstd_text, "zst"),
-    KIND_LZMA: (unlzma_text, "lzma"),
-}
-from tika_wrap_spark.core.arbin import parse_ar_text
-from tika_wrap_spark.core.cpiobin import parse_cpio_text
-from tika_wrap_spark.core.avrobin import avro_extract_text
-from tika_wrap_spark.core.parquetbin import parquet_extract_text
-from tika_wrap_spark.core.cabbin import parse_cab_text
-from tika_wrap_spark.core.isobin import parse_iso_text
-from tika_wrap_spark.core.dbfbin import dbf_extract_text
-from tika_wrap_spark.core.tnefbin import tnef_extract
 from tika_wrap_spark.core.tarbin import parse_tar_text
+from tika_wrap_spark.core.tnefbin import tnef_extract
+from tika_wrap_spark.core.warcbin import parse_warc_text
+from tika_wrap_spark.core.zstdbin import unzstd_text
 
 # container member marking an OOXML-analog archive (real OOXML is zip with
 # exactly this member; QMimeDatabase-style container-format distinction)
@@ -139,7 +127,7 @@ OOXML_MARKER = "[Content_Types].xml"
 # OpenDocument marker (ODF 1.3 §3.3): a zip whose ``mimetype`` member holds
 # the package media type. Tika routes these via the same container sniff
 # (the reference inherits ODF through Tika's OpenDocumentParser,
-# /root/reference/src/java-env.cpp:313); the subkind suffix distinguishes
+# src/java-env.cpp:313); the subkind suffix distinguishes
 # Writer/Calc/Impress the way the OLE path distinguishes doc/xls/ppt.
 ODF_MARKER = "mimetype"
 _ODF_MIME_PREFIX = "application/vnd.oasis.opendocument."
@@ -151,27 +139,30 @@ _EPUB_MIME = "application/epub+zip"
 # recurse through the existing wrapper/tar paths
 DEB_MARKER = "debian-binary"
 
-
-def _package_format(entries: list[tuple[str, str]]) -> str:
-    """'' unless the member list carries a ``mimetype`` marker member
-    (OCF/ODF packaging): 'odf-odt'/'odf-ods'/'odf-odp' ('odf-other' for an
-    unrecognized opendocument.* type) or 'epub' (EPUB OCF — chapters are
-    xhtml members that route through the REAL html extractor)."""
-    for name, payload in entries:
-        if name != ODF_MARKER:
-            continue
-        if payload.startswith(_ODF_MIME_PREFIX):
-            return "odf-" + _ODF_SUBKINDS.get(
-                payload[len(_ODF_MIME_PREFIX):].strip(), "other"
-            )
-        if payload.strip() == _EPUB_MIME:
-            return "epub"
-    return ""
-
 # sniff kinds eligible for charset detection — text family only; binary
 # magics (PNG/zip/pdf bytes-as-text) are high-byte-dense and must never be
 # transcoded (Tika's AutoDetectReader likewise guards text/* parses only)
 _CHARSET_SNIFF_KINDS = frozenset({KIND_TEXT, KIND_CSV, KIND_JSON})
+
+# the flat meta map in output order: per-kind counters + per-format keys
+# mirror the metadata Tika's /meta endpoint exposes (title, page
+# counts/dims); values are flat strings only (reference coercion,
+# src/java-env.cpp:300). The counters are kept as ints until the end.
+_META_KEYS = """
+    n_spans_in n_spans_out n_chars n_pdf_pages n_html_blocks n_media
+    n_containers n_container_entries container_depth container_format
+    html_title pdf_crypt pdf_title pdf_outline pdf_page1_w pdf_page1_h
+    media1_w media1_h media1_exif_orientation media1_exif_datetime
+    media1_png_title media1_png_author eml_subject eml_from ical_summary
+    sqlite_tables dbf_fields avro_fields parquet_columns midi_tracks
+    midi_track_name plist_keys warc_target font_family font_name xml_root
+    charset n_transcoded kinds parser
+""".split()
+_COUNTERS = """
+    n_spans_in n_pdf_pages n_html_blocks n_media n_containers
+    n_container_entries container_depth n_transcoded
+""".split()
+_META_SEED = {**dict.fromkeys(_META_KEYS, ""), "parser": "tika_wrap_spark-0.1"}
 
 Span = dict[str, Any]  # {kind, text, media_ref, offset}
 
@@ -187,6 +178,72 @@ def _stringify(value: Any) -> str:
     if isinstance(value, (list, tuple, dict, set, bytes)):
         return ""
     return str(value)
+
+
+class _Doc:
+    """One document's output as it is built: the offset-ordered spans, the
+    integer counters and the flat meta map. Per-format meta keys keep the
+    FIRST non-empty value across the document's payloads."""
+
+    def __init__(self) -> None:
+        self.spans: list[Span] = []
+        self.offset = 0
+        self.n = dict.fromkeys(_COUNTERS, 0)
+        self.meta = dict(_META_SEED)
+        self.kinds: set[str] = set()
+        self.font_seen = False
+
+    def emit(self, kind: str, text: str, media_ref: str) -> None:
+        self.spans.append(
+            {"kind": kind, "text": text, "media_ref": media_ref, "offset": self.offset}
+        )
+        self.offset += len(text)
+
+    def first(self, guard_key: str, **values: str) -> None:
+        """Set ``values`` only while ``guard_key`` is still empty."""
+        if not self.meta[guard_key]:
+            self.meta.update(values)
+
+    def enter(self, depth: int, fmt: str) -> None:
+        """Open one container level below ``depth``; the recursion guard
+        (zip-bomb analog) rejects the document past MAX_CONTAINER_DEPTH."""
+        if depth >= MAX_CONTAINER_DEPTH:
+            raise ExtractError(
+                "container nesting exceeds depth %d" % MAX_CONTAINER_DEPTH
+            )
+        self.n["n_containers"] += 1
+        self.n["container_depth"] = max(self.n["container_depth"], depth + 1)
+        self.first("container_format", container_format=fmt)
+
+    def members(
+        self,
+        entries: list[tuple[str, str]],
+        path: tuple[str, ...],
+        depth: int,
+        kind: str = "",
+    ) -> None:
+        """Route each ``(name, payload)`` member one level deeper with its
+        archive path (the reference README's own TODO — "recursively parse
+        embedded content", README.md:25); members re-sniff
+        unless the container declares their ``kind``."""
+        for name, payload in entries:
+            self.n["n_container_entries"] += 1
+            member_kind = kind or sniff_kind(payload, "")
+            _route(self, member_kind, payload, "", path + (name,), depth + 1)
+
+    def result(self) -> dict[str, Any]:
+        meta = self.meta
+        for key, value in self.n.items():
+            meta[key] = _stringify(value)
+        meta["n_spans_out"] = _stringify(len(self.spans))
+        meta["n_chars"] = _stringify(self.offset)
+        meta["kinds"] = ",".join(sorted(self.kinds))
+        return {"spans": self.spans, "parse_ok": True, "error": "", "meta": meta}
+
+
+# a handler routes one payload of its kind into the document:
+# handler(d, kind, text, media_ref, path, depth)
+Handler = Callable[[_Doc, str, str, str, tuple, int], None]
 
 
 def extract_document(spans: list[Span] | None) -> dict[str, Any]:
@@ -209,490 +266,356 @@ def extract_document(spans: list[Span] | None) -> dict[str, Any]:
 
 
 def _extract_or_raise(spans: list[Span] | None) -> dict[str, Any]:
-    out: list[Span] = []
-    offset = 0
-    n_in = 0
-    kinds_seen: set[str] = set()
-    n_pages = 0  # pdf pages emitted (Tika's per-format metadata analog)
-    n_blocks = 0  # html content blocks kept
-    n_media = 0
-    n_containers = 0  # container payloads parsed (nested ones included)
-    n_entries = 0  # members across all containers
-    depth_max = 0  # deepest container nesting level seen
-    title = ""  # first non-empty <title> across html payloads
-    pdf1_dims: tuple[float, float] | None = None  # first pdf's first page
-    pdf_crypt = ""  # first encrypted pdf's crypt method (rc4/aesv2/aesv3)
-    pdf_title = ""  # first XMP /Metadata dc:title (Tika dc:title analog)
-    pdf_outline = ""  # first pdf's bookmark titles, pre-order, ' / '-joined
-    media1_dims: tuple[int, int] | None = None  # first parseable image's w,h
-    media1_exif: dict[str, str] = {}  # first image member's EXIF (JPEG APP1)
-    media1_png_text: dict[str, str] = {}  # first PNG member's tEXt/iTXt keys
-    container_format = ""  # 'ooxml' if any archive carries the marker member
-    eml_subject = ""  # first message's decoded Subject (Tika dc:title analog)
-    eml_from = ""
-    ical_summary = ""  # first event SUMMARY / first card FN (core/ical.py)
-    sqlite_tables = ""  # first database's user-table names, comma-joined
-    dbf_fields = ""  # first dBase table's field names, comma-joined
-    avro_fields = ""  # first Avro container's field names, comma-joined
-    parquet_columns = ""  # first Parquet file's column names, comma-joined
-    midi_tracks = ""  # first MIDI file's track count (+ first track name)
-    midi_track_name = ""
-    plist_keys = ""  # first binary plist's top-level dict keys
-    warc_target = ""  # first warc payload record's WARC-Target-URI
-    font_meta: dict[str, str] = {}  # first font payload's naming metadata
-    xml_root = ""  # first xml payload's root element (Tika subkind signal)
-    charset_first = ""  # first detected non-default payload charset
-    n_transcoded = 0  # payloads that went through a charset transcode
-
-    def emit(kind: str, text: str, media_ref: str) -> None:
-        nonlocal offset
-        out.append(
-            {"kind": kind, "text": text, "media_ref": media_ref, "offset": offset}
-        )
-        offset += len(text)
-
-    def route(kind: str, text: str, media_ref: str, path: tuple[str, ...], depth: int) -> None:
-        """Route one payload by sniffed kind; container members recurse with
-        their archive path (the reference README's own TODO — "recursively
-        parse embedded content", /root/reference/README.md:25; zip smoke
-        inputs at example/demo1.cpp:48-49)."""
-        nonlocal n_pages, n_blocks, n_media, n_containers, n_entries
-        nonlocal depth_max, title, pdf1_dims, pdf_crypt, pdf_title, pdf_outline
-        nonlocal media1_dims, container_format  # media1_png_text/exif mutate
-        nonlocal eml_subject, eml_from, ical_summary, charset_first, n_transcoded
-        nonlocal sqlite_tables, warc_target, plist_keys, xml_root, dbf_fields
-        nonlocal avro_fields, parquet_columns
-        nonlocal midi_tracks, midi_track_name
-        if kind in _CHARSET_SNIFF_KINDS:
-            # charset ladder (core/charset.py): a UTF-16/BOM'd/CJK payload
-            # sniffs text-family first (its magic bytes match nothing), the
-            # transcode recovers real characters, and the RE-sniff routes
-            # the decoded form (a BOM'd UTF-16 html file extracts as html)
-            decoded, codec = decode_charset(text)
-            if codec:
-                n_transcoded += 1
-                if not charset_first:
-                    charset_first = codec
-                text = decoded
-                kind = sniff_kind(text, media_ref)
-        kinds_seen.add(kind)
-        if kind == KIND_MEDIA:
-            n_media += 1
-            if media1_dims is None and text:
-                # embedded member carries real bytes: PNG IHDR / JPEG SOF
-                # header parse (pure stdlib, core/media.py) — the analog of
-                # Tika's tiff:ImageWidth/Length metadata keys; JPEG members
-                # additionally surface APP1/Exif (orientation + timestamp —
-                # the reference's exiftool dep, /root/reference/README.md:19)
-                media1_dims = image_dims_text(text)
-                if media1_dims is not None and not media1_exif:
-                    media1_exif.update(jpeg_exif_text(text))
-                if media1_dims is not None and not media1_png_text:
-                    # PNG tEXt/iTXt Title/Author (W3C §11.3.4, Tika's
-                    # PNGParser metadata analog); {} for non-PNG members
-                    media1_png_text.update(png_text_meta_text(text))
-            if not media_ref and path:
-                # embedded media member: back-pointer into the archive
-                media_ref = "zip://" + "/".join(path)
-            emit(KIND_MEDIA, "", media_ref)
-        elif kind == KIND_HTML:
-            # declared <meta charset=...> (WHATWG prescan / Tika
-            # HtmlEncodingDetector analog): the ladder never runs on the
-            # html kind (ASCII markup routes before any transcode), so a
-            # Shift-JIS/GBK page with a declaration decodes here
-            decoded, h_codec = decode_html_charset(text)
-            if h_codec:
-                n_transcoded += 1
-                if not charset_first:
-                    charset_first = h_codec
-                text = decoded
-            if not title:
-                title = html_title(text)
-            for block in extract_html_blocks(text):
-                n_blocks += 1
-                emit(KIND_TEXT, block, "")
-        elif kind == KIND_PDF:
-            # real binary PDFs (xref/startxref present) parse natively
-            # (core/pdfbin.py: FlateDecode, page tree, content-stream text
-            # operators); the synthetic fixtures dialect has no startxref
-            # and keeps its strict line parser
-            attachments: list[tuple[str, str]] = []
-            annots: list[str] = []
-            fields: list[tuple[str, str]] = []
-            if is_real_pdf_text(text):
-                pages, crypt, attachments, annots, fields, xmp, toc = (
-                    parse_real_pdf_text_full(text)
-                )
-                if crypt and not pdf_crypt:
-                    pdf_crypt = crypt
-                if xmp and not pdf_title:
-                    pdf_title = xmp
-                if toc and not pdf_outline:
-                    # Tika surfaces bookmarks as document structure
-                    # metadata, not body text — mirror that shape
-                    pdf_outline = " / ".join(toc)
-            else:
-                pages = parse_pdf_pages(text)
-            if pdf1_dims is None:
-                pdf1_dims = page_dims(pages[0]) if pages else (0.0, 0.0)
-            for page in pages_to_texts(pages):
-                n_pages += 1
-                emit(KIND_TEXT, page, "")
-            # beyond-page-text surfaces, in a fixed order after the pages
-            # (Tika's PDFParser shape): annotation notes, then the filled
-            # form as one name: value block
-            for note in annots:
-                emit(KIND_TEXT, note, "")
-            if fields:
-                emit(
-                    KIND_TEXT,
-                    "\n".join("%s: %s" % (k, v) for k, v in fields),
-                    "",
-                )
-            if attachments:
-                # /EmbeddedFiles: a PDF with attachments is one more
-                # container kind — each payload re-sniffs and recurses
-                # like an archive member (Tika's embedded-document walk)
-                if depth >= MAX_CONTAINER_DEPTH:
-                    raise ExtractError(
-                        "container nesting exceeds depth %d" % MAX_CONTAINER_DEPTH
-                    )
-                n_containers += 1
-                depth_max = max(depth_max, depth + 1)
-                if not container_format:
-                    container_format = "pdf-attach"
-                for name, payload in attachments:
-                    n_entries += 1
-                    route(
-                        sniff_kind(payload, ""), payload, "", path + (name,), depth + 1
-                    )
-        elif kind in (
-            KIND_ZIP,
-            KIND_TAR,
-            KIND_AR,
-            KIND_CPIO,
-            KIND_SEVENZ,
-            KIND_RAR,
-            KIND_ISO,
-            KIND_CAB,
-        ):
-            if depth >= MAX_CONTAINER_DEPTH:
-                raise ExtractError(
-                    "container nesting exceeds depth %d" % MAX_CONTAINER_DEPTH
-                )
-            if kind == KIND_ZIP:
-                entries = parse_container(text)
-            elif kind == KIND_TAR:
-                entries = parse_tar_text(text)
-            elif kind == KIND_AR:  # ar (.a/.deb): core/arbin.py walk
-                entries = parse_ar_text(text)
-            elif kind == KIND_CPIO:  # cpio newc/crc: core/cpiobin.py walk
-                entries = parse_cpio_text(text)
-            elif kind == KIND_SEVENZ:  # 7z: core/sevenzip.py header walk
-                entries = parse_7z_text(text)
-            elif kind == KIND_ISO:  # ISO 9660: core/isobin.py record walk
-                entries = parse_iso_text(text)
-            elif kind == KIND_CAB:  # MS Cabinet: core/cabbin.py folder walk
-                entries = parse_cab_text(text)
-            else:  # rar: core/rarbin.py stored-member walk
-                entries = parse_rar_text(text)
-            n_containers += 1
-            depth_max = max(depth_max, depth + 1)
-            pkg = _package_format(entries)
-            is_xps = any(
-                name.endswith((".fdseq", ".fpage")) for name, _p in entries
-            )
-            if is_xps:
-                # XPS/OpenXPS (ECMA-388): an OPC package like OOXML — a
-                # real .xps ALSO carries [Content_Types].xml, so this
-                # check must come FIRST; page text is read from
-                # Glyphs/@UnicodeString attributes below. The fdseq/fdoc
-                # members are package STRUCTURE (like the ODF mimetype
-                # marker): never emitted as content, never counted
-                container_format = "xps"
-                entries = [
-                    e
-                    for e in entries
-                    if not e[0].endswith((".fdseq", ".fdoc"))
-                ]
-            elif any(name == OOXML_MARKER for name, _p in entries):
-                container_format = "ooxml"
-            elif pkg:
-                container_format = pkg
-                # the mimetype member is package metadata, not content —
-                # Tika likewise never emits it as an embedded resource
-                entries = [e for e in entries if e[0] != ODF_MARKER]
-            elif kind == KIND_AR and any(
-                name == DEB_MARKER for name, _p in entries
-            ):
-                # Debian package: the ar members (control.tar.gz /
-                # data.tar.xz) recurse through the wrapper+tar paths; the
-                # subkind tag makes deb tallies queryable without re-sniffing
-                if not container_format:
-                    container_format = "deb"
-            elif not container_format:
-                container_format = kind
-            for name, payload in entries:
-                n_entries += 1
-                if is_xps and name.endswith(".fpage"):
-                    # FixedPage text lives in attributes, not element
-                    # content — the generic xml strip yields nothing
-                    # (core/html.py xps_fpage_text, Tika XPSParser analog)
-                    emit(KIND_TEXT, xps_fpage_text(payload), "")
-                    continue
-                route(sniff_kind(payload, ""), payload, "", path + (name,), depth + 1)
-        elif kind in _WRAPPER_DECODERS:
-            # wrapper, not an archive: decompress and re-sniff the inner
-            # stream (the .tar.gz / .tar.xz / .log.bz2 paths recurse into
-            # whatever the inner bytes sniff as)
-            if depth >= MAX_CONTAINER_DEPTH:
-                raise ExtractError(
-                    "container nesting exceeds depth %d" % MAX_CONTAINER_DEPTH
-                )
-            decoder, tag = _WRAPPER_DECODERS[kind]
-            inner = decoder(text)
-            n_containers += 1
-            n_entries += 1
-            depth_max = max(depth_max, depth + 1)
-            if not container_format:
-                container_format = kind
-            route(sniff_kind(inner, ""), inner, "", path + (tag,), depth + 1)
-        elif kind == KIND_OLE:
-            # legacy binary Office (CFB compound file): .doc piece-table /
-            # .xls BIFF8 record walk / .msg property streams
-            # (core/olebin.py); Tika's POI analog. The subkind lands in
-            # container_format so doc/xls/msg tallies are queryable
-            # without re-sniffing; message subject/sender share the
-            # eml_subject/eml_from meta keys (Tika maps MSG and rfc822 to
-            # the same message metadata)
-            subkind, ole_text, ole_meta = ole_extract_text(text)
-            if not container_format:
-                container_format = "ole-" + subkind
-            if ole_meta and not eml_subject:
-                eml_subject = ole_meta.get("eml_subject", "")
-                eml_from = ole_meta.get("eml_from", "")
-            emit(KIND_TEXT, ole_text, "")
-        elif kind == KIND_FONT:
-            # font file (core/fontbin.py; Tika TrueTypeParser analog):
-            # metadata-only payload — naming surfaces in the meta map,
-            # no body spans (Tika likewise emits no text for fonts)
-            fm = font_meta_text(text)
-            if not font_meta:
-                font_meta.update(fm)
-        elif kind == KIND_SQLITE:
-            # SQLite database (core/sqlitebin.py; Tika SQLite3Parser
-            # analog): one text block per user table — header line of
-            # column names then one comma-joined line per row in rowid
-            # order. Table names land in the sqlite_tables meta key.
-            sq_tables = sqlite_extract_text(text)
-            if not sqlite_tables:
-                sqlite_tables = ",".join(name for name, _b in sq_tables)
-            for _name, block in sq_tables:
-                emit(KIND_TEXT, block, "")
-        elif kind == KIND_MIDI:
-            # Standard MIDI file (core/midibin.py; Tika MidiParser
-            # analog): the six text-class meta events (text, copyright,
-            # track/instrument names, lyrics, markers) emit as one text
-            # block per carrying track; note/sysex/tempo events are
-            # walked (running status honored) but never extracted.
-            m_blocks, m_meta = midi_extract_text_str(text)
-            if not midi_tracks:
-                midi_tracks = m_meta.get("midi_tracks", "")
-                midi_track_name = m_meta.get("midi_track_name", "")
-            for block in m_blocks:
-                emit(KIND_TEXT, block, "")
-        elif kind == KIND_DBF:
-            # dBase table (core/dbfbin.py; Tika DBFParser analog): one
-            # csv-shaped text block — field-name header line then one
-            # comma-joined line per active record. Field names land in
-            # the dbf_fields meta key.
-            d_text, d_fields = dbf_extract_text(text)
-            if not dbf_fields:
-                dbf_fields = d_fields
-            emit(KIND_TEXT, d_text, "")
-        elif kind == KIND_AVRO:
-            # Avro object container (core/avrobin.py): varint/zigzag
-            # record decode, null/deflate codecs, per-block sync-marker
-            # verify; rows flatten to one csv-shaped text block (the
-            # dbf/sqlite convention), field names -> avro_fields meta
-            a_text, a_fields = avro_extract_text(text)
-            if not avro_fields:
-                avro_fields = a_fields
-            emit(KIND_TEXT, a_text, "")
-        elif kind == KIND_PARQUET:
-            # Parquet file (core/parquetbin.py): hand-rolled thrift-
-            # compact footer walk + PLAIN v1 data pages + RLE/bit-packed
-            # definition levels; columns flatten to one csv-shaped text
-            # block (the avro/dbf/sqlite convention), column names ->
-            # parquet_columns meta
-            p_text, p_cols = parquet_extract_text(text)
-            if not parquet_columns:
-                parquet_columns = p_cols
-            emit(KIND_TEXT, p_text, "")
-        elif kind == KIND_PLIST:
-            # Apple binary property list (core/plistbin.py; Tika
-            # PListParser analog): the object graph flattens to one
-            # keypath-per-line text block; top-level dict keys land in the
-            # plist_keys meta key
-            p_text, p_keys = plist_extract_text(text)
-            if not plist_keys:
-                plist_keys = p_keys
-            emit(KIND_TEXT, p_text, "")
-        elif kind == KIND_RTF:
-            # native RTF control-word parse (core/rtf.py); Tika's RTFParser
-            # analog — document text only, destination groups skipped
-            emit(KIND_TEXT, rtf_to_text(text), "")
-        elif kind in (KIND_ICS, KIND_VCF):
-            # iCalendar/vCard (core/ical.py; Tika ICalParser/VCardParser
-            # analog): one text block per event/card, unfolded + unescaped;
-            # unterminated components raise -> parse_ok=false rows
-            blocks, cal_meta = (parse_ical if kind == KIND_ICS else parse_vcard)(
-                text
-            )
-            if not ical_summary:
-                ical_summary = cal_meta["summary"]
-            for block in blocks:
-                emit(KIND_TEXT, block, "")
-        elif kind == KIND_EML:
-            # rfc822/MIME message: one more container kind — each leaf part
-            # (decoded body / attachment) re-sniffs and recurses, so an
-            # html body extracts as html and a zip attachment as an archive
-            if depth >= MAX_CONTAINER_DEPTH:
-                raise ExtractError(
-                    "container nesting exceeds depth %d" % MAX_CONTAINER_DEPTH
-                )
-            eml_meta, eml_parts = parse_eml(text)
-            n_containers += 1
-            depth_max = max(depth_max, depth + 1)
-            if not container_format:
-                container_format = KIND_EML
-            if not eml_subject:
-                eml_subject = eml_meta.get("eml_subject", "")
-                eml_from = eml_meta.get("eml_from", "")
-            for name, payload in eml_parts:
-                n_entries += 1
-                route(sniff_kind(payload, ""), payload, "", path + (name,), depth + 1)
-        elif kind == KIND_TNEF:
-            # TNEF winmail.dat (core/tnefbin.py; Tika TNEFParser analog):
-            # the message subject shares the eml meta key, the plain body
-            # emits as text, and each attachment payload re-sniffs and
-            # recurses like an archive member — the
-            # winmail.dat-hides-the-real-attachment case
-            if depth >= MAX_CONTAINER_DEPTH:
-                raise ExtractError(
-                    "container nesting exceeds depth %d" % MAX_CONTAINER_DEPTH
-                )
-            _t_class, t_subject, t_body, t_atts = tnef_extract(text)
-            n_containers += 1
-            depth_max = max(depth_max, depth + 1)
-            if not container_format:
-                container_format = KIND_TNEF
-            if not eml_subject:
-                eml_subject = t_subject
-            if t_body:
-                emit(KIND_TEXT, t_body, "")
-            for name, payload in t_atts:
-                n_entries += 1
-                route(sniff_kind(payload, ""), payload, "", path + (name,), depth + 1)
-        elif kind == KIND_MBOX:
-            # mbox mailbox (core/mbox.py; Tika MboxParser analog): a
-            # container of rfc822 messages — each chunk routes through the
-            # SAME eml path explicitly (the separator declares the member
-            # type, as Tika's MboxParser does), so bodies/attachments
-            # recurse one level deeper
-            if depth >= MAX_CONTAINER_DEPTH:
-                raise ExtractError(
-                    "container nesting exceeds depth %d" % MAX_CONTAINER_DEPTH
-                )
-            msgs = parse_mbox(text)
-            n_containers += 1
-            depth_max = max(depth_max, depth + 1)
-            if not container_format:
-                container_format = KIND_MBOX
-            for name, payload in msgs:
-                n_entries += 1
-                route(KIND_EML, payload, "", path + (name,), depth + 1)
-        elif kind == KIND_WARC:
-            # WARC web archive (core/warcbin.py; Tika WARCParser analog —
-            # the Common Crawl ingestion shape): one more container kind.
-            # Each payload-bearing record (HTTP envelope stripped) re-sniffs
-            # and recurses, so crawled html bodies run the REAL boilerplate
-            # stripper; members are named by their target URI.
-            if depth >= MAX_CONTAINER_DEPTH:
-                raise ExtractError(
-                    "container nesting exceeds depth %d" % MAX_CONTAINER_DEPTH
-                )
-            records, w_meta = parse_warc_text(text)
-            n_containers += 1
-            depth_max = max(depth_max, depth + 1)
-            if not container_format:
-                container_format = KIND_WARC
-            if not warc_target:
-                warc_target = w_meta["warc_target"]
-            for name, payload in records:
-                n_entries += 1
-                route(sniff_kind(payload, ""), payload, "", path + (name,), depth + 1)
-        elif kind == KIND_XML:
-            # root element = the subkind Tika's XML detectors read (svg ->
-            # image/svg+xml, rss/feed -> syndication) before generic parse
-            if not xml_root:
-                xml_root = xml_root_tag(text)
-            emit(KIND_TEXT, extract_xml_text(text), "")
-        else:
-            # text family: json/csv/plain keep their raw payload (Tika's
-            # text-family parsers pass content through); kind is tallied
-            emit(KIND_TEXT, text, "")
-
+    d = _Doc()
     for span in spans or []:
-        n_in += 1
+        d.n["n_spans_in"] += 1
         text = span.get("text") or ""
         media_ref = span.get("media_ref") or ""
-        route(sniff_kind(text, media_ref), text, media_ref, (), 0)
+        _route(d, sniff_kind(text, media_ref), text, media_ref, (), 0)
+    return d.result()
 
-    n_chars = sum(len(s["text"]) for s in out)
-    # per-kind counters + per-format keys mirror the metadata Tika's /meta
-    # endpoint exposes (title, page counts/dims); values flat strings only
-    # (reference coercion, src/java-env.cpp:300)
-    meta = {
-        "n_spans_in": _stringify(n_in),
-        "n_spans_out": _stringify(len(out)),
-        "n_chars": _stringify(n_chars),
-        "n_pdf_pages": _stringify(n_pages),
-        "n_html_blocks": _stringify(n_blocks),
-        "n_media": _stringify(n_media),
-        "n_containers": _stringify(n_containers),
-        "n_container_entries": _stringify(n_entries),
-        "container_depth": _stringify(depth_max),
-        "container_format": container_format,
-        "html_title": title,
-        "pdf_crypt": pdf_crypt,
-        "pdf_title": pdf_title,
-        "pdf_outline": pdf_outline,
-        "pdf_page1_w": "" if pdf1_dims is None else "%.1f" % pdf1_dims[0],
-        "pdf_page1_h": "" if pdf1_dims is None else "%.1f" % pdf1_dims[1],
-        "media1_w": "" if media1_dims is None else _stringify(media1_dims[0]),
-        "media1_h": "" if media1_dims is None else _stringify(media1_dims[1]),
-        "media1_exif_orientation": media1_exif.get("orientation", ""),
-        "media1_exif_datetime": media1_exif.get("datetime", ""),
-        "media1_png_title": media1_png_text.get("title", ""),
-        "media1_png_author": media1_png_text.get("author", ""),
-        "eml_subject": eml_subject,
-        "eml_from": eml_from,
-        "ical_summary": ical_summary,
-        "sqlite_tables": sqlite_tables,
-        "dbf_fields": dbf_fields,
-        "avro_fields": avro_fields,
-        "parquet_columns": parquet_columns,
-        "midi_tracks": midi_tracks,
-        "midi_track_name": midi_track_name,
-        "plist_keys": plist_keys,
-        "warc_target": warc_target,
-        "font_family": font_meta.get("family", ""),
-        "font_name": font_meta.get("full_name", ""),
-        "xml_root": xml_root,
-        "charset": charset_first,
-        "n_transcoded": _stringify(n_transcoded),
-        "kinds": ",".join(sorted(kinds_seen)),
-        "parser": "tika_wrap_spark-0.1",
-    }
-    return {"spans": out, "parse_ok": True, "error": "", "meta": meta}
+
+def _route(
+    d: _Doc, kind: str, text: str, media_ref: str, path: tuple[str, ...], depth: int
+) -> None:
+    """Route one payload by sniffed kind (the analog of Tika's AutoParser
+    registry dispatch, src/java-env.cpp:313)."""
+    if kind in _CHARSET_SNIFF_KINDS:
+        # charset ladder (core/charset.py): a UTF-16/BOM'd/CJK payload
+        # sniffs text-family first (its magic bytes match nothing), the
+        # transcode recovers real characters, and the RE-sniff routes
+        # the decoded form (a BOM'd UTF-16 html file extracts as html)
+        decoded, codec = decode_charset(text)
+        if codec:
+            d.n["n_transcoded"] += 1
+            d.first("charset", charset=codec)
+            text = decoded
+            kind = sniff_kind(text, media_ref)
+    d.kinds.add(kind)
+    _DISPATCH.get(kind, _text)(d, kind, text, media_ref, path, depth)
+
+
+def _package_format(entries: list[tuple[str, str]]) -> str:
+    """'' unless the member list carries a ``mimetype`` marker member
+    (OCF/ODF packaging): 'odf-odt'/'odf-ods'/'odf-odp' ('odf-other' for an
+    unrecognized opendocument.* type) or 'epub' (EPUB OCF — chapters are
+    xhtml members that route through the REAL html extractor)."""
+    for name, payload in entries:
+        if name != ODF_MARKER:
+            continue
+        if payload.startswith(_ODF_MIME_PREFIX):
+            return "odf-" + _ODF_SUBKINDS.get(
+                payload[len(_ODF_MIME_PREFIX):].strip(), "other"
+            )
+        if payload.strip() == _EPUB_MIME:
+            return "epub"
+    return ""
+
+
+# archive kinds: payload -> [(member name, member payload), ...]
+_ARCHIVE_PARSERS: dict[str, Callable[[str], list[tuple[str, str]]]] = {
+    KIND_ZIP: parse_container,
+    KIND_TAR: parse_tar_text,
+    KIND_AR: parse_ar_text,
+    KIND_CPIO: parse_cpio_text,
+    KIND_SEVENZ: parse_7z_text,
+    KIND_RAR: parse_rar_text,
+    KIND_ISO: parse_iso_text,
+    KIND_CAB: parse_cab_text,
+}
+
+
+def _archive(d, kind, text, media_ref, path, depth):
+    d.enter(depth, "")  # the member markers below pick the format
+    entries = _ARCHIVE_PARSERS[kind](text)
+    is_xps = any(name.endswith((".fdseq", ".fpage")) for name, _p in entries)
+    if is_xps:
+        # XPS/OpenXPS (ECMA-388): an OPC package like OOXML — a real .xps
+        # ALSO carries [Content_Types].xml, so this check must come FIRST.
+        # The fdseq/fdoc members are package STRUCTURE (like the ODF
+        # mimetype marker): never emitted as content, never counted
+        d.meta["container_format"] = "xps"
+        entries = [e for e in entries if not e[0].endswith((".fdseq", ".fdoc"))]
+    elif any(name == OOXML_MARKER for name, _p in entries):
+        d.meta["container_format"] = "ooxml"
+    elif pkg := _package_format(entries):
+        d.meta["container_format"] = pkg
+        # the mimetype member is package metadata, not content — Tika
+        # likewise never emits it as an embedded resource
+        entries = [e for e in entries if e[0] != ODF_MARKER]
+    else:
+        # a Debian package's subkind tag makes deb tallies queryable
+        # without re-sniffing its control/data members
+        is_deb = kind == KIND_AR and any(name == DEB_MARKER for name, _p in entries)
+        d.first("container_format", container_format="deb" if is_deb else kind)
+    for name, payload in entries:
+        if is_xps and name.endswith(".fpage"):
+            # FixedPage text lives in Glyphs/@UnicodeString attributes, not
+            # element content — the generic xml strip yields nothing
+            # (core/html.py xps_fpage_text, Tika XPSParser analog)
+            d.n["n_container_entries"] += 1
+            d.emit(KIND_TEXT, xps_fpage_text(payload), "")
+        else:
+            d.members([(name, payload)], path, depth)
+
+
+# compressed-stream wrappers: decompress and re-sniff the inner stream
+# (each counts as one container level with a single unnamed member)
+_WRAPPER_DECODERS = {
+    KIND_GZIP: (gunzip_text, "gz"),
+    KIND_XZ: (unxz_text, "xz"),
+    KIND_BZ2: (unbz2_text, "bz2"),
+    KIND_Z: (unz_text, "z"),
+    KIND_LZ4: (unlz4_text, "lz4"),
+    KIND_ZSTD: (unzstd_text, "zst"),
+    KIND_LZMA: (unlzma_text, "lzma"),
+}
+
+
+def _wrapper(d, kind, text, media_ref, path, depth):
+    # the .tar.gz / .tar.xz / .log.bz2 paths recurse into whatever the
+    # inner bytes sniff as
+    d.enter(depth, kind)
+    decoder, tag = _WRAPPER_DECODERS[kind]
+    d.members([(tag, decoder(text))], path, depth)
+
+
+def _text(d, kind, text, media_ref, path, depth):
+    # text family: json/csv/plain keep their raw payload (Tika's
+    # text-family parsers pass content through); kind is tallied
+    d.emit(KIND_TEXT, text, "")
+
+
+def _media(d, kind, text, media_ref, path, depth):
+    d.n["n_media"] += 1
+    if not d.meta["media1_w"] and text:
+        # embedded member carries real bytes: PNG IHDR / JPEG SOF header
+        # parse (core/media.py) — the analog of Tika's
+        # tiff:ImageWidth/Length keys; JPEG members add APP1/Exif (the
+        # reference's exiftool dep, README.md:19) and PNG
+        # members tEXt/iTXt Title/Author (Tika's PNGParser analog)
+        dims = image_dims_text(text)
+        if dims is not None:
+            exif = jpeg_exif_text(text)
+            png = png_text_meta_text(text)
+            d.meta.update(
+                media1_w=_stringify(dims[0]),
+                media1_h=_stringify(dims[1]),
+                media1_exif_orientation=exif.get("orientation", ""),
+                media1_exif_datetime=exif.get("datetime", ""),
+                media1_png_title=png.get("title", ""),
+                media1_png_author=png.get("author", ""),
+            )
+    if not media_ref and path:
+        # embedded media member: back-pointer into the archive
+        media_ref = "zip://" + "/".join(path)
+    d.emit(KIND_MEDIA, "", media_ref)
+
+
+def _html(d, kind, text, media_ref, path, depth):
+    # declared <meta charset=...> (WHATWG prescan / Tika
+    # HtmlEncodingDetector analog): the ladder never runs on the html
+    # kind (ASCII markup routes before any transcode), so a Shift-JIS/GBK
+    # page with a declaration decodes here
+    decoded, codec = decode_html_charset(text)
+    if codec:
+        d.n["n_transcoded"] += 1
+        d.first("charset", charset=codec)
+        text = decoded
+    if not d.meta["html_title"]:
+        d.meta["html_title"] = html_title(text)
+    for block in extract_html_blocks(text):
+        d.n["n_html_blocks"] += 1
+        d.emit(KIND_TEXT, block, "")
+
+
+def _pdf(d, kind, text, media_ref, path, depth):
+    # real binary PDFs (xref/startxref present) parse natively
+    # (core/pdfbin.py); the synthetic fixtures dialect has no startxref
+    # and keeps its strict line parser
+    attachments: list[tuple[str, str]] = []
+    annots: list[str] = []
+    fields: list[tuple[str, str]] = []
+    if is_real_pdf_text(text):
+        pages, crypt, attachments, annots, fields, xmp, toc = (
+            parse_real_pdf_text_full(text)
+        )
+        d.first("pdf_crypt", pdf_crypt=crypt)
+        d.first("pdf_title", pdf_title=xmp)
+        # Tika surfaces bookmarks as document structure metadata, not
+        # body text — mirror that shape
+        d.first("pdf_outline", pdf_outline=" / ".join(toc))
+    else:
+        pages = parse_pdf_pages(text)
+    if not d.meta["pdf_page1_w"]:  # the first pdf's, even with 0 pages
+        w, h = page_dims(pages[0]) if pages else (0.0, 0.0)
+        d.meta.update(pdf_page1_w="%.1f" % w, pdf_page1_h="%.1f" % h)
+    for page in pages_to_texts(pages):
+        d.n["n_pdf_pages"] += 1
+        d.emit(KIND_TEXT, page, "")
+    # beyond-page-text surfaces, in a fixed order after the pages (Tika's
+    # PDFParser shape): annotation notes, then the filled form as one
+    # name: value block
+    for note in annots:
+        d.emit(KIND_TEXT, note, "")
+    if fields:
+        d.emit(KIND_TEXT, "\n".join("%s: %s" % (k, v) for k, v in fields), "")
+    if attachments:
+        # /EmbeddedFiles: each payload re-sniffs and recurses like an
+        # archive member (Tika's embedded-document walk)
+        d.enter(depth, "pdf-attach")
+        d.members(attachments, path, depth)
+
+
+def _ole(d, kind, text, media_ref, path, depth):
+    # legacy binary Office (CFB compound file, core/olebin.py; Tika's POI
+    # analog). Message subject/sender share the eml meta keys (Tika maps
+    # MSG and rfc822 to the same message metadata)
+    subkind, ole_text, ole_meta = ole_extract_text(text)
+    d.first("container_format", container_format="ole-" + subkind)
+    if ole_meta:
+        d.first(
+            "eml_subject",
+            eml_subject=ole_meta.get("eml_subject", ""),
+            eml_from=ole_meta.get("eml_from", ""),
+        )
+    d.emit(KIND_TEXT, ole_text, "")
+
+
+def _font(d, kind, text, media_ref, path, depth):
+    # metadata-only payload (core/fontbin.py; Tika TrueTypeParser analog):
+    # Tika likewise emits no text for fonts. The first non-empty naming
+    # table wins, even when it lacks a family name
+    font_meta = font_meta_text(text)
+    if font_meta and not d.font_seen:
+        d.font_seen = True
+        d.meta.update(
+            font_family=font_meta.get("family", ""),
+            font_name=font_meta.get("full_name", ""),
+        )
+
+
+def _sqlite(d, kind, text, media_ref, path, depth):
+    # one text block per user table (core/sqlitebin.py; Tika
+    # SQLite3Parser analog)
+    tables = sqlite_extract_text(text)
+    d.first("sqlite_tables", sqlite_tables=",".join(name for name, _b in tables))
+    for _name, block in tables:
+        d.emit(KIND_TEXT, block, "")
+
+
+def _midi(d, kind, text, media_ref, path, depth):
+    # the six text-class meta events, one block per carrying track
+    # (core/midibin.py; Tika MidiParser analog)
+    blocks, m_meta = midi_extract_text_str(text)
+    d.first(
+        "midi_tracks",
+        midi_tracks=m_meta.get("midi_tracks", ""),
+        midi_track_name=m_meta.get("midi_track_name", ""),
+    )
+    for block in blocks:
+        d.emit(KIND_TEXT, block, "")
+
+
+def _one_block(extract: Callable[[str], tuple[str, str]], meta_key: str) -> Handler:
+    """Handler for a format that flattens to one csv-shaped text block plus
+    one meta value (dbf/avro/parquet: field names; plist: top-level keys)."""
+
+    def handle(d, kind, text, media_ref, path, depth):
+        block, value = extract(text)
+        d.first(meta_key, **{meta_key: value})
+        d.emit(KIND_TEXT, block, "")
+
+    return handle
+
+
+def _calendar(d, kind, text, media_ref, path, depth):
+    # one block per event/card (core/ical.py; Tika ICalParser/VCardParser
+    # analog)
+    blocks, cal_meta = (parse_ical if kind == KIND_ICS else parse_vcard)(text)
+    d.first("ical_summary", ical_summary=cal_meta["summary"])
+    for block in blocks:
+        d.emit(KIND_TEXT, block, "")
+
+
+def _eml(d, kind, text, media_ref, path, depth):
+    # each leaf part (decoded body / attachment) re-sniffs and recurses, so
+    # an html body extracts as html and a zip attachment as an archive
+    d.enter(depth, KIND_EML)
+    eml_meta, parts = parse_eml(text)
+    d.first(
+        "eml_subject",
+        eml_subject=eml_meta.get("eml_subject", ""),
+        eml_from=eml_meta.get("eml_from", ""),
+    )
+    d.members(parts, path, depth)
+
+
+def _tnef(d, kind, text, media_ref, path, depth):
+    # winmail.dat (core/tnefbin.py; Tika TNEFParser analog): attachments
+    # recurse — the winmail.dat-hides-the-real-attachment case
+    d.enter(depth, KIND_TNEF)
+    _t_class, subject, body, attachments = tnef_extract(text)
+    d.first("eml_subject", eml_subject=subject)
+    if body:
+        d.emit(KIND_TEXT, body, "")
+    d.members(attachments, path, depth)
+
+
+def _mbox(d, kind, text, media_ref, path, depth):
+    # the separator declares the member type, as Tika's MboxParser does
+    d.enter(depth, KIND_MBOX)
+    d.members(parse_mbox(text), path, depth, KIND_EML)
+
+
+def _warc(d, kind, text, media_ref, path, depth):
+    # payload records (HTTP envelope stripped) recurse, named by target
+    # URI, so crawled html runs the REAL boilerplate stripper (Tika
+    # WARCParser analog — the Common Crawl ingestion shape)
+    d.enter(depth, KIND_WARC)
+    records, w_meta = parse_warc_text(text)
+    d.first("warc_target", warc_target=w_meta["warc_target"])
+    d.members(records, path, depth)
+
+
+def _xml(d, kind, text, media_ref, path, depth):
+    # root element = the subkind Tika's XML detectors read (svg ->
+    # image/svg+xml, rss/feed -> syndication) before generic parse
+    if not d.meta["xml_root"]:
+        d.meta["xml_root"] = xml_root_tag(text)
+    d.emit(KIND_TEXT, extract_xml_text(text), "")
+
+
+def _rtf(d, kind, text, media_ref, path, depth):
+    # document text only, destination groups skipped (Tika RTFParser analog)
+    d.emit(KIND_TEXT, rtf_to_text(text), "")
+
+
+_HANDLERS: dict[str, Handler] = {
+    KIND_MEDIA: _media,
+    KIND_HTML: _html,
+    KIND_PDF: _pdf,
+    KIND_OLE: _ole,
+    KIND_FONT: _font,
+    KIND_SQLITE: _sqlite,
+    KIND_MIDI: _midi,
+    KIND_DBF: _one_block(dbf_extract_text, "dbf_fields"),
+    KIND_AVRO: _one_block(avro_extract_text, "avro_fields"),
+    KIND_PARQUET: _one_block(parquet_extract_text, "parquet_columns"),
+    KIND_PLIST: _one_block(plist_extract_text, "plist_keys"),
+    KIND_RTF: _rtf,
+    KIND_ICS: _calendar,
+    KIND_VCF: _calendar,
+    KIND_EML: _eml,
+    KIND_TNEF: _tnef,
+    KIND_MBOX: _mbox,
+    KIND_WARC: _warc,
+    KIND_XML: _xml,
+}
+
+# one lookup per payload; any other kind is the text family
+_DISPATCH: dict[str, Handler] = {
+    **dict.fromkeys(_ARCHIVE_PARSERS, _archive),
+    **dict.fromkeys(_WRAPPER_DECODERS, _wrapper),
+    **_HANDLERS,
+}

@@ -137,6 +137,8 @@ class _TReader:
                 return {}
             kv = self._byte()
             ktype, vtype = kv >> 4, kv & 0x0F
+            if ktype in (_T_LIST, _T_SET, _T_MAP, _T_STRUCT):
+                raise ExtractError("parquet: unhashable thrift map key type")
             return {
                 self.value(ktype): self.value(vtype) for _ in range(size)
             }
@@ -158,6 +160,32 @@ class _TReader:
             else:
                 field_id = self.zigzag()
             out[field_id] = self.value(ttype)
+
+
+def _get(struct_: dict, field_id: int, ftype: type, default=None):
+    """A decoded thrift field, type-checked: a corrupt footer or page
+    header can decode any field id as any thrift type."""
+    if field_id not in struct_:
+        return default
+    value = struct_[field_id]
+    if type(value) is not ftype:  # exact: a thrift bool is not an i32
+        raise ExtractError(
+            "parquet: bad footer field %d (%s, want %s)"
+            % (field_id, type(value).__name__, ftype.__name__)
+        )
+    return value
+
+
+def _structs(struct_: dict, field_id: int) -> list[dict]:
+    """A list<struct> field; [] when absent."""
+    items = _get(struct_, field_id, list, [])
+    for item in items:
+        if type(item) is not dict:
+            raise ExtractError(
+                "parquet: bad footer field %d (list of %s, want dict)"
+                % (field_id, type(item).__name__)
+            )
+    return items
 
 
 def _rle_hybrid_levels(data: bytes, bit_width: int, count: int) -> list[int]:
@@ -254,9 +282,9 @@ def parquet_extract(data: bytes) -> tuple[str, str]:
         raise ExtractError("parquet: implausible footer length %d" % meta_len)
     fmeta = _TReader(data, n - 8 - meta_len).struct()
 
-    schema = fmeta.get(2)
-    row_groups = fmeta.get(4, [])
-    if not isinstance(schema, list) or not schema:
+    schema = _structs(fmeta, 2)
+    row_groups = _structs(fmeta, 4)
+    if not schema:
         raise ExtractError("parquet: missing schema")
     root = schema[0]
     n_children = root.get(5, 0)
@@ -264,8 +292,8 @@ def parquet_extract(data: bytes) -> tuple[str, str]:
     for el in schema[1:]:
         if el.get(5):  # num_children on a non-root element
             raise ExtractError("parquet: nested schemas are not supported")
-        name = el.get(4, b"").decode("utf-8", "replace")
-        ptype = el.get(1)
+        name = _get(el, 4, bytes, b"").decode("utf-8", "replace")
+        ptype = _get(el, 1, int)
         if ptype is None or ptype == _P_INT96:
             raise ExtractError("parquet: unsupported column type for %r" % name)
         optional = el.get(3, 0) == 1
@@ -276,8 +304,8 @@ def parquet_extract(data: bytes) -> tuple[str, str]:
     columns: list[list] = [[] for _ in cols]
     total_rows = 0
     for rg in row_groups:
-        chunks = rg.get(1, [])
-        rg_rows = rg.get(3, 0)
+        chunks = _structs(rg, 1)
+        rg_rows = _get(rg, 3, int, 0)
         total_rows += rg_rows
         if total_rows > MAX_ROWS:
             raise ExtractError("parquet: more than %d rows" % MAX_ROWS)
@@ -289,8 +317,8 @@ def parquet_extract(data: bytes) -> tuple[str, str]:
                 raise ExtractError("parquet: column chunk missing metadata")
             if md.get(4, 0) != 0:
                 raise ExtractError("parquet: unsupported compression codec")
-            num_values = md.get(5, 0)
-            off = md.get(9)
+            num_values = _get(md, 5, int, 0)
+            off = _get(md, 9, int)
             if off is None or off < 0 or off >= n:
                 raise ExtractError("parquet: bad data page offset")
             name, ptype, optional = cols[ci]
@@ -300,9 +328,9 @@ def parquet_extract(data: bytes) -> tuple[str, str]:
                 tr = _TReader(data, pos)
                 ph = tr.struct()
                 pos = tr.pos
-                page_type = ph.get(1)
-                comp_size = ph.get(3, 0)
-                if pos + comp_size > n:
+                page_type = _get(ph, 1, int)
+                comp_size = _get(ph, 3, int, 0)
+                if comp_size < 0 or pos + comp_size > n:
                     raise ExtractError("parquet: page overruns file")
                 body = data[pos : pos + comp_size]
                 pos += comp_size
@@ -312,12 +340,12 @@ def parquet_extract(data: bytes) -> tuple[str, str]:
                     )
                 if page_type != 0:
                     raise ExtractError(
-                        "parquet: unsupported page type %d" % page_type
+                        "parquet: unsupported page type %r" % page_type
                     )
                 dph = ph.get(5)
                 if not isinstance(dph, dict):
                     raise ExtractError("parquet: missing data page header")
-                pv = dph.get(1, 0)
+                pv = _get(dph, 1, int, 0)
                 if dph.get(2) != 0:
                     raise ExtractError(
                         "parquet: unsupported value encoding (PLAIN only)"

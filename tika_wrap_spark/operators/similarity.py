@@ -64,14 +64,14 @@ def brute_force_topk(
     EXACT BASELINE, not a scale path: the query side is broadcast and
     cross-joined against every corpus row, so it must stay small. Raises
     ``ValueError`` when ``query_df`` exceeds ``BRUTE_FORCE_MAX_QUERIES``
-    rows (one cheap count on the small side — the corpus is never
-    counted). Use ``ivf_topk`` / ``lsh_topk_multi`` / ``pq_topk`` when the
-    query set itself is corpus-sized."""
-    n_queries = query_df.count()
-    if n_queries > BRUTE_FORCE_MAX_QUERIES:
+    rows (a count capped one past the limit, so an oversized query side
+    is never counted in full; the corpus is never counted). Use
+    ``ivf_topk`` / ``lsh_topk_multi`` / ``pq_topk`` when the query set
+    itself is corpus-sized."""
+    if query_df.limit(BRUTE_FORCE_MAX_QUERIES + 1).count() > BRUTE_FORCE_MAX_QUERIES:
         raise ValueError(
-            f"brute_force_topk query side has {n_queries} rows "
-            f"(> BRUTE_FORCE_MAX_QUERIES={BRUTE_FORCE_MAX_QUERIES}); it is "
+            "brute_force_topk query side has more than "
+            f"BRUTE_FORCE_MAX_QUERIES={BRUTE_FORCE_MAX_QUERIES} rows; it is "
             "broadcast + cross-joined against the full corpus, so a large "
             "query set makes cost |corpus|*|queries|. Use ivf_topk / "
             "lsh_topk_multi / pq_topk for corpus-sized query sets."
