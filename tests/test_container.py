@@ -198,6 +198,76 @@ class TestRealZip:
         with pytest.raises(ExtractError, match="zip64 sentinel"):
             parse_zip(bad)
 
+    @staticmethod
+    def _zeros_zip(n_mib: int, usize: int | None = None) -> bytes:
+        """A zip of one deflated member of ``n_mib`` MiB of zeros, written in
+        1 MiB chunks; ``usize`` overwrites the central record's size."""
+        import io
+        import struct
+        import zipfile
+
+        buf = io.BytesIO()
+        with zipfile.ZipFile(buf, "w", zipfile.ZIP_DEFLATED) as z:
+            with z.open("zeros.bin", "w") as f:
+                for _ in range(n_mib):
+                    f.write(bytes(1 << 20))
+        data = bytearray(buf.getvalue())
+        if usize is not None:
+            cen = data.index(b"PK\x01\x02")
+            struct.pack_into("<I", data, cen + 24, usize)
+        return bytes(data)
+
+    def test_deflate_member_over_cap_is_bomb(self):
+        """An honestly declared 65 MiB member stops at the 64 MiB cap and
+        lands in the ``bomb`` class, like every other inflating path."""
+        from tika_wrap_spark.core.gzipbin import MAX_INFLATED
+        from tika_wrap_spark.core.zipbin import parse_zip
+
+        data = self._zeros_zip(65)
+        assert len(data) < 100_000
+        want = "zip: inflated payload exceeds %d bytes" % MAX_INFLATED
+        with pytest.raises(ExtractError, match=want):
+            parse_zip(data)
+
+    def test_understated_size_inflates_no_further(self):
+        """A member whose declared size understates its stream inflates one
+        byte past the declared size, not to the end of the stream."""
+        import tracemalloc
+
+        from tika_wrap_spark.core.zipbin import parse_zip
+
+        data = self._zeros_zip(48, usize=16)
+        tracemalloc.start()
+        try:
+            with pytest.raises(ExtractError, match="inflated size mismatch"):
+                parse_zip(data)
+            peak = tracemalloc.get_traced_memory()[1]
+        finally:
+            tracemalloc.stop()
+        assert peak < 4 << 20, peak
+
+    def test_deflate_stream_without_final_block_is_truncated(self):
+        """A member whose stream yields every declared byte but never ends
+        (no final block) is truncated, not silently accepted."""
+        import struct
+        import zlib
+
+        from tika_wrap_spark.core.zipbin import parse_zip
+
+        payload = b"member text " * 20
+        c = zlib.compressobj(9, zlib.DEFLATED, -15)
+        raw = c.compress(payload) + c.flush(zlib.Z_SYNC_FLUSH)
+        fields = (0, 8, 0, 0x21, zlib.crc32(payload), len(raw), len(payload), 5)
+        local = b"PK\x03\x04" + struct.pack("<HHHHHIIIHH", 20, *fields, 0) + b"m.txt" + raw
+        central = (
+            b"PK\x01\x02"
+            + struct.pack("<HHHHHHIIIHHHHHII", 20, 20, *fields, 0, 0, 0, 0, 0, 0)
+            + b"m.txt"
+        )
+        eocd = b"PK\x05\x06" + struct.pack("<HHHHIIH", 0, 0, 1, 1, len(central), len(local), 0)
+        with pytest.raises(ExtractError, match="zip: truncated deflate stream"):
+            parse_zip(local + central + eocd)
+
     def test_extracts_like_any_container(self):
         from tika_wrap_spark.core.zipbin import build_zip_text
 

@@ -157,3 +157,51 @@ def test_corpus_font_payloads_parse():
     for _ in range(20):
         meta = parse_font_meta(_gen_font_payload(rng).encode("latin-1"))
         assert meta["family"] and meta["full_name"].startswith(meta["family"])
+
+
+def _zeros_woff(n_mib: int, orig: int, trim: int = 0) -> bytes:
+    """A one-table WOFF whose table is ``n_mib`` MiB of zeros, deflated in
+    1 MiB chunks less ``trim`` trailing bytes, declaring ``orig`` as its
+    inflated length."""
+    import zlib
+
+    c = zlib.compressobj(9)
+    comp = b"".join(c.compress(bytes(1 << 20)) for _ in range(n_mib)) + c.flush()
+    comp = comp[: len(comp) - trim]
+    header = struct.pack(
+        ">4s4sIHHIHHIIIII", b"wOFF", b"\x00\x01\x00\x00", 64 + len(comp), 1,
+        0, 0, 1, 0, 0, 0, 0, 0, 0,
+    )
+    return header + struct.pack(">4sIIII", b"name", 64, len(comp), orig, 0) + comp
+
+
+def test_woff_table_over_cap_is_bomb():
+    """A table declaring more than the 64 MiB cap is refused before any
+    inflate, in the ``bomb`` class."""
+    from tika_wrap_spark.core.gzipbin import MAX_INFLATED
+
+    data = _zeros_woff(1, MAX_INFLATED + 1)
+    want = "font: inflated payload exceeds %d bytes" % MAX_INFLATED
+    with pytest.raises(ExtractError, match=want):
+        parse_font_meta(data)
+
+
+def test_woff_understated_table_inflates_no_further():
+    """A table whose stream inflates far past its declared length stops one
+    byte past it instead of inflating the whole stream."""
+    import tracemalloc
+
+    data = _zeros_woff(48, 1 << 20)
+    tracemalloc.start()
+    try:
+        with pytest.raises(ExtractError, match="woff table length mismatch"):
+            parse_font_meta(data)
+        peak = tracemalloc.get_traced_memory()[1]
+    finally:
+        tracemalloc.stop()
+    assert peak < 4 << 20, peak
+
+
+def test_woff_truncated_table_stream_raises():
+    with pytest.raises(ExtractError, match="woff table inflate failed: truncated stream"):
+        parse_font_meta(_zeros_woff(1, 1 << 20, trim=8))

@@ -29,6 +29,7 @@ import struct
 import zlib
 
 from tika_wrap_spark.core.errors import ExtractError
+from tika_wrap_spark.core.gzipbin import MAX_INFLATED
 
 SFNT_TTF = b"\x00\x01\x00\x00"
 SFNT_OTTO = b"OTTO"
@@ -90,10 +91,15 @@ def _woff_tables(data: bytes) -> dict[str, bytes]:
             raise ExtractError("font: woff table %r past end of file" % tag)
         raw = data[off : off + comp]
         if comp < orig:
-            try:
-                raw = zlib.decompress(raw)
+            if orig > MAX_INFLATED:
+                raise ExtractError("font: inflated payload exceeds %d bytes" % MAX_INFLATED)
+            d = zlib.decompressobj()
+            try:  # one byte past origLength is enough to refute it
+                raw = d.decompress(raw, orig + 1)
             except zlib.error as exc:
                 raise ExtractError("font: woff table inflate failed: %s" % exc)
+            if len(raw) <= orig and not d.eof:
+                raise ExtractError("font: woff table inflate failed: truncated stream")
         if len(raw) != orig:
             raise ExtractError("font: woff table length mismatch")
         tables[tag.decode("latin-1")] = raw

@@ -7,6 +7,13 @@ the *server* (Tika) detect the type from content. The rebuild makes content
 detection first-class: a deterministic magic-byte sniffer over the payload
 head. Detection is from CONTENT ONLY — the corpus ``kind`` column is treated
 as a hint, never trusted (parity with the reference's server-side authority).
+
+The detector is one ordered table, :data:`RULES`. :func:`sniff_kind`
+evaluates it here and ``functions.sniff_kind_col`` folds the same rows into
+one JVM ``when`` chain, so the two engines cannot drift. A row is
+``(kind, predicate, ...)``: it matches when all its predicates hold, and
+the first matching row wins (no match is ``text``). Predicates come from
+the closed vocabulary below; each reads one view of the payload.
 """
 
 from __future__ import annotations
@@ -22,399 +29,221 @@ KIND_ZIP = "zip"
 KIND_GZIP = "gzip"
 KIND_XZ = "xz"
 KIND_BZ2 = "bz2"
-KIND_Z = "z"  # UNIX compress .Z (LZW), '\x1f\x9d' at offset 0
-KIND_LZ4 = "lz4"  # LZ4 frame, 0x184D2204 LE at offset 0
-KIND_MIDI = "midi"  # Standard MIDI file, 'MThd' at offset 0 (guarded)
-KIND_SEVENZ = "7z"  # 7z archive, '7z\xbc\xaf\x27\x1c' at offset 0
-KIND_RAR = "rar"  # RAR archive, 'Rar!\x1a\x07' at offset 0 (v4 and v5)
-KIND_ZSTD = "zstd"  # Zstandard frame, 0xFD2FB528 LE at offset 0
-KIND_LZMA = "lzma"  # legacy LZMA alone format, guarded 0x5D header
+KIND_Z = "z"  # UNIX compress .Z (LZW)
+KIND_LZ4 = "lz4"  # LZ4 frame
+KIND_MIDI = "midi"  # Standard MIDI file
+KIND_SEVENZ = "7z"
+KIND_RAR = "rar"  # RAR v4 and v5
+KIND_ZSTD = "zstd"  # Zstandard frame
+KIND_LZMA = "lzma"  # legacy LZMA alone format
 KIND_TAR = "tar"
 KIND_XML = "xml"
 KIND_JSON = "json"
 KIND_CSV = "csv"
 KIND_RTF = "rtf"
 KIND_EML = "eml"
-KIND_OLE = "ole"  # OLE2/CFB compound file (.doc/.xls), magic at offset 0
-KIND_ICS = "ics"  # iCalendar (RFC 5545), BEGIN:VCALENDAR opener
-KIND_VCF = "vcf"  # vCard (RFC 6350), BEGIN:VCARD opener
-KIND_SQLITE = "sqlite"  # SQLite database, 16-byte magic at offset 0
-KIND_FONT = "font"  # sfnt (TrueType/OpenType) or WOFF font file
-KIND_WARC = "warc"  # WARC web archive (ISO 28500), 'WARC/' at offset 0
-KIND_MBOX = "mbox"  # mbox mailbox (RFC 4155), guarded From_ separator
-KIND_PLIST = "plist"  # Apple binary property list, 'bplist00' at offset 0
-KIND_AR = "ar"  # Unix ar archive (.a/.deb), '!<arch>\n' at offset 0
-KIND_CPIO = "cpio"  # cpio newc/crc archive, guarded '07070x' at offset 0
-KIND_DBF = "dbf"  # dBase table, guarded 0x03 version byte at offset 0
-KIND_ISO = "iso"  # ISO 9660 image, 'CD001' at offset 32769
-KIND_CAB = "cab"  # MS Cabinet, 'MSCF' + zero reserved1 at offset 0
-KIND_AVRO = "avro"  # Avro object container, 'Obj\x01' at offset 0
-KIND_PARQUET = "parquet"  # Parquet file, 'PAR1' at BOTH ends
-KIND_TNEF = "tnef"  # TNEF winmail.dat, 0x223E9F78 LE signature at offset 0
-
-# TNEF signature bytes-as-text (MS-OXTNEF §2.1)
-TNEF_MAGIC_TEXT = "\x78\x9f\x3e\x22"
-
-# MS Cabinet signature + the 4-byte reserved1 field ([MS-CAB] §2.1 —
-# always zero): 'MSCF' alone is prose-plausible, the NULs are not
-CAB_MAGIC_TEXT = "MSCF\x00\x00\x00\x00"
-
-# Avro object-container magic (Avro spec "Object Container Files"):
-# 'Obj' + the \x01 version byte — the control char keeps prose out
-AVRO_MAGIC_TEXT = "Obj\x01"
-
-# Parquet framing magic: 'PAR1' alone is prose-plausible, so the rule
-# requires it at BOTH ends of the FULL payload (the parquet-format file
-# layout) plus the 12-byte minimum a real footer implies
-PARQUET_MAGIC_TEXT = "PAR1"
-
-# LZ4 frame magic, 0x184D2204 little-endian (bytes-as-text latin-1)
-LZ4_MAGIC_TEXT = "\x04\x22\x4d\x18"
-
-# SMF MIDI magic — printable, so GUARDED by the header-length high byte
-# (a real MThd chunk length is 6; any sane SMF has byte 4 == 0x00, while
-# prose starting with the literal word 'MThd' never does)
-MIDI_MAGIC_TEXT = "MThd"
-
-# 7z signature (6 bytes, the last four binary — no prose guard needed)
-SEVENZ_MAGIC_TEXT = "7z\xbc\xaf\x27\x1c"
-
-# RAR marker block prefix shared by the v4 ('\x00' next) and v5
-# ('\x01\x00' next) signatures; v4 routes to an honest unsupported error
-RAR_MAGIC_TEXT = "Rar!\x1a\x07"
-
-# Zstandard frame magic 0xFD2FB528 little-endian (bytes-as-text latin-1)
-ZSTD_MAGIC_TEXT = "\x28\xb5\x2f\xfd"
-
-# LZMA alone-format header prefix: properties byte 0x5D ((pb=2,lp=0)*9
-# +lc=3, the universal encoder default) + the low two dictionary-size
-# bytes, zero for any dictionary that is a multiple of 64 KiB (every
-# real encoder's). 0x5D alone is ']' — prose-plausible — so the rule
-# ALSO requires the declared uncompressed size field (bytes 5..13 LE) to
-# be all-0xFF (unknown, EOS-terminated) or < 2^40 (bytes 10..13 zero).
-LZMA_MAGIC_TEXT = "\x5d\x00\x00"
-LZMA_SIZE_UNKNOWN_TEXT = "\xff" * 8
-
-# dbf guard set: the \x03 version byte (a control char no prose starts
-# with), a plausible YY MM DD last-update stamp, and the first field
-# descriptor's type letter at its fixed offset 43
-DBF_FIELD_TYPE_CHARS = "CNFLDM"
-DBF_TYPE_OFFSET = 43
-
-# ar global magic (SysV/GNU/BSD common archive format) — exact offset 0
-AR_MAGIC_TEXT = "!<arch>\n"
-
-# cpio SVR4 portable magics (newc / crc) — exact offset 0, GUARDED by the
-# next 8 chars (the ino field) being hex, so a digits-opener prose/csv
-# line never misroutes
-CPIO_MAGIC_TEXTS = ("070701", "070702")
-CPIO_HEX_CHARS = "0123456789abcdefABCDEF"
-
-# binary-plist magic (CFBinaryPList header comment) — exact offset 0
-PLIST_MAGIC_TEXT = "bplist00"
-
-# WARC version-line magic (ISO 28500 §5.2) — exact offset 0, case-sensitive
-WARC_MAGIC_TEXT = "WARC/"
-
-# mbox From_ separator (RFC 4155 appendix A) — exact offset 0,
-# case-sensitive, and REQUIRES two corroborators ('@' in the separator
-# line, an rfc5322 header line in the head) so prose like
-# "From the desk of..." never misroutes
-MBOX_MAGIC_TEXT = "From "
-
-# calendar/contact openers, matched on the lstripped-lowered head
-ICS_OPENER_TEXT = "begin:vcalendar"
-VCF_OPENER_TEXT = "begin:vcard"
+KIND_OLE = "ole"  # OLE2/CFB compound file (.doc/.xls)
+KIND_ICS = "ics"  # iCalendar (RFC 5545)
+KIND_VCF = "vcf"  # vCard (RFC 6350)
+KIND_SQLITE = "sqlite"
+KIND_FONT = "font"  # sfnt (TrueType/OpenType) or WOFF
+KIND_WARC = "warc"  # WARC web archive (ISO 28500)
+KIND_MBOX = "mbox"  # mbox mailbox (RFC 4155)
+KIND_PLIST = "plist"  # Apple binary property list
+KIND_AR = "ar"  # Unix ar archive (.a/.deb)
+KIND_CPIO = "cpio"  # cpio newc/crc archive
+KIND_DBF = "dbf"  # dBase table
+KIND_ISO = "iso"  # ISO 9660 image
+KIND_CAB = "cab"  # MS Cabinet
+KIND_AVRO = "avro"  # Avro object container
+KIND_PARQUET = "parquet"
+KIND_TNEF = "tnef"  # TNEF winmail.dat
 
 # CFB header magic ([MS-CFB] 2.2) as bytes-as-text
 OLE_MAGIC_TEXT = "\xd0\xcf\x11\xe0\xa1\xb1\x1a\xe1"
 
-# SQLite 3 header string (sqlite.org/fileformat2 §1.3) as bytes-as-text
-SQLITE_MAGIC_TEXT = "SQLite format 3\x00"
+# Predicate vocabulary. A predicate is a tuple ``(op, view, *args)`` that
+# both engines read. Views: "text" is the full payload, "head" its first
+# HEAD_WINDOW chars, "low" the head lstripped and lowercased, "line" the
+# head's first line.
 
-# font magics: sfnt version 0x00010000 (TrueType outlines) is pure binary;
-# the 'OTTO' (CFF) and 'wOFF' tags are printable, so each requires its 5th
-# byte to be plausible — numTables high byte 0 for OTTO (every real font
-# has < 256 tables), and for wOFF the wrapped flavor's first byte
-# ('\x00' for 0x00010000, 'O' for OTTO). Prose starting "OTTO was..."
-# or "wOFFle..." must NOT route font.
-FONT_TTF_MAGIC_TEXT = "\x00\x01\x00\x00"
-FONT_OTTO_MAGIC_TEXT = "OTTO"
-FONT_WOFF_MAGIC_TEXT = "wOFF"
-FONT_WOFF_FLAVOR_BYTES = ("\x00", "O")
 
-# ustar magic position (bytes-as-text offset); checked against the FULL
-# payload, not the head window
-TAR_MAGIC_OFFSET = 257
+def starts(*prefixes: str, view: str = "head") -> tuple:
+    return ("starts", view, prefixes)
 
-# ISO 9660 volume-descriptor signature position: sector 16 (2048-byte
-# sectors) + 1, past the type byte — checked against the FULL payload
-# like the tar rule (the 32 KiB system area precedes it)
-ISO_MAGIC_OFFSET = 32769
 
-_HTML_MARKERS = ("<!doctype html", "<html", "<head", "<body")
+def at(offset: int, literal: str, view: str = "head") -> tuple:
+    return ("at", view, offset, literal)
 
-# Embedded-media magics (container members carry payload bytes-as-text;
-# top-level corpus media spans instead use empty text + media_ref).
-# PNG / JPEG / GIF87a+89a / RIFF(WAV/AVI/WebP family) / TIFF II*\0+MM\0*.
-# BMP's 2-char "BM" magic is deliberately NOT content-sniffed — too weak
-# for text-carried payloads (any prose starting "BM…" would misroute);
-# BMP bytes are still decoded by magic in the multimodal path, where
-# payloads are known-binary.
-_MEDIA_MAGICS = (
-    "\x89PNG\r\n",
-    "\xff\xd8\xff",
-    "GIF87a",
-    "GIF89a",
-    "RIFF",
-    "II*\x00",
-    "MM\x00*",
-)
 
-# ISO-BMFF (mp4/mov/m4a) 'ftyp' fourcc position: the first box's type
-# field, after its 4-byte size (bytes-as-text offset)
-MP4_FTYP_OFFSET = 4
+def char_in(offset: int, chars) -> tuple:
+    return ("char_in", "head", offset, frozenset(chars))
 
-# RFC 5322 message detection over the lstripped-lowered head: a STRONG
-# opener alone suffices (headers only mail software writes); a WEAK opener
-# (headers prose might imitate) needs a second header line as corroborator.
-_EML_STRONG = (
-    "return-path:",
-    "received:",
-    "delivered-to:",
-    "mime-version:",
-    "message-id:",
-)
+
+def ord_in(offset: int, lo: int, hi: int) -> tuple:
+    return char_in(offset, map(chr, range(lo, hi + 1)))
+
+
+def hex_at(offset: int, n: int) -> tuple:
+    return ("hex", "head", offset, n)
+
+
+def ends(suffix: str, min_len: int) -> tuple:
+    return ("ends", "text", suffix, min_len)
+
+
+def has(*needles: str, view: str = "low") -> tuple:
+    return ("has", view, needles)
+
+
+def commas(n: int) -> tuple:
+    return ("commas", "line", n)
+
+
+def any_of(*predicates: tuple) -> tuple:
+    return ("any", None, predicates)
+
+
+# RFC 5322 openers: a strong one is a header only mail software writes; a
+# weak one (prose might imitate it) needs a second header line as well
+_EML_STRONG = ("return-path:", "received:", "delivered-to:", "mime-version:", "message-id:")
 _EML_WEAK = ("from:", "to:", "subject:", "date:")
-_EML_CORROBORATORS = (
-    "\nmime-version:",
-    "\nsubject:",
-    "\nfrom:",
-    "\nto:",
-    "\nmessage-id:",
+_EML_CORROBORATORS = ("\nmime-version:", "\nsubject:", "\nfrom:", "\nto:", "\nmessage-id:")
+
+RULES: tuple[tuple, ...] = (
+    (KIND_PDF, starts("%PDF-")),
+    # before the html-contains row: a zip whose first member is html is a zip
+    (KIND_ZIP, starts("PK\x03\x04")),
+    (KIND_GZIP, starts("\x1f\x8b")),
+    (KIND_XZ, starts("\xfd7zXZ\x00")),
+    (KIND_BZ2, starts("BZh"), char_in(3, "123456789")),  # + block-size digit
+    (KIND_Z, starts("\x1f\x9d")),
+    (KIND_LZ4, starts("\x04\x22\x4d\x18")),  # 0x184D2204 LE
+    # 'MThd' is printable: a real header length (6) has a NUL high byte
+    (KIND_MIDI, starts("MThd"), at(4, "\x00")),
+    (KIND_SEVENZ, starts("7z\xbc\xaf\x27\x1c")),
+    # shared by the v4 and v5 marker blocks; v4 becomes an honest error row
+    (KIND_RAR, starts("Rar!\x1a\x07")),
+    (KIND_ZSTD, starts("\x28\xb5\x2f\xfd")),  # 0xFD2FB528 LE
+    # props 0x5D (']', prose-plausible) + zero low dictionary bytes, and a
+    # declared size (bytes 5..13) that is unknown (all 0xFF) or < 2^40
+    (KIND_LZMA, starts("\x5d\x00\x00"), any_of(at(5, "\xff" * 8), at(10, "\x00" * 3))),
+    (KIND_OLE, starts(OLE_MAGIC_TEXT)),
+    (KIND_SQLITE, starts("SQLite format 3\x00")),
+    # sfnt 0x00010000 is binary; the printable 'OTTO'/'wOFF' tags need a
+    # plausible 5th byte: numTables < 256, or the wrapped flavor's first byte
+    (KIND_FONT, starts("\x00\x01\x00\x00")),
+    (KIND_FONT, starts("OTTO"), at(4, "\x00")),
+    (KIND_FONT, starts("wOFF"), char_in(4, "\x00O")),
+    # before the html rows: response blocks carry html in the head
+    (KIND_WARC, starts("WARC/")),
+    (KIND_PLIST, starts("bplist00")),
+    (KIND_AR, starts("!<arch>\n")),
+    # the 8-hex ino field keeps digit-led prose and csv out
+    (KIND_CPIO, starts("070701", "070702"), hex_at(6, 8)),
+    # \x03 version byte (no text opens with it), a plausible YY MM DD stamp,
+    # and an xBase field-type letter in the first field descriptor
+    (KIND_DBF, starts("\x03"), ord_in(2, 1, 12), ord_in(3, 1, 31), char_in(43, "CNFLDM")),
+    (KIND_TNEF, starts("\x78\x9f\x3e\x22")),  # 0x223E9F78 LE
+    # 'MSCF' alone is prose-plausible; its zero reserved1 field is not
+    (KIND_CAB, starts("MSCF\x00\x00\x00\x00")),
+    (KIND_AVRO, starts("Obj\x01")),  # the \x01 version byte keeps prose out
+    # 'PAR1' at both ends of the full payload, with room for a footer
+    (KIND_PARQUET, starts("PAR1"), ends("PAR1", 12)),
+    # fixed-offset signatures in the full payload, after the offset-0
+    # magics; ISO's 'CD001' past the 32 KiB system area pins hybrids
+    # before tar's in-header 'ustar'
+    (KIND_ISO, at(32769, "CD001", view="text")),
+    (KIND_TAR, at(257, "ustar", view="text")),
+    # media inside containers: PNG, JPEG, GIF, RIFF, TIFF. BMP's 'BM' is
+    # too weak for text-carried payloads (prose starting "BM..." would
+    # misroute); the multimodal path still decodes BMP by magic.
+    (KIND_MEDIA, starts("\x89PNG\r\n", "\xff\xd8\xff", "GIF87a", "GIF89a", "RIFF",
+                        "II*\x00", "MM\x00*")),
+    (KIND_MEDIA, at(4, "ftyp")),  # ISO-BMFF: the first box's fourcc
+    (KIND_RTF, starts("{\\rtf")),  # before json: RTF also opens with '{'
+    # From_ separator with '@' in it and a header line after it, so "From
+    # the desk of..." stays text; before html, a body part may be in the head
+    (KIND_MBOX, starts("From "), has("@", view="line"), has(*_EML_CORROBORATORS)),
+    (KIND_HTML, starts("<!doctype html", "<html", "<head", "<body", view="low")),
+    # before '<html' anywhere: an xhtml document with an xml prolog is xml
+    (KIND_XML, starts("<?xml", view="low")),
+    (KIND_HTML, has("<html")),
+    # mail and calendar openers precede csv: 'From: a@x, b@y, c@z' and
+    # ATTENDEE address lists carry commas
+    (KIND_EML, starts(*_EML_STRONG, view="low")),
+    (KIND_EML, starts(*_EML_WEAK, view="low"), has(*_EML_CORROBORATORS)),
+    (KIND_ICS, starts("begin:vcalendar", view="low")),
+    (KIND_VCF, starts("begin:vcard", view="low")),
+    (KIND_JSON, starts("{", "[", view="low")),
+    (KIND_CSV, commas(2)),
 )
+
+_HEX = "0123456789abcdefABCDEF"
+
+_PY_OPS = {
+    "starts": lambda view, prefixes: lambda v: v[view].startswith(prefixes),
+    "at": lambda view, off, lit: lambda v: v[view][off : off + len(lit)] == lit,
+    "char_in": lambda view, off, chars: lambda v: v[view][off : off + 1] in chars,
+    "hex": lambda view, off, n: lambda v: (
+        len(s := v[view][off : off + n]) == n and not s.strip(_HEX)
+    ),
+    "ends": lambda view, suffix, n: lambda v: len(v[view]) >= n and v[view].endswith(suffix),
+    "has": lambda view, needles: lambda v: any(map(v[view].__contains__, needles)),
+    "commas": lambda view, n: lambda v: v[view].count(",") >= n,
+}
+
+
+def _py_test(predicates: tuple):
+    """The conjunction of ``predicates`` as one Python test over views."""
+    (op, view, *args), *rest = predicates
+    if op == "any":
+        alts = [_py_test((p,)) for p in args[0]]
+        test = lambda v: any(t(v) for t in alts)  # noqa: E731
+    else:
+        test = _PY_OPS[op](view, *args)
+    if not rest:
+        return test
+    tail = _py_test(rest)
+    return lambda v: test(v) and tail(v)
+
+
+class _Views(dict):
+    """The views of one payload; ``low`` and ``line`` are derived once, on
+    first use."""
+
+    def __missing__(self, view: str) -> str:
+        head = self["head"]
+        value = self[view] = head.lstrip().lower() if view == "low" else head.split("\n", 1)[0]
+        return value
+
+
+def _led(row: tuple) -> bool:
+    op, view = row[1][:2]
+    return op == "starts" and view == "head"
+
+
+_TESTS = tuple((kind, _py_test(preds)) for kind, *preds in RULES)
+# One gate over every leading offset-0 magic: when the head starts with
+# none of them, the rows they lead cannot match and are skipped.
+_GATE = tuple(p for row in RULES if _led(row) for p in row[1][2])
+_UNLED = tuple(t for row, t in zip(RULES, _TESTS) if not _led(row))
 
 
 def sniff_kind(text: str, media_ref: str = "") -> str:
-    """Classify a span payload by its leading bytes.
-
-    Routing rules (deterministic, order matters):
-      1. empty text + non-empty media_ref         -> 'media'
-      2. head starts with '%PDF-'                 -> 'pdf'
-      3. head starts with 'PK\\x03\\x04'          -> 'zip' (container;
-         checked before the html-contains rule so an archive whose first
-         member is html is still an archive — magic-at-offset-0 wins)
-      4. head starts with '\\x1f\\x8b'            -> 'gzip' (RFC 1952 wrapper)
-      4b. head starts with '\\xfd7zXZ\\x00'       -> 'xz'
-      4c. head starts with 'BZh' + level 1-9      -> 'bz2'
-      4c2. head starts with '\\x1f\\x9d'          -> 'z' (UNIX compress
-         LZW wrapper: decode in core/gzipbin.py, inner stream re-sniffs)
-      4c3. head starts with 0x184D2204 LE         -> 'lz4' (LZ4 frame
-         wrapper: decode in core/lz4bin.py, inner stream re-sniffs)
-      4c4. head starts with 'MThd' AND head[4] == '\\x00' -> 'midi'
-         (Standard MIDI file: text-class meta events route to
-         core/midibin.py; the guard keeps 'MThd'-opener prose out)
-      4c5. head starts with '7z\\xbc\\xaf\\x27\\x1c' -> '7z' (7z archive:
-         members route to core/sevenzip.py and recurse)
-      4c6. head starts with 'Rar!\\x1a\\x07'         -> 'rar' (RAR archive:
-         stored members route to core/rarbin.py and recurse; RAR4 and
-         the proprietary compressed methods raise -> error rows)
-      4c7. head starts with 0xFD2FB528 LE         -> 'zstd' (Zstandard
-         frame wrapper: full RFC 8878 decode in core/zstdbin.py, inner
-         stream re-sniffs)
-      4c8. head starts with '\\x5d\\x00\\x00' AND the declared size field
-         (bytes 5..13) is all-0xFF or < 2^40 -> 'lzma' (legacy LZMA
-         alone format: stdlib-liblzma decode in core/gzipbin.py, inner
-         stream re-sniffs; the size guard keeps ']'-opener binary out)
-      4d. head starts with the 8-byte CFB magic   -> 'ole' (legacy Office
-         compound file: .doc/.xls route to core/olebin.py)
-      4e. head starts with 'SQLite format 3\\0'   -> 'sqlite' (database
-         file: table rows route to core/sqlitebin.py)
-      4f. head starts with sfnt 0x00010000, or 'OTTO' with a NUL 5th
-         byte, or 'wOFF' with a plausible flavor byte -> 'font'
-         (metadata-only payload: core/fontbin.py)
-      4g. head starts with 'WARC/'                -> 'warc' (web archive,
-         ISO 28500: records route to core/warcbin.py; MUST precede the
-         html-contains rule — response blocks carry html in the head)
-      4h. head starts with 'bplist00'             -> 'plist' (Apple binary
-         property list: object graph routes to core/plistbin.py)
-      4i. head starts with '!<arch>\\n'           -> 'ar' (Unix ar archive
-         incl. Debian .deb: members route to core/arbin.py and recurse)
-      4j. head starts with '070701'/'070702' AND chars [6:14] are all hex
-         -> 'cpio' (SVR4 newc/crc archive: members route to
-         core/cpiobin.py; the hex guard keeps digits-opener prose out)
-      4k. head[0] == '\\x03' AND head[2]/head[3] are a plausible month/day
-         AND head[43] is an xBase field-type letter -> 'dbf' (dBase table:
-         rows route to core/dbfbin.py; \\x03 is a control char no text
-         document opens with, the date/type guards keep other binary out)
-      4l. head starts with the TNEF signature 0x223E9F78 (LE) -> 'tnef'
-         (winmail.dat: subject/body surface, attachments recurse through
-         core/tnefbin.py)
-      4l2. head starts with 'MSCF' + four NUL reserved1 bytes -> 'cab'
-         (MS Cabinet: Copy/MSZIP folder members route to core/cabbin.py
-         and recurse; 'MSCF'-opener prose never carries the NULs)
-      4l3. head starts with 'Obj\\x01'            -> 'avro' (Avro object
-         container: records flatten to a csv-shaped block via
-         core/avrobin.py; the \\x01 version byte keeps 'Obj'-opener
-         prose out)
-      4l4. head starts with 'PAR1' AND the FULL payload ends with 'PAR1'
-         AND len >= 12 -> 'parquet' (Parquet file: columns flatten to a
-         csv-shaped block via core/parquetbin.py; the both-ends rule
-         keeps 'PAR1'-opener prose out)
-      4m. payload[32769:32774] == 'CD001'         -> 'iso' (ISO 9660
-         image: the volume-descriptor signature at its fixed
-         past-the-system-area offset, like the tar rule below; members
-         route to core/isobin.py and recurse. BEFORE the tar rule — the
-         more specific fixed-offset signature wins, the deterministic
-         pin for hybrid payloads)
-      5. payload[257:262] == 'ustar'              -> 'tar' (POSIX ustar magic
-         at its fixed in-header offset; after the offset-0 magics — a
-         payload matching both is routed by the earlier rule, the
-         documented deterministic pin)
-      6. head starts with a media magic (PNG/JPEG/GIF/RIFF/TIFF
-         bytes-as-text, as found inside container members) -> 'media'
-      6a. head[4:8] == 'ftyp'                     -> 'media' (ISO-BMFF
-         mp4/mov/m4a: the fourcc of the mandatory first box, a fixed
-         offset-4 magic like tar's offset-257 ustar)
-      6b. head starts with '{\\rtf'               -> 'rtf' (magic at offset
-         0; MUST precede the json rule — an RTF head also begins '{')
-      6c. head starts with 'From ' (case-sensitive, offset 0) AND the
-         separator line carries '@' AND an rfc5322 header line follows in
-         the head window -> 'mbox' (RFC 4155 mailbox; MUST precede the
-         html rules — an early html body part could land in the head, and
-         the guards keep "From the desk of..." prose out)
-      7. head (lstripped, lowercased) begins with an HTML marker -> 'html'
-      8. lstripped head begins with '<?xml'       -> 'xml' (so an xhtml
-         document with an xml prolog classifies xml — deterministic pin)
-      9. head contains '<html' in the first HEAD_WINDOW chars -> 'html'
-      9b. lstripped lowered head begins with a STRONG rfc5322 header
-         (Return-Path/Received/Delivered-To/MIME-Version/Message-ID), or
-         with a WEAK one (From/To/Subject/Date) followed by a second
-         header line in the head window       -> 'eml' (MUST precede the
-         csv rule — 'From: a@x, b@y, c@z' has two commas)
-      9c. lstripped lowered head begins 'begin:vcalendar' -> 'ics'; with
-         'begin:vcard' -> 'vcf' (RFC 5545/6350 openers; before the csv
-         rule — ATTENDEE address lists carry commas)
-     10. lstripped head begins with '{' or '['    -> 'json'
-     11. first line of head has >= 2 commas       -> 'csv'
-     12. otherwise                                -> 'text'
+    """Classify a span payload: the kind of the first :data:`RULES` row
+    that matches, else ``text``. An empty payload is ``media`` when it
+    carries a media_ref (top-level media spans have no text).
 
     The QMimeDatabase the reference consults
     (/root/reference/src/java-env.cpp:233-242) knows these families too;
     xml/json/csv extract as text-family but route and tally distinctly.
     """
-    if (text is None or text == "") and media_ref:
-        return KIND_MEDIA
-    if text is None:
-        return KIND_TEXT
+    if not text:
+        return KIND_MEDIA if media_ref else KIND_TEXT
     head = text[:HEAD_WINDOW]
-    if head.startswith("%PDF-"):
-        return KIND_PDF
-    if head.startswith("PK\x03\x04"):
-        return KIND_ZIP
-    if head.startswith("\x1f\x8b"):
-        return KIND_GZIP
-    if head.startswith("\xfd7zXZ\x00"):
-        return KIND_XZ
-    # len guard: head[3:4] of bare "BZh" is "" and `"" in str` is True —
-    # the JVM substring comparison has no such quirk, keep them identical
-    if head.startswith("BZh") and len(head) > 3 and head[3] in "123456789":
-        return KIND_BZ2
-    if head.startswith("\x1f\x9d"):
-        return KIND_Z
-    if head.startswith(LZ4_MAGIC_TEXT):
-        return KIND_LZ4
-    if head.startswith(MIDI_MAGIC_TEXT) and head[4:5] == "\x00":
-        return KIND_MIDI
-    if head.startswith(SEVENZ_MAGIC_TEXT):
-        return KIND_SEVENZ
-    if head.startswith(RAR_MAGIC_TEXT):
-        return KIND_RAR
-    if head.startswith(ZSTD_MAGIC_TEXT):
-        return KIND_ZSTD
-    if head.startswith(LZMA_MAGIC_TEXT) and (
-        head[5:13] == LZMA_SIZE_UNKNOWN_TEXT or head[10:13] == "\x00\x00\x00"
-    ):
-        return KIND_LZMA
-    if head.startswith(OLE_MAGIC_TEXT):
-        return KIND_OLE
-    if head.startswith(SQLITE_MAGIC_TEXT):
-        return KIND_SQLITE
-    if head.startswith(FONT_TTF_MAGIC_TEXT):
-        return KIND_FONT
-    if head.startswith(FONT_OTTO_MAGIC_TEXT) and head[4:5] == "\x00":
-        return KIND_FONT
-    if head.startswith(FONT_WOFF_MAGIC_TEXT) and head[4:5] in FONT_WOFF_FLAVOR_BYTES:
-        return KIND_FONT
-    if head.startswith(WARC_MAGIC_TEXT):
-        return KIND_WARC
-    if head.startswith(PLIST_MAGIC_TEXT):
-        return KIND_PLIST
-    if head.startswith(AR_MAGIC_TEXT):
-        return KIND_AR
-    if (
-        head[:6] in CPIO_MAGIC_TEXTS
-        and len(head) >= 14
-        and all(c in CPIO_HEX_CHARS for c in head[6:14])
-    ):
-        return KIND_CPIO
-    if (
-        head[:1] == "\x03"
-        and len(head) > DBF_TYPE_OFFSET
-        and 1 <= ord(head[2]) <= 12
-        and 1 <= ord(head[3]) <= 31
-        and head[DBF_TYPE_OFFSET] in DBF_FIELD_TYPE_CHARS
-    ):
-        return KIND_DBF
-    if head.startswith(TNEF_MAGIC_TEXT):
-        return KIND_TNEF
-    if head.startswith(CAB_MAGIC_TEXT):
-        return KIND_CAB
-    if head.startswith(AVRO_MAGIC_TEXT):
-        return KIND_AVRO
-    if (
-        head.startswith(PARQUET_MAGIC_TEXT)
-        and len(text) >= 12
-        and text[-4:] == PARQUET_MAGIC_TEXT
-    ):
-        return KIND_PARQUET
-    if text[ISO_MAGIC_OFFSET : ISO_MAGIC_OFFSET + 5] == "CD001":
-        return KIND_ISO
-    if text[TAR_MAGIC_OFFSET : TAR_MAGIC_OFFSET + 5] == "ustar":
-        return KIND_TAR
-    for magic in _MEDIA_MAGICS:
-        if head.startswith(magic):
-            return KIND_MEDIA
-    if head[MP4_FTYP_OFFSET : MP4_FTYP_OFFSET + 4] == "ftyp":
-        return KIND_MEDIA
-    if head.startswith("{\\rtf"):
-        return KIND_RTF
-    lowered = head.lstrip().lower()
-    if (
-        head.startswith(MBOX_MAGIC_TEXT)
-        and "@" in head.split("\n", 1)[0]
-        and any(c in lowered for c in _EML_CORROBORATORS)
-    ):
-        return KIND_MBOX
-    for marker in _HTML_MARKERS:
-        if lowered.startswith(marker):
-            return KIND_HTML
-    if lowered.startswith("<?xml"):
-        return KIND_XML
-    if "<html" in lowered:
-        return KIND_HTML
-    if any(lowered.startswith(s) for s in _EML_STRONG) or (
-        any(lowered.startswith(w) for w in _EML_WEAK)
-        and any(c in lowered for c in _EML_CORROBORATORS)
-    ):
-        return KIND_EML
-    if lowered.startswith(ICS_OPENER_TEXT):
-        return KIND_ICS
-    if lowered.startswith(VCF_OPENER_TEXT):
-        return KIND_VCF
-    if lowered.startswith("{") or lowered.startswith("["):
-        return KIND_JSON
-    first_line = head.split("\n", 1)[0]
-    if first_line.count(",") >= 2:
-        return KIND_CSV
+    views = _Views(text=text, head=head)
+    for kind, test in _TESTS if head.startswith(_GATE) else _UNLED:
+        if test(views):
+            return kind
     return KIND_TEXT

@@ -30,6 +30,7 @@ import struct
 import zlib
 
 from tika_wrap_spark.core.errors import ExtractError
+from tika_wrap_spark.core.gzipbin import MAX_INFLATED
 
 LOCAL_MAGIC = b"PK\x03\x04"
 CENTRAL_MAGIC = b"PK\x01\x02"
@@ -148,11 +149,17 @@ def parse_zip(data: bytes) -> list[tuple[str, bytes]]:
                 raise ExtractError("zip: stored member size mismatch in %r" % name[:40])
             payload = raw
         elif method == METHOD_DEFLATE:
+            # capped like gunzip: one byte past the declared size (and never
+            # past the bomb cap), no flush(), and the stream must end
+            d = zlib.decompressobj(-15)  # raw deflate, no zlib header
             try:
-                d = zlib.decompressobj(-15)  # raw deflate, no zlib header
-                payload = d.decompress(raw, usize + 1) + d.flush()
+                payload = d.decompress(raw, min(usize, MAX_INFLATED) + 1)
             except zlib.error as exc:
                 raise ExtractError("zip: bad deflate stream in %r (%s)" % (name[:40], exc))
+            if len(payload) > MAX_INFLATED:
+                raise ExtractError("zip: inflated payload exceeds %d bytes" % MAX_INFLATED)
+            if len(payload) == usize and not d.eof:
+                raise ExtractError("zip: truncated deflate stream in %r" % name[:40])
         else:
             raise ExtractError("zip: unsupported compression method %d" % method)
         if len(payload) != usize:

@@ -9,6 +9,9 @@ is a join + comparison, not a collect.
 
 from __future__ import annotations
 
+import functools
+import operator
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -39,12 +42,26 @@ def norm_text(col: Column | str) -> Column:
     return norm_col(col)
 
 
+_SNIFF_OPS = {
+    "starts": lambda c, prefixes: _any(c.startswith(p) for p in prefixes),
+    "at": lambda c, off, lit: F.substring(c, off + 1, len(lit)) == lit,
+    "char_in": lambda c, off, chars: F.substring(c, off + 1, 1).isin(*sorted(chars)),
+    "hex": lambda c, off, n: F.substring(c, off + 1, n).rlike("^[0-9a-fA-F]{%d}$" % n),
+    "ends": lambda c, suffix, n: (F.length(c) >= n) & c.endswith(suffix),
+    "has": lambda c, needles: _any(c.contains(s) for s in needles),
+    # n commas split a line into n + 1 fields (trailing empties kept)
+    "commas": lambda c, n: F.size(F.split(c, ",")) > n,
+}
+
+
+def _any(cols) -> Column:
+    return functools.reduce(operator.or_, cols)
+
+
 def sniff_kind_col(text: Column, media_ref: Column) -> Column:
-    """JVM-native (whole-stage-codegen) form of ``core.sniff.sniff_kind`` —
-    the same routing rules as a ``when``/``substring`` chain, built from the
-    SAME marker/magic constants so the two cannot drift
-    (``tests/test_plans.py`` pins full-corpus output equality with the
-    Python sniffer).
+    """JVM-native (whole-stage-codegen) form of ``core.sniff.sniff_kind``:
+    the same ``RULES`` rows folded into one ``when`` chain, so the two
+    engines cannot drift (``tests/test_plans.py`` pins their equality).
 
     Use this for standalone route tallies / relational routing; the Python
     sniffer runs only inside the fused extraction pass, where the Arrow
@@ -52,154 +69,30 @@ def sniff_kind_col(text: Column, media_ref: Column) -> Column:
     from tika_wrap_spark.core import sniff as sn  # noqa: PLC0415
 
     head = F.substring(text, 1, sn.HEAD_WINDOW)
-    # (?U): Java \s matches only ASCII whitespace by default, but the Python
-    # sniffer's str.lstrip() strips unicode whitespace (NBSP etc.) — the
-    # unicode flag keeps the two rule sets identical on exotic leading ws.
-    # Python's str.isspace() is additionally true for the file/group/record/
-    # unit separators \x1c-\x1f, which Unicode White_Space (Java (?U)\s) is
-    # NOT — the explicit class closes that parity gap (fuzz + control-char
-    # corpus pinned in tests/test_plans.py).
-    lowered = F.lower(F.regexp_replace(head, r"(?U)^[\s\x1c-\x1f]+", ""))
-    html_marker = F.lit(False)
-    for marker in sn._HTML_MARKERS:
-        html_marker = html_marker | lowered.startswith(marker)
-    is_media_magic = F.lit(False)
-    for magic in sn._MEDIA_MAGICS:
-        is_media_magic = is_media_magic | head.startswith(magic)
-    eml_strong = F.lit(False)
-    for s in sn._EML_STRONG:
-        eml_strong = eml_strong | lowered.startswith(s)
-    eml_weak = F.lit(False)
-    for w in sn._EML_WEAK:
-        eml_weak = eml_weak | lowered.startswith(w)
-    eml_corr = F.lit(False)
-    for c in sn._EML_CORROBORATORS:
-        eml_corr = eml_corr | lowered.contains(c)
-    first_line = F.substring_index(head, "\n", 1)
-    return (
-        F.when(
-            (text.isNull() | (text == "")) & media_ref.isNotNull() & (media_ref != ""),
-            F.lit(sn.KIND_MEDIA),
-        )
-        .when(text.isNull(), F.lit(sn.KIND_TEXT))
-        .when(head.startswith("%PDF-"), F.lit(sn.KIND_PDF))
-        .when(head.startswith("PK\x03\x04"), F.lit(sn.KIND_ZIP))
-        .when(head.startswith("\x1f\x8b"), F.lit(sn.KIND_GZIP))
-        .when(head.startswith("\xfd7zXZ\x00"), F.lit(sn.KIND_XZ))
-        .when(
-            head.startswith("BZh")
-            & F.substring(head, 4, 1).isin(*list("123456789")),
-            F.lit(sn.KIND_BZ2),
-        )
-        .when(head.startswith("\x1f\x9d"), F.lit(sn.KIND_Z))
-        .when(head.startswith(sn.LZ4_MAGIC_TEXT), F.lit(sn.KIND_LZ4))
-        .when(
-            head.startswith(sn.MIDI_MAGIC_TEXT)
-            & (F.substring(head, 5, 1) == "\x00"),
-            F.lit(sn.KIND_MIDI),
-        )
-        .when(head.startswith(sn.SEVENZ_MAGIC_TEXT), F.lit(sn.KIND_SEVENZ))
-        .when(head.startswith(sn.RAR_MAGIC_TEXT), F.lit(sn.KIND_RAR))
-        .when(head.startswith(sn.ZSTD_MAGIC_TEXT), F.lit(sn.KIND_ZSTD))
-        .when(
-            head.startswith(sn.LZMA_MAGIC_TEXT)
-            & (
-                (F.substring(head, 6, 8) == sn.LZMA_SIZE_UNKNOWN_TEXT)
-                | (F.substring(head, 11, 3) == "\x00\x00\x00")
-            ),
-            F.lit(sn.KIND_LZMA),
-        )
-        .when(head.startswith(sn.OLE_MAGIC_TEXT), F.lit(sn.KIND_OLE))
-        .when(head.startswith(sn.SQLITE_MAGIC_TEXT), F.lit(sn.KIND_SQLITE))
-        .when(head.startswith(sn.FONT_TTF_MAGIC_TEXT), F.lit(sn.KIND_FONT))
-        .when(
-            head.startswith(sn.FONT_OTTO_MAGIC_TEXT)
-            & (F.substring(head, 5, 1) == "\x00"),
-            F.lit(sn.KIND_FONT),
-        )
-        .when(
-            head.startswith(sn.FONT_WOFF_MAGIC_TEXT)
-            & F.substring(head, 5, 1).isin(*sn.FONT_WOFF_FLAVOR_BYTES),
-            F.lit(sn.KIND_FONT),
-        )
-        .when(head.startswith(sn.WARC_MAGIC_TEXT), F.lit(sn.KIND_WARC))
-        .when(head.startswith(sn.PLIST_MAGIC_TEXT), F.lit(sn.KIND_PLIST))
-        .when(head.startswith(sn.AR_MAGIC_TEXT), F.lit(sn.KIND_AR))
-        # cpio: 6-char magic + 8 hex chars (ino field) — the substring is
-        # shorter than 8 on short payloads, so the anchored regex fails,
-        # matching the Python len guard
-        .when(
-            F.substring(head, 1, 6).isin(*sn.CPIO_MAGIC_TEXTS)
-            & F.substring(head, 7, 8).rlike("^[0-9a-fA-F]{8}$"),
-            F.lit(sn.KIND_CPIO),
-        )
-        # dbf: \x03 version byte + plausible month/day bytes + an xBase
-        # field-type letter at the first descriptor's fixed offset; short
-        # payloads yield empty substrings (ascii('') = 0, '' not in the
-        # type set), matching the Python len guard
-        .when(
-            (F.substring(head, 1, 1) == "\x03")
-            & F.ascii(F.substring(head, 3, 1)).between(1, 12)
-            & F.ascii(F.substring(head, 4, 1)).between(1, 31)
-            & F.substring(head, sn.DBF_TYPE_OFFSET + 1, 1).isin(
-                *list(sn.DBF_FIELD_TYPE_CHARS)
-            ),
-            F.lit(sn.KIND_DBF),
-        )
-        .when(head.startswith(sn.TNEF_MAGIC_TEXT), F.lit(sn.KIND_TNEF))
-        .when(head.startswith(sn.CAB_MAGIC_TEXT), F.lit(sn.KIND_CAB))
-        .when(head.startswith(sn.AVRO_MAGIC_TEXT), F.lit(sn.KIND_AVRO))
-        # Parquet 'PAR1' at BOTH ends of the FULL payload (negative-start
-        # substring = the Python text[-4:] slice; short payloads yield a
-        # short substring -> no match, same as Python)
-        .when(
-            head.startswith(sn.PARQUET_MAGIC_TEXT)
-            & (F.length(text) >= 12)
-            & (F.substring(text, -4, 4) == sn.PARQUET_MAGIC_TEXT),
-            F.lit(sn.KIND_PARQUET),
-        )
-        # ISO 9660 'CD001' signature past the 32 KiB system area (before
-        # the tar rule — the deterministic pin for hybrid payloads);
-        # shorter payloads yield a short/empty substring -> no match,
-        # same as the Python slice
-        .when(
-            F.substring(text, sn.ISO_MAGIC_OFFSET + 1, 5) == "CD001",
-            F.lit(sn.KIND_ISO),
-        )
-        # ustar magic at its fixed in-header offset (1-based substring);
-        # shorter payloads yield a short/empty substring -> no match, same
-        # as the Python slice
-        .when(
-            F.substring(text, sn.TAR_MAGIC_OFFSET + 1, 5) == "ustar",
-            F.lit(sn.KIND_TAR),
-        )
-        .when(is_media_magic, F.lit(sn.KIND_MEDIA))
-        # ISO-BMFF 'ftyp' fourcc at its fixed offset-4 position (1-based
-        # substring), mirroring the Python head[4:8] slice
-        .when(
-            F.substring(head, sn.MP4_FTYP_OFFSET + 1, 4) == "ftyp",
-            F.lit(sn.KIND_MEDIA),
-        )
-        .when(head.startswith("{\\rtf"), F.lit(sn.KIND_RTF))
-        # mbox From_ separator with its two corroborators ('@' in the
-        # separator line, an rfc5322 header in the head) — before the html
-        # rules, mirroring the Python rule order
-        .when(
-            head.startswith(sn.MBOX_MAGIC_TEXT)
-            & first_line.contains("@")
-            & eml_corr,
-            F.lit(sn.KIND_MBOX),
-        )
-        .when(html_marker, F.lit(sn.KIND_HTML))
-        .when(lowered.startswith("<?xml"), F.lit(sn.KIND_XML))
-        .when(lowered.contains("<html"), F.lit(sn.KIND_HTML))
-        .when(eml_strong | (eml_weak & eml_corr), F.lit(sn.KIND_EML))
-        .when(lowered.startswith(sn.ICS_OPENER_TEXT), F.lit(sn.KIND_ICS))
-        .when(lowered.startswith(sn.VCF_OPENER_TEXT), F.lit(sn.KIND_VCF))
-        .when(lowered.startswith("{") | lowered.startswith("["), F.lit(sn.KIND_JSON))
-        .when(F.size(F.split(first_line, ",")) >= 3, F.lit(sn.KIND_CSV))
-        .otherwise(F.lit(sn.KIND_TEXT))
+    views = {
+        "text": text,
+        "head": head,
+        # (?U): Java \s matches only ASCII whitespace by default, but
+        # Python's str.lstrip() strips unicode whitespace (NBSP etc.) and,
+        # via str.isspace(), the separators \x1c-\x1f, which Unicode
+        # White_Space (Java (?U)\s) is NOT — hence the explicit class
+        "low": F.lower(F.regexp_replace(head, r"(?U)^[\s\x1c-\x1f]+", "")),
+        "line": F.substring_index(head, "\n", 1),
+    }
+
+    def test(pred: tuple) -> Column:
+        op, view, *args = pred
+        if op == "any":
+            return _any(map(test, args[0]))
+        return _SNIFF_OPS[op](views[view], *args)
+
+    chain = F.when(
+        text.isNull() | (text == ""),
+        F.when(media_ref != "", F.lit(sn.KIND_MEDIA)).otherwise(F.lit(sn.KIND_TEXT)),
     )
+    for kind, *preds in sn.RULES:
+        chain = chain.when(functools.reduce(operator.and_, map(test, preds)), F.lit(kind))
+    return chain.otherwise(F.lit(sn.KIND_TEXT))
 
 
 def span_canonical(span: Column) -> Column:

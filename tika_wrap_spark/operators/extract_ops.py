@@ -27,7 +27,6 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from tika_wrap_spark.core.extract import extract_document
-from tika_wrap_spark.core.sniff import sniff_kind
 from tika_wrap_spark.portability import make_portable
 from tika_wrap_spark.schemas import EXTRACTED_PART_SCHEMA, EXTRACTED_SCHEMA
 
@@ -161,26 +160,12 @@ def extract_spans(
     return df.select(*cols).mapInPandas(fn, schema=schema)
 
 
-@F.pandas_udf(T.StringType())
-def sniff_kind_udf(text: pd.Series, media_ref: pd.Series) -> pd.Series:
-    """Vectorized magic-byte sniffer (mime_sniff, SURVEY §2A#4) — scalar
-    pandas UDF for use outside the fused extraction pass."""
-    return pd.Series(
-        [sniff_kind(t, m) for t, m in zip(text.tolist(), media_ref.tolist())]
-    )
-
-
-def sniffed_spans(df: DataFrame, jvm: bool = True) -> DataFrame:
+def sniffed_spans(df: DataFrame) -> DataFrame:
     """Explode the corpus to per-span rows with a content-sniffed kind column
     (mime_route over real payloads; the provided ``kind`` is only a hint).
-
-    ``jvm=True`` (default) evaluates the sniff as a pure whole-stage-codegen
-    ``when``/``substring`` chain — no Python crossing; ``jvm=False`` routes
-    through the pandas-UDF sniffer (kept for the fused extraction path and
-    for the equality pin in ``tests/test_plans.py``)."""
+    The sniff is the whole-stage-codegen ``when`` chain, no Python crossing."""
     from tika_wrap_spark import functions as tw  # noqa: PLC0415
 
-    make_portable()
     exploded = df.select("doc_id", F.posexplode("spans").alias("pos", "span")).select(
         "doc_id",
         "pos",
@@ -189,12 +174,7 @@ def sniffed_spans(df: DataFrame, jvm: bool = True) -> DataFrame:
         F.col("span.media_ref").alias("media_ref"),
         F.col("span.offset").alias("offset"),
     )
-    sniffer = (
-        tw.sniff_kind_col(F.col("text"), F.col("media_ref"))
-        if jvm
-        else sniff_kind_udf(F.col("text"), F.col("media_ref"))
-    )
-    return exploded.withColumn("kind", sniffer)
+    return exploded.withColumn("kind", tw.sniff_kind_col(F.col("text"), F.col("media_ref")))
 
 
 VERIFY_SCHEMA = T.StructType(

@@ -3691,7 +3691,7 @@ def q_fixture_verify(spark, d):
 
 
 def q_sniff_route(spark, d):
-    """Per-span content sniffing (scalar pandas UDF) + route tallies."""
+    """Per-span content sniffing (the JVM ``when`` chain) + route tallies."""
     return (
         sniffed_spans(_corpus_df(spark, d))
         .groupBy("kind")
