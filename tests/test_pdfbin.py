@@ -953,3 +953,238 @@ def test_inline_image_missing_ei_drops_tail_not_document():
     texts = [[t for _x, _y, t in pg] for pg in parsed]
     assert texts[0] == ["kept text"]
     assert texts[1] == ["other page"]
+
+
+# ---------------------------------------------------------------------------
+# Linear-time LZW, the LZW bomb cap, and Type0 glyph decode equivalence
+# ---------------------------------------------------------------------------
+
+# An MSB-first bit accumulator that is never masked grows to the whole
+# stream as one int, and every shift copies it, so the codec turns
+# quadratic: 256 KiB took ~28 s that way on a 4-vCPU host, ~0.2 s masked.
+# The tests compare the time of a 4x larger input with a small one, so the
+# check holds on any machine: linear code grows ~4x, quadratic ~16x.
+GROWTH_BOUND = 8.0
+
+
+def _growth(run, small, big) -> float:
+    """Best-of-3 time of ``run(big)`` over best-of-3 time of ``run(small)``."""
+    import time
+
+    def best(arg):
+        dts = []
+        for _ in range(3):
+            t0 = time.perf_counter()
+            run(arg)
+            dts.append(time.perf_counter() - t0)
+        return min(dts)
+
+    return best(big) / best(small)
+
+
+def _lzw_random_bytes(n: int) -> bytes:
+    import random
+
+    return random.Random(20).randbytes(n)
+
+
+def test_lzw_codec_is_linear_time():
+    from tika_wrap_spark.core.pdfbin import _lzw_decode, _lzw_encode
+
+    def roundtrip(data):
+        assert _lzw_decode(_lzw_encode(data)) == data
+
+    small, big = _lzw_random_bytes(64 * 1024), _lzw_random_bytes(256 * 1024)
+    g = _growth(roundtrip, small, big)
+    assert g < GROWTH_BOUND, "4x the input took %.1fx the time" % g
+
+
+def test_lzw_filter_is_linear_time():
+    from tika_wrap_spark.core.pdfbin import Name, _lzw_encode, decode_stream
+
+    inputs = {}
+    for n in (64 * 1024, 256 * 1024):
+        data = _lzw_random_bytes(n)
+        inputs[n] = (data, _lzw_encode(data))
+
+    def decode(n):
+        data, enc = inputs[n]
+        assert decode_stream({"Filter": Name("LZWDecode")}, enc, lambda v: v) == data
+
+    g = _growth(decode, 64 * 1024, 256 * 1024)
+    assert g < GROWTH_BOUND, "4x the input took %.1fx the time" % g
+
+
+def _lzw_bomb_stream() -> bytes:
+    """PDF-variant LZW codes (EarlyChange 1) that define codes 258..4095 as a
+    KwKwK chain (entry k is k-256 zero bytes long), then repeat code 4095,
+    a 3,839-byte entry, until the output passes 64 MiB."""
+    codes = [256, 0, *range(258, 4096), *[4095] * 16000]
+    out = bytearray()
+    acc = nbits = 0
+    width, next_code = 9, 258
+    for i, code in enumerate(codes):
+        acc = (acc << width) | code
+        nbits += width
+        while nbits >= 8:
+            nbits -= 8
+            out.append(acc >> nbits)
+            acc &= (1 << nbits) - 1
+        # the decoder adds one entry per code after CLEAR + first literal,
+        # then widens one code early
+        if i >= 2 and next_code < 4096:
+            next_code += 1
+        if width < 12 and next_code + 1 >= (1 << width) - 1:
+            width += 1
+    if nbits:
+        out.append((acc << (8 - nbits)) & 0xFF)
+    return bytes(out)
+
+
+def test_lzw_bomb_hits_the_cap_in_the_bomb_class(spark):
+    from tika_wrap_spark.queries_training import _error_class_col
+
+    bomb = _lzw_bomb_stream()
+    assert len(bomb) < 32 * 1024
+    doc = _classic_doc(
+        {
+            1: b"<< /Type /Catalog /Pages 2 0 R >>",
+            2: b"<< /Type /Pages /Kids [3 0 R] /Count 1 >>",
+            3: b"<< /Type /Page /Parent 2 0 R /Contents 5 0 R >>",
+            5: b"<< /Length %d /Filter /LZWDecode >>\nstream\n%s\nendstream"
+            % (len(bomb), bomb),
+        }
+    )
+    with pytest.raises(ExtractError, match="pdf: inflated stream exceeds cap") as exc:
+        parse_real_pdf_pages(doc)
+    df = spark.createDataFrame([(False, str(exc.value))], "parse_ok boolean, error string")
+    assert df.select(_error_class_col().alias("cls")).first()["cls"] == "bomb"
+
+
+def _reference_cid_decode(fd, raw: bytes) -> str:
+    """The plain per-code Type0 decode loop, one CMap walk per glyph: the
+    reference for the equivalence test, not a path in the package."""
+    out: list[str] = []
+    i = 0
+    n = len(raw)
+    spaces, tou, enc = fd._spaces, fd._tou, fd._enc_cmap
+    while i < n:
+        code, nb = spaces.next_code(raw, i)
+        i += nb
+        u = tou.lookup_bf(code) if tou is not None else None
+        if u is None:
+            cid = enc.lookup_cid(code) if enc is not None else None
+            if cid is None:
+                cid = code
+            u = chr(cid) if 0 < cid < 0x110000 and not (0xD800 <= cid <= 0xDFFF) else "�"
+        out.append(u)
+    return "".join(out)
+
+
+def _outcome(fn, *args):
+    try:
+        return ("ok", fn(*args))
+    except Exception as exc:  # noqa: BLE001 - both sides must fail alike
+        return ("raises", type(exc).__name__)
+
+
+# code bytes drawn from a small alphabet so ranges and raw strings collide
+_CODE_BYTE = st.sampled_from([0x00, 0x01, 0x20, 0x41, 0x42, 0x43, 0x7F, 0x80, 0xD8, 0xFF])
+_WIDTHS = st.sampled_from([(1,), (2,), (3,), (1, 2), (2, 1), (1, 2, 3), (2, 4)])
+_CIDS = st.one_of(
+    st.integers(0, 0x300),
+    st.just(0),
+    st.integers(0xD7FF, 0xE000),  # around and inside the surrogates
+    st.integers(0x10FFF0, 0x110100),  # past the last scalar value
+)
+
+
+def _hex(b: bytes) -> str:
+    return "<%s>" % b.hex()
+
+
+@st.composite
+def _type0_font(draw):
+    widths = draw(_WIDTHS)
+
+    def code(nb=None):
+        nb = nb or draw(st.sampled_from(widths))
+        return bytes(draw(st.lists(_CODE_BYTE, min_size=nb, max_size=nb)))
+
+    def span():
+        nb = draw(st.sampled_from(widths))
+        a, b = sorted((code(nb), code(nb)))
+        return a, b
+
+    def dst():
+        return bytes(draw(st.lists(st.integers(0, 255), max_size=6)))
+
+    spaces = ["%s %s" % tuple(map(_hex, span())) for _ in range(draw(st.integers(1, 3)))]
+    # full-width spaces so raw strings are not all recovery codes
+    spaces += ["%s %s" % (_hex(b"\x00" * nb), _hex(b"\xff" * nb))
+               for nb in widths if draw(st.booleans())]
+    bfchar = ["%s %s" % (_hex(code()), _hex(dst())) for _ in range(draw(st.integers(0, 4)))]
+    bfrange = []
+    for _ in range(draw(st.integers(0, 3))):
+        lo, hi = span()
+        n = int.from_bytes(hi, "big") - int.from_bytes(lo, "big") + 1
+        if n <= 8 and draw(st.booleans()):
+            arr = " ".join(_hex(dst()) for _ in range(n))
+            bfrange.append("%s %s [%s]" % (_hex(lo), _hex(hi), arr))
+        else:
+            bfrange.append("%s %s %s" % (_hex(lo), _hex(hi), _hex(dst())))
+    cidchar = ["%s %d" % (_hex(code()), draw(_CIDS)) for _ in range(draw(st.integers(0, 4)))]
+    cidrange = ["%s %s %d" % (*map(_hex, span()), draw(_CIDS))
+                for _ in range(draw(st.integers(0, 3)))]
+
+    def section(name, rows):
+        return "%d begin%s\n%s\nend%s\n" % (len(rows), name, "\n".join(rows), name) if rows else ""
+
+    # where the codespaces live: the encoding CMap, the ToUnicode CMap
+    # (an embedded encoding CMap without codespaces), or nowhere (Identity)
+    where = draw(st.sampled_from(["enc", "tou", "none"]))
+    enc = section("codespacerange", spaces) if where == "enc" else ""
+    enc += section("cidchar", cidchar) + section("cidrange", cidrange)
+    tou = section("codespacerange", spaces) if where == "tou" else ""
+    tou += section("bfchar", bfchar) + section("bfrange", bfrange)
+    fdict = {"Subtype": "Type0", "Encoding": ({}, ("begincmap\n%sendcmap\n" % enc).encode())}
+    if where == "tou" or draw(st.booleans()):
+        fdict["ToUnicode"] = ({}, ("begincmap\n%sendcmap\n" % tou).encode())
+    if where == "none" and draw(st.booleans()):
+        fdict["Encoding"] = "Identity-H"
+    return fdict
+
+
+@given(
+    _type0_font(),
+    st.lists(
+        st.one_of(st.binary(max_size=48), st.lists(_CODE_BYTE, max_size=24).map(bytes)),
+        min_size=1,
+        max_size=4,
+    ),
+)
+@settings(max_examples=400, deadline=None)
+def test_cid_decode_matches_per_code_reference(fdict, raws):
+    """The memoized, width-sliced Type0 decode equals the per-code loop on
+    1-, 2-, 3-byte and mixed codespaces, odd trailing bytes, codes outside
+    every range, every bf/cid entry form, out-of-range CIDs, and with or
+    without ToUnicode. Several strings per font exercise the warm memo."""
+    from tika_wrap_spark.core.pdfbin import FontDecoder, Name
+
+    fdict = dict(fdict, Subtype=Name("Type0"))
+    fd = FontDecoder(fdict, lambda x: x)
+    ref = FontDecoder(fdict, lambda x: x)
+    for raw in raws:
+        assert _outcome(fd.decode, raw) == _outcome(_reference_cid_decode, ref, raw), raw
+
+
+def test_cid_memo_stops_growing_at_64k_codes():
+    """A 3-byte codespace decodes more distinct codes than the memo keeps;
+    the output still equals the per-code loop."""
+    from tika_wrap_spark.core.pdfbin import FontDecoder, Name
+
+    enc = b"begincmap\n1 begincodespacerange\n<000000> <ffffff>\nendcodespacerange\nendcmap\n"
+    fd = FontDecoder({"Subtype": Name("Type0"), "Encoding": ({}, enc)}, lambda x: x)
+    raw = b"".join((0x10000 + 3 * i).to_bytes(3, "big") for i in range(70000))
+    assert fd.decode(raw) == _reference_cid_decode(fd, raw)
+    assert len(fd._glyphs) == 0x10000

@@ -529,7 +529,9 @@ class _BitReader:
         if self.n == 0 and not self._fill():
             return None
         self.n -= 1
-        return (self.acc >> self.n) & 1
+        b = self.acc >> self.n
+        self.acc &= (1 << self.n) - 1  # drop the bit read: acc stays < 1 byte
+        return b
 
     def bits(self, k: int) -> int | None:
         v = 0

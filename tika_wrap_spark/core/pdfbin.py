@@ -53,6 +53,7 @@ import base64
 import bisect
 import hashlib
 import re
+import struct
 import zlib
 
 from tika_wrap_spark.core.aes import cbc_decrypt, cbc_encrypt
@@ -288,8 +289,11 @@ def _lzw_decode(data: bytes, early: int = 1) -> bytes:
         bitbuf = (bitbuf << 8) | byte
         nbits += 8
         while nbits >= width:
-            code = (bitbuf >> (nbits - width)) & ((1 << width) - 1)
+            # mask off the consumed code: an unmasked buffer grows to the
+            # whole stream and every shift copies it (quadratic decode)
             nbits -= width
+            code = bitbuf >> nbits
+            bitbuf &= (1 << nbits) - 1
             if code == 256:  # CLEAR
                 table = {i: bytes([i]) for i in range(256)}
                 next_code = 258
@@ -342,6 +346,7 @@ def _lzw_encode(data: bytes, early: int = 1) -> bytes:
         while nbits >= 8:
             out.append((bitbuf >> (nbits - 8)) & 0xFF)
             nbits -= 8
+        bitbuf &= (1 << nbits) - 1  # keep only the unwritten bits
 
     emit(256)
     w = b""
@@ -1323,7 +1328,9 @@ class CMap:
     """One parsed CMap: codespace ranges (how many bytes the next code
     takes) plus code->unicode (bf*) and code->CID (cid*) mappings. Ranges
     stay UNEXPANDED — an Identity CMap declares <0000> <ffff> and a full
-    expansion would be 64k entries per font — lookups bisect instead."""
+    expansion would be 64k entries per font — lookups bisect instead. A
+    Type0 font runs these lookups once per distinct code, through its
+    ``_GlyphMemo``, not once per glyph."""
 
     __slots__ = ("codespaces", "bf_single", "bf_ranges", "cid_single", "cid_ranges")
 
@@ -1553,6 +1560,10 @@ class FontDecoder:
                 self._spaces = self._tou
             else:
                 self._spaces = _IDENTITY_CMAP
+            # every codespace 2 bytes wide (Identity-H/V): _decode_cid
+            # slices codes without next_code
+            self._wide2 = {nb for nb, _, _ in self._spaces.codespaces} == {2}
+            self._glyphs = _GlyphMemo(self._tou, self._enc_cmap)
             return
         enc = resolve(fdict.get("Encoding"))
         base = None
@@ -1626,27 +1637,49 @@ class FontDecoder:
         return s.translate(self._xlate)
 
     def _decode_cid(self, raw: bytes) -> str:
+        glyph = self._glyphs.__getitem__
+        n = len(raw)
+        if self._wide2:
+            s = "".join(map(glyph, struct.unpack_from(">%dH" % (n >> 1), raw)))
+            # a trailing odd byte is one short code, as next_code reads it
+            return s + glyph(raw[-1]) if n & 1 else s
         out: list[str] = []
         i = 0
-        n = len(raw)
-        spaces = self._spaces
-        tou = self._tou
-        enc = self._enc_cmap
+        next_code = self._spaces.next_code
         while i < n:
-            code, nb = spaces.next_code(raw, i)
+            code, nb = next_code(raw, i)
             i += nb
-            u = tou.lookup_bf(code) if tou is not None else None
-            if u is None:
-                cid = enc.lookup_cid(code) if enc is not None else None
-                if cid is None:
-                    cid = code  # Identity encoding: CID == code
-                u = (
-                    chr(cid)
-                    if 0 < cid < 0x110000 and not (0xD800 <= cid <= 0xDFFF)
-                    else "�"
-                )
-            out.append(u)
+            out.append(glyph(code))
         return "".join(out)
+
+
+class _GlyphMemo(dict):
+    """code -> str for one Type0 font, filled on first sight of a code:
+    /ToUnicode wins; else the encoding CMap's CID (Identity: CID == code)
+    gives chr(CID) for a valid scalar value, U+FFFD otherwise. It lives on
+    its FontDecoder (freed with the document) and stops storing at 64k
+    codes, so 3-4 byte codespaces cannot grow it past a 2-byte font's."""
+
+    __slots__ = ("tou", "enc")
+
+    def __init__(self, tou: CMap | None, enc: CMap | None) -> None:
+        self.tou = tou
+        self.enc = enc
+
+    def __missing__(self, code: int) -> str:
+        u = self.tou.lookup_bf(code) if self.tou is not None else None
+        if u is None:
+            cid = self.enc.lookup_cid(code) if self.enc is not None else None
+            if cid is None:
+                cid = code  # Identity encoding: CID == code
+            u = (
+                chr(cid)
+                if 0 < cid < 0x110000 and not (0xD800 <= cid <= 0xDFFF)
+                else "�"
+            )
+        if len(self) < 0x10000:
+            self[code] = u
+        return u
 
 
 _DEFAULT_DECODER = FontDecoder({}, lambda x: x)
