@@ -128,6 +128,31 @@ def test_anti_join_resume_is_broadcast(spark):
     assert plans.has_node(plan, "BroadcastHashJoin"), plan
 
 
+def test_resume_todo_is_an_isin_filter(spark, tmp_path, monkeypatch):
+    """run_extraction drops committed parts with an isin filter on
+    part_key: no join and no Exchange ahead of the salted repartition."""
+    from tika_wrap_spark.corpus import generate_corpus
+    from tika_wrap_spark.data import corpus_to_df
+    from tika_wrap_spark import pipeline as pl
+
+    todos = []
+    salt = pl.salt_repartition
+
+    def spy(todo, n):
+        todos.append(todo)
+        return salt(todo, n)
+
+    monkeypatch.setattr(pl, "salt_repartition", spy)
+    df = corpus_to_df(spark, generate_corpus(20, seed=3))
+    out = str(tmp_path / "store")
+    pl.run_extraction(spark, df, out, parts=4, part_filter=[0, 1])
+    pl.run_extraction(spark, df, out, parts=4)
+    plan = plans.formatted_plan(todos[-1])
+    assert plans.has_node(plan, "Filter") and " IN (2,3)" in plan, plan
+    assert "Join" not in plan, plan
+    assert not plans.has_node(plan, "Exchange"), plan
+
+
 def test_consistent_read_is_shuffle_free(spark, tmp_path_factory):
     """read_extracted on a committed store: broadcast semi join on the tiny
     lineage side, NO Exchange/Window anywhere — a consistent read of a

@@ -793,9 +793,10 @@ def build_bmp_pixels(width: int, height: int, rgb: bytes, top_down: bool = False
 def _png_unfilter(raw: bytes, width: int, height: int, bpp: int = 3) -> bytes | None:
     """Undo the five RFC 2083 row filters (None/Sub/Up/Average/Paeth) over
     ``height`` rows of ``width*bpp`` bytes, each prefixed by a filter-type
-    byte. Returns the raw scanlines or None on malformed input."""
+    byte. Returns the raw scanlines or None on malformed input, a length
+    other than exactly ``height`` rows included."""
     rowlen = width * bpp
-    if len(raw) < (rowlen + 1) * height:
+    if len(raw) != (rowlen + 1) * height:
         return None
     out = bytearray()
     prev = bytearray(rowlen)
@@ -865,8 +866,8 @@ def png_pixels(data: bytes) -> tuple[int, int, bytes] | None:
         return None
     if w * h * 3 > 256 * 1024 * 1024:
         return None  # bomb cap
-    try:
-        raw = zlib.decompress(bytes(idat))
+    try:  # inflate one byte past the declared rows at most: more is a bomb
+        raw = zlib.decompressobj().decompress(bytes(idat), h * (1 + 3 * w) + 1)
     except zlib.error:
         return None
     rgb = _png_unfilter(raw, w, h, 3)

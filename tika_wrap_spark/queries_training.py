@@ -12,6 +12,7 @@ from __future__ import annotations
 import functools
 import hashlib
 import operator
+import os
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
@@ -3472,10 +3473,14 @@ _CORPUS_MIN_DOCS = 200
 
 def _corpus_docs(spark, d) -> int:
     """SF-proportional corpus size: one synthetic doc per ``documents`` row
-    of the sf dir (a parquet-metadata count, no data scan), floor 200."""
-    return max(
-        int(spark.read.parquet(f"{d}/documents.parquet").count()), _CORPUS_MIN_DOCS
-    )
+    of the sf dir, floor 200. A single parquet file answers from its footer
+    with no Spark job; a directory takes a Spark count."""
+    import pyarrow.parquet as pq  # noqa: PLC0415
+
+    path = f"{d}/documents.parquet"
+    if os.path.isfile(path):
+        return max(pq.ParquetFile(path).metadata.num_rows, _CORPUS_MIN_DOCS)
+    return max(int(spark.read.parquet(path).count()), _CORPUS_MIN_DOCS)
 
 
 def _corpus_df(spark, d):
@@ -3535,12 +3540,13 @@ def _extracted_df(spark, d):
     run_extraction itself resumes any partial store. The live-extraction
     benchmarks (`extract_pipeline`, `container_extract`, `fixture_verify`)
     deliberately do NOT use this — they measure extraction itself."""
-    import os  # noqa: PLC0415
     import tempfile  # noqa: PLC0415
 
     from tika_wrap_spark.pipeline import read_extracted, run_extraction  # noqa: PLC0415
 
     n = _corpus_docs(spark, d)
+    # ~64 docs a part; stable per store, since n is in the store key
+    parts = min(64, max(1, n // 64))
     out = os.path.join(
         tempfile.gettempdir(), "tws_extract_store_%s" % _extract_store_key(n)
     )
@@ -3567,7 +3573,7 @@ def _extracted_df(spark, d):
                 time.sleep(1)
         if not os.path.exists(marker):
             try:
-                run_extraction(spark, _corpus_df(spark, d), out)
+                run_extraction(spark, _corpus_df(spark, d), out, parts=parts)
                 with open(marker, "w") as f:
                     f.write("ok")
             finally:
