@@ -110,22 +110,22 @@ def test_jvm_sniffer_matches_python_sniffer(spark):
     assert mismatches == [], mismatches[:5]
 
 
-def test_anti_join_resume_is_broadcast(spark):
-    """The resume anti-join broadcasts the small 'done' side so the corpus
-    scan is never shuffled (pipeline.run_extraction)."""
-    import tempfile
-
+def test_many_key_read_is_a_broadcast_semi_join(spark, tmp_path, monkeypatch):
+    """Above ``_READ_ISIN_MAX_KEYS`` committed parts, read_extracted keeps
+    the committed rows with a broadcast left-semi join on the small key
+    side, so the store scan is never shuffled."""
     from tika_wrap_spark.corpus import generate_corpus
     from tika_wrap_spark.data import corpus_to_df
-    from tika_wrap_spark.operators.skew import with_part_key
     from tika_wrap_spark import pipeline as pl
-    from pyspark.sql import functions as F
 
-    df = with_part_key(corpus_to_df(spark, generate_corpus(20, seed=3)), 8)
-    done = pl.read_lineage(spark, tempfile.mkdtemp()).select("part_key").distinct()
-    todo = df.join(F.broadcast(done), "part_key", "left_anti")
-    plan = plans.formatted_plan(todo)
-    assert plans.has_node(plan, "BroadcastHashJoin"), plan
+    out = str(tmp_path / "store")
+    pl.run_extraction(spark, corpus_to_df(spark, generate_corpus(20, seed=3)), out, parts=8)
+    monkeypatch.setattr(pl, "_READ_ISIN_MAX_KEYS", 0)
+    read = pl.read_extracted(spark, out)
+    plan = plans.formatted_plan(read)
+    assert plans.has_node(plan, "BroadcastHashJoin") and "LeftSemi" in plan, plan
+    assert not plans.has_node(plan, "SortMergeJoin"), plan
+    assert read.count() == 60  # 20 + 40 adversarial
 
 
 def test_resume_todo_is_an_isin_filter(spark, tmp_path, monkeypatch):

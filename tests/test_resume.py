@@ -142,6 +142,26 @@ def test_compaction_clusters_doc_id_for_row_group_skipping(spark, corpus, tmp_pa
         assert ids == sorted(ids), f
 
 
+def test_compaction_writes_up_to_k_files_per_part(spark, corpus, tmp_path_factory):
+    """``files_per_partition=k`` splits each part over doc_id hash
+    sub-buckets: more than one file a part, never more than k."""
+    import glob
+    import os
+
+    from tika_wrap_spark.pipeline import compact_extracted
+
+    out = str(tmp_path_factory.mktemp("run_compact_k"))
+    run_extraction(spark, corpus, out, parts=4, num_partitions=16)
+    before = extracted_to_rows(read_extracted(spark, out).drop("part_key"))
+    compact_extracted(spark, out, files_per_partition=4)
+    part_dirs = sorted(glob.glob(out + "/extracted/part_key=*"))
+    assert len(part_dirs) == 4
+    for d in part_dirs:
+        n = len(glob.glob(os.path.join(d, "*.parquet")))
+        assert 1 < n <= 4, (d, n)
+    assert extracted_to_rows(read_extracted(spark, out).drop("part_key")) == before
+
+
 def test_incremental_refresh_extracts_only_delta(spark):
     from tika_wrap_spark.corpus import generate_corpus
     from tika_wrap_spark.data import corpus_to_df

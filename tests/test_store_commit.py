@@ -6,6 +6,7 @@ import glob
 import uuid
 
 import pytest
+from pyspark import StorageLevel
 
 from tika_wrap_spark import catalog
 from tika_wrap_spark.corpus import generate_corpus
@@ -97,3 +98,53 @@ def test_lineage_listing_invalidates_the_memo(spark, corpus, tmp_path):
     )
     catalog.append_table(lineage_for_run(spark, out, rest, "fp-test", 0), out + "/_lineage")
     assert read_extracted(spark, out).count() == 120
+
+
+def test_registry_store_build_generates_its_corpus_once(spark, tmp_path, monkeypatch):
+    """The registry store's build reads its corpus twice (snapshot hash and
+    extraction), over one persisted synthesis: each doc is generated once."""
+    import tempfile
+
+    from tika_wrap_spark import data
+    from tika_wrap_spark import queries_training as qt
+    from tika_wrap_spark.corpus import N_ADVERSARIAL
+
+    generated = spark.sparkContext.accumulator(0)
+    make_row_fn = data._make_row_fn  # noqa: SLF001
+
+    def counting_row_fn(n_docs, seed):
+        row = make_row_fn(n_docs, seed)
+
+        def counted(i):
+            generated.add(1)
+            return row(i)
+
+        return counted
+
+    frames = []
+    corpus_df = qt._corpus_df  # noqa: SLF001
+
+    def recorded_corpus_df(spark, d):
+        frames.append(corpus_df(spark, d))
+        return frames[-1]
+
+    monkeypatch.setattr(data, "_make_row_fn", counting_row_fn)
+    monkeypatch.setattr(qt, "_corpus_df", recorded_corpus_df)
+    monkeypatch.setattr(qt, "_corpus_docs", lambda spark, d: 64)
+    monkeypatch.setattr(tempfile, "gettempdir", lambda: str(tmp_path))
+    assert qt._extracted_df(spark, str(tmp_path)).count() == 64 + N_ADVERSARIAL  # noqa: SLF001
+    assert generated.value == 64 + N_ADVERSARIAL
+    assert [f.storageLevel == StorageLevel.NONE for f in frames] == [True]
+
+
+def test_registry_store_build_keeps_a_cached_corpus(spark, corpus, tmp_path, monkeypatch):
+    """A corpus the caller cached stays cached after the build."""
+    import tempfile
+
+    from tika_wrap_spark import queries_training as qt
+
+    monkeypatch.setattr(qt, "_corpus_df", lambda spark, d: corpus)
+    monkeypatch.setattr(qt, "_corpus_docs", lambda spark, d: 80)
+    monkeypatch.setattr(tempfile, "gettempdir", lambda: str(tmp_path))
+    assert qt._extracted_df(spark, str(tmp_path)).count() == 120  # noqa: SLF001
+    assert corpus.storageLevel != StorageLevel.NONE

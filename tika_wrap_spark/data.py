@@ -55,7 +55,7 @@ def distributed_corpus_df(
     ``adversarial=True`` appends the same N_ADVERSARIAL malformed docs
     ``generate_corpus`` does (equality pinned in tests/test_submit.py)."""
     from tika_wrap_spark.corpus import N_ADVERSARIAL  # noqa: PLC0415
-    from tika_wrap_spark.portability import make_portable
+    from tika_wrap_spark.portability import drop_zip_finders, make_portable
 
     make_portable()
     total = n_docs + (N_ADVERSARIAL if adversarial else 0)
@@ -73,6 +73,7 @@ def distributed_corpus_df(
     row_fn = _make_row_fn(n_docs, seed)
 
     def gen(batches):
+        drop_zip_finders()
         import pandas as pd  # noqa: PLC0415
 
         for pdf in batches:
@@ -102,7 +103,7 @@ def distributed_golden_df(
     Returns (doc_id, spans) of expected spans, the shape
     ``verify_against_golden`` consumes."""
     from tika_wrap_spark.corpus import N_ADVERSARIAL  # noqa: PLC0415
-    from tika_wrap_spark.portability import make_portable
+    from tika_wrap_spark.portability import drop_zip_finders, make_portable
 
     make_portable()
     total = n_docs + (N_ADVERSARIAL if adversarial else 0)
@@ -121,6 +122,7 @@ def distributed_golden_df(
     from tika_wrap_spark.core.extract import extract_document  # noqa: PLC0415
 
     def gen(batches):
+        drop_zip_finders()
         import pandas as pd  # noqa: PLC0415
 
         for pdf in batches:

@@ -5,10 +5,13 @@ sniff -> route -> extract -> assemble chain is fused into ONE ``mapInPandas``
 pass, so each Arrow batch crosses the executor-JVM <-> python-worker boundary
 exactly once (that boundary is the rebuild's analog of the reference's
 loopback HTTP hop to the Tika server, /root/reference/src/java-env.cpp:266).
-Parser state is plain module-level Python — imported once per python worker,
-the analog of the reference's lazy warm-server reuse
-(src/java-env.cpp:199-205), with none of its one-doc-at-a-time mutex
-(src/java-env.cpp:58,83).
+Python workers are reused across tasks, the analog of the reference's lazy
+warm-server reuse (src/java-env.cpp:199-205), with none of its
+one-doc-at-a-time mutex (src/java-env.cpp:58,83). Parser module state is
+not: ``make_portable`` ships the package by value, so each task rebuilds
+module globals when it unpickles the UDF; what must outlive a task lives in
+``core.procmemo.proc_memo``. The per-task cost the reused worker still pays
+before the first batch is cut by ``portability.drop_zip_finders``.
 
 No per-row Python UDFs anywhere (input_hint mandate): everything is
 Arrow-vectorized at the batch level.
@@ -27,7 +30,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from tika_wrap_spark.core.extract import extract_document
-from tika_wrap_spark.portability import make_portable
+from tika_wrap_spark.portability import drop_zip_finders, make_portable
 from tika_wrap_spark.schemas import EXTRACTED_PART_SCHEMA, EXTRACTED_SCHEMA
 
 # --- per-document wall-clock budget (§2A#14) -------------------------------
@@ -111,6 +114,7 @@ def _make_extract_batches(
     doc_timeout_s: float, guard_min_chars: int
 ) -> Callable[[Iterator[pd.DataFrame]], Iterator[pd.DataFrame]]:
     def _extract_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        drop_zip_finders()
         for pdf in batches:
             has_part = "part_key" in pdf.columns
             doc_ids = pdf["doc_id"].tolist()
@@ -188,6 +192,8 @@ VERIFY_SCHEMA = T.StructType(
 
 
 def _verify_cogroups(key, expected: pd.DataFrame, actual: pd.DataFrame) -> pd.DataFrame:
+    drop_zip_finders()
+
     def seq(pdf: pd.DataFrame) -> list[tuple]:
         if len(pdf) == 0:
             return []

@@ -68,7 +68,7 @@ from tika_wrap_spark.core.media import (
     wav_info,
 )
 from tika_wrap_spark.core.exifbin import jpeg_exif, parse_exif_tiff
-from tika_wrap_spark.portability import make_portable
+from tika_wrap_spark.portability import drop_zip_finders, make_portable
 
 MEDIA_META_SCHEMA = T.StructType(
     [
@@ -238,6 +238,7 @@ def _decode_payload(ref: str, payload: bytes) -> dict:
 
 
 def _decode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    drop_zip_finders()
     for pdf in batches:
         rows = {k.name: [] for k in MEDIA_META_SCHEMA.fields}
         for ref, payload in zip(pdf["media_ref"].tolist(), pdf["payload"].tolist()):
@@ -408,6 +409,7 @@ def media_payloads(extracted: DataFrame) -> DataFrame:
     refs = spans.select(F.col("s.media_ref").alias("media_ref"))
 
     def fetch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        drop_zip_finders()
         for pdf in batches:
             refs_l = pdf["media_ref"].tolist()
             yield pd.DataFrame(
@@ -484,6 +486,7 @@ def resize_media(media: DataFrame, width: int, height: int) -> DataFrame:
     make_portable()
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        drop_zip_finders()
         for pdf in it:
             refs = pdf["media_ref"].tolist()
             payloads = pdf["payload"].tolist()
@@ -526,6 +529,7 @@ def frame_sample(media: DataFrame, every_n: int = 30, max_frames: int = 8) -> Da
     make_portable()
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        drop_zip_finders()
         for pdf in it:
             refs, idxs, feats = [], [], []
             for ref, payload in zip(pdf["media_ref"].tolist(), pdf["payload"].tolist()):
@@ -610,6 +614,7 @@ def embed_media(media: DataFrame, dim: int = 16) -> DataFrame:
     make_portable()
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        drop_zip_finders()
         for pdf in it:
             refs = pdf["media_ref"].tolist()
             payloads = pdf["payload"].tolist()

@@ -241,13 +241,19 @@ def compact_extracted(
     n_parts = len(committed_parts(spark, out_dir))
     if n_parts == 0:
         return {"parts_compacted": 0}
-    # sortWithinPartitions(doc_id): compacted files carry monotone doc_id
-    # runs, so parquet row-group min/max stats prune point lookups to one
-    # row group. The HOT write path stays salt-randomized (sorting there
-    # would concentrate giants again); clustering belongs to this
-    # already-shuffling maintenance pass.
+    # k doc_id hash sub-buckets per part: a part lands in at most k tasks,
+    # so at most k files (part_key alone gives one task, one file). Murmur3,
+    # not xxhash64: part_key is pmod(xxhash64(doc_id), parts), so an xxhash64
+    # bucket would repeat it whenever k and parts share a factor.
+    # sortWithinPartitions(doc_id): each compacted file carries a monotone
+    # doc_id run, so parquet row-group min/max stats prune a point lookup
+    # to one row group per file. The HOT write path stays salt-randomized
+    # (sorting there would concentrate giants again); clustering belongs to
+    # this already-shuffling maintenance pass.
+    k = files_per_partition
+    sub_bucket = F.pmod(F.hash("doc_id"), F.lit(k))
     compacted = df.repartition(
-        n_parts * files_per_partition, F.col("part_key")
+        n_parts * k, F.col("part_key"), sub_bucket
     ).sortWithinPartitions("part_key", "doc_id")
     catalog.overwrite_partitions(
         compacted, _extracted_path(out_dir), partition_by=["part_key"]

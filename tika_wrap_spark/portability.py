@@ -7,6 +7,9 @@ the grading driver), ``make_portable()`` registers every loaded
 ``tika_wrap_spark`` module for cloudpickle pickle-BY-VALUE, so UDF closures
 carry their own code and python workers never need the package importable.
 Idempotent and cheap; called before any python-UDF-bearing plan is built.
+
+``drop_zip_finders()`` is the worker-side half: every package Python UDF
+calls it first (pinned by an ast walk in ``tests/test_portability.py``).
 """
 
 from __future__ import annotations
@@ -15,6 +18,7 @@ import os
 import sys
 import tempfile
 import zipfile
+import zipimport
 
 from pyspark import cloudpickle
 
@@ -42,6 +46,25 @@ def make_portable() -> None:
                 cloudpickle.register_pickle_by_value(mod)
             except Exception:
                 pass
+
+
+def drop_zip_finders() -> None:
+    """Forget every cached ``zipimporter`` in ``sys.path_importer_cache``.
+
+    A reused python worker calls ``importlib.invalidate_caches()`` at the
+    start of every task (pyspark ``worker_util.setup_spark_files``). Under
+    Python 3.11 each cached zipimporter then re-reads its archive's whole
+    central directory in pure Python: pyspark.zip has 1,328 entries and a
+    warm worker holds ~16 finders, one per imported subpackage path, so
+    every task paid ~0.2 s of worker CPU before its first batch. With
+    the finders gone the next task's invalidation is ~0.1 ms. Only a cache
+    is dropped: a later import of a not-yet-loaded module rebuilds its
+    finder from ``zipimport._zip_directory_cache`` without re-reading the
+    archive."""
+    cache = sys.path_importer_cache
+    for path, finder in list(cache.items()):
+        if isinstance(finder, zipimport.zipimporter):
+            cache.pop(path, None)
 
 
 def package_zip(dest_dir: str | None = None) -> str:

@@ -15,6 +15,7 @@ import operator
 import os
 from pathlib import Path
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -3572,11 +3573,20 @@ def _extracted_df(spark, d):
                     break
                 time.sleep(1)
         if not os.path.exists(marker):
+            # the build reads its corpus twice (snapshot hash, extraction):
+            # persist it so it is synthesized once, unless the caller's
+            # frame is already cached (then it is theirs to unpersist)
+            corpus = _corpus_df(spark, d)
+            own_cache = corpus.storageLevel == StorageLevel.NONE
+            if own_cache:
+                corpus.persist()
             try:
-                run_extraction(spark, _corpus_df(spark, d), out, parts=parts)
+                run_extraction(spark, corpus, out, parts=parts)
                 with open(marker, "w") as f:
                     f.write("ok")
             finally:
+                if own_cache:
+                    corpus.unpersist()
                 if owner:
                     try:
                         os.rmdir(lock)
