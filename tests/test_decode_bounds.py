@@ -1,6 +1,7 @@
-"""Every inflating call in ``core/`` is bounded by a max output length, and
-a PNG whose IDAT inflates far past its declared rows is refused without
-being inflated."""
+"""Every inflating call in ``core/`` is bounded by a max output length, a
+PNG whose IDAT inflates far past its declared rows is refused without
+being inflated, and the JPEG and GIF pixel decoders stay within a small
+memory bound whatever their headers and LZW streams declare."""
 
 import ast
 import struct
@@ -9,7 +10,14 @@ import zlib
 from pathlib import Path
 
 import tika_wrap_spark
-from tika_wrap_spark.core.media import PNG_MAGIC, _png_chunk, png_pixels
+from tika_wrap_spark.core.jpegbin import build_jpeg_pixels, jpeg_pixels
+from tika_wrap_spark.core.media import (
+    MAX_PIXELS,
+    PNG_MAGIC,
+    _png_chunk,
+    gif_pixels,
+    png_pixels,
+)
 
 CORE = Path(tika_wrap_spark.__file__).parent / "core"
 # one-shot module functions: they take no output bound at all
@@ -48,11 +56,68 @@ def test_png_idat_bomb_is_refused_under_a_memory_bound():
         + _png_chunk(b"IEND", b"")
     )
     assert len(png) < 1 << 20
+    got, peak = _peak(png_pixels, png)
+    assert got is None
+    assert peak < 8 << 20, peak
+
+
+def _peak(fn, *args):
+    """(fn(*args), peak traced bytes while it ran)."""
     tracemalloc.start()
     try:
-        got = png_pixels(png)
+        got = fn(*args)
         peak = tracemalloc.get_traced_memory()[1]
     finally:
         tracemalloc.stop()
+    return got, peak
+
+
+def test_jpeg_sof_declaring_25m_pixels_is_refused_before_allocating():
+    jpg = bytearray(build_jpeg_pixels(8, 8, bytes(range(192))))
+    sof = jpg.index(b"\xff\xc0")
+    assert struct.unpack_from(">HH", jpg, sof + 5) == (8, 8)  # height, width
+    struct.pack_into(">HH", jpg, sof + 5, 5000, 5000)
+    assert 5000 * 5000 > MAX_PIXELS and len(jpg) < 1024
+    got, peak = _peak(jpeg_pixels, bytes(jpg))
     assert got is None
     assert peak < 8 << 20, peak
+
+
+def _gif_1x1(codes: list[int]) -> bytes:
+    """A 1x1 GIF (two-colour table, min code size 2) whose image data is
+    ``codes``, packed LSB-first at the widths a decoder reads them with:
+    every code after the first adds one table entry until 4096."""
+    acc = nbits = 0
+    width, size = 3, 6
+    for i, code in enumerate(codes):
+        acc |= code << nbits
+        nbits += width
+        if i >= 2 and size < 4096:  # codes after CLEAR and the first add one
+            size += 1
+        if size == 1 << width and width < 12:
+            width += 1
+    out = acc.to_bytes((nbits + 7) // 8, "little")
+    blocks = b"".join(
+        bytes([len(out[k : k + 255])]) + out[k : k + 255] for k in range(0, len(out), 255)
+    )
+    return (
+        b"GIF89a" + struct.pack("<HHBBB", 1, 1, 0x80, 0, 0) + b"\x10\x20\x30" * 2
+        + b"\x2c" + struct.pack("<HHHHB", 0, 0, 1, 1, 0) + b"\x02"
+        + blocks + b"\x00;"
+    )
+
+
+def test_gif_lzw_chain_stops_at_the_frames_pixels():
+    # CLEAR, 0, then a KwKwK chain 6, 7, ... 4095 (each code one longer
+    # than the last: ~8M indices) and 1,000 repeats of code 4095
+    gif = _gif_1x1([4, 0] + list(range(6, 4096)) + [4095] * 1000 + [5])
+    assert len(gif) < 8 << 10
+    got, peak = _peak(gif_pixels, gif)
+    assert got == (1, 1, b"\x10\x20\x30")
+    assert peak < 8 << 20, peak
+
+
+def test_gif_stream_malformed_past_its_pixels_decodes():
+    # code 7 is past the table (6 entries): malformed, but after the one
+    # index a 1x1 frame needs
+    assert gif_pixels(_gif_1x1([4, 0, 7, 5])) == (1, 1, b"\x10\x20\x30")

@@ -742,3 +742,36 @@ class TestTiffWebpMp4:
                 mp4s += 1
         assert tiffs > 80 and webps > 80 and mp4s > 80
         assert tiff_pix > 20 and tiffs - tiff_pix > 20
+
+
+def test_fetch_mix_kernel_outputs_digest_pin():
+    """Byte-identical pin of every media kernel over 3,000 fetch-mix refs:
+    decode metadata, resize (real or stub) at 24x24 and embedding (real or
+    stub) at dim 16, with which kernel ran. Captured before the operators
+    were folded onto one payload map and one pixel-codec table."""
+    import hashlib
+    import json
+
+    from tika_wrap_spark.operators.multimodal import (
+        _decode_payload,
+        _embed_fake,
+        _embed_real,
+        _fetch_fake,
+        _resize_fake,
+        _resize_real,
+    )
+
+    digest = hashlib.md5()
+    kinds: dict[str, int] = {}
+    for i in range(3000):
+        ref = "blob://doc_%07d/%d" % (i // 3, i % 3)
+        p = _fetch_fake(ref)
+        meta = _decode_payload(ref, p)
+        kinds[meta["media_kind"]] = kinds.get(meta["media_kind"], 0) + 1
+        r, e = _resize_real(p, 24, 24), _embed_real(p, 16)
+        resized = r if r is not None else _resize_fake(p, 24, 24)
+        emb = e if e is not None else _embed_fake(p, 16)
+        row = [ref, meta, r is not None, hashlib.md5(resized).hexdigest(), e is not None, emb]
+        digest.update(json.dumps(row).encode())
+    assert kinds == {"image": 1679, "video": 584, "audio": 737}
+    assert digest.hexdigest() == "d12c1906f36a3101c31128aa3af4ebbc"

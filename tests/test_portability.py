@@ -105,8 +105,10 @@ def udf_sites(root: Path = PKG) -> tuple[list[str], list[str]]:
 
 def test_every_package_udf_drops_zip_finders_first():
     checked, bad = udf_sites()
-    # extract_ops 2, multimodal 5, data 2, queries 1, streaming 1
-    assert len(checked) >= 11, checked
+    # extract_ops 2, multimodal 2 (the fetch stage and the one payload map
+    # behind decode/resize/frames/embed), data 1 (the corpus/golden
+    # generator), queries 1, streaming 1
+    assert len(checked) >= 7, checked
     assert bad == []
 
 

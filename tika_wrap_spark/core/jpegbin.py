@@ -27,6 +27,8 @@ from __future__ import annotations
 import math
 import struct
 
+from tika_wrap_spark.core.media import MAX_PIXELS
+
 # Annex K.1 luminance / K.2 chrominance quantization tables (quality ~50)
 QT_LUMA = [
     16, 11, 10, 16, 24, 40, 51, 61,
@@ -975,6 +977,8 @@ def jpeg_pixels(data: bytes) -> tuple[int, int, bytes] | None:  # noqa: PLR0912
     comps = parsed["comps"]
     qts = parsed["qts"]
     width, height = parsed["width"], parsed["height"]
+    if width * height > MAX_PIXELS:
+        return None
     hmax, vmax = parsed["hmax"], parsed["vmax"]
     mcux, mcuy = parsed["mcux"], parsed["mcuy"]
     # per-component quantized-coefficient stores at MCU-padded block size

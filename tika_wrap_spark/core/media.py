@@ -26,12 +26,18 @@ import zlib
 # make_portable's pickle-by-value shipping and raise ModuleNotFoundError
 # on any worker without the package on its path
 from tika_wrap_spark.core.exifbin import build_exif_app1, read_ifd, read_ifd_value
+from tika_wrap_spark.core.gzipbin import MAX_INFLATED
 
 PNG_MAGIC = b"\x89PNG\r\n\x1a\n"
 JPEG_MAGIC = b"\xff\xd8"
 GIF_MAGICS = (b"GIF87a", b"GIF89a")
 BMP_MAGIC = b"BM"
 RIFF_MAGIC = b"RIFF"
+
+# shared pixel-count cap: every pixel decoder (bmp/png/gif/jpeg/tiff) checks
+# w*h against it before it allocates or inflates, so a decoded RGB buffer
+# stays within the 64 MiB inflate cap whatever the header declares
+MAX_PIXELS = MAX_INFLATED // 3
 
 # SOF0..SOF15 carry frame dims, except DHT(C4)/JPG(C8)/DAC(CC)
 _SOF_MARKERS = frozenset(range(0xC0, 0xD0)) - {0xC4, 0xC8, 0xCC}
@@ -747,7 +753,7 @@ def bmp_pixels(data: bytes) -> tuple[int, int, bytes] | None:
     h = abs(h_raw)
     top_down = h_raw < 0
     stride = ((w * 3 + 3) // 4) * 4
-    if px_off + stride * h > len(data):
+    if w * h > MAX_PIXELS or px_off + stride * h > len(data):
         return None
     out = bytearray(w * h * 3)
     for row in range(h):
@@ -864,8 +870,8 @@ def png_pixels(data: bytes) -> tuple[int, int, bytes] | None:
         pos += 12 + length  # length + type + crc
     if not w or not h or not idat:
         return None
-    if w * h * 3 > 256 * 1024 * 1024:
-        return None  # bomb cap
+    if w * h > MAX_PIXELS:
+        return None
     try:  # inflate one byte past the declared rows at most: more is a bomb
         raw = zlib.decompressobj().decompress(bytes(idat), h * (1 + 3 * w) + 1)
     except zlib.error:
@@ -874,11 +880,6 @@ def png_pixels(data: bytes) -> tuple[int, int, bytes] | None:
     if rgb is None:
         return None
     return (w, h, rgb)
-
-
-def _png_chunk(ctype: bytes, body: bytes) -> bytes:
-    crc = zlib.crc32(ctype + body) & 0xFFFFFFFF
-    return struct.pack(">I", len(body)) + ctype + body + struct.pack(">I", crc)
 
 
 def build_png_pixels(width: int, height: int, rgb: bytes) -> bytes:
@@ -924,10 +925,12 @@ def resize_nearest(
 # ---------------------------------------------------------------------------
 
 
-def _lzw_decode(data: bytes, min_code_size: int) -> list[int] | None:
+def _lzw_decode(data: bytes, min_code_size: int, limit: int) -> list[int] | None:
     """GIF-variant LZW: variable code width starting at min+1, CLEAR resets
-    the table, EOI ends the stream; table caps at 4096 entries. Returns the
-    index stream, or None on a malformed code sequence."""
+    the table, EOI ends the stream; table caps at 4096 entries (12-bit codes
+    reach no further). Returns the index stream, cut short once ``limit``
+    indices are out (the frame's w*h; what follows is never read), or None
+    on a malformed code sequence before that."""
     clear = 1 << min_code_size
     eoi = clear + 1
     out: list[int] = []
@@ -956,13 +959,16 @@ def _lzw_decode(data: bytes, min_code_size: int) -> list[int] | None:
                 entry = table[code]
             elif code < len(table):
                 entry = table[code]
-                table.append(prev + [entry[0]])
+                if len(table) < 4096:
+                    table.append(prev + [entry[0]])
             elif code == len(table):
                 entry = prev + [prev[0]]
                 table.append(entry)
             else:
                 return None
             out.extend(entry)
+            if len(out) >= limit:
+                return out
             prev = entry
             if len(table) == (1 << width) and width < 12:
                 width += 1
@@ -1039,6 +1045,8 @@ def gif_pixels(data: bytes) -> tuple[int, int, bytes] | None:
     if len(data) < 13 or data[:6] not in GIF_MAGICS:
         return None
     w, h = struct.unpack_from("<HH", data, 6)
+    if w * h > MAX_PIXELS:
+        return None
     packed = data[10]
     pos = 13
     gct = b""
@@ -1077,7 +1085,7 @@ def gif_pixels(data: bytes) -> tuple[int, int, bytes] | None:
                 n = data[pos]
                 lzw += data[pos + 1 : pos + 1 + n]
                 pos += 1 + n
-            idx = _lzw_decode(bytes(lzw), min_code)
+            idx = _lzw_decode(bytes(lzw), min_code, w * h)
             if idx is None or len(idx) < w * h:
                 return None
             rgb = bytearray(w * h * 3)
@@ -1189,6 +1197,8 @@ def tiff_pixels(data: bytes) -> tuple[int, int, bytes] | None:
     tags, _le = parsed
     w, h = tags.get(_TIFF_W), tags.get(_TIFF_H)
     if not (isinstance(w, int) and isinstance(h, int) and w > 0 and h > 0):
+        return None
+    if w * h > MAX_PIXELS:
         return None
     if tags.get(_TIFF_COMPRESSION, 1) != 1 or tags.get(_TIFF_PHOTOMETRIC) != 2:
         return None

@@ -9,7 +9,7 @@ from pyspark.sql import DataFrame, SparkSession
 from tika_wrap_spark.schemas import CORPUS_SCHEMA
 
 # ids per corpus-generation task (see the finding-22 comment in
-# distributed_corpus_df): small enough that a task's entire INPUT stream
+# _distributed_df): small enough that a task's entire INPUT stream
 # (8-byte ids + framing, ~32 KB) fits in the worker socket buffers
 GEN_IDS_PER_TASK = 4096
 
@@ -29,15 +29,62 @@ def _make_row_fn(n_docs: int, seed: int):
     the doc_%07d space). gen_doc/adversarial_rows are bound DRIVER-side so
     cloudpickle ships their code by value — the worker must never execute
     an ``import tika_wrap_spark...`` statement (the grading driver runs
-    from a foreign cwd where the package is not importable)."""
+    from a foreign cwd where the package is not importable). The
+    adversarial rows are built once per task, on the first id that needs
+    them (each task unpickles its own copy of the closure)."""
     from tika_wrap_spark.corpus import adversarial_rows, gen_doc  # noqa: PLC0415
+
+    adversarial: list[dict[str, Any]] = []
 
     def row(i: int) -> dict[str, Any]:
         if i < n_docs:
             return gen_doc(i, seed)
-        return adversarial_rows(n_docs)[i - n_docs]
+        if not adversarial:
+            adversarial.extend(adversarial_rows(n_docs))
+        return adversarial[i - n_docs]
 
     return row
+
+
+def _distributed_df(spark, n_docs, seed, num_partitions, adversarial, spans_of=None):
+    """(doc_id, spans) DataFrame synthesized ON THE EXECUTORS: ``spark.range``
+    over doc ids -> ``mapInPandas`` over ``_make_row_fn``'s rows, each row's
+    spans passed through ``spans_of(spans) -> spans`` when given."""
+    from tika_wrap_spark.corpus import N_ADVERSARIAL  # noqa: PLC0415
+    from tika_wrap_spark.portability import drop_zip_finders, make_portable
+
+    make_portable()
+    total = n_docs + (N_ADVERSARIAL if adversarial else 0)
+    if num_partitions is None:
+        # Bound ids-per-task (~GEN_IDS_PER_TASK): pyspark 4's single-threaded
+        # PythonRunner can wedge when a task's pending INPUT outlives the
+        # first output backpressure stall (JVM waits writable, python waits
+        # readable — observed live at 15625 ids/task on the r4 corpus,
+        # BENCH.md finding 22). Small tasks also bound generator skew at any
+        # corpus size — the 10^12-doc-safe default.
+        num_partitions = max(
+            spark.sparkContext.defaultParallelism * 2,
+            -(-total // GEN_IDS_PER_TASK),
+        )
+    row_fn = _make_row_fn(n_docs, seed)
+
+    def gen(batches):
+        drop_zip_finders()
+        import pandas as pd  # noqa: PLC0415
+
+        for pdf in batches:
+            rows = [row_fn(int(i)) for i in pdf["id"]]
+            spans = [r["spans"] for r in rows]
+            yield pd.DataFrame(
+                {
+                    "doc_id": [r["doc_id"] for r in rows],
+                    "spans": spans if spans_of is None else [spans_of(s) for s in spans],
+                }
+            )
+
+    return spark.range(0, total, numPartitions=num_partitions).mapInPandas(
+        gen, schema=CORPUS_SCHEMA
+    )
 
 
 def distributed_corpus_df(
@@ -54,40 +101,7 @@ def distributed_corpus_df(
     docs. ``generate_corpus`` (driver-side) stays for small golden fixtures.
     ``adversarial=True`` appends the same N_ADVERSARIAL malformed docs
     ``generate_corpus`` does (equality pinned in tests/test_submit.py)."""
-    from tika_wrap_spark.corpus import N_ADVERSARIAL  # noqa: PLC0415
-    from tika_wrap_spark.portability import drop_zip_finders, make_portable
-
-    make_portable()
-    total = n_docs + (N_ADVERSARIAL if adversarial else 0)
-    if num_partitions is None:
-        # Bound ids-per-task (~GEN_IDS_PER_TASK): pyspark 4's single-threaded
-        # PythonRunner can wedge when a task's pending INPUT outlives the
-        # first output backpressure stall (JVM waits writable, python waits
-        # readable — observed live at 15625 ids/task on the r4 corpus,
-        # BENCH.md finding 22). Small tasks also bound generator skew at any
-        # corpus size — the 10^12-doc-safe default.
-        num_partitions = max(
-            spark.sparkContext.defaultParallelism * 2,
-            -(-total // GEN_IDS_PER_TASK),
-        )
-    row_fn = _make_row_fn(n_docs, seed)
-
-    def gen(batches):
-        drop_zip_finders()
-        import pandas as pd  # noqa: PLC0415
-
-        for pdf in batches:
-            rows = [row_fn(int(i)) for i in pdf["id"]]
-            yield pd.DataFrame(
-                {
-                    "doc_id": [r["doc_id"] for r in rows],
-                    "spans": [r["spans"] for r in rows],
-                }
-            )
-
-    return spark.range(0, total, numPartitions=num_partitions).mapInPandas(
-        gen, schema=CORPUS_SCHEMA
-    )
+    return _distributed_df(spark, n_docs, seed, num_partitions, adversarial)
 
 
 def distributed_golden_df(
@@ -102,41 +116,12 @@ def distributed_golden_df(
     generation that scales with the corpus (no driver-side golden list).
     Returns (doc_id, spans) of expected spans, the shape
     ``verify_against_golden`` consumes."""
-    from tika_wrap_spark.corpus import N_ADVERSARIAL  # noqa: PLC0415
-    from tika_wrap_spark.portability import drop_zip_finders, make_portable
-
-    make_portable()
-    total = n_docs + (N_ADVERSARIAL if adversarial else 0)
-    if num_partitions is None:
-        # Bound ids-per-task (~GEN_IDS_PER_TASK): pyspark 4's single-threaded
-        # PythonRunner can wedge when a task's pending INPUT outlives the
-        # first output backpressure stall (JVM waits writable, python waits
-        # readable — observed live at 15625 ids/task on the r4 corpus,
-        # BENCH.md finding 22). Small tasks also bound generator skew at any
-        # corpus size — the 10^12-doc-safe default.
-        num_partitions = max(
-            spark.sparkContext.defaultParallelism * 2,
-            -(-total // GEN_IDS_PER_TASK),
-        )
-    row_fn = _make_row_fn(n_docs, seed)
     from tika_wrap_spark.core.extract import extract_document  # noqa: PLC0415
 
-    def gen(batches):
-        drop_zip_finders()
-        import pandas as pd  # noqa: PLC0415
+    def spans_of(spans: list) -> list:
+        return extract_document(spans)["spans"]
 
-        for pdf in batches:
-            rows = [row_fn(int(i)) for i in pdf["id"]]
-            yield pd.DataFrame(
-                {
-                    "doc_id": [r["doc_id"] for r in rows],
-                    "spans": [extract_document(r["spans"])["spans"] for r in rows],
-                }
-            )
-
-    return spark.range(0, total, numPartitions=num_partitions).mapInPandas(
-        gen, schema=CORPUS_SCHEMA
-    )
+    return _distributed_df(spark, n_docs, seed, num_partitions, adversarial, spans_of)
 
 
 def extracted_to_rows(df: DataFrame) -> list[dict[str, Any]]:

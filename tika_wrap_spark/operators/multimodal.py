@@ -10,11 +10,10 @@ frame header + optional ID3v2 skip → true rate/channels, estimated frame
 count). The VIDEO header decode is REAL for AVI: the RIFF/hdrl walk yields
 true dims and total frame count (which drives frame sampling). Only pixel/sample-level kernels
 (resample, full frame decode, encoder forward pass) and unrecognized byte
-streams remain STUBS — this container has no media libraries — marked by
-``_decode_real`` raising NotImplementedError and a deterministic fake
-(`_decode_fake`, keyed on the payload digest) standing in so the
-Spark-side plumbing (schema, partitioning, UDF signature, Arrow batch
-shape) is real and tested end-to-end.
+streams remain STUBS — this container has no media libraries — where a
+deterministic fake (`_decode_fake`, keyed on the payload digest) stands in
+for the PIL/ffmpeg seam so the Spark-side plumbing (schema, partitioning,
+UDF signature, Arrow batch shape) is real and tested end-to-end.
 
 At scale: media bytes stay out-of-row (``media_ref`` into object storage,
 mirroring the reference keeping media on disk while text goes to ctx.txt);
@@ -26,7 +25,7 @@ partition in memory.
 from __future__ import annotations
 
 import hashlib
-from collections.abc import Iterator
+from collections.abc import Callable, Iterable, Iterator
 
 import pandas as pd
 
@@ -91,33 +90,37 @@ MEDIA_META_SCHEMA = T.StructType(
     ]
 )
 
+_INT32_MAX = 0x7FFFFFFF  # FLAC/Ogg totals are 36/64-bit; the column is int32
 
-def _decode_real(payload: bytes) -> dict:
-    """Real decoder seam (PIL/ffmpeg/soundfile would plug in here)."""
-    raise NotImplementedError(
-        "media decode requires image/audio libraries not present in this "
-        "container; production deployments plug PIL/ffmpeg in here"
-    )
+
+def _meta(
+    kind: str, payload: bytes, w: int, h: int, n_frames: int, exif=None, tags=None
+) -> dict:
+    """One ``MEDIA_META_SCHEMA`` row minus ``media_ref``, keys in schema
+    order: EXIF fields from ``exif`` (image payloads), ID3/Vorbis-comment
+    fields from ``tags`` (audio payloads), 0/'' without them."""
+    exif = exif or {}
+    tags = tags or {}
+    return {
+        "media_kind": kind,
+        "width": w,
+        "height": h,
+        "n_frames": n_frames,
+        "feature": hashlib.md5(payload).hexdigest()[:16],
+        "exif_orientation": int(exif.get("orientation") or 0),
+        "exif_datetime": exif.get("datetime", ""),
+        "id3_title": tags.get("title", ""),
+        "id3_artist": tags.get("artist", ""),
+    }
 
 
 def _decode_fake(ref: str, payload: bytes) -> dict:
     """Deterministic stand-in for payloads with no parseable header
     (exotic containers need real media libraries): metadata derived from
     the payload digest."""
-    h = hashlib.md5(payload).hexdigest()
-    v = int(h[:8], 16)
-    kind = ("audio", "video")[v % 2]
-    return {
-        "media_kind": kind,
-        "width": 64 + (v % 1920),
-        "height": 64 + ((v >> 8) % 1080),
-        "n_frames": 1 + ((v >> 16) % 300),
-        "feature": h[:16],
-        "exif_orientation": 0,
-        "exif_datetime": "",
-        "id3_title": "",
-        "id3_artist": "",
-    }
+    v = int(hashlib.md5(payload).hexdigest()[:8], 16)
+    w, h, n_frames = 64 + v % 1920, 64 + (v >> 8) % 1080, 1 + (v >> 16) % 300
+    return _meta(("audio", "video")[v % 2], payload, w, h, n_frames)
 
 
 def _decode_payload(ref: str, payload: bytes) -> dict:
@@ -128,125 +131,59 @@ def _decode_payload(ref: str, payload: bytes) -> dict:
     RIFF/AVI hdrl walk and the ISO-BMFF moov walk (tkhd dims, stts sample
     totals) yield true dims and total frames (core/media.py).
     Unrecognized bytes fall to the declared stub."""
-    dims = image_dims(payload)
-    if dims is not None:
-        # JPEG carries EXIF in its APP1 segment; a TIFF file IS the same
-        # IFD structure from byte 0 (orientation/datetime tags come free)
-        if payload.startswith(TIFF_MAGICS):
-            exif = parse_exif_tiff(payload)
-        else:
-            exif = jpeg_exif(payload)  # {} for non-JPEG images / no APP1
-        return {
-            "media_kind": "image",
-            "width": dims[0],
-            "height": dims[1],
-            "n_frames": 1,
-            "feature": hashlib.md5(payload).hexdigest()[:16],
-            "exif_orientation": int(exif.get("orientation") or 0),
-            "exif_datetime": exif.get("datetime", ""),
-            "id3_title": "",
-            "id3_artist": "",
-        }
-    wav = wav_info(payload)
-    if wav is not None:
-        channels, sample_rate, _bits, n_frames = wav
-        return {
-            "media_kind": "audio",
-            "width": channels,
-            "height": sample_rate,
-            "n_frames": n_frames,
-            "feature": hashlib.md5(payload).hexdigest()[:16],
-            "exif_orientation": 0,
-            "exif_datetime": "",
-            "id3_title": "",
-            "id3_artist": "",
-        }
-    avi = avi_info(payload)
-    if avi is not None:
-        w, h, n_frames, _streams = avi
-        return {
-            "media_kind": "video",
-            "width": w,
-            "height": h,
-            "n_frames": n_frames,
-            "feature": hashlib.md5(payload).hexdigest()[:16],
-            "exif_orientation": 0,
-            "exif_datetime": "",
-            "id3_title": "",
-            "id3_artist": "",
-        }
-    mp4 = mp4_info(payload)
-    if mp4 is not None:
-        w, h, n_frames, _duration_ms = mp4
-        return {
-            "media_kind": "video" if w and h else "audio",
-            "width": w,
-            "height": h,
-            "n_frames": n_frames,
-            "feature": hashlib.md5(payload).hexdigest()[:16],
-            "exif_orientation": 0,
-            "exif_datetime": "",
-            "id3_title": "",
-            "id3_artist": "",
-        }
-    mp3 = mp3_info(payload)
-    if mp3 is not None:
-        channels, sample_rate, _kbps, n_frames = mp3
+    if (dims := image_dims(payload)) is not None:
+        # JPEG carries EXIF in its APP1 segment (none for other images); a
+        # TIFF file IS the same IFD structure from byte 0
+        tiff = payload.startswith(TIFF_MAGICS)
+        exif = parse_exif_tiff(payload) if tiff else jpeg_exif(payload)
+        return _meta("image", payload, dims[0], dims[1], 1, exif=exif)
+    if (wav := wav_info(payload)) is not None:  # channels, rate, bits, frames
+        return _meta("audio", payload, wav[0], wav[1], wav[3])
+    if (avi := avi_info(payload)) is not None:  # w, h, frames, streams
+        return _meta("video", payload, avi[0], avi[1], avi[2])
+    if (mp4 := mp4_info(payload)) is not None:  # w, h, frames, duration_ms
+        w, h, n_frames, _ = mp4
+        return _meta("video" if w and h else "audio", payload, w, h, n_frames)
+    if (mp3 := mp3_info(payload)) is not None:  # channels, rate, kbps, frames
         tags = mp3_id3_tags(payload)  # {} for untagged streams
-        return {
-            "media_kind": "audio",
-            "width": channels,
-            "height": sample_rate,
-            "n_frames": n_frames,
-            "feature": hashlib.md5(payload).hexdigest()[:16],
-            "exif_orientation": 0,
-            "exif_datetime": "",
-            "id3_title": tags.get("title", ""),
-            "id3_artist": tags.get("artist", ""),
-        }
-    flac = flac_info(payload)
-    if flac is not None:
-        channels, sample_rate, _bits, total = flac
-        vtags = flac_tags(payload)  # Vorbis comments share the id3 columns
-        return {
-            "media_kind": "audio",
-            "width": channels,
-            "height": sample_rate,
-            "n_frames": min(total, 0x7FFFFFFF),  # 36-bit field vs int32 column
-            "feature": hashlib.md5(payload).hexdigest()[:16],
-            "exif_orientation": 0,
-            "exif_datetime": "",
-            "id3_title": vtags.get("title", ""),
-            "id3_artist": vtags.get("artist", ""),
-        }
-    ogg = ogg_vorbis_info(payload)
-    if ogg is not None:
-        channels, sample_rate, total = ogg
-        vtags = ogg_tags(payload)
-        return {
-            "media_kind": "audio",
-            "width": channels,
-            "height": sample_rate,
-            "n_frames": min(total, 0x7FFFFFFF),
-            "feature": hashlib.md5(payload).hexdigest()[:16],
-            "exif_orientation": 0,
-            "exif_datetime": "",
-            "id3_title": vtags.get("title", ""),
-            "id3_artist": vtags.get("artist", ""),
-        }
+        return _meta("audio", payload, mp3[0], mp3[1], mp3[3], tags=tags)
+    if (flac := flac_info(payload)) is not None:  # channels, rate, bits, total
+        total = min(flac[3], _INT32_MAX)
+        return _meta("audio", payload, flac[0], flac[1], total, tags=flac_tags(payload))
+    if (ogg := ogg_vorbis_info(payload)) is not None:  # channels, rate, total
+        total = min(ogg[2], _INT32_MAX)
+        return _meta("audio", payload, ogg[0], ogg[1], total, tags=ogg_tags(payload))
     return _decode_fake(ref, payload)
 
 
-def _decode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    drop_zip_finders()
-    for pdf in batches:
-        rows = {k.name: [] for k in MEDIA_META_SCHEMA.fields}
-        for ref, payload in zip(pdf["media_ref"].tolist(), pdf["payload"].tolist()):
-            meta = _decode_payload(ref, bytes(payload))
-            rows["media_ref"].append(ref)
-            for k, val in meta.items():
-                rows[k].append(val)
-        yield pd.DataFrame(rows)
+def _map_payloads(
+    media: DataFrame, schema: T.StructType, rows_of: Callable[[str, bytes], Iterable]
+) -> DataFrame:
+    """(media_ref, payload) rows -> ``schema`` rows through one Arrow-batched
+    mapInPandas: ``rows_of(ref, payload)`` yields each input row's output
+    tuples in schema order (one for decode/resize/embed, N for frames)."""
+    make_portable()
+    names = schema.fieldNames()
+
+    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        drop_zip_finders()
+        for pdf in it:
+            pairs = zip(pdf["media_ref"].tolist(), pdf["payload"].tolist())
+            rows = [row for ref, p in pairs for row in rows_of(ref, bytes(p))]
+            yield pd.DataFrame(rows, columns=names)
+
+    return media.mapInPandas(batches, schema=schema)
+
+
+def _real_or_stub(real: Callable, fake: Callable, *args) -> tuple[str, object]:
+    """(kernel, output): the real pixel kernel's output, or the declared
+    stub's when the payload is outside the pixel codecs."""
+    out = real(*args)
+    return ("real", out) if out is not None else ("stub", fake(*args))
+
+
+def _decode_rows(ref: str, payload: bytes) -> Iterator[tuple]:
+    yield (ref, *_decode_payload(ref, payload).values())
 
 
 PAYLOAD_SCHEMA = T.StructType(
@@ -422,10 +359,31 @@ def media_payloads(extracted: DataFrame) -> DataFrame:
 def decode_media(media: DataFrame, num_partitions: int | None = None) -> DataFrame:
     """(media_ref, payload) -> typed media metadata via Arrow-batched
     mapInPandas; repartitioned by ref hash against giant-asset skew."""
-    make_portable()
     if num_partitions:
         media = media.repartition(num_partitions, F.xxhash64("media_ref"))
-    return media.mapInPandas(_decode_batches, schema=MEDIA_META_SCHEMA)
+    return _map_payloads(media, MEDIA_META_SCHEMA, _decode_rows)
+
+
+# The stdlib pixel codecs, in lookup order: the first decoder that accepts
+# a payload gives (w, h, top-down rgb), and its encoder writes a resized
+# image back in the same format. A new pixel codec is one row here.
+_PIXEL_CODECS = (
+    (bmp_pixels, build_bmp_pixels),
+    (png_pixels, build_png_pixels),
+    (gif_pixels, build_gif_pixels),
+    (jpeg_pixels, build_jpeg_pixels),
+    (tiff_pixels, build_tiff_pixels),
+)
+
+
+def _pixels(payload: bytes) -> tuple[int, int, bytes, Callable] | None:
+    """(w, h, rgb, encode) from the first codec that decodes ``payload``;
+    None outside them (WebP/MP4 and the rest are the declared stub seam)."""
+    for decode, encode in _PIXEL_CODECS:
+        dec = decode(payload)
+        if dec is not None:
+            return (*dec, encode)
+    return None
 
 
 RESIZED_SCHEMA = T.StructType(
@@ -448,33 +406,16 @@ def _resize_fake(payload: bytes, w: int, h: int) -> bytes:
 
 
 def _resize_real(payload: bytes, w: int, h: int) -> bytes | None:
-    """REAL pixel kernel for the stdlib-decodable formats: 24-bit BMP,
-    8-bit RGB PNG, LZW GIF, baseline/progressive JPEG, and uncompressed
-    RGB-strip TIFF decode to raw RGB (core/media.py + core/jpegbin.py
-    pixel codecs), integer nearest-neighbor resample, re-encode in the
-    same format. None for anything else (WebP/MP4 payloads are real
-    codecs, the declared stub seam) — the caller falls back to it."""
-    dec = bmp_pixels(payload)
-    if dec is not None:
-        sw, sh, rgb = dec
-        return build_bmp_pixels(w, h, resize_nearest(sw, sh, rgb, w, h))
-    dec = png_pixels(payload)
-    if dec is not None:
-        sw, sh, rgb = dec
-        return build_png_pixels(w, h, resize_nearest(sw, sh, rgb, w, h))
-    dec = gif_pixels(payload)
-    if dec is not None:
-        sw, sh, rgb = dec
-        return build_gif_pixels(w, h, resize_nearest(sw, sh, rgb, w, h))
-    dec = jpeg_pixels(payload)
-    if dec is not None:
-        sw, sh, rgb = dec
-        return build_jpeg_pixels(w, h, resize_nearest(sw, sh, rgb, w, h))
-    dec = tiff_pixels(payload)
-    if dec is not None:
-        sw, sh, rgb = dec
-        return build_tiff_pixels(w, h, resize_nearest(sw, sh, rgb, w, h))
-    return None
+    """REAL pixel kernel for the ``_PIXEL_CODECS`` formats (24-bit BMP,
+    8-bit RGB PNG, LZW GIF, baseline/progressive JPEG, uncompressed
+    RGB-strip TIFF): decode to raw RGB, integer nearest-neighbor resample,
+    re-encode in the same format. None for anything else — the caller
+    falls back to the stub."""
+    px = _pixels(payload)
+    if px is None:
+        return None
+    sw, sh, rgb, encode = px
+    return encode(w, h, resize_nearest(sw, sh, rgb, w, h))
 
 
 def resize_media(media: DataFrame, width: int, height: int) -> DataFrame:
@@ -483,34 +424,12 @@ def resize_media(media: DataFrame, width: int, height: int) -> DataFrame:
     (decode -> resample -> re-encode, pure stdlib); compressed formats keep
     the declared `_resize_fake` stub. The ``kernel`` column records which
     path each row took."""
-    make_portable()
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        drop_zip_finders()
-        for pdf in it:
-            refs = pdf["media_ref"].tolist()
-            payloads = pdf["payload"].tolist()
-            kernels, outs = [], []
-            for p in payloads:
-                b = bytes(p)
-                real = _resize_real(b, width, height)
-                if real is not None:
-                    kernels.append("real")
-                    outs.append(real)
-                else:
-                    kernels.append("stub")
-                    outs.append(_resize_fake(b, width, height))
-            yield pd.DataFrame(
-                {
-                    "media_ref": refs,
-                    "out_width": [width] * len(refs),
-                    "out_height": [height] * len(refs),
-                    "kernel": kernels,
-                    "resized": outs,
-                }
-            )
+    def resized(ref: str, payload: bytes) -> Iterator[tuple]:
+        out = _real_or_stub(_resize_real, _resize_fake, payload, width, height)
+        yield (ref, width, height, *out)
 
-    return media.mapInPandas(batches, schema=RESIZED_SCHEMA)
+    return _map_payloads(media, RESIZED_SCHEMA, resized)
 
 
 FRAME_SCHEMA = T.StructType(
@@ -526,26 +445,14 @@ def frame_sample(media: DataFrame, every_n: int = 30, max_frames: int = 8) -> Da
     """Video frame sampling: one output row per sampled frame (1:N flatMap
     shape — the row-count amplification a real decoder produces). Frame
     count comes from the decode metadata; features are digest stubs."""
-    make_portable()
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        drop_zip_finders()
-        for pdf in it:
-            refs, idxs, feats = [], [], []
-            for ref, payload in zip(pdf["media_ref"].tolist(), pdf["payload"].tolist()):
-                meta = _decode_payload(ref, bytes(payload))
-                n = min(max(meta["n_frames"] // every_n, 1), max_frames)
-                for k in range(n):
-                    refs.append(ref)
-                    idxs.append(k * every_n)
-                    feats.append(
-                        hashlib.md5(bytes(payload) + b"|f%d" % (k * every_n)).hexdigest()[:16]
-                    )
-            yield pd.DataFrame(
-                {"media_ref": refs, "frame_idx": idxs, "frame_feature": feats}
-            )
+    def frames(ref: str, payload: bytes) -> Iterator[tuple]:
+        n_frames = _decode_payload(ref, payload)["n_frames"]
+        n = min(max(n_frames // every_n, 1), max_frames)
+        for idx in range(0, n * every_n, every_n):
+            yield (ref, idx, hashlib.md5(payload + b"|f%d" % idx).hexdigest()[:16])
 
-    return media.mapInPandas(batches, schema=FRAME_SCHEMA)
+    return _map_payloads(media, FRAME_SCHEMA, frames)
 
 
 EMBED_SCHEMA = T.StructType(
@@ -572,25 +479,17 @@ def _embed_fake(payload: bytes, dim: int) -> list[float]:
 
 
 def _embed_real(payload: bytes, dim: int) -> list[float] | None:
-    """REAL pixel feature for the stdlib-decodable formats: decode
-    BMP/PNG/GIF/JPEG/TIFF to RGB, nearest-neighbor pool to a sqrt(dim) x sqrt(dim) grid, emit the
+    """REAL pixel feature for the ``_PIXEL_CODECS`` formats: decode to RGB,
+    nearest-neighbor pool to a sqrt(dim) x sqrt(dim) grid, emit the
     per-cell grayscale (ITU-R 601 integer weights) scaled to [0, 1). A
     classic perceptual thumbnail-hash feature: nearby crops/resizes of the
     same image land close in cosine space, so the downstream LSH/IVF
     operators have true visual-similarity signal for decodable payloads.
     None for compressed formats — the caller keeps the encoder-seam stub."""
-    dec = bmp_pixels(payload)
-    if dec is None:
-        dec = png_pixels(payload)
-    if dec is None:
-        dec = gif_pixels(payload)
-    if dec is None:
-        dec = jpeg_pixels(payload)
-    if dec is None:
-        dec = tiff_pixels(payload)
-    if dec is None:
+    px = _pixels(payload)
+    if px is None:
         return None
-    w, h, rgb = dec
+    w, h, rgb, _ = px
     side = max(1, int(dim**0.5))
     small = resize_nearest(w, h, rgb, side, side)
     out = []
@@ -608,28 +507,11 @@ def embed_media(media: DataFrame, dim: int = 16) -> DataFrame:
     via Arrow-batched mapInPandas — the bridge from the multimodal decode
     path into the similarity operators (`operators/similarity.py` consumes
     the embedding column directly: quantize -> LSH bucket -> top-k).
-    BMP/PNG/GIF/baseline-JPEG payloads embed through the REAL pixel kernel (`_embed_real`:
+    ``_PIXEL_CODECS`` payloads embed through the REAL pixel kernel (`_embed_real`:
     decode -> pool -> grayscale grid); compressed formats keep the declared
     encoder-seam stub; the ``kernel`` column records which."""
-    make_portable()
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        drop_zip_finders()
-        for pdf in it:
-            refs = pdf["media_ref"].tolist()
-            payloads = pdf["payload"].tolist()
-            kernels, embs = [], []
-            for p in payloads:
-                b = bytes(p)
-                e = _embed_real(b, dim)
-                if e is not None:
-                    kernels.append("real")
-                    embs.append(e)
-                else:
-                    kernels.append("stub")
-                    embs.append(_embed_fake(b, dim))
-            yield pd.DataFrame(
-                {"media_ref": refs, "kernel": kernels, "embedding": embs}
-            )
+    def embedded(ref: str, payload: bytes) -> Iterator[tuple]:
+        yield (ref, *_real_or_stub(_embed_real, _embed_fake, payload, dim))
 
-    return media.mapInPandas(batches, schema=EMBED_SCHEMA)
+    return _map_payloads(media, EMBED_SCHEMA, embedded)
