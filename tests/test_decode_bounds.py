@@ -83,6 +83,21 @@ def test_jpeg_sof_declaring_25m_pixels_is_refused_before_allocating():
     assert peak < 8 << 20, peak
 
 
+def test_jpeg_sof_under_the_cap_is_bounded_by_its_scan_data():
+    # 4700x4700 passes MAX_PIXELS; the scans' few hundred bytes cannot code
+    # its ~1M blocks, so the decoder must not size a store for them
+    assert 4700 * 4700 <= MAX_PIXELS
+    for progressive, sof_marker in ((False, b"\xff\xc0"), (True, b"\xff\xc2")):
+        jpg = bytearray(build_jpeg_pixels(8, 8, bytes(range(192)), progressive=progressive))
+        sof = jpg.index(sof_marker)
+        assert struct.unpack_from(">HH", jpg, sof + 5) == (8, 8)  # height, width
+        struct.pack_into(">HH", jpg, sof + 5, 4700, 4700)
+        assert len(jpg) < 1024
+        got, peak = _peak(jpeg_pixels, bytes(jpg))
+        assert got is None
+        assert peak < 8 << 20, (progressive, peak)
+
+
 def _gif_1x1(codes: list[int]) -> bytes:
     """A 1x1 GIF (two-colour table, min code size 2) whose image data is
     ``codes``, packed LSB-first at the widths a decoder reads them with:

@@ -9,6 +9,8 @@ INVALID_PARAMETER_VALUE.START and used to abort the whole winnow_fp job.
 
 from __future__ import annotations
 
+import time
+
 import duckdb
 import pandas as pd
 
@@ -257,6 +259,29 @@ def test_repetition_linear_on_giant_doc(spark):
     assert got["tiny"]["dup_line_q"] == 500
     assert got["tiny"]["max_tok_cnt"] == 4  # 'a' appears 4x across lines
     assert got["empty"]["n_toks"] == 0 and got["empty"]["max_tok_cnt"] == 0
+
+
+def test_repetition_cost_grows_linearly_in_tokens(spark):
+    """4x the tokens of one document must cost < 8x the time (best of 3;
+    quadratic work approaches 16x). Selected beside the explode, the
+    per-doc line/token stats were re-evaluated once per exploded token:
+    2x4,000 -> 2x16,000 tokens took 6.7 s -> 110 s (x16.4, 4 vCPU,
+    local[8]); computed below the explode, both take well under a second."""
+    from tika_wrap_spark.operators.text_analysis import repetition_features
+
+    def best_of_3(n: int) -> float:
+        text = " ".join(["t%05d" % i for i in range(n)] * 2)
+        df = spark.createDataFrame([("d", text)], "doc_id string, text string")
+        best = float("inf")
+        for _ in range(3):
+            t0 = time.perf_counter()
+            (row,) = repetition_features(df).collect()
+            best = min(best, time.perf_counter() - t0)
+        assert row["n_toks"] == 2 * n and row["max_tok_cnt"] == 2
+        return best
+
+    small, big = best_of_3(4_000), best_of_3(16_000)
+    assert big < 8 * small, (small, big)
 
 
 def test_semantic_dedup_drops_planted_near_dup(spark):

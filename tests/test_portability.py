@@ -1,9 +1,13 @@
-"""Every package Python UDF drops the worker's cached zip finders before its
-first batch (``portability.drop_zip_finders``), the helper leaves imports
-working, and grouped/cogrouped UDFs still receive their key."""
+"""Every package Python UDF opens with the worker prelude
+(``portability.enter_worker``): it drops the worker's cached zip finders
+and leaves imports working, it freezes each Python worker's heap once and
+never the driver's, and grouped/cogrouped UDFs still receive their key."""
 
 import ast
+import gc
+import os
 import sys
+import time
 import zipfile
 import zipimport
 from pathlib import Path
@@ -12,11 +16,11 @@ import pandas as pd
 from pyspark.sql import functions as F
 
 import tika_wrap_spark
-from tika_wrap_spark.portability import drop_zip_finders
+from tika_wrap_spark.portability import enter_worker, make_portable
 
 PKG = Path(tika_wrap_spark.__file__).parent
 UDF_METHODS = {"mapInPandas", "applyInPandas", "applyInPandasWithState"}
-HELPER = "drop_zip_finders"
+HELPER = "enter_worker"
 
 
 def _scope_stmts(scope: ast.AST):
@@ -127,7 +131,7 @@ def test_drop_zip_finders_keeps_later_imports(tmp_path, monkeypatch):
         zips = [k for k, v in sys.path_importer_cache.items() if isinstance(v, zipimport.zipimporter)]
         assert any(k.startswith(str(archive)) for k in zips), zips
 
-        drop_zip_finders()
+        enter_worker()
         assert not any(
             isinstance(v, zipimport.zipimporter) for v in sys.path_importer_cache.values()
         )
@@ -144,7 +148,35 @@ def test_drop_zip_finders_keeps_later_imports(tmp_path, monkeypatch):
     finally:
         for name in [m for m in sys.modules if m.split(".")[0] == "twzprobe"]:
             del sys.modules[name]
-        drop_zip_finders()
+        enter_worker()
+
+
+def test_enter_worker_freezes_each_worker_once_and_never_the_driver(spark):
+    make_portable()
+
+    def probe(batches):
+        enter_worker()
+        for _ in batches:
+            yield pd.DataFrame(
+                {"pid": [os.getpid()], "t": [time.monotonic_ns()], "frozen": [gc.get_freeze_count()]}
+            )
+
+    df = spark.range(0, 64, 1, 16)
+    rows = []
+    for _ in range(2):
+        rows += df.mapInPandas(probe, "pid long, t long, frozen long").collect()
+    assert len(rows) == 32
+    assert all(r.frozen > 0 for r in rows), rows
+    by_pid: dict[int, list[int]] = {}
+    for r in sorted(rows, key=lambda r: r.t):
+        by_pid.setdefault(r.pid, []).append(r.frozen)
+    # one freeze per process: later tasks only see frozen objects die
+    assert any(len(v) > 1 for v in by_pid.values()), by_pid
+    for counts in by_pid.values():
+        assert counts == sorted(counts, reverse=True), by_pid
+
+    enter_worker()
+    assert gc.get_freeze_count() == 0
 
 
 def test_grouped_and_cogrouped_udfs_receive_their_key(spark):
@@ -156,7 +188,7 @@ def test_grouped_and_cogrouped_udfs_receive_their_key(spark):
     )
 
     def keyed(key, pdf):
-        drop_zip_finders()
+        enter_worker()
         return pd.DataFrame({"g": [key[0]], "n": [len(pdf)]})
 
     grouped = df.groupBy(F.col("g") % 2).applyInPandas(keyed, "g long, n long").collect()

@@ -864,6 +864,26 @@ def _prog_ac_refine(
     return True
 
 
+def _comp_blocks(parsed: dict, ci: int) -> tuple[int, int]:
+    """(columns, rows) of component ``ci``'s own block raster, unpadded:
+    what a single-component scan walks (spec A.2.2)."""
+    _, hs, vs, _ = parsed["comps"][ci]
+    nbw = (-(-(parsed["width"] * hs) // parsed["hmax"]) + 7) // 8  # ceil(comp_w / 8)
+    nbh = (-(-(parsed["height"] * vs) // parsed["vmax"]) + 7) // 8
+    return nbw, nbh
+
+
+def _scan_blocks(scan: dict, parsed: dict) -> int:
+    """How many blocks one scan codes: the component's raster for a
+    single-component scan, every MCU's blocks for an interleaved one."""
+    scomp = scan["scomp"]
+    if len(scomp) == 1:
+        nbw, nbh = _comp_blocks(parsed, scomp[0][0])
+        return nbw * nbh
+    per_mcu = sum(parsed["comps"][ci][1] * parsed["comps"][ci][2] for ci, _, _ in scomp)
+    return parsed["mcux"] * parsed["mcuy"] * per_mcu
+
+
 def _decode_one_scan(  # noqa: PLR0912, PLR0915
     scan: dict, parsed: dict, coef: list[list[list[int]]]
 ) -> bool:
@@ -873,9 +893,7 @@ def _decode_one_scan(  # noqa: PLR0912, PLR0915
     and all four progressive scan kinds."""
     comps = parsed["comps"]
     progressive = parsed["progressive"]
-    hmax, vmax = parsed["hmax"], parsed["vmax"]
     mcux, mcuy = parsed["mcux"], parsed["mcuy"]
-    width, height = parsed["width"], parsed["height"]
     scomp = scan["scomp"]
     ss, se, ah, al = scan["ss"], scan["se"], scan["ah"], scan["al"]
     r = _BitReader(scan["data"])
@@ -935,10 +953,8 @@ def _decode_one_scan(  # noqa: PLR0912, PLR0915
 
     if len(scomp) == 1:
         ci, dct, act = scomp[0]
-        _, hs, vs, _ = comps[ci]
-        bw = mcux * hs  # padded store row width (blocks)
-        nbw = (-(-(width * hs) // hmax) + 7) // 8  # ceil(comp_w / 8)
-        nbh = (-(-(height * vs) // vmax) + 7) // 8
+        bw = mcux * comps[ci][1]  # padded store row width (blocks)
+        nbw, nbh = _comp_blocks(parsed, ci)
         n = 0
         for by in range(nbh):
             for bx in range(nbw):
@@ -978,6 +994,13 @@ def jpeg_pixels(data: bytes) -> tuple[int, int, bytes] | None:  # noqa: PLR0912
     qts = parsed["qts"]
     width, height = parsed["width"], parsed["height"]
     if width * height > MAX_PIXELS:
+        return None
+    # A sequential scan or a progressive DC scan (Ss = 0) reads at least one
+    # Huffman bit per block it covers, so one covering more than 8 blocks
+    # per entropy-coded byte runs dry and cannot decode: refuse it before
+    # sizing the coefficient store from the SOF (a 633-byte file declaring
+    # 4700x4700 would otherwise allocate ~600 MB of blocks first).
+    if any(s["ss"] == 0 and _scan_blocks(s, parsed) > 8 * len(s["data"]) for s in parsed["scans"]):
         return None
     hmax, vmax = parsed["hmax"], parsed["vmax"]
     mcux, mcuy = parsed["mcux"], parsed["mcuy"]

@@ -51,7 +51,7 @@ def _distributed_df(spark, n_docs, seed, num_partitions, adversarial, spans_of=N
     over doc ids -> ``mapInPandas`` over ``_make_row_fn``'s rows, each row's
     spans passed through ``spans_of(spans) -> spans`` when given."""
     from tika_wrap_spark.corpus import N_ADVERSARIAL  # noqa: PLC0415
-    from tika_wrap_spark.portability import drop_zip_finders, make_portable
+    from tika_wrap_spark.portability import enter_worker, make_portable
 
     make_portable()
     total = n_docs + (N_ADVERSARIAL if adversarial else 0)
@@ -69,7 +69,7 @@ def _distributed_df(spark, n_docs, seed, num_partitions, adversarial, spans_of=N
     row_fn = _make_row_fn(n_docs, seed)
 
     def gen(batches):
-        drop_zip_finders()
+        enter_worker()
         import pandas as pd  # noqa: PLC0415
 
         for pdf in batches:

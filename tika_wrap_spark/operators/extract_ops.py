@@ -10,8 +10,12 @@ warm-server reuse (src/java-env.cpp:199-205), with none of its
 one-doc-at-a-time mutex (src/java-env.cpp:58,83). Parser module state is
 not: ``make_portable`` ships the package by value, so each task rebuilds
 module globals when it unpickles the UDF; what must outlive a task lives in
-``core.procmemo.proc_memo``. The per-task cost the reused worker still pays
-before the first batch is cut by ``portability.drop_zip_finders``.
+``core.procmemo.proc_memo``. Both UDFs here open with
+``portability.enter_worker()``: it drops the cached zip finders a reused
+worker would otherwise re-read before each task, and the first time it runs
+in a worker process it freezes the import heap (pyspark, pandas, pyarrow),
+so the daemon's per-task ``gc.collect()`` and in-batch gen-2 passes scan
+only the task's own young objects.
 
 No per-row Python UDFs anywhere (input_hint mandate): everything is
 Arrow-vectorized at the batch level.
@@ -30,7 +34,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from tika_wrap_spark.core.extract import extract_document
-from tika_wrap_spark.portability import drop_zip_finders, make_portable
+from tika_wrap_spark.portability import enter_worker, make_portable
 from tika_wrap_spark.schemas import EXTRACTED_PART_SCHEMA, EXTRACTED_SCHEMA
 
 # --- per-document wall-clock budget (§2A#14) -------------------------------
@@ -114,7 +118,7 @@ def _make_extract_batches(
     doc_timeout_s: float, guard_min_chars: int
 ) -> Callable[[Iterator[pd.DataFrame]], Iterator[pd.DataFrame]]:
     def _extract_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        drop_zip_finders()
+        enter_worker()
         for pdf in batches:
             has_part = "part_key" in pdf.columns
             doc_ids = pdf["doc_id"].tolist()
@@ -192,7 +196,7 @@ VERIFY_SCHEMA = T.StructType(
 
 
 def _verify_cogroups(key, expected: pd.DataFrame, actual: pd.DataFrame) -> pd.DataFrame:
-    drop_zip_finders()
+    enter_worker()
 
     def seq(pdf: pd.DataFrame) -> list[tuple]:
         if len(pdf) == 0:

@@ -67,7 +67,7 @@ from tika_wrap_spark.core.media import (
     wav_info,
 )
 from tika_wrap_spark.core.exifbin import jpeg_exif, parse_exif_tiff
-from tika_wrap_spark.portability import drop_zip_finders, make_portable
+from tika_wrap_spark.portability import enter_worker, make_portable
 
 MEDIA_META_SCHEMA = T.StructType(
     [
@@ -166,7 +166,7 @@ def _map_payloads(
     names = schema.fieldNames()
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        drop_zip_finders()
+        enter_worker()
         for pdf in it:
             pairs = zip(pdf["media_ref"].tolist(), pdf["payload"].tolist())
             rows = [row for ref, p in pairs for row in rows_of(ref, bytes(p))]
@@ -346,7 +346,7 @@ def media_payloads(extracted: DataFrame) -> DataFrame:
     refs = spans.select(F.col("s.media_ref").alias("media_ref"))
 
     def fetch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        drop_zip_finders()
+        enter_worker()
         for pdf in batches:
             refs_l = pdf["media_ref"].tolist()
             yield pd.DataFrame(

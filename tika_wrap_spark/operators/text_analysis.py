@@ -197,20 +197,30 @@ def repetition_features(df: DataFrame) -> DataFrame:
     O(tokens) total work with two partial-aggregable shuffles, so a
     1M-token document costs 1M map-side-combined rows, never the
     O(distinct x tokens) per-row array fold that made one giant document an
-    unsplittable straggler task (``tests/test_dedup_edge.py`` pins the
-    giant-doc case). The per-doc stats ride THROUGH the explode (first()
-    in each aggregate), so the whole operator stays a single scan."""
+    unsplittable straggler task. The line stats and the token array are
+    computed in one ``select`` BELOW the explode, leaving only column
+    references and the O(1) ``size(toks)`` beside the generator: whatever is
+    selected beside it Spark evaluates in a Project above the ``Generate``,
+    once per exploded token, and re-splitting the document there made the
+    operator quadratic (``tests/test_dedup_edge.py`` pins the growth ratio).
+    The per-doc stats ride THROUGH the explode (first() in each aggregate),
+    so the whole operator stays a single scan."""
     lines = F.split(F.col("text"), "\n")
     toks = F.split(F.col("norm"), " ")
-    toks_clean = F.filter(toks, lambda t: t != "")
-    base = df.withColumn("norm", F.expr(NORM_EXPR)).select(
+    per_doc = df.withColumn("norm", F.expr(NORM_EXPR)).select(
         "doc_id",
         F.size(lines).cast("long").alias("n_lines"),
         F.size(F.array_distinct(lines)).cast("long").alias("n_uniq_lines"),
-        F.size(toks_clean).cast("long").alias("n_toks"),
+        F.filter(toks, lambda t: t != "").alias("toks"),
+    )
+    base = per_doc.select(
+        "doc_id",
+        "n_lines",
+        "n_uniq_lines",
+        F.size("toks").cast("long").alias("n_toks"),
         # explode_outer keeps zero-token docs as one null-tok row, so every
         # input doc surfaces in the output (with max_tok_cnt = 0)
-        F.explode_outer(toks_clean).alias("tok"),
+        F.explode_outer("toks").alias("tok"),
     )
     tok_counts = base.groupBy("doc_id", "tok").agg(
         F.count("*").alias("c"),

@@ -20,7 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from tika_wrap_spark.portability import drop_zip_finders, make_portable
+from tika_wrap_spark.portability import enter_worker, make_portable
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -1262,7 +1262,7 @@ def q_grouped_map_norm(spark, d):
     import pandas as pd  # noqa: PLC0415
 
     def znorm(pdf: "pd.DataFrame") -> "pd.DataFrame":
-        drop_zip_finders()
+        enter_worker()
         mean = pdf["value"].mean()
         std = pdf["value"].std(ddof=1)
         z = (pdf["value"] - mean) / std

@@ -18,7 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from tika_wrap_spark.operators.extract_ops import extract_spans
-from tika_wrap_spark.portability import drop_zip_finders, make_portable
+from tika_wrap_spark.portability import enter_worker, make_portable
 from tika_wrap_spark.schemas import CORPUS_SCHEMA
 
 
@@ -146,7 +146,7 @@ _USER_COUNT_SCHEMA = T.StructType(
 def _user_count_fn(key, pdf_iter, state):
     """Custom stateful operator body: running per-user event count carried
     across micro-batches in GroupState (applyInPandasWithState)."""
-    drop_zip_finders()
+    enter_worker()
     import pandas as pd  # noqa: PLC0415
 
     n_new = sum(len(pdf) for pdf in pdf_iter)
