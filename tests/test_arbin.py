@@ -9,7 +9,7 @@ import random
 
 import pytest
 
-from tika_wrap_spark.core.arbin import build_ar_text, parse_ar_text
+from tika_wrap_spark.core.arbin import build_ar, build_ar_text, parse_ar
 from tika_wrap_spark.core.errors import ExtractError
 from tika_wrap_spark.core.extract import extract_document
 from tika_wrap_spark.core.gzipbin import gzip_text, xz_text
@@ -52,19 +52,19 @@ def test_sniffs_ar():
 
 def test_roundtrip_short_names_and_padding():
     # odd-length payload exercises the "\n" even-offset pad
-    entries = [("a.txt", "odd"), ("b.txt", "even"), ("c.csv", "x,y,z\n1,2,3")]
-    assert parse_ar_text(build_ar_text(entries)) == entries
+    entries = [("a.txt", b"odd"), ("b.txt", b"even"), ("c.csv", b"x,y,z\n1,2,3")]
+    assert parse_ar(build_ar(entries)) == entries
 
 
 def test_gnu_long_name_table_roundtrip():
     entries = [
-        ("a_very_long_member_name_indeed.log", "long-name payload"),
-        ("short.txt", "short payload"),
-        ("another_extremely_long_name.dat", "second long"),
+        ("a_very_long_member_name_indeed.log", b"long-name payload"),
+        ("short.txt", b"short payload"),
+        ("another_extremely_long_name.dat", b"second long"),
     ]
-    a = build_ar_text(entries)
-    assert "//" in a[:80]  # the long-name table member is emitted first
-    assert parse_ar_text(a) == entries
+    a = build_ar(entries)
+    assert b"//" in a[:80]  # the long-name table member is emitted first
+    assert parse_ar(a) == entries
 
 
 def test_gnu_trailing_slash_and_symbol_table():
@@ -79,7 +79,7 @@ def test_gnu_trailing_slash_and_symbol_table():
         + hdr("/", 4) + "symb"
         + hdr("hello.txt/", 5) + "world" + "\n"
     )
-    assert parse_ar_text(a) == [("hello.txt", "world")]
+    assert parse_ar(a.encode()) == [("hello.txt", b"world")]
 
 
 def test_bsd_extended_name():
@@ -92,7 +92,7 @@ def test_bsd_extended_name():
         + str(len(name) + len(payload)).ljust(10) + "\x60\n"
     )
     a = "!<arch>\n" + hdr + name + payload  # 28 data bytes: even, no pad
-    assert parse_ar_text(a) == [(name, payload)]
+    assert parse_ar(a.encode()) == [(name, payload.encode())]
 
 
 @pytest.mark.parametrize(
@@ -111,7 +111,7 @@ def test_bsd_extended_name():
 def test_malformations_raise(mutate, msg):
     a = build_ar_text([("m.txt", "x" * 101), ("n.txt", "y" * 57)])
     with pytest.raises(ExtractError) as exc:
-        parse_ar_text(mutate(a))
+        parse_ar(mutate(a).encode("latin-1"))
     assert str(exc.value).startswith("ar:")
     assert msg in str(exc.value)
 
@@ -122,7 +122,7 @@ def test_bad_size_field_raises():
     pos = a.index("m.txt")
     bad = a[: pos + 48] + "5x".ljust(10) + a[pos + 58 :]
     with pytest.raises(ExtractError) as exc:
-        parse_ar_text(bad)
+        parse_ar(bad.encode("latin-1"))
     assert "bad decimal size" in str(exc.value)
 
 
@@ -132,7 +132,7 @@ def test_dangling_long_name_reference_raises():
         + "100644".ljust(8) + "2".ljust(10) + "\x60\n"
     )
     with pytest.raises(ExtractError) as exc:
-        parse_ar_text("!<arch>\n" + hdr + "xx")
+        parse_ar(("!<arch>\n" + hdr + "xx").encode())
     assert "dangling long-name reference" in str(exc.value)
 
 

@@ -10,11 +10,11 @@ from tika_wrap_spark.core.avrobin import (
     _Reader,
     _w_zigzag,
     avro_extract,
-    avro_extract_text,
     build_avro,
     build_avro_text,
 )
 from tika_wrap_spark.core.errors import ExtractError
+from tika_wrap_spark.core.extract import extract_document
 from tika_wrap_spark.core.sniff import sniff_kind
 
 FIELDS = [
@@ -99,8 +99,9 @@ def test_unsupported_schema_raises():
 
 def test_text_bridge():
     t = build_avro_text([("id", "long")], [[5], [6]])
-    text, fields = avro_extract_text(t)
-    assert fields == "id" and text == "id\n5\n6"
+    res = extract_document([{"text": t, "media_ref": ""}])
+    assert res["meta"]["avro_fields"] == "id"
+    assert [s["text"] for s in res["spans"]] == ["id\n5\n6"]
 
 
 def test_deflate_bomb_block_hits_the_shared_cap():

@@ -18,9 +18,8 @@ from tika_wrap_spark.core.cabbin import (
     build_cab,
     build_cab_text,
     parse_cab,
-    parse_cab_text,
 )
-from tika_wrap_spark.core.errors import ExtractError
+from tika_wrap_spark.core.errors import ExtractError, payload_bytes
 from tika_wrap_spark.core.sniff import sniff_kind
 
 _HAS_BSDTAR = shutil.which("bsdtar") is not None
@@ -40,8 +39,8 @@ def test_roundtrip(mszip):
 
 
 def test_text_bridge_roundtrip():
-    entries = [("docs/r.txt", "text payload \xe9\xff")]
-    assert parse_cab_text(build_cab_text(entries)) == entries
+    wire = build_cab_text([("docs/r.txt", "text payload \xe9\xff")])
+    assert parse_cab(payload_bytes(wire, "cab")) == [("docs/r.txt", b"text payload \xe9\xff")]
 
 
 def test_sniff_routes_cab():

@@ -440,7 +440,7 @@ class TestRealZip:
         import struct
 
         from tika_wrap_spark.core.errors import ExtractError as EE
-        from tika_wrap_spark.core.zipbin import build_zip_text
+        from tika_wrap_spark.core.zipbin import build_zip_text, parse_zip
 
         ok = build_zip_text([("m.log", "zip member text")], deflate=False)
         bads = [
@@ -458,7 +458,7 @@ class TestRealZip:
         bads.append(method12)
         for bad in bads:
             with pytest.raises(EE):
-                parse_container(bad)
+                parse_zip(bad.encode("latin-1"))
             if bad.startswith("PK\x03\x04"):  # else sniffs text, not zip
                 res = extract_document(_doc(bad))
                 assert not res["parse_ok"] and res["spans"] == []
@@ -466,7 +466,7 @@ class TestRealZip:
     def test_non_latin1_payload_is_error_row(self):
         res = extract_document(_doc("PK\x03\x04☃ snowman payload"))
         assert not res["parse_ok"]
-        assert "latin-1" in res["error"] or "zip" in res["error"]
+        assert res["error"] == "zip: payload is not a byte stream (non-latin-1 chars)"
 
 
 class TestPerFormatMeta:

@@ -9,7 +9,7 @@ import random
 
 import pytest
 
-from tika_wrap_spark.core.cpiobin import build_cpio_text, parse_cpio_text
+from tika_wrap_spark.core.cpiobin import build_cpio, build_cpio_text, parse_cpio
 from tika_wrap_spark.core.errors import ExtractError
 from tika_wrap_spark.core.extract import extract_document
 from tika_wrap_spark.core.sniff import KIND_CPIO, sniff_kind
@@ -37,12 +37,12 @@ def test_sniffs_cpio():
 def test_roundtrip_names_alignment_and_order():
     # name/payload lengths chosen to hit every 4-byte padding residue
     entries = [
-        ("a", "x"),
-        ("bb.txt", "yy"),
-        ("ccc/deep/path.csv", "col1,col2\n1,2"),
-        ("dddd.log", "payload of length seventeen!"),
+        ("a", b"x"),
+        ("bb.txt", b"yy"),
+        ("ccc/deep/path.csv", b"col1,col2\n1,2"),
+        ("dddd.log", b"payload of length seventeen!"),
     ]
-    assert parse_cpio_text(build_cpio_text(entries)) == entries
+    assert parse_cpio(build_cpio(entries)) == entries
 
 
 def test_non_regular_entries_skipped():
@@ -50,13 +50,13 @@ def test_non_regular_entries_skipped():
     c = build_cpio_text([("keep.txt", "kept"), ("adir", "")])
     pos = c.index("adir") - 110 - ((4 - (110 + len("keep.txt") + 1) % 4) % 4)
     # simpler: rebuild with an explicit directory-mode entry
-    from tika_wrap_spark.core.cpiobin import _S_IFREG, build_cpio  # noqa: PLC0415
+    from tika_wrap_spark.core.cpiobin import _S_IFREG  # noqa: PLC0415
 
     raw = bytearray(build_cpio([("keep.txt", b"kept"), ("adir", b"")]))
     # second entry's mode field: find its header by magic occurrences
     second = raw.index(b"070701", raw.index(b"070701") + 6)
     raw[second + 14 : second + 22] = b"%08x" % 0o040755
-    assert parse_cpio_text(bytes(raw).decode("latin-1")) == [("keep.txt", "kept")]
+    assert parse_cpio(bytes(raw)) == [("keep.txt", b"kept")]
 
 
 @pytest.mark.parametrize(
@@ -75,7 +75,7 @@ def test_non_regular_entries_skipped():
 def test_malformations_raise(mutate, msg):
     c = build_cpio_text([("m.txt", "x" * 90), ("n.txt", "y" * 41)])
     with pytest.raises(ExtractError) as exc:
-        parse_cpio_text(mutate(c))
+        parse_cpio(mutate(c).encode("latin-1"))
     assert str(exc.value).startswith("cpio:")
     assert msg in str(exc.value)
 
@@ -83,7 +83,7 @@ def test_malformations_raise(mutate, msg):
 def test_truncated_data_raises():
     c = build_cpio_text([("m.txt", "x" * 400)])
     with pytest.raises(ExtractError) as exc:
-        parse_cpio_text(c[:300])
+        parse_cpio(c[:300].encode("latin-1"))
     assert "truncated entry data" in str(exc.value)
 
 

@@ -160,3 +160,23 @@ class TestEml:
         cut = m.rsplit("--=_twc_boundary_001--", 1)[0]
         res = extract_document(_doc("eml", cut))
         assert not res["parse_ok"] and res["error"].startswith("eml:")
+
+    _MBOX_SEP = "From a@b.c Mon Jan  5 09:00:00 2026\n"
+    _UNICODE_MSG = (
+        "From: a@b.c\nSubject: hi\nContent-Type: text/plain; charset=utf-8\n"
+        "%s\nprice 5€ today\n"
+    )
+
+    @pytest.mark.parametrize("sep", ["", _MBOX_SEP], ids=["eml", "mbox"])
+    def test_unicode_text_part_stays_as_is(self, sep):
+        # a declared charset only decodes bytes-as-text; real unicode (a
+        # char above U+00FF) is already decoded, in a message or an mbox
+        res = extract_document(_doc("eml", sep + self._UNICODE_MSG % ""))
+        assert res["parse_ok"], res["error"]
+        assert [s["text"] for s in res["spans"]] == ["price 5€ today\n"]
+
+    @pytest.mark.parametrize("sep", ["", _MBOX_SEP], ids=["eml", "mbox"])
+    def test_unicode_quoted_printable_body_is_an_eml_row(self, sep):
+        qp = self._UNICODE_MSG % "Content-Transfer-Encoding: quoted-printable\n"
+        res = extract_document(_doc("eml", sep + qp))
+        assert res["error"] == "eml: payload is not a byte stream (non-latin-1 chars)"

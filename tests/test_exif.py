@@ -9,7 +9,6 @@ import struct
 from tika_wrap_spark.core.exifbin import (
     build_exif_app1,
     jpeg_exif,
-    jpeg_exif_text,
     parse_exif_tiff,
 )
 from tika_wrap_spark.core.extract import extract_document
@@ -100,6 +99,10 @@ class TestExif:
         assert res["meta"]["media1_exif_orientation"] == ""
 
     def test_text_wrapper(self):
-        tags = jpeg_exif_text(_full_exif_jpeg().decode("latin-1"))
-        assert tags["orientation"] == "6"
-        assert jpeg_exif_text("日本語") == {}
+        jpeg = _full_exif_jpeg().decode("latin-1")
+        res = extract_document([{"text": jpeg, "media_ref": ""}])
+        assert res["meta"]["media1_exif_orientation"] == "6"
+        # not a byte stream: the media span stays, without dims or exif
+        res = extract_document([{"text": jpeg[:40] + "日本語" + jpeg[40:], "media_ref": ""}])
+        assert res["parse_ok"] and res["meta"]["n_media"] == "1"
+        assert res["meta"]["media1_w"] == res["meta"]["media1_exif_orientation"] == ""

@@ -7,8 +7,10 @@
   generated by the same ``extract_document``.
 * Every container and wrapper kind, reached 8 gzip layers deep, must
   report the depth cap (pdf parses first and reports its own error).
-* Truncated and bit-flipped payloads of every dispatched kind must never
-  escape a parser as an ``internal:`` error.
+* Truncated, bit-flipped and non-byte-stream payloads of every dispatched
+  kind must fail in their format's error class, never as ``internal:`` or
+  ``other``; a binary payload that is not a byte stream fails with the one
+  message of ``errors.payload_bytes``.
 """
 
 import hashlib
@@ -17,6 +19,7 @@ import random
 
 import pytest
 
+from tika_wrap_spark.core.container import MAGIC as TWC1_MAGIC
 from tika_wrap_spark.core.extract import (
     _ARCHIVE_PARSERS,
     _HANDLERS,
@@ -24,8 +27,10 @@ from tika_wrap_spark.core.extract import (
     extract_document,
 )
 from tika_wrap_spark.core.gzipbin import gzip_text
+from tika_wrap_spark.core.pdfbin import is_real_pdf_text
 from tika_wrap_spark.core.sniff import sniff_kind
 from tika_wrap_spark.corpus import generate_corpus
+from tika_wrap_spark.formats import error_classes
 
 # md5 over json.dumps([spans, parse_ok, error, list(meta.items())]) of
 # every document of generate_corpus(2000, seed=42), in corpus order
@@ -46,6 +51,36 @@ DEPTH_CAP_ERRORS = {
 }
 
 DISPATCH_KINDS = sorted({*_ARCHIVE_PARSERS, *_WRAPPER_DECODERS, *_HANDLERS})
+
+# kinds whose handler reads bytes: a payload that is not a byte stream
+# fails with this message (a TWC1 container and a synthetic pdf are text;
+# a media payload keeps its span without dims)
+_BYTES_KINDS = {
+    *_ARCHIVE_PARSERS,
+    *_WRAPPER_DECODERS,
+    *"pdf ole font sqlite midi dbf avro parquet plist tnef".split(),
+}
+_NOT_BYTES = "%s: payload is not a byte stream (non-latin-1 chars)"
+
+
+def _reads_bytes(kind: str, text: str) -> bool:
+    if kind == "zip":
+        return not text.startswith(TWC1_MAGIC)
+    if kind == "pdf":
+        return is_real_pdf_text(text)
+    return kind in _BYTES_KINDS
+
+
+def _error_class(error: str) -> str:
+    """``queries_training._error_class_col`` for one failed row."""
+    if error.startswith("timeout:"):
+        return "timeout"
+    if "inflated payload exceeds" in error or "exceeds cap" in error:
+        return "bomb"
+    for cls, prefixes, needles in error_classes():
+        if error.startswith(tuple(prefixes)) or any(n in error for n in needles):
+            return cls
+    return "internal" if error.startswith("internal:") else "other"
 
 
 @pytest.fixture(scope="module")
@@ -96,8 +131,9 @@ def test_depth_cap_order(samples, kind):
 
 @pytest.mark.parametrize("kind", DISPATCH_KINDS)
 def test_structural_robustness(samples, kind):
-    """Truncations at 1/4, 1/2, 3/4 and 8 seeded single-bit flips of up to
-    3 corpus payloads per kind: bad input is a row, never ``internal:``."""
+    """Truncations at 1/4, 1/2, 3/4, 8 seeded single-bit flips and a U+20AC
+    at the midpoint of up to 3 corpus payloads per kind: bad input is a row
+    in a format's error class, never ``internal`` or ``other``."""
     assert samples.get(kind), "no corpus sample sniffs as %s" % kind
     escaped = []
     for doc_id, text, media_ref in samples[kind]:
@@ -108,8 +144,12 @@ def test_structural_robustness(samples, kind):
             pos, bit = rng.randrange(n), rng.randrange(8)
             flipped = chr(ord(text[pos]) ^ (1 << bit))
             variants.append(text[:pos] + flipped + text[pos + 1 :])
+        variants.append(text[: n // 2] + "\u20ac" + text[n // 2 + 1 :])
         for v, payload in enumerate(variants):
             res = extract_document([{"text": payload, "media_ref": media_ref}])
-            if res["error"].startswith("internal:"):
-                escaped.append((doc_id, v, res["error"]))
+            err = res["error"]
+            if not res["parse_ok"] and _error_class(err) in ("internal", "other"):
+                escaped.append((doc_id, v, err))
+        if _reads_bytes(kind, text):  # err is the last variant's: U+20AC
+            assert err == _NOT_BYTES % kind, (doc_id, err)
     assert escaped == []

@@ -183,23 +183,22 @@ def _leading_strings(expr: ast.expr) -> list[str]:
 
 def _core_error_prefixes() -> set[str]:
     """Every 'name:' prefix an ExtractError in core/ is raised with
-    (multi-line calls included: the source is walked as a tree)."""
+    (multi-line calls included: the source is walked as a tree). The one
+    '%s:' prefix is ``errors.payload_bytes``, whose prefix is the sniff
+    kind of a binary payload."""
     found: set[str] = set()
-    bridged: set[str] = set()  # gzipbin._text_bridge(fn, "name") -> "%s: ..."
     for path in sorted((PKG / "core").glob("*.py")):
         for node in ast.walk(ast.parse(path.read_text())):
             if not isinstance(node, ast.Call):
                 continue
             fn = getattr(node.func, "id", getattr(node.func, "attr", ""))
-            if fn == "_text_bridge":
-                bridged.add(node.args[1].value)
             if fn == "ExtractError" and node.args:
                 for text in _leading_strings(node.args[0]):
                     m = re.match(r"([A-Za-z0-9_%]+): ", text)
                     if m:
                         found.add(m.group(1))
-    assert "%s" in found and bridged
-    return (found - {"%s"}) | bridged
+    assert "%s" in found
+    return found - {"%s"}
 
 
 def test_core_error_prefixes_equal_the_table():

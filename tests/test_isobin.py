@@ -18,13 +18,12 @@ import tempfile
 
 import pytest
 
-from tika_wrap_spark.core.errors import ExtractError
+from tika_wrap_spark.core.errors import ExtractError, payload_bytes
 from tika_wrap_spark.core.isobin import (
     SECTOR,
     build_iso,
     build_iso_text,
     parse_iso,
-    parse_iso_text,
 )
 from tika_wrap_spark.core.sniff import sniff_kind
 
@@ -44,8 +43,8 @@ def test_roundtrip():
 
 
 def test_text_bridge_roundtrip():
-    entries = [("docs/r.txt", "text payload \xe9\xff")]
-    assert parse_iso_text(build_iso_text(entries)) == entries
+    wire = build_iso_text([("docs/r.txt", "text payload \xe9\xff")])
+    assert parse_iso(payload_bytes(wire, "iso")) == [("docs/r.txt", b"text payload \xe9\xff")]
 
 
 def test_sniff_routes_iso():

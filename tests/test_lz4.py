@@ -22,7 +22,6 @@ from tika_wrap_spark.core.lz4bin import (
     lz4_bytes,
     lz4_text,
     unlz4,
-    unlz4_text,
     xxh32,
 )
 from tika_wrap_spark.core.sniff import KIND_LZ4, sniff_kind
@@ -136,4 +135,4 @@ def test_corrupt_frame_becomes_error_row():
     r = extract_document([{"kind": "text", "text": bad, "media_ref": "", "offset": 0}])
     assert not r["parse_ok"] and r["error"].startswith("lz4:")
     with pytest.raises(ExtractError):
-        unlz4_text(bad)
+        unlz4(bad.encode("latin-1"))

@@ -15,13 +15,12 @@ import subprocess
 
 import pytest
 
-from tika_wrap_spark.core.errors import ExtractError
+from tika_wrap_spark.core.errors import ExtractError, payload_bytes
 from tika_wrap_spark.core.gzipbin import (
     MAX_INFLATED,
     lzma_bytes,
     lzma_text,
     unlzma,
-    unlzma_text,
 )
 from tika_wrap_spark.core.sniff import sniff_kind
 
@@ -35,7 +34,7 @@ def test_roundtrip_basic():
 
 def test_text_bridge_roundtrip():
     body = "line one\nline two\n" * 40
-    assert unlzma_text(lzma_text(body)) == body
+    assert unlzma(payload_bytes(lzma_text(body), "lzma")).decode("latin-1") == body
 
 
 def test_header_shape():

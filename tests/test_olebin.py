@@ -21,8 +21,6 @@ from tika_wrap_spark.core.olebin import (
     build_ppt,
     build_xls,
     doc_text,
-    ole_extract,
-    ole_extract_text,
     parse_cfb,
     xls_text,
     _rk_value,
@@ -80,24 +78,24 @@ class TestCfb:
 class TestDoc:
     def test_ascii_roundtrip(self):
         text = "Hello legacy Word.\nSecond paragraph.\nThird line."
-        kind, out = ole_extract(build_doc(text))
+        kind, out, _meta = ole_extract_full(build_doc(text))
         assert (kind, out) == ("doc", text)
 
     def test_cp1252_compressed_pieces(self):
         text = "café résumé señor façade"
-        kind, out = ole_extract(build_doc(text))
+        kind, out, _meta = ole_extract_full(build_doc(text))
         assert out == text
 
     def test_utf16_pieces(self):
         text = "Unicode 日本語 документ Ωμέγα.\nSecond para."
-        kind, out = ole_extract(build_doc(text))
+        kind, out, _meta = ole_extract_full(build_doc(text))
         assert out == text
 
     def test_long_doc_uses_fat_stream(self):
         text = "\n".join("paragraph %d with some body text" % i for i in range(400))
         doc = build_doc(text)
         assert len(doc) > 8192
-        assert ole_extract(doc)[1] == text
+        assert ole_extract_full(doc)[1] == text
 
     def test_control_char_normalization(self):
         # cell mark 0x07 -> tab, VT/FF -> newline, field chars dropped
@@ -119,11 +117,11 @@ class TestDoc:
 class TestXls:
     def test_mixed_cells_roundtrip(self):
         xls = build_xls("Metrics", [["name", "count"], ["alpha", 5], ["beta", 2.5]])
-        kind, out = ole_extract(xls)
+        kind, out, _meta = ole_extract_full(xls)
         assert (kind, out) == ("xls", "Metrics\nname\tcount\nalpha\t5\nbeta\t2.5")
 
     def test_unicode_sst(self):
-        out = ole_extract(build_xls("S", [["日本語", "текст"]]))[1]
+        out = ole_extract_full(build_xls("S", [["日本語", "текст"]]))[1]
         assert out == "S\n日本語\tтекст"
 
     def test_rk_values(self):
@@ -161,17 +159,17 @@ class TestXls:
 class TestPpt:
     def test_multi_slide_roundtrip(self):
         slides = [["Roadmap 2026", "Ship & iterate"], ["Second slide bullet"]]
-        kind, text = ole_extract(build_ppt(slides))
+        kind, text, _meta = ole_extract_full(build_ppt(slides))
         assert kind == "ppt"
         lines = text.split("\n")
         assert lines == ["Roadmap 2026", "Ship & iterate", "Second slide bullet"]
 
     def test_textchars_atom_unicode(self):
-        kind, text = ole_extract(build_ppt([["日本語スライド", "ascii line"]]))
+        kind, text, _meta = ole_extract_full(build_ppt([["日本語スライド", "ascii line"]]))
         assert kind == "ppt" and "日本語スライド" in text and "ascii line" in text
 
     def test_cr_paragraphs_normalize(self):
-        _, text = ole_extract(build_ppt([["para one\npara two"]]))
+        _, text, _meta = ole_extract_full(build_ppt([["para one\npara two"]]))
         assert "para one\npara two" in text
 
     def test_truncated_record_raises(self):
@@ -183,18 +181,18 @@ class TestPpt:
         assert idx > 0
         struct.pack_into("<I", data, idx + 4, 0x0FFFFFFF)
         with pytest.raises(ExtractError):
-            ole_extract(bytes(data))
+            ole_extract_full(bytes(data))
 
     def test_deep_nesting_guarded(self):
         body = struct.pack("<HHI", 0, 0x0FA8, 4) + b"deep"
         for _ in range(20):
             body = struct.pack("<HHI", 0x000F, 0x03E8, len(body)) + body
         with pytest.raises(ExtractError):
-            ole_extract(build_cfb([("PowerPoint Document", body)]))
+            ole_extract_full(build_cfb([("PowerPoint Document", body)]))
 
     def test_missing_stream_unrecognized(self):
         with pytest.raises(ExtractError):
-            ole_extract(build_cfb([("Current User", b"\x00" * 8)]))
+            ole_extract_full(build_cfb([("Current User", b"\x00" * 8)]))
 
     def test_ppt_through_extraction_policy(self):
         wire = build_ppt([["Quarterly numbers", "All hands"]]).decode("latin-1")
@@ -331,9 +329,8 @@ class TestExtractIntegration:
         assert not res["parse_ok"] and res["error"].startswith("ole:")
 
     def test_unrecognized_cfb_errors(self):
-        wire = build_cfb([("Mystery", b"no office here")]).decode("latin-1")
         with pytest.raises(ExtractError):
-            ole_extract_text(wire)
+            ole_extract_full(build_cfb([("Mystery", b"no office here")]))
 
     def test_magic_constant_matches(self):
         from tika_wrap_spark.core.sniff import OLE_MAGIC_TEXT

@@ -9,11 +9,11 @@ from __future__ import annotations
 import pytest
 
 from tika_wrap_spark.core.errors import ExtractError
+from tika_wrap_spark.core.extract import extract_document
 from tika_wrap_spark.core.parquetbin import (
     build_parquet,
     build_parquet_text,
     parquet_extract,
-    parquet_extract_text,
 )
 from tika_wrap_spark.core.sniff import sniff_kind
 
@@ -127,8 +127,9 @@ def test_nested_schema_rejected():
 
 def test_text_bridge():
     t = build_parquet_text(["id"], [[5], [6]], ["long"])
-    text, cols = parquet_extract_text(t)
-    assert cols == "id" and text == "id\n5\n6"
+    res = extract_document([{"text": t, "media_ref": ""}])
+    assert res["meta"]["parquet_columns"] == "id"
+    assert [s["text"] for s in res["spans"]] == ["id\n5\n6"]
 
 
 @pytest.mark.parametrize(
@@ -170,14 +171,13 @@ _FOOTER_FLIPS = {
 
 @pytest.mark.parametrize("pos,bit", _FOOTER_FLIPS.values(), ids=list(_FOOTER_FLIPS))
 def test_corpus_bitflip_in_footer_is_a_row(pos, bit):
-    from tika_wrap_spark.core.extract import extract_document
     from tika_wrap_spark.corpus import gen_doc
 
     (span,) = gen_doc(390, 42)["spans"]
     text = span["text"]
     flipped = text[:pos] + chr(ord(text[pos]) ^ (1 << bit)) + text[pos + 1 :]
     with pytest.raises(ExtractError, match="parquet: "):
-        parquet_extract_text(flipped)
+        parquet_extract(flipped.encode("latin-1"))
     assert extract_document([{"text": flipped, "media_ref": ""}])["error"].startswith(
         "parquet: "
     )

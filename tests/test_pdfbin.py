@@ -24,8 +24,7 @@ from tika_wrap_spark.core.pdfbin import (
     build_pdf,
     build_pdf_text,
     is_real_pdf_text,
-    parse_real_pdf_pages,
-    parse_real_pdf_pages_text,
+    parse_real_pdf,
 )
 
 PAGES = [
@@ -53,7 +52,7 @@ PAGES = [
 def test_builder_roundtrip(kw):
     data = build_pdf(PAGES, **kw)
     assert data.startswith(b"%PDF-")
-    got = pages_to_texts(parse_real_pdf_pages(data))
+    got = pages_to_texts(parse_real_pdf(data)[0])
     assert got == pages_to_texts(PAGES)
 
 
@@ -61,7 +60,7 @@ def test_layout_reorder_shuffled_appearance():
     # runs emitted bottom-up and right-to-left must come back reading-order
     shuffled = [[(200.0, 100.0, "dddd"), (72.0, 100.0, "cccc"),
                  (150.0, 400.0, "bbbb"), (72.0, 400.0, "aaaa")]]
-    got = pages_to_texts(parse_real_pdf_pages(build_pdf(shuffled)))
+    got = pages_to_texts(parse_real_pdf(build_pdf(shuffled))[0])
     # same y -> one assembled line, x ascending; higher y first
     assert got == ["aaaabbbb\nccccdddd"]
 
@@ -83,7 +82,7 @@ def test_incremental_update_prev_chain():
         b"trailer\n<< /Size 6 /Root 1 0 R /Prev %d >>\nstartxref\n%d\n%%%%EOF\n"
         % (off5, prev_xref, xref2)
     )
-    assert pages_to_texts(parse_real_pdf_pages(bytes(upd))) == ["updated text"]
+    assert pages_to_texts(parse_real_pdf(bytes(upd))[0]) == ["updated text"]
 
 
 def _classic_doc(objs: dict[int, bytes]) -> bytes:
@@ -119,7 +118,7 @@ def test_differences_encoding():
         }
     )
     # A->bullet, B->endash, a->Euro; b and the octal-escaped @ pass through
-    assert pages_to_texts(parse_real_pdf_pages(doc)) == ["•– €b @"]
+    assert pages_to_texts(parse_real_pdf(doc)[0]) == ["•– €b @"]
 
 
 def test_inherited_resources_and_hex_strings():
@@ -135,7 +134,7 @@ def test_inherited_resources_and_hex_strings():
             5: b"<< /Length %d >>\nstream\n%s\nendstream" % (len(content), content),
         }
     )
-    assert pages_to_texts(parse_real_pdf_pages(doc)) == ["Hello"]
+    assert pages_to_texts(parse_real_pdf(doc)[0]) == ["Hello"]
 
 
 def test_objstm_and_xref_stream():
@@ -181,7 +180,7 @@ def test_objstm_and_xref_stream():
         b" /Length %d >>\nstream\n%s\nendstream\nendobj\nstartxref\n%d\n%%%%EOF\n"
         % (len(comp2), comp2, xref_off)
     )
-    assert pages_to_texts(parse_real_pdf_pages(doc_a)) == ["from objstm"]
+    assert pages_to_texts(parse_real_pdf(doc_a)[0]) == ["from objstm"]
 
     # variant B: PNG Up predictor (12) on the xref stream
     rowlen = 7
@@ -200,7 +199,7 @@ def test_objstm_and_xref_stream():
         b"\nstream\n%s\nendstream\nendobj\nstartxref\n%d\n%%%%EOF\n"
         % (len(comp3), comp3, xref_off)
     )
-    assert pages_to_texts(parse_real_pdf_pages(doc_b)) == ["from objstm"]
+    assert pages_to_texts(parse_real_pdf(doc_b)[0]) == ["from objstm"]
 
 
 def test_asciihex_filter_and_indirect_length():
@@ -216,7 +215,7 @@ def test_asciihex_filter_and_indirect_length():
             6: b"%d" % len(hx),
         }
     )
-    assert pages_to_texts(parse_real_pdf_pages(doc)) == ["hex filtered"]
+    assert pages_to_texts(parse_real_pdf(doc)[0]) == ["hex filtered"]
 
 
 MALFORMED = [
@@ -233,7 +232,7 @@ MALFORMED = [
 @pytest.mark.parametrize("data,frag", MALFORMED, ids=[f[:18] for _, f in MALFORMED])
 def test_malformed_raises_extract_error(data, frag):
     with pytest.raises(ExtractError) as ei:
-        parse_real_pdf_pages(data)
+        parse_real_pdf(data)
     assert frag in str(ei.value)
 
 
@@ -253,7 +252,7 @@ def test_cyclic_page_tree_raises():
         }
     )
     with pytest.raises(ExtractError, match="cyclic page tree"):
-        parse_real_pdf_pages(doc)
+        parse_real_pdf(doc)
 
 
 def test_flate_bomb_capped():
@@ -269,7 +268,7 @@ def test_flate_bomb_capped():
         }
     )
     with pytest.raises(ExtractError, match="exceeds cap"):
-        parse_real_pdf_pages(doc)
+        parse_real_pdf(doc)
 
 
 def test_routing_discriminator():
@@ -299,7 +298,7 @@ def test_fuzz_never_raises_foreign(junk):
     other exception — the parse_ok=false contract depends on it."""
     data = b"%PDF-1.4\n" + junk
     try:
-        parse_real_pdf_pages(data)
+        parse_real_pdf(data)
     except ExtractError:
         pass
 
@@ -347,7 +346,7 @@ def test_fuzz_builder_roundtrip(pages, flate, xref_stream):
             rows.append((x, y, t.encode("cp1252", "replace").decode("cp1252")))
         clean.append(rows)
     data = build_pdf(clean, flate=flate, xref_stream=xref_stream)
-    got = pages_to_texts(parse_real_pdf_pages(data))
+    got = pages_to_texts(parse_real_pdf(data)[0])
     assert got == pages_to_texts(clean)
 
 
@@ -381,7 +380,7 @@ def test_cid_builder_roundtrip(kw):
     reconstruct the exact unicode text; the no-ToUnicode variant rides the
     raw-codepoint (cid==unicode) fallback."""
     data = build_pdf(CID_PAGES, **kw)
-    got = pages_to_texts(parse_real_pdf_pages(data))
+    got = pages_to_texts(parse_real_pdf(data)[0])
     assert got == pages_to_texts(CID_PAGES)
 
 
@@ -506,7 +505,7 @@ def test_cid_malformed_tounicode_falls_back_not_raises():
     bad = data[:j] + b"\x00\x00\x00\x00" + data[j + 4 :]
     # the ToUnicode is the LAST FlateDecode object; content streams come
     # earlier, so pages still parse
-    pages = parse_real_pdf_pages(bad)
+    pages = parse_real_pdf(bad)[0]
     assert len(pages) == len(CID_PAGES)
     assert all(isinstance(t, str) for p in pages for _x, _y, t in p)
 
@@ -537,8 +536,8 @@ def test_encrypted_roundtrip(enc, kw):
     the identical runs as their plaintext twins (per-object keys, stream
     + string decryption through every serialization variant)."""
     pages = CID_PAGES if kw.get("cid") else PAGES
-    got = parse_real_pdf_pages(build_pdf(pages, encrypt=enc, **kw))
-    assert got == parse_real_pdf_pages(build_pdf(pages, **kw))
+    got = parse_real_pdf(build_pdf(pages, encrypt=enc, **kw))[0]
+    assert got == parse_real_pdf(build_pdf(pages, **kw))[0]
 
 
 def test_encrypted_ciphertext_is_opaque():
@@ -553,7 +552,7 @@ def test_encrypted_ciphertext_is_opaque():
 def test_encrypted_password_required_raises():
     data = build_pdf(PAGES, encrypt="rc4-128", encrypt_user_pw=b"secret")
     with pytest.raises(ExtractError, match=r"pdf: encrypted \(password required\)"):
-        parse_real_pdf_pages(data)
+        parse_real_pdf(data)
 
 
 def test_encrypted_unknown_v_raises():
@@ -563,9 +562,9 @@ def test_encrypted_unknown_v_raises():
     and also raises.)"""
     data = build_pdf(PAGES, encrypt="rc4-128")
     with pytest.raises(ExtractError, match="pdf: encrypted .unsupported"):
-        parse_real_pdf_pages(data.replace(b"/V 2", b"/V 7"))
+        parse_real_pdf(data.replace(b"/V 2", b"/V 7"))
     with pytest.raises(ExtractError, match="pdf: encrypted .unsupported"):
-        parse_real_pdf_pages(data.replace(b"/V 2", b"/V 4"))  # R3, no /CF
+        parse_real_pdf(data.replace(b"/V 2", b"/V 4"))  # R3, no /CF
 
 
 def test_encrypted_through_extraction_policy():
@@ -595,11 +594,11 @@ def test_encrypted_through_extraction_policy():
 def test_filter_variants_roundtrip(cf):
     """Content streams through each additional filter (and the
     [/ASCII85Decode /FlateDecode] chain) parse identically to flate."""
-    ref = parse_real_pdf_pages(build_pdf(PAGES))
-    assert parse_real_pdf_pages(build_pdf(PAGES, content_filter=cf)) == ref
+    ref = parse_real_pdf(build_pdf(PAGES))[0]
+    assert parse_real_pdf(build_pdf(PAGES, content_filter=cf))[0] == ref
     # filters compose with encryption (decrypt first, then unfilter)
     assert (
-        parse_real_pdf_pages(build_pdf(PAGES, content_filter=cf, encrypt="rc4-40"))
+        parse_real_pdf(build_pdf(PAGES, content_filter=cf, encrypt="rc4-40"))[0]
         == ref
     )
 
@@ -737,7 +736,7 @@ def test_stmf_identity_selector(enc):
     corner of /V 4-5 (spec default for both selectors is Identity)."""
     data = build_pdf(PAGES, encrypt=enc, encrypt_stmf_identity=True)
     assert b"/StmF /Identity" in data
-    assert parse_real_pdf_pages(data) == parse_real_pdf_pages(build_pdf(PAGES))
+    assert parse_real_pdf(data)[0] == parse_real_pdf(build_pdf(PAGES))[0]
 
 
 def test_unknown_named_crypt_filter_raises():
@@ -745,7 +744,7 @@ def test_unknown_named_crypt_filter_raises():
     # same-length patch: /StmF /StdCF -> /StmF /Bogus (5 chars -> pad)
     bad = data.replace(b"/StmF /StdCF", b"/StmF /Bogul")
     with pytest.raises(ExtractError, match="unsupported /StmF"):
-        parse_real_pdf_pages(bad)
+        parse_real_pdf(bad)
 
 
 # ---------------------------------------------------------------------------
@@ -768,24 +767,20 @@ _ATTS = [("notes.txt", b"attached note body\nsecond line"), ("table.csv", b"a,b\
     ids=str,
 )
 def test_embedded_files_roundtrip(kw):
-    from tika_wrap_spark.core.pdfbin import parse_real_pdf_text_full
-
-    wire = build_pdf(PAGES, attachments=_ATTS, **kw).decode("latin-1")
-    pages, _crypt, atts, _an, _ff, _ti, _toc = parse_real_pdf_text_full(wire)
-    assert pages == parse_real_pdf_pages(build_pdf(PAGES, **kw))
+    wire = build_pdf(PAGES, attachments=_ATTS, **kw)
+    pages, _crypt, atts, _an, _ff, _ti, _toc = parse_real_pdf(wire)
+    assert pages == parse_real_pdf(build_pdf(PAGES, **kw))[0]
     # name-tree keys are lexically ordered
     assert [n for n, _ in atts] == ["notes.txt", "table.csv"] or [
         n for n, _ in atts
     ] == ["table.csv", "notes.txt"]
     got = dict(atts)
-    assert got["notes.txt"] == "attached note body\nsecond line"
-    assert got["table.csv"] == "a,b\n1,2"
+    assert got["notes.txt"] == b"attached note body\nsecond line"
+    assert got["table.csv"] == b"a,b\n1,2"
 
 
 def test_no_attachments_is_empty():
-    from tika_wrap_spark.core.pdfbin import parse_real_pdf_text_full
-
-    assert parse_real_pdf_text_full(build_pdf(PAGES).decode("latin-1"))[2] == []
+    assert parse_real_pdf(build_pdf(PAGES))[2] == []
 
 
 def test_extraction_recurses_attachments():
@@ -801,8 +796,6 @@ def test_extraction_recurses_attachments():
 
 
 def test_malformed_filespec_degrades_not_raises():
-    from tika_wrap_spark.core.pdfbin import parse_real_pdf_text_full
-
     data = build_pdf(PAGES, attachments=_ATTS)
     # corrupt one embedded stream's flate payload: that attachment drops,
     # the other survives, the pages still extract
@@ -810,7 +803,7 @@ def test_malformed_filespec_degrades_not_raises():
     start = data.find(b"stream\n", idx) + 7
     bad = bytearray(data)
     bad[start : start + 4] = b"\x00\x00\x00\x00"
-    pages, _c, atts, _an, _ff, _ti, _toc = parse_real_pdf_text_full(bytes(bad).decode("latin-1"))
+    pages, _c, atts, _an, _ff, _ti, _toc = parse_real_pdf(bytes(bad))
     assert pages and len(atts) == 1
 
 
@@ -832,11 +825,9 @@ _EXTRAS = dict(
     ids=str,
 )
 def test_annots_fields_xmp_roundtrip(kw):
-    from tika_wrap_spark.core.pdfbin import parse_real_pdf_text_full
-
-    wire = build_pdf(PAGES, **_EXTRAS, **kw).decode("latin-1")
-    pages, _c, _atts, annots, fields, title, toc = parse_real_pdf_text_full(wire)
-    assert pages == parse_real_pdf_pages(build_pdf(PAGES, **kw))
+    wire = build_pdf(PAGES, **_EXTRAS, **kw)
+    pages, _c, _atts, annots, fields, title, toc = parse_real_pdf(wire)
+    assert pages == parse_real_pdf(build_pdf(PAGES, **kw))[0]
     assert annots == ["margin note one", "second note"]
     assert fields == [("author", "Ana"), ("status", "approved")]
     assert title == "Quarterly <Report> & Summary"  # entity roundtrip
@@ -844,13 +835,9 @@ def test_annots_fields_xmp_roundtrip(kw):
 
 
 def test_annotations_are_page_ordered():
-    from tika_wrap_spark.core.pdfbin import parse_real_pdf_text_full
-
     two = [[(72.0, 700.0, "p1")], [(72.0, 700.0, "p2")]]
-    wire = build_pdf(
-        two, annotations=[(1, "on page two"), (0, "on page one")]
-    ).decode("latin-1")
-    assert parse_real_pdf_text_full(wire)[3] == ["on page one", "on page two"]
+    wire = build_pdf(two, annotations=[(1, "on page two"), (0, "on page one")])
+    assert parse_real_pdf(wire)[3] == ["on page one", "on page two"]
 
 
 def test_extras_through_extraction_policy():
@@ -912,7 +899,7 @@ def test_inline_image_data_skipped_wholesale():
     """The raw image data carries '(', '<' and 'BT' look-alike bytes; the
     tokenizer must jump past EI, never parse them — text before AND after
     the image survives, and none of the image bytes leak into runs."""
-    from tika_wrap_spark.core.pdfbin import build_pdf, parse_real_pdf_text_full
+    from tika_wrap_spark.core.pdfbin import build_pdf
 
     pages = [
         [(72.0, 700.0, "before the image"), (72.0, 680.0, "after the image")],
@@ -925,8 +912,8 @@ def test_inline_image_data_skipped_wholesale():
         {"encrypt": "rc4-128"},
         {"xref_stream": True, "tj_arrays": True},
     ):
-        pdf = build_pdf(pages, inline_image=True, **kw).decode("latin-1")
-        parsed = parse_real_pdf_text_full(pdf)[0]
+        pdf = build_pdf(pages, inline_image=True, **kw)
+        parsed = parse_real_pdf(pdf)[0]
         texts = [[t for _x, _y, t in pg] for pg in parsed]
         assert texts == [
             ["before the image", "after the image"],
@@ -942,14 +929,14 @@ def test_inline_image_missing_ei_drops_tail_not_document():
     to stream end — the page's earlier text and OTHER pages survive."""
     import re
 
-    from tika_wrap_spark.core.pdfbin import build_pdf, parse_real_pdf_text_full
+    from tika_wrap_spark.core.pdfbin import build_pdf
 
     pages = [[(72.0, 700.0, "kept text")], [(72.0, 700.0, "other page")]]
     pdf = build_pdf(pages, inline_image=True, flate=False)
     # same-length replacement: xref offsets must stay valid
     cut = re.sub(rb" EI\nQ", b"\x01\x02\x03\x04\x05", pdf)
     assert cut != pdf
-    parsed = parse_real_pdf_text_full(cut.decode("latin-1"))[0]
+    parsed = parse_real_pdf(cut)[0]
     texts = [[t for _x, _y, t in pg] for pg in parsed]
     assert texts[0] == ["kept text"]
     assert texts[1] == ["other page"]
@@ -1056,7 +1043,7 @@ def test_lzw_bomb_hits_the_cap_in_the_bomb_class(spark):
         }
     )
     with pytest.raises(ExtractError, match="pdf: inflated stream exceeds cap") as exc:
-        parse_real_pdf_pages(doc)
+        parse_real_pdf(doc)
     df = spark.createDataFrame([(False, str(exc.value))], "parse_ok boolean, error string")
     assert df.select(_error_class_col().alias("cls")).first()["cls"] == "bomb"
 

@@ -110,24 +110,6 @@ def test_jvm_sniffer_matches_python_sniffer(spark):
     assert mismatches == [], mismatches[:5]
 
 
-def test_many_key_read_is_a_broadcast_semi_join(spark, tmp_path, monkeypatch):
-    """Above ``_READ_ISIN_MAX_KEYS`` committed parts, read_extracted keeps
-    the committed rows with a broadcast left-semi join on the small key
-    side, so the store scan is never shuffled."""
-    from tika_wrap_spark.corpus import generate_corpus
-    from tika_wrap_spark.data import corpus_to_df
-    from tika_wrap_spark import pipeline as pl
-
-    out = str(tmp_path / "store")
-    pl.run_extraction(spark, corpus_to_df(spark, generate_corpus(20, seed=3)), out, parts=8)
-    monkeypatch.setattr(pl, "_READ_ISIN_MAX_KEYS", 0)
-    read = pl.read_extracted(spark, out)
-    plan = plans.formatted_plan(read)
-    assert plans.has_node(plan, "BroadcastHashJoin") and "LeftSemi" in plan, plan
-    assert not plans.has_node(plan, "SortMergeJoin"), plan
-    assert read.count() == 60  # 20 + 40 adversarial
-
-
 def test_resume_todo_is_an_isin_filter(spark, tmp_path, monkeypatch):
     """run_extraction drops committed parts with an isin filter on
     part_key: no join and no Exchange ahead of the salted repartition."""
@@ -154,8 +136,8 @@ def test_resume_todo_is_an_isin_filter(spark, tmp_path, monkeypatch):
 
 
 def test_consistent_read_is_shuffle_free(spark, tmp_path_factory):
-    """read_extracted on a committed store: broadcast semi join on the tiny
-    lineage side, NO Exchange/Window anywhere — a consistent read of a
+    """read_extracted on a committed store: an isin partition filter on the
+    tiny committed-part set, NO Exchange/Window anywhere — a consistent read of a
     100 TB store must not pay a global shuffle."""
     from tika_wrap_spark.corpus import generate_corpus
     from tika_wrap_spark.data import corpus_to_df

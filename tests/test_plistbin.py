@@ -14,7 +14,7 @@ from tika_wrap_spark.core.extract import extract_document
 from tika_wrap_spark.core.plistbin import (
     build_bplist,
     parse_bplist,
-    plist_extract_text,
+    plist_extract,
 )
 from tika_wrap_spark.core.sniff import KIND_PLIST, KIND_TEXT, sniff_kind
 
@@ -81,7 +81,7 @@ def test_random_cross_validation_sweep():
 
 
 def test_flatten_lines_and_keys():
-    txt, keys = plist_extract_text(build_bplist(SAMPLE).decode("latin-1"))
+    txt, keys = plist_extract(build_bplist(SAMPLE))
     assert keys.startswith("CFBundleName,CFBundleVersion,Ratio")
     lines = txt.split("\n")
     assert "CFBundleName: Extractor" in lines

@@ -17,7 +17,6 @@ from tika_wrap_spark.core.sniff import sniff_kind
 from tika_wrap_spark.core.sqlitebin import (
     build_sqlite,
     sqlite_extract,
-    sqlite_extract_text,
 )
 
 

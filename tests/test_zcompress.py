@@ -16,7 +16,7 @@ import pytest
 
 from tika_wrap_spark.core.errors import ExtractError
 from tika_wrap_spark.core.extract import extract_document
-from tika_wrap_spark.core.gzipbin import unz, unz_text, z_bytes, z_text
+from tika_wrap_spark.core.gzipbin import unz, z_bytes, z_text
 from tika_wrap_spark.core.sniff import KIND_Z, sniff_kind
 from tika_wrap_spark.core.tarbin import build_tar_text
 
@@ -150,8 +150,10 @@ def test_extraction_corrupt_z_is_row_not_failure():
 
 
 def test_unicode_payload_refused():
-    with pytest.raises(ExtractError, match="not a byte stream"):
-        unz_text("ሴcompressed?")
+    res = extract_document(
+        [{"kind": "z", "text": "\x1f\x9dሴcompressed?", "media_ref": "", "offset": 0}]
+    )
+    assert res["error"] == "z: payload is not a byte stream (non-latin-1 chars)"
 
 
 class TestConcatenatedMembers:

@@ -26,7 +26,6 @@ from tika_wrap_spark.core.sniff import KIND_ZSTD, sniff_kind
 from tika_wrap_spark.core.tarbin import build_tar_text
 from tika_wrap_spark.core.zstdbin import (
     unzstd,
-    unzstd_text,
     xxh64,
     zstd_bytes,
     zstd_text,
@@ -166,4 +165,4 @@ def test_corrupt_becomes_error_row():
     r = extract_document([{"kind": "text", "text": bad, "media_ref": "", "offset": 0}])
     assert not r["parse_ok"] and r["error"].startswith("zstd:")
     with pytest.raises(ExtractError):
-        unzstd_text(bad)
+        unzstd(bad.encode("latin-1"))

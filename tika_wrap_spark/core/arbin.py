@@ -31,7 +31,7 @@ extracts its packaged files' text with no deb-specific code beyond the
 Malformed archives (bad global magic, bad member terminator, non-decimal
 size, truncated data, dangling long-name reference) raise
 :class:`ExtractError` ("ar:" prefix) -> ``parse_ok=false`` rows, never
-task failures. Payloads travel bytes-as-text (latin-1) like zip/tar.
+task failures. The extraction core hands it bytes (:func:`core.errors.payload_bytes`).
 """
 
 from __future__ import annotations
@@ -159,15 +159,6 @@ def _member_header(name_field: bytes, size: int) -> bytes:
         + str(size).encode().ljust(10)
         + _END
     )
-
-
-def parse_ar_text(text: str) -> list[tuple[str, str]]:
-    """Bytes-as-text bridge, identical contract to tarbin.parse_tar_text."""
-    try:
-        data = text.encode("latin-1")
-    except UnicodeEncodeError:
-        raise ExtractError("ar: payload is not a byte stream (non-latin-1 chars)")
-    return [(name, payload.decode("latin-1")) for name, payload in parse_ar(data)]
 
 
 def build_ar_text(entries: list[tuple[str, str]]) -> str:

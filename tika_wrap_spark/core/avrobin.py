@@ -31,7 +31,7 @@ Malformed files (bad magic, missing schema, sync mismatch, truncated
 varint/block, unsupported schema/codec, deflate blocks inflating past the
 shared 64 MiB cap in total) raise
 :class:`ExtractError` ("avro:" prefix) -> ``parse_ok=false`` rows, never
-task failures. Payloads travel bytes-as-text (latin-1) like zip/tar.
+task failures. The extraction core hands it bytes (:func:`core.errors.payload_bytes`).
 """
 
 from __future__ import annotations
@@ -326,14 +326,6 @@ def build_avro(
             body = c.compress(body) + c.flush()
         out += _w_zigzag(len(chunk)) + _w_zigzag(len(body)) + body + sync
     return bytes(out)
-
-
-def avro_extract_text(text: str) -> tuple[str, str]:
-    try:
-        data = text.encode("latin-1")
-    except UnicodeEncodeError:
-        raise ExtractError("avro: payload is not a byte stream (non-latin-1 chars)")
-    return avro_extract(data)
 
 
 def build_avro_text(

@@ -29,7 +29,7 @@ both list and byte-extract.
 Malformed cabinets (bad signature/counts, block/stream overruns, bad CK
 signature, checksum mismatch, over-budget inflation) raise
 :class:`ExtractError` ("cab:" prefix) -> ``parse_ok=false`` rows, never
-task failures. Payloads travel bytes-as-text (latin-1) like zip/tar.
+task failures. The extraction core hands it bytes (:func:`core.errors.payload_bytes`).
 """
 
 from __future__ import annotations
@@ -256,14 +256,6 @@ def build_cab(entries: list[tuple[str, bytes]], mszip: bool = True) -> bytes:
         "<IHH", coff_data, len(blocks), _COMP_MSZIP if mszip else _COMP_NONE
     )
     return header + folder + bytes(cffiles) + bytes(cfdata)
-
-
-def parse_cab_text(text: str) -> list[tuple[str, str]]:
-    try:
-        data = text.encode("latin-1")
-    except UnicodeEncodeError:
-        raise ExtractError("cab: payload is not a byte stream (non-latin-1 chars)")
-    return [(name, payload.decode("latin-1")) for name, payload in parse_cab(data)]
 
 
 def build_cab_text(entries: list[tuple[str, str]], mszip: bool = True) -> str:

@@ -24,13 +24,6 @@ from __future__ import annotations
 
 from tika_wrap_spark.core.errors import ExtractError
 
-# Top-level (NOT lazy) import: make_portable() registers loaded modules for
-# pickle-by-value at plan-build time — a lazy import would make the worker
-# re-import zipbin from disk with its own ExtractError class identity, so
-# the extraction core's `except ExtractError` would miss it and misfile
-# archive malformations as internal errors.
-from tika_wrap_spark.core.zipbin import parse_zip_text
-
 MAGIC = "PK\x03\x04TWC1\n"
 EOCD = "PK\x05\x06\n"
 
@@ -50,19 +43,17 @@ def build_container(entries: list[tuple[str, str]]) -> str:
 
 
 def parse_container(text: str) -> list[tuple[str, str]]:
-    """Parse ONE container level into ``[(name, payload), ...]``.
+    """Parse ONE TWC1 container level into ``[(name, payload), ...]``.
 
-    Dispatches on the archive dialect after the shared ``PK\\x03\\x04``
-    magic: the synthetic TWC1 analog parses here; a REAL zip byte stream
-    (the reference's actual smoke inputs, example/demo1.cpp:48-49) routes
-    to the binary central-directory parser in :mod:`core.zipbin`.
+    The extraction core routes a zip payload here when it starts with the
+    TWC1 ``MAGIC``; a REAL zip byte stream (the reference's actual smoke
+    inputs, example/demo1.cpp:48-49) goes to the binary central-directory
+    parser in :mod:`core.zipbin`.
 
     Nested containers come back as opaque payloads; the extraction core
     recurses via content sniffing (mirrors how a real engine walks archive
     members and re-detects each member's type).
     """
-    if text.startswith("PK\x03\x04") and not text.startswith(MAGIC):
-        return parse_zip_text(text)
     if not text.startswith(MAGIC):
         raise ExtractError("container: bad magic")
     pos = len(MAGIC)

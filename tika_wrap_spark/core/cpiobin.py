@@ -20,7 +20,7 @@ Regular-file entries (S_IFREG in mode) surface as (name, payload);
 directories/links/devices are skipped. Malformed archives (bad magic,
 non-hex field, truncated name/data, missing trailer) raise
 :class:`ExtractError` ("cpio:" prefix) -> ``parse_ok=false`` rows, never
-task failures. Payloads travel bytes-as-text (latin-1) like zip/tar/ar.
+task failures. The extraction core hands it bytes (:func:`core.errors.payload_bytes`).
 """
 
 from __future__ import annotations
@@ -118,15 +118,6 @@ def build_cpio(entries: list[tuple[str, bytes]]) -> bytes:
         emit(name, payload, _S_IFREG | 0o644, i + 1)
     emit(_TRAILER, b"", 0, 0)
     return bytes(out)
-
-
-def parse_cpio_text(text: str) -> list[tuple[str, str]]:
-    """Bytes-as-text bridge, identical contract to tarbin.parse_tar_text."""
-    try:
-        data = text.encode("latin-1")
-    except UnicodeEncodeError:
-        raise ExtractError("cpio: payload is not a byte stream (non-latin-1 chars)")
-    return [(name, payload.decode("latin-1")) for name, payload in parse_cpio(data)]
 
 
 def build_cpio_text(entries: list[tuple[str, str]]) -> str:

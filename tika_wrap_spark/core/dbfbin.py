@@ -23,8 +23,8 @@ Layout (dBase III+, the format every xBase tool writes):
   optional 0x1A EOF marker
 
 Malformed tables raise :class:`ExtractError` ('dbf:' prefix) ->
-``parse_ok=false`` rows, never task failures. Payloads travel
-bytes-as-text (latin-1), same bridge as the other binary kinds.
+``parse_ok=false`` rows, never task failures. The extraction core
+hands it bytes (:func:`core.errors.payload_bytes`).
 """
 
 from __future__ import annotations
@@ -108,14 +108,6 @@ def dbf_to_text(data: bytes) -> tuple[str, str]:
     lines = [",".join(names)]
     lines.extend(",".join(r) for r in rows)
     return "\n".join(lines), ",".join(names)
-
-
-def dbf_extract_text(text: str) -> tuple[str, str]:
-    try:
-        data = text.encode("latin-1")
-    except UnicodeEncodeError:
-        raise ExtractError("dbf: payload is not a byte stream (non-latin-1 chars)")
-    return dbf_to_text(data)
 
 
 def build_dbf(

@@ -23,7 +23,7 @@ import base64
 import quopri
 import re
 
-from tika_wrap_spark.core.errors import ExtractError
+from tika_wrap_spark.core.errors import ExtractError, payload_bytes
 
 # nested message/rfc822 parts recurse through extract's container depth
 # accounting; this guards the *intra-message* multipart nesting only
@@ -34,13 +34,8 @@ _ENC_WORD = re.compile(r"=\?([^?]+)\?([bBqQ])\?([^?]*)\?=")
 # header names whose first value is surfaced as metadata
 _META_HEADERS = ("subject", "from", "to", "date", "message-id")
 
-
-def is_eml_text(text: str) -> bool:
-    """Header-shaped head: the sniffer owns routing; this is the parser's
-    own precondition (a first line ``Name: value`` with a token name)."""
-    first = text.split("\n", 1)[0]
-    m = re.match(r"^[!-9;-~]+:", first)
-    return m is not None
+# a char above U+00FF: the text is already real unicode, not bytes-as-text
+_WIDE = re.compile("[^\x00-\xff]")
 
 
 def _decode_encoded_words(value: str) -> str:
@@ -120,7 +115,7 @@ def _decode_body(body: str, headers: dict[str, str]) -> str:
             raise ExtractError("eml: base64 decode failed: %s" % exc) from exc
         return raw.decode("latin-1")
     if enc == "quoted-printable":
-        return quopri.decodestring(body.encode("latin-1")).decode("latin-1")
+        return quopri.decodestring(payload_bytes(body, "eml")).decode("latin-1")
     return body  # 7bit / 8bit / binary pass through
 
 
@@ -176,12 +171,15 @@ def parse_eml(text: str) -> tuple[dict[str, str], list[tuple[str, str]]]:
                 fname = m.group(1)
             decoded = _decode_body(body, headers)
             # text/* parts with a declared charset decode to real unicode
-            # (Tika's behavior); attachments stay bytes-as-text latin-1
+            # (Tika's behavior); attachments stay bytes-as-text latin-1, and
+            # a part that is already real unicode stays as it is (the rule
+            # of charset.decode_charset)
             charset = params.get("charset", "").lower()
-            if ctype.startswith("text/") and charset and charset not in (
-                "latin-1",
-                "iso-8859-1",
-                "us-ascii",
+            if (
+                ctype.startswith("text/")
+                and charset
+                and charset not in ("latin-1", "iso-8859-1", "us-ascii")
+                and not _WIDE.search(decoded)
             ):
                 try:
                     decoded = decoded.encode("latin-1").decode(

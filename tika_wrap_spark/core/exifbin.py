@@ -183,14 +183,6 @@ def jpeg_exif(data: bytes) -> dict[str, str]:
     return {}
 
 
-def jpeg_exif_text(text: str) -> dict[str, str]:
-    """Bytes-as-text (latin-1) wrapper for payloads carried in span text."""
-    try:
-        return jpeg_exif(text.encode("latin-1"))
-    except (UnicodeEncodeError, ValueError):
-        return {}
-
-
 # ---------------------------------------------------------------------------
 # builder (corpus/fixtures side): a real little-endian TIFF with IFD0 +
 # Exif IFD + GPS IFD, value area packed after the directories

@@ -35,24 +35,19 @@ from __future__ import annotations
 
 from typing import Any, Callable
 
-from tika_wrap_spark.core.arbin import parse_ar_text
-from tika_wrap_spark.core.avrobin import avro_extract_text
-from tika_wrap_spark.core.cabbin import parse_cab_text
+from tika_wrap_spark.core.arbin import parse_ar
+from tika_wrap_spark.core.avrobin import avro_extract
+from tika_wrap_spark.core.cabbin import parse_cab
 from tika_wrap_spark.core.charset import decode_charset, decode_html_charset
+from tika_wrap_spark.core.container import MAGIC as TWC1_MAGIC
 from tika_wrap_spark.core.container import MAX_CONTAINER_DEPTH, parse_container
-from tika_wrap_spark.core.cpiobin import parse_cpio_text
-from tika_wrap_spark.core.dbfbin import dbf_extract_text
+from tika_wrap_spark.core.cpiobin import parse_cpio
+from tika_wrap_spark.core.dbfbin import dbf_to_text
 from tika_wrap_spark.core.eml import parse_eml
-from tika_wrap_spark.core.errors import ExtractError
-from tika_wrap_spark.core.exifbin import jpeg_exif_text
-from tika_wrap_spark.core.fontbin import font_meta_text
-from tika_wrap_spark.core.gzipbin import (
-    gunzip_text,
-    unbz2_text,
-    unlzma_text,
-    unxz_text,
-    unz_text,
-)
+from tika_wrap_spark.core.errors import ExtractError, payload_bytes
+from tika_wrap_spark.core.exifbin import jpeg_exif
+from tika_wrap_spark.core.fontbin import parse_font_meta
+from tika_wrap_spark.core.gzipbin import gunzip, unbz2, unlzma, unxz, unz
 from tika_wrap_spark.core.html import (
     extract_html_blocks,
     extract_xml_text,
@@ -61,19 +56,19 @@ from tika_wrap_spark.core.html import (
     xps_fpage_text,
 )
 from tika_wrap_spark.core.ical import parse_ical, parse_vcard
-from tika_wrap_spark.core.isobin import parse_iso_text
-from tika_wrap_spark.core.lz4bin import unlz4_text
+from tika_wrap_spark.core.isobin import parse_iso
+from tika_wrap_spark.core.lz4bin import unlz4
 from tika_wrap_spark.core.mbox import parse_mbox
-from tika_wrap_spark.core.media import image_dims_text, png_text_meta_text
-from tika_wrap_spark.core.midibin import midi_extract_text_str
-from tika_wrap_spark.core.olebin import ole_extract_text
-from tika_wrap_spark.core.parquetbin import parquet_extract_text
+from tika_wrap_spark.core.media import image_dims, png_text_meta
+from tika_wrap_spark.core.midibin import midi_extract_text
+from tika_wrap_spark.core.olebin import ole_extract_full
+from tika_wrap_spark.core.parquetbin import parquet_extract
 from tika_wrap_spark.core.pdf import page_dims, pages_to_texts, parse_pdf_pages
-from tika_wrap_spark.core.pdfbin import is_real_pdf_text, parse_real_pdf_text_full
-from tika_wrap_spark.core.plistbin import plist_extract_text
-from tika_wrap_spark.core.rarbin import parse_rar_text
+from tika_wrap_spark.core.pdfbin import is_real_pdf_text, parse_real_pdf
+from tika_wrap_spark.core.plistbin import plist_extract
+from tika_wrap_spark.core.rarbin import parse_rar
 from tika_wrap_spark.core.rtf import rtf_to_text
-from tika_wrap_spark.core.sevenzip import parse_7z_text
+from tika_wrap_spark.core.sevenzip import parse_7z
 from tika_wrap_spark.core.sniff import (
     KIND_AR,
     KIND_AVRO,
@@ -114,11 +109,12 @@ from tika_wrap_spark.core.sniff import (
     KIND_ZSTD,
     sniff_kind,
 )
-from tika_wrap_spark.core.sqlitebin import sqlite_extract_text
-from tika_wrap_spark.core.tarbin import parse_tar_text
-from tika_wrap_spark.core.tnefbin import tnef_extract
+from tika_wrap_spark.core.sqlitebin import sqlite_extract
+from tika_wrap_spark.core.tarbin import parse_tar
+from tika_wrap_spark.core.tnefbin import parse_tnef
 from tika_wrap_spark.core.warcbin import parse_warc_text
-from tika_wrap_spark.core.zstdbin import unzstd_text
+from tika_wrap_spark.core.zipbin import parse_zip
+from tika_wrap_spark.core.zstdbin import unzstd
 
 # container member marking an OOXML-analog archive (real OOXML is zip with
 # exactly this member; QMimeDatabase-style container-format distinction)
@@ -242,8 +238,15 @@ class _Doc:
 
 
 # a handler routes one payload of its kind into the document:
-# handler(d, kind, text, media_ref, path, depth)
+# handler(d, kind, text, media_ref, path, depth). A binary handler turns
+# its payload into bytes once, ``payload_bytes(text, kind)``: the sniff
+# kind is the error prefix. The members it gets back as bytes are decoded
+# once, by ``_as_text``, before they re-sniff.
 Handler = Callable[[_Doc, str, str, str, tuple, int], None]
+
+
+def _as_text(entries: list[tuple[str, bytes]]) -> list[tuple[str, str]]:
+    return [(name, body.decode("latin-1")) for name, body in entries]
 
 
 def extract_document(spans: list[Span] | None) -> dict[str, Any]:
@@ -312,22 +315,26 @@ def _package_format(entries: list[tuple[str, str]]) -> str:
     return ""
 
 
-# archive kinds: payload -> [(member name, member payload), ...]
-_ARCHIVE_PARSERS: dict[str, Callable[[str], list[tuple[str, str]]]] = {
-    KIND_ZIP: parse_container,
-    KIND_TAR: parse_tar_text,
-    KIND_AR: parse_ar_text,
-    KIND_CPIO: parse_cpio_text,
-    KIND_SEVENZ: parse_7z_text,
-    KIND_RAR: parse_rar_text,
-    KIND_ISO: parse_iso_text,
-    KIND_CAB: parse_cab_text,
+# archive kinds: bytes -> [(member name, member bytes), ...]
+_ARCHIVE_PARSERS: dict[str, Callable[[bytes], list[tuple[str, bytes]]]] = {
+    KIND_ZIP: parse_zip,
+    KIND_TAR: parse_tar,
+    KIND_AR: parse_ar,
+    KIND_CPIO: parse_cpio,
+    KIND_SEVENZ: parse_7z,
+    KIND_RAR: parse_rar,
+    KIND_ISO: parse_iso,
+    KIND_CAB: parse_cab,
 }
 
 
 def _archive(d, kind, text, media_ref, path, depth):
     d.enter(depth, "")  # the member markers below pick the format
-    entries = _ARCHIVE_PARSERS[kind](text)
+    if text.startswith(TWC1_MAGIC):
+        # the synthetic zip analog (core/container.py) is a text dialect
+        entries = parse_container(text)
+    else:
+        entries = _as_text(_ARCHIVE_PARSERS[kind](payload_bytes(text, kind)))
     is_xps = any(name.endswith((".fdseq", ".fpage")) for name, _p in entries)
     if is_xps:
         # XPS/OpenXPS (ECMA-388): an OPC package like OOXML — a real .xps
@@ -362,13 +369,13 @@ def _archive(d, kind, text, media_ref, path, depth):
 # compressed-stream wrappers: decompress and re-sniff the inner stream
 # (each counts as one container level with a single unnamed member)
 _WRAPPER_DECODERS = {
-    KIND_GZIP: (gunzip_text, "gz"),
-    KIND_XZ: (unxz_text, "xz"),
-    KIND_BZ2: (unbz2_text, "bz2"),
-    KIND_Z: (unz_text, "z"),
-    KIND_LZ4: (unlz4_text, "lz4"),
-    KIND_ZSTD: (unzstd_text, "zst"),
-    KIND_LZMA: (unlzma_text, "lzma"),
+    KIND_GZIP: (gunzip, "gz"),
+    KIND_XZ: (unxz, "xz"),
+    KIND_BZ2: (unbz2, "bz2"),
+    KIND_Z: (unz, "z"),
+    KIND_LZ4: (unlz4, "lz4"),
+    KIND_ZSTD: (unzstd, "zst"),
+    KIND_LZMA: (unlzma, "lzma"),
 }
 
 
@@ -377,7 +384,8 @@ def _wrapper(d, kind, text, media_ref, path, depth):
     # inner bytes sniff as
     d.enter(depth, kind)
     decoder, tag = _WRAPPER_DECODERS[kind]
-    d.members([(tag, decoder(text))], path, depth)
+    inner = decoder(payload_bytes(text, kind))
+    d.members(_as_text([(tag, inner)]), path, depth)
 
 
 def _text(d, kind, text, media_ref, path, depth):
@@ -393,11 +401,19 @@ def _media(d, kind, text, media_ref, path, depth):
         # parse (core/media.py) — the analog of Tika's
         # tiff:ImageWidth/Length keys; JPEG members add APP1/Exif (the
         # reference's exiftool dep, README.md:19) and PNG
-        # members tEXt/iTXt Title/Author (Tika's PNGParser analog)
-        dims = image_dims_text(text)
+        # members tEXt/iTXt Title/Author (Tika's PNGParser analog). A
+        # payload that is not a byte stream keeps its span, without dims
+        try:
+            data = payload_bytes(text, kind)
+        except ExtractError:
+            data = b""
+        dims = image_dims(data)
         if dims is not None:
-            exif = jpeg_exif_text(text)
-            png = png_text_meta_text(text)
+            try:
+                exif = jpeg_exif(data)
+            except ValueError:
+                exif = {}
+            png = png_text_meta(data)
             d.meta.update(
                 media1_w=_stringify(dims[0]),
                 media1_h=_stringify(dims[1]),
@@ -433,12 +449,12 @@ def _pdf(d, kind, text, media_ref, path, depth):
     # real binary PDFs (xref/startxref present) parse natively
     # (core/pdfbin.py); the synthetic fixtures dialect has no startxref
     # and keeps its strict line parser
-    attachments: list[tuple[str, str]] = []
+    attachments: list[tuple[str, bytes]] = []
     annots: list[str] = []
     fields: list[tuple[str, str]] = []
     if is_real_pdf_text(text):
-        pages, crypt, attachments, annots, fields, xmp, toc = (
-            parse_real_pdf_text_full(text)
+        pages, crypt, attachments, annots, fields, xmp, toc = parse_real_pdf(
+            payload_bytes(text, kind)
         )
         d.first("pdf_crypt", pdf_crypt=crypt)
         d.first("pdf_title", pdf_title=xmp)
@@ -464,14 +480,14 @@ def _pdf(d, kind, text, media_ref, path, depth):
         # /EmbeddedFiles: each payload re-sniffs and recurses like an
         # archive member (Tika's embedded-document walk)
         d.enter(depth, "pdf-attach")
-        d.members(attachments, path, depth)
+        d.members(_as_text(attachments), path, depth)
 
 
 def _ole(d, kind, text, media_ref, path, depth):
     # legacy binary Office (CFB compound file, core/olebin.py; Tika's POI
     # analog). Message subject/sender share the eml meta keys (Tika maps
     # MSG and rfc822 to the same message metadata)
-    subkind, ole_text, ole_meta = ole_extract_text(text)
+    subkind, ole_text, ole_meta = ole_extract_full(payload_bytes(text, kind))
     d.first("container_format", container_format="ole-" + subkind)
     if ole_meta:
         d.first(
@@ -486,7 +502,7 @@ def _font(d, kind, text, media_ref, path, depth):
     # metadata-only payload (core/fontbin.py; Tika TrueTypeParser analog):
     # Tika likewise emits no text for fonts. The first non-empty naming
     # table wins, even when it lacks a family name
-    font_meta = font_meta_text(text)
+    font_meta = parse_font_meta(payload_bytes(text, kind))
     if font_meta and not d.font_seen:
         d.font_seen = True
         d.meta.update(
@@ -498,7 +514,7 @@ def _font(d, kind, text, media_ref, path, depth):
 def _sqlite(d, kind, text, media_ref, path, depth):
     # one text block per user table (core/sqlitebin.py; Tika
     # SQLite3Parser analog)
-    tables = sqlite_extract_text(text)
+    tables = sqlite_extract(payload_bytes(text, kind))
     d.first("sqlite_tables", sqlite_tables=",".join(name for name, _b in tables))
     for _name, block in tables:
         d.emit(KIND_TEXT, block, "")
@@ -507,7 +523,7 @@ def _sqlite(d, kind, text, media_ref, path, depth):
 def _midi(d, kind, text, media_ref, path, depth):
     # the six text-class meta events, one block per carrying track
     # (core/midibin.py; Tika MidiParser analog)
-    blocks, m_meta = midi_extract_text_str(text)
+    blocks, m_meta = midi_extract_text(payload_bytes(text, kind))
     d.first(
         "midi_tracks",
         midi_tracks=m_meta.get("midi_tracks", ""),
@@ -517,12 +533,12 @@ def _midi(d, kind, text, media_ref, path, depth):
         d.emit(KIND_TEXT, block, "")
 
 
-def _one_block(extract: Callable[[str], tuple[str, str]], meta_key: str) -> Handler:
+def _one_block(extract: Callable[[bytes], tuple[str, str]], meta_key: str) -> Handler:
     """Handler for a format that flattens to one csv-shaped text block plus
     one meta value (dbf/avro/parquet: field names; plist: top-level keys)."""
 
     def handle(d, kind, text, media_ref, path, depth):
-        block, value = extract(text)
+        block, value = extract(payload_bytes(text, kind))
         d.first(meta_key, **{meta_key: value})
         d.emit(KIND_TEXT, block, "")
 
@@ -555,11 +571,11 @@ def _tnef(d, kind, text, media_ref, path, depth):
     # winmail.dat (core/tnefbin.py; Tika TNEFParser analog): attachments
     # recurse — the winmail.dat-hides-the-real-attachment case
     d.enter(depth, KIND_TNEF)
-    _t_class, subject, body, attachments = tnef_extract(text)
+    _t_class, subject, body, attachments = parse_tnef(payload_bytes(text, kind))
     d.first("eml_subject", eml_subject=subject)
     if body:
         d.emit(KIND_TEXT, body, "")
-    d.members(attachments, path, depth)
+    d.members(_as_text(attachments), path, depth)
 
 
 def _mbox(d, kind, text, media_ref, path, depth):
@@ -599,10 +615,10 @@ _HANDLERS: dict[str, Handler] = {
     KIND_FONT: _font,
     KIND_SQLITE: _sqlite,
     KIND_MIDI: _midi,
-    KIND_DBF: _one_block(dbf_extract_text, "dbf_fields"),
-    KIND_AVRO: _one_block(avro_extract_text, "avro_fields"),
-    KIND_PARQUET: _one_block(parquet_extract_text, "parquet_columns"),
-    KIND_PLIST: _one_block(plist_extract_text, "plist_keys"),
+    KIND_DBF: _one_block(dbf_to_text, "dbf_fields"),
+    KIND_AVRO: _one_block(avro_extract, "avro_fields"),
+    KIND_PARQUET: _one_block(parquet_extract, "parquet_columns"),
+    KIND_PLIST: _one_block(plist_extract, "plist_keys"),
     KIND_RTF: _rtf,
     KIND_ICS: _calendar,
     KIND_VCF: _calendar,

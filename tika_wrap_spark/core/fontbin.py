@@ -181,15 +181,6 @@ def parse_font_meta(data: bytes) -> dict[str, str]:
     return out
 
 
-def font_meta_text(text: str) -> dict[str, str]:
-    """Bytes-as-text entry (payloads travel as latin-1 char-per-byte)."""
-    try:
-        data = text.encode("latin-1")
-    except UnicodeEncodeError as exc:
-        raise ExtractError("font: non-byte payload: %s" % exc)
-    return parse_font_meta(data)
-
-
 # ---------------------------------------------------------------- builders
 
 

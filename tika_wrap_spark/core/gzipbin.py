@@ -18,7 +18,7 @@ raises :class:`ExtractError` -> ``parse_ok=false`` rows, never task
 failures. Decompressed size is capped per stream (decompression-bomb
 guard — the zip-bomb analog for wrappers).
 
-Payloads travel as bytes-as-text (latin-1), same bridge as zip/tar.
+The extraction core hands it bytes (:func:`core.errors.payload_bytes`).
 """
 
 from __future__ import annotations
@@ -391,26 +391,6 @@ def lzma_bytes(data: bytes) -> bytes:
     small-dictionary reason as xz_bytes (256 KiB dict; members here are
     KB-sized and the decoder allocates the full recorded dictionary)."""
     return _lzma.compress(data, format=_lzma.FORMAT_ALONE, preset=0)
-
-
-def _text_bridge(fn, what: str):
-    def wrapped(text: str) -> str:
-        try:
-            data = text.encode("latin-1")
-        except UnicodeEncodeError:
-            raise ExtractError(
-                "%s: payload is not a byte stream (non-latin-1 chars)" % what
-            )
-        return fn(data).decode("latin-1")
-
-    return wrapped
-
-
-gunzip_text = _text_bridge(gunzip, "gzip")
-unxz_text = _text_bridge(unxz, "xz")
-unbz2_text = _text_bridge(unbz2, "bz2")
-unz_text = _text_bridge(unz, "z")
-unlzma_text = _text_bridge(unlzma, "lzma")
 
 
 def gzip_text(text: str) -> str:

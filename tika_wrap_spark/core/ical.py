@@ -25,10 +25,6 @@ from __future__ import annotations
 
 from tika_wrap_spark.core.errors import ExtractError
 
-# ICS openers the sniffer keys on (case-insensitive on the wire)
-ICS_OPENER = "begin:vcalendar"
-VCF_OPENER = "begin:vcard"
-
 _ICS_SIMPLE_PROPS = ("SUMMARY", "DESCRIPTION", "LOCATION", "COMMENT")
 _ICS_PERSON_PROPS = ("ORGANIZER", "ATTENDEE")
 _ICS_BLOCK_COMPONENTS = ("VEVENT", "VTODO", "VJOURNAL", "VFREEBUSY")

@@ -32,8 +32,8 @@ names only once an ``RR`` entry marks the tree, so the builder's root
 
 Malformed images (missing PVD, record/extent overruns, cycles,
 over-budget member bytes) raise :class:`ExtractError` ("iso:" prefix)
--> ``parse_ok=false`` rows, never task failures. Payloads travel
-bytes-as-text (latin-1) like zip/tar.
+-> ``parse_ok=false`` rows, never task failures. The extraction core
+hands it bytes (:func:`core.errors.payload_bytes`).
 """
 
 from __future__ import annotations
@@ -448,14 +448,6 @@ def build_iso(entries: list[tuple[str, bytes]], volume_id: str = "TWS") -> bytes
             image += payload.ljust(sectors * SECTOR, b"\x00")
     assert len(image) == total_sectors * SECTOR
     return bytes(image)
-
-
-def parse_iso_text(text: str) -> list[tuple[str, str]]:
-    try:
-        data = text.encode("latin-1")
-    except UnicodeEncodeError:
-        raise ExtractError("iso: payload is not a byte stream (non-latin-1 chars)")
-    return [(name, payload.decode("latin-1")) for name, payload in parse_iso(data)]
 
 
 def build_iso_text(entries: list[tuple[str, str]]) -> str:

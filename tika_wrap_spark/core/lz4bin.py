@@ -343,13 +343,5 @@ def lz4_bytes(data: bytes, block_size: int = 65536) -> bytes:
     return bytes(out)
 
 
-def unlz4_text(text: str) -> str:
-    try:
-        raw = text.encode("latin-1")
-    except UnicodeEncodeError:
-        raise ExtractError("lz4: non-byte payload")
-    return unlz4(raw).decode("latin-1")
-
-
 def lz4_text(text: str) -> str:
     return lz4_bytes(text.encode("latin-1")).decode("latin-1")

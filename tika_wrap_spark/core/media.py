@@ -105,14 +105,6 @@ def png_text_meta(data: bytes) -> dict[str, str]:
     return out
 
 
-def png_text_meta_text(text: str) -> dict[str, str]:
-    """Bytes-as-text bridge for :func:`png_text_meta`."""
-    try:
-        return png_text_meta(text.encode("latin-1"))
-    except UnicodeEncodeError:
-        return {}
-
-
 def jpeg_dims(data: bytes) -> tuple[int, int] | None:
     """(width, height) from the first SOF segment, walking the marker
     stream; None for non-JPEG or truncated-before-SOF bytes."""
@@ -613,14 +605,6 @@ def image_dims(data: bytes) -> tuple[int, int] | None:
     if data.startswith(RIFF_MAGIC) and data[8:12] == WEBP_FOURCC:
         return webp_dims(data)
     return None
-
-
-def image_dims_text(text: str) -> tuple[int, int] | None:
-    """Bytes-as-text bridge (latin-1), for payloads carried as strings."""
-    try:
-        return image_dims(text.encode("latin-1"))
-    except UnicodeEncodeError:
-        return None
 
 
 def _png_chunk(ctype: bytes, body: bytes) -> bytes:

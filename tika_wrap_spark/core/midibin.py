@@ -184,15 +184,6 @@ def midi_extract_text(data: bytes) -> tuple[list[str], dict[str, str]]:
     return blocks, meta
 
 
-def midi_extract_text_str(text: str) -> tuple[list[str], dict[str, str]]:
-    """Bytes-as-text (latin-1) bridge for the extraction core."""
-    try:
-        raw = text.encode("latin-1")
-    except UnicodeEncodeError:
-        raise ExtractError("midi: non-byte payload")
-    return midi_extract_text(raw)
-
-
 # ---------------------------------------------------------------------------
 # builder twin
 

@@ -266,7 +266,6 @@ def doc_text(streams: dict[str, bytes]) -> str:
 _R_BOF = 0x0809
 _R_EOF = 0x000A
 _R_SST = 0x00FC
-_R_CONTINUE = 0x003C
 _R_LABELSST = 0x00FD
 _R_NUMBER = 0x0203
 _R_RK = 0x027E
@@ -529,21 +528,6 @@ def ole_extract_full(data: bytes) -> tuple[str, str, dict[str, str]]:
         "ole: no recognized content stream (have: %s)"
         % ",".join(sorted(streams)[:5])
     )
-
-
-def ole_extract(data: bytes) -> tuple[str, str]:
-    """Back-compat 2-tuple form of :func:`ole_extract_full`."""
-    subkind, text, _meta = ole_extract_full(data)
-    return subkind, text
-
-
-def ole_extract_text(text: str) -> tuple[str, str, dict[str, str]]:
-    """Bytes-as-text bridge (latin-1), matching the other binary parsers."""
-    try:
-        raw = text.encode("latin-1")
-    except UnicodeEncodeError as exc:
-        raise ExtractError("ole: non-byte payload") from exc
-    return ole_extract_full(raw)
 
 
 # ---------------------------------------------------------------------------

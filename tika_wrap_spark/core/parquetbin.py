@@ -31,7 +31,7 @@ land in the ``parquet_columns`` meta key.
 Malformed files (bad magic/footer, thrift overruns, page underflow,
 unsupported codec/encoding/schema, over-budget sizes) raise
 :class:`ExtractError` ("parquet:" prefix) -> ``parse_ok=false`` rows,
-never task failures. Payloads travel bytes-as-text (latin-1).
+never task failures. The extraction core hands it bytes (:func:`core.errors.payload_bytes`).
 """
 
 from __future__ import annotations
@@ -424,16 +424,6 @@ def build_parquet(
         row_group_size=row_group_size,
     )
     return buf.getvalue()
-
-
-def parquet_extract_text(text: str) -> tuple[str, str]:
-    try:
-        data = text.encode("latin-1")
-    except UnicodeEncodeError:
-        raise ExtractError(
-            "parquet: payload is not a byte stream (non-latin-1 chars)"
-        )
-    return parquet_extract(data)
 
 
 def build_parquet_text(

@@ -60,7 +60,7 @@ def parse_pdf_pages(stream: str) -> list[list[tuple[float, float, str]]]:
         rm = _RUN_RE.match(line)
         if rm:
             if current is None:
-                raise ExtractError("text run before first %%Page marker")
+                raise ExtractError("pdf: text run before first %%Page marker")
             x, y, raw = rm.groups()
             if "\\" not in raw and "(" not in raw and ")" not in raw:
                 # fast path: no escapes, nothing to validate or unescape
@@ -69,7 +69,7 @@ def parse_pdf_pages(stream: str) -> list[list[tuple[float, float, str]]]:
             # reject unescaped-paren / trailing-backslash corruption
             stripped = raw.replace("\\\\", "").replace("\\(", "").replace("\\)", "")
             if "(" in stripped or ")" in stripped or stripped.endswith("\\"):
-                raise ExtractError("malformed string literal in run")
+                raise ExtractError("pdf: malformed string literal in run")
             current.append((float(x), float(y), _unescape(raw)))
             continue
         pm = _PAGE_RE.match(line)
@@ -79,7 +79,7 @@ def parse_pdf_pages(stream: str) -> list[list[tuple[float, float, str]]]:
             continue
         if line.startswith("%"):  # other comments are ignorable
             continue
-        raise ExtractError("unrecognized content-stream line: %r" % line[:40])
+        raise ExtractError("pdf: unrecognized content-stream line: %r" % line[:40])
     return pages
 
 

@@ -43,8 +43,8 @@ truncated stream, cyclic page tree) raise :class:`ExtractError`; the
 extraction core converts that to ``parse_ok=false`` rows — never a task
 failure. Decompression is bomb-capped (``MAX_INFLATED``).
 
-Payloads travel through the engine as bytes-as-text (latin-1):
-``parse_real_pdf_pages_text`` bridges str -> bytes.
+The extraction core hands :func:`parse_real_pdf` bytes
+(:func:`core.errors.payload_bytes`).
 """
 
 from __future__ import annotations
@@ -1689,10 +1689,6 @@ _DEFAULT_DECODER = FontDecoder({}, lambda x: x)
 # content-stream text extraction
 # ---------------------------------------------------------------------------
 
-_TOKEN_RE = re.compile(
-    rb"\(|<<|<|\[|\]|>>|/[^\s()<>\[\]{}/%]*|[+-]?(?:\d+\.?\d*|\.\d+)|'|\"|[A-Za-z*]{1,3}"
-)
-
 
 # master content-stream scanner: one regex drive per token instead of a
 # per-byte python dispatch (profiled ~2x on run-dense giant pages). The
@@ -1955,73 +1951,35 @@ def _assemble_lines(
     return out
 
 
-def parse_real_pdf_pages_crypt(
-    data: bytes,
-) -> tuple[list[list[tuple[float, float, str]]], str]:
-    """Parse a real binary PDF into pages of (x, y, text) line runs in
-    appearance order — the same shape ``core.pdf.parse_pdf_pages`` emits
-    for the synthetic dialect, feeding the shared layout reorder. Second
-    element is the crypt method that protected the document ('' /
-    'rc4' / 'aesv2' / 'aesv3') — the security-observability surface."""
-    doc = RealPdf(data)
-    pages: list[list[tuple[float, float, str]]] = []
-    for page in doc.pages():
-        fonts = doc.page_fonts(page)
-        content = doc.page_content(page)
-        pages.append(_assemble_lines(_content_runs(content, fonts)))
-    return pages, doc._enc_cfm or ""
-
-
-def parse_real_pdf_pages(data: bytes) -> list[list[tuple[float, float, str]]]:
-    return parse_real_pdf_pages_crypt(data)[0]
-
-
 def is_real_pdf_text(text: str) -> bool:
     """Real binary PDFs always carry a ``startxref`` pointer; the synthetic
     fixtures dialect (core/pdf.py) never does — the routing discriminator."""
     return "startxref" in text
 
 
-def parse_real_pdf_pages_text(text: str) -> list[list[tuple[float, float, str]]]:
-    """Bytes-as-text bridge (latin-1), mirroring ``zipbin.parse_zip_text``."""
-    return parse_real_pdf_pages_text_crypt(text)[0]
-
-
-def parse_real_pdf_pages_text_crypt(
-    text: str,
-) -> tuple[list[list[tuple[float, float, str]]], str]:
-    """Bytes-as-text bridge returning (pages, crypt_method)."""
-    try:
-        data = text.encode("latin-1")
-    except UnicodeEncodeError:
-        raise ExtractError("pdf: payload is not a byte stream (non-latin-1 chars)")
-    return parse_real_pdf_pages_crypt(data)
-
-
-def parse_real_pdf_text_full(
-    text: str,
+def parse_real_pdf(
+    data: bytes,
 ) -> tuple[
     list[list[tuple[float, float, str]]],
     str,
-    list[tuple[str, str]],
+    list[tuple[str, bytes]],
     list[str],
     list[tuple[str, str]],
     str,
     list[str],
 ]:
-    """Bytes-as-text bridge returning
+    """Parse a real binary PDF into
     (pages, crypt_method, attachments, annotations, form_fields,
-    xmp_title, outline_titles): attachments are the /EmbeddedFiles
-    payloads as latin-1 bytes-as-text (the shape the extraction core
-    recurses like archive members), annotations the page-ordered /Annots
-    /Contents strings, form_fields the filled /AcroForm (/T, /V) pairs,
-    xmp_title the /Metadata dc:title, outline_titles the pre-order
-    bookmark /Titles — the beyond-page-text surfaces Tika's PDFParser
-    emits."""
-    try:
-        data = text.encode("latin-1")
-    except UnicodeEncodeError:
-        raise ExtractError("pdf: payload is not a byte stream (non-latin-1 chars)")
+    xmp_title, outline_titles): pages are (x, y, text) line runs in
+    appearance order — the shape ``core.pdf.parse_pdf_pages`` emits for
+    the synthetic dialect, feeding the shared layout reorder; crypt_method
+    is the security handler's cipher ('' / 'rc4' / 'aesv2' / 'aesv3');
+    attachments are the /EmbeddedFiles (name, bytes) payloads the
+    extraction core recurses like archive members, annotations the
+    page-ordered /Annots /Contents strings, form_fields the filled
+    /AcroForm (/T, /V) pairs, xmp_title the /Metadata dc:title,
+    outline_titles the pre-order bookmark /Titles — the beyond-page-text
+    surfaces Tika's PDFParser emits."""
     doc = RealPdf(data)
     pages: list[list[tuple[float, float, str]]] = []
     annots: list[str] = []
@@ -2030,13 +1988,10 @@ def parse_real_pdf_text_full(
         content = doc.page_content(page)
         pages.append(_assemble_lines(_content_runs(content, fonts)))
         annots.extend(doc.annotations_text(page))
-    attachments = [
-        (name, body.decode("latin-1")) for name, body in doc.embedded_files()
-    ]
     return (
         pages,
         doc._enc_cfm or "",
-        attachments,
+        doc.embedded_files(),
         annots,
         doc.acroform_fields(),
         doc.xmp_title(),

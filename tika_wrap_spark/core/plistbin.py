@@ -23,7 +23,7 @@ keys surface in the ``plist_keys`` meta key. Malformed payloads
 (truncated trailer, out-of-range refs/offsets, unknown markers, cyclic
 refs) raise :class:`ExtractError` -> ``parse_ok=false`` rows.
 
-Payloads travel bytes-as-text (latin-1) like every binary format here.
+The extraction core hands it bytes (:func:`core.errors.payload_bytes`).
 """
 
 from __future__ import annotations
@@ -33,7 +33,6 @@ import struct
 from tika_wrap_spark.core.errors import ExtractError
 
 PLIST_MAGIC = b"bplist00"
-PLIST_MAGIC_TEXT = "bplist00"
 
 MAX_PLIST_OBJECTS = 65536  # runaway backstop far above any real payload
 
@@ -180,10 +179,10 @@ def _flatten(obj: object, path: str, out: list[str]) -> None:
         out.append("%s: %s" % (path or "value", obj))
 
 
-def plist_extract_text(text: str) -> tuple[str, str]:
-    """Bytes-as-text payload -> (flattened_text_block, top_keys_csv).
+def plist_extract(data: bytes) -> tuple[str, str]:
+    """bplist bytes -> (flattened_text_block, top_keys_csv).
     One ``keypath: value`` line per leaf, document order preserved."""
-    obj = parse_bplist(text.encode("latin-1"))
+    obj = parse_bplist(data)
     lines: list[str] = []
     _flatten(obj, "", lines)
     keys = ",".join(str(k) for k in obj) if isinstance(obj, dict) else ""

@@ -181,14 +181,6 @@ def parse_rar(data: bytes) -> list[tuple[str, bytes]]:
     return out
 
 
-def parse_rar_text(text: str) -> list[tuple[str, str]]:
-    try:
-        raw = text.encode("latin-1")
-    except UnicodeEncodeError:
-        raise ExtractError("rar: non-byte payload")
-    return [(n, p.decode("latin-1")) for n, p in parse_rar(raw)]
-
-
 # ---------------------------------------------------------------------------
 # builder twin
 

@@ -448,14 +448,6 @@ def parse_7z(data: bytes) -> list[tuple[str, bytes]]:
     return out
 
 
-def parse_7z_text(text: str) -> list[tuple[str, str]]:
-    try:
-        raw = text.encode("latin-1")
-    except UnicodeEncodeError:
-        raise ExtractError("7z: non-byte payload")
-    return [(n, p.decode("latin-1")) for n, p in parse_7z(raw)]
-
-
 # ---------------------------------------------------------------------------
 # builder twin
 

@@ -310,15 +310,6 @@ def sqlite_extract(data: bytes) -> list[tuple[str, str]]:
     return out
 
 
-def sqlite_extract_text(text: str) -> list[tuple[str, str]]:
-    """Bytes-as-text entry (payloads travel as latin-1 char-per-byte)."""
-    try:
-        data = text.encode("latin-1")
-    except UnicodeEncodeError as exc:
-        raise ExtractError("sqlite: non-byte payload: %s" % exc)
-    return sqlite_extract(data)
-
-
 def build_sqlite(tables: list[tuple[str, list[str], list[tuple]]]) -> bytes:
     """REAL SQLite database bytes via the stdlib C library (test/corpus
     builder only — the read path above never touches the C parser).

@@ -19,7 +19,8 @@ size, checksum mismatch, truncated data, missing terminator) raise
 :class:`ExtractError` -> ``parse_ok=false`` rows, never task failures.
 
 Payloads travel through the engine as bytes-as-text (latin-1, one char per
-byte) exactly like the zip path.
+byte); the extraction core converts each one once
+(:func:`core.errors.payload_bytes`) and decodes the members it gets back.
 """
 
 from __future__ import annotations
@@ -111,15 +112,6 @@ def build_tar(entries: list[tuple[str, bytes]]) -> bytes:
         out += b"\x00" * pad
     out += b"\x00" * (2 * BLOCK)
     return bytes(out)
-
-
-def parse_tar_text(text: str) -> list[tuple[str, str]]:
-    """Bytes-as-text bridge, identical contract to zipbin.parse_zip_text."""
-    try:
-        data = text.encode("latin-1")
-    except UnicodeEncodeError:
-        raise ExtractError("tar: payload is not a byte stream (non-latin-1 chars)")
-    return [(name, payload.decode("latin-1")) for name, payload in parse_tar(data)]
 
 
 def build_tar_text(entries: list[tuple[str, str]]) -> str:

@@ -12,11 +12,13 @@ signature, a 2-byte legacy key, then a flat sequence of attributes
     checksum (2B LE: sum of data bytes mod 65536)
 
 per MS-OXTNEF §2.1. This core surfaces the message subject (in the
-``eml_subject`` meta key shared with eml) and plain body, and recurses attachment payloads like archive members (the
+``eml_subject`` meta key shared with eml) and plain body, and recurses
+attachment payloads like archive members (the
 winmail.dat-hides-the-real-attachment failure mode Tika exists to fix).
-Strings are codepage bytes with a trailing NUL; payloads travel
-bytes-as-text latin-1. Malformed streams raise :class:`ExtractError`
-('tnef:' prefix) -> ``parse_ok=false`` rows, never task failures.
+Strings are codepage bytes with a trailing NUL; the extraction core hands
+it bytes (:func:`core.errors.payload_bytes`). Malformed streams raise
+:class:`ExtractError` ('tnef:' prefix) -> ``parse_ok=false`` rows, never
+task failures.
 """
 
 from __future__ import annotations
@@ -31,16 +33,12 @@ LVL_MESSAGE = 0x01
 LVL_ATTACHMENT = 0x02
 
 ATT_TNEF_VERSION = 0x00089006
-ATT_OEM_CODEPAGE = 0x00069007
 ATT_MESSAGE_CLASS = 0x00078008
 ATT_SUBJECT = 0x00018004
 ATT_BODY = 0x0002800C
-ATT_DATE_SENT = 0x00038005
 ATT_ATTACH_REND_DATA = 0x00069002  # starts a new attachment
 ATT_ATTACH_TITLE = 0x00018010
 ATT_ATTACH_DATA = 0x0006800F
-ATT_MAPI_PROPS = 0x00069003
-ATT_ATTACHMENT = 0x00069005
 
 _MAX_ATTRS = 4096
 
@@ -108,22 +106,6 @@ def parse_tnef(data: bytes) -> tuple[str, str, str, list[tuple[str, bytes]]]:
         # version/codepage/date/MAPI props: plumbing, tallied by the walk
     flush_attachment()
     return msg_class, subject, body, attachments
-
-
-def tnef_extract(text: str) -> tuple[str, str, str, list[tuple[str, str]]]:
-    """Bytes-as-text bridge: attachments come back latin-1 text payloads
-    ready for the recursive member walk."""
-    try:
-        data = text.encode("latin-1")
-    except UnicodeEncodeError:
-        raise ExtractError("tnef: payload is not a byte stream (non-latin-1 chars)")
-    msg_class, subject, body, atts = parse_tnef(data)
-    return (
-        msg_class,
-        subject,
-        body,
-        [(name, payload.decode("latin-1")) for name, payload in atts],
-    )
 
 
 def _attr(level: int, att_id: int, payload: bytes) -> bytes:

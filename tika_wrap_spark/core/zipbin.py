@@ -19,9 +19,10 @@ compression, CRC mismatch) raise :class:`ExtractError`, which the extraction
 core converts to a ``parse_ok=false`` row — never a task failure.
 
 Payloads travel through the engine as bytes-as-text (one char per byte,
-latin-1): ``parse_zip_text`` bridges str -> bytes and decodes each member's
-bytes back to latin-1 text so downstream content sniffing routes members
-exactly like any other payload.
+latin-1): the extraction core converts the archive once
+(:func:`core.errors.payload_bytes`) and decodes each member's bytes back
+to latin-1 text so content sniffing routes members exactly like any other
+payload.
 """
 
 from __future__ import annotations
@@ -305,16 +306,6 @@ def build_zip(
         0,
     )
     return b"".join(out) + cd + eocd64 + locator + eocd
-
-
-def parse_zip_text(text: str) -> list[tuple[str, str]]:
-    """Bytes-as-text bridge: parse a zip payload carried as a latin-1
-    string; member payloads come back as latin-1 strings for re-sniffing."""
-    try:
-        data = text.encode("latin-1")
-    except UnicodeEncodeError:
-        raise ExtractError("zip: payload is not a byte stream (non-latin-1 chars)")
-    return [(name, payload.decode("latin-1")) for name, payload in parse_zip(data)]
 
 
 def build_zip_text(

@@ -805,13 +805,5 @@ def zstd_bytes(data: bytes) -> bytes:
     return bytes(out)
 
 
-def unzstd_text(text: str) -> str:
-    try:
-        raw = text.encode("latin-1")
-    except UnicodeEncodeError:
-        raise ExtractError("zstd: non-byte payload")
-    return unzstd(raw).decode("latin-1")
-
-
 def zstd_text(text: str) -> str:
     return zstd_bytes(text.encode("latin-1")).decode("latin-1")

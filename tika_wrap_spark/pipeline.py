@@ -190,11 +190,6 @@ def lineage_for_run(
     )
 
 
-# above this many committed partitions the consistent read falls back to a
-# broadcast semi join instead of an isin partition filter (expression size)
-_READ_ISIN_MAX_KEYS = 10_000
-
-
 def read_extracted(spark: SparkSession, out_dir: str) -> DataFrame:
     """Final consistent view: only lineage-committed partitions.
 
@@ -206,15 +201,9 @@ def read_extracted(spark: SparkSession, out_dir: str) -> DataFrame:
     The committed-parts set is tiny (≤ ``parts`` ints, memoized by
     ``committed_parts``) and applied as an ``isin`` PARTITION FILTER, so a
     consistent read is a partition-pruned scan with no join and no shuffle
-    at all (pinned in ``tests/test_plans.py``); with an extreme partition
-    count it degrades to a broadcast semi join — still shuffle-free on the
-    data side."""
+    at all (pinned in ``tests/test_plans.py``)."""
     done_keys = sorted(committed_parts(spark, out_dir))
-    df = _read_extracted_raw(spark, out_dir)
-    if len(done_keys) <= _READ_ISIN_MAX_KEYS:
-        return df.filter(F.col("part_key").isin(done_keys))
-    done = spark.createDataFrame([(k,) for k in done_keys], "part_key int")
-    return df.join(F.broadcast(done), "part_key", "left_semi")
+    return _read_extracted_raw(spark, out_dir).filter(F.col("part_key").isin(done_keys))
 
 
 def extract_in_memory(spark: SparkSession, corpus: DataFrame, num_partitions: int | None = None) -> DataFrame:

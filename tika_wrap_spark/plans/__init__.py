@@ -22,11 +22,6 @@ def formatted_plan(df: DataFrame) -> str:
     return qe.explainString(mode)
 
 
-def simple_plan(df: DataFrame) -> str:
-    qe = df._jdf.queryExecution()  # noqa: SLF001
-    return qe.executedPlan().toString()
-
-
 def pushed_filters(plan: str) -> list[str]:
     """All PushedFilters entries across scans in a formatted plan."""
     out: list[str] = []
