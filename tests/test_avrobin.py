@@ -109,14 +109,14 @@ def test_deflate_bomb_block_hits_the_shared_cap():
     cap and land in the ``bomb`` class, never inflate in full."""
     import zlib
 
-    from tika_wrap_spark.core.avrobin import MAX_TOTAL_BYTES
+    from tika_wrap_spark.core.errors import MAX_INFLATED
 
     header = build_avro([("id", "long")], [], codec="deflate")
     sync = header[-16:]
     c = zlib.compressobj(9, zlib.DEFLATED, -15)
     body = c.compress(b"\x00" * (65 * 1024 * 1024)) + c.flush()
     data = header + _w_zigzag(1) + _w_zigzag(len(body)) + body + sync
-    with pytest.raises(ExtractError, match="avro: inflated payload exceeds %d" % MAX_TOTAL_BYTES):
+    with pytest.raises(ExtractError, match="avro: inflated payload exceeds %d" % MAX_INFLATED):
         avro_extract(data)
 
 

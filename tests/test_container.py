@@ -220,7 +220,7 @@ class TestRealZip:
     def test_deflate_member_over_cap_is_bomb(self):
         """An honestly declared 65 MiB member stops at the 64 MiB cap and
         lands in the ``bomb`` class, like every other inflating path."""
-        from tika_wrap_spark.core.gzipbin import MAX_INFLATED
+        from tika_wrap_spark.core.errors import MAX_INFLATED
         from tika_wrap_spark.core.zipbin import parse_zip
 
         data = self._zeros_zip(65)

@@ -1,7 +1,10 @@
-"""Every inflating call in ``core/`` is bounded by a max output length, a
-PNG whose IDAT inflates far past its declared rows is refused without
-being inflated, and the JPEG and GIF pixel decoders stay within a small
-memory bound whatever their headers and LZW streams declare."""
+"""Every inflating call in ``core/`` is bounded by a max output length and
+runs through ``errors.inflate`` (the two media reads aside), no
+decompressor is ever ``flush()``ed, 7z and CAB bombs are refused under a
+small memory bound, a PNG whose IDAT inflates far past its declared rows
+is refused without being inflated, and the JPEG and GIF pixel decoders
+stay within a small memory bound whatever their headers and LZW streams
+declare."""
 
 import ast
 import struct
@@ -9,7 +12,11 @@ import tracemalloc
 import zlib
 from pathlib import Path
 
+import pytest
+
 import tika_wrap_spark
+from tika_wrap_spark.core.cabbin import _MSZIP_BLOCK, build_cab, parse_cab
+from tika_wrap_spark.core.errors import MAX_INFLATED, ExtractError
 from tika_wrap_spark.core.jpegbin import build_jpeg_pixels, jpeg_pixels
 from tika_wrap_spark.core.media import (
     MAX_PIXELS,
@@ -18,10 +25,71 @@ from tika_wrap_spark.core.media import (
     gif_pixels,
     png_pixels,
 )
+from tika_wrap_spark.core.sevenzip import build_7z, parse_7z
 
 CORE = Path(tika_wrap_spark.__file__).parent / "core"
 # one-shot module functions: they take no output bound at all
 ONE_SHOT = {"zlib", "lzma", "bz2", "gzip"}
+# stdlib constructors of incremental decompressors
+DECOMPRESSORS = {"decompressobj", "LZMADecompressor", "BZ2Decompressor"}
+# the two media reads that return None instead of failing a row
+MEDIA_READS = {"media.py:png_text_meta", "media.py:png_pixels"}
+
+
+def _makes_decompressor(node: ast.AST) -> bool:
+    return any(
+        isinstance(n, ast.Call)
+        and getattr(n.func, "attr", getattr(n.func, "id", "")) in DECOMPRESSORS
+        for n in ast.walk(node)
+    )
+
+
+def decompressor_flushes() -> list[str]:
+    """``flush()`` calls on a decompressor, made directly or through a name
+    the same module assigns one to: a flush inflates the rest of the
+    stream with no output bound."""
+    bad = []
+    for path in sorted(CORE.glob("*.py")):
+        tree = ast.parse(path.read_text())
+        names = {
+            t.id
+            for n in ast.walk(tree)
+            if isinstance(n, ast.Assign) and _makes_decompressor(n.value)
+            for t in n.targets
+            if isinstance(t, ast.Name)
+        }
+        for node in ast.walk(tree):
+            if not (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr == "flush"
+            ):
+                continue
+            recv = node.func.value
+            if (isinstance(recv, ast.Name) and recv.id in names) or _makes_decompressor(recv):
+                bad.append("%s:%d" % (path.name, node.lineno))
+    return bad
+
+
+def decompress_call_sites() -> set[str]:
+    """``<file>:<function>`` of every stdlib ``.decompress(...)`` call (no
+    hand-rolled decoder in ``core/`` has such a method)."""
+    found = set()
+
+    def visit(node: ast.AST, path: Path, fn: str) -> None:
+        for child in ast.iter_child_nodes(node):
+            if (
+                isinstance(child, ast.Call)
+                and isinstance(child.func, ast.Attribute)
+                and child.func.attr == "decompress"
+            ):
+                found.add("%s:%s" % (path.name, fn))
+            is_def = isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef))
+            visit(child, path, child.name if is_def else fn)
+
+    for path in sorted(CORE.glob("*.py")):
+        visit(ast.parse(path.read_text()), path, "<module>")
+    return found
 
 
 def unbounded_decompress_calls() -> list[str]:
@@ -44,6 +112,37 @@ def unbounded_decompress_calls() -> list[str]:
 
 def test_every_core_decompress_has_a_max_length():
     assert unbounded_decompress_calls() == []
+
+
+def test_no_decompressor_is_flushed():
+    assert decompressor_flushes() == []
+
+
+def test_stdlib_decompress_runs_only_in_inflate():
+    assert decompress_call_sites() - MEDIA_READS == {"errors.py:inflate"}
+
+
+def test_7z_folder_declared_past_the_budget_is_refused_before_decoding():
+    """A ~30 KB 7z whose one LZMA2 folder declares 200 MiB of output."""
+    data = build_7z([("big.txt", bytes(200 << 20))])
+    assert len(data) < 64 << 10
+    err, peak = _refusal(parse_7z, data)
+    assert err == "7z: inflated payload exceeds %d bytes" % MAX_INFLATED
+    assert peak < 8 << 20, peak
+
+
+def test_cab_mszip_block_inflates_one_byte_past_its_bound():
+    """A one-block cabinet whose ``CK`` block is the raw deflate of 60 MiB
+    of zeros (~61 KB; its CFDATA checksum is 0, so it is not verified)."""
+    c = zlib.compressobj(9, zlib.DEFLATED, -15)
+    ab = b"CK" + c.compress(bytes(60 << 20)) + c.flush()
+    cab = build_cab([("big.txt", bytes(_MSZIP_BLOCK))])
+    coff_data = struct.unpack_from("<I", cab, 36)[0]  # the one CFFOLDER
+    data = cab[:coff_data] + struct.pack("<IHH", 0, len(ab), _MSZIP_BLOCK) + ab
+    assert len(data) < 64 << 10
+    err, peak = _refusal(parse_cab, data)
+    assert err == "cab: block inflated to %d, declared %d" % (_MSZIP_BLOCK + 1, _MSZIP_BLOCK)
+    assert peak < 8 << 20, peak
 
 
 def test_png_idat_bomb_is_refused_under_a_memory_bound():
@@ -70,6 +169,19 @@ def _peak(fn, *args):
     finally:
         tracemalloc.stop()
     return got, peak
+
+
+def _refusal(fn, *args):
+    """(message of the ExtractError fn(*args) raises, peak traced bytes
+    while it ran)."""
+    tracemalloc.start()
+    try:
+        with pytest.raises(ExtractError) as exc:
+            fn(*args)
+        peak = tracemalloc.get_traced_memory()[1]
+    finally:
+        tracemalloc.stop()
+    return str(exc.value), peak
 
 
 def test_jpeg_sof_declaring_25m_pixels_is_refused_before_allocating():

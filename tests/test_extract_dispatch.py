@@ -11,22 +11,31 @@
   kind must fail in their format's error class, never as ``internal:`` or
   ``other``; a binary payload that is not a byte stream fails with the one
   message of ``errors.payload_bytes``.
+* A bomb of each kind with a hand-rolled or block-wise decoder fails with
+  the one cap message of ``errors.over_budget`` in the ``bomb`` class.
 """
 
 import hashlib
 import json
 import random
+import tracemalloc
+import zlib
 
 import pytest
 
+from tika_wrap_spark.core.cabbin import build_cab
 from tika_wrap_spark.core.container import MAGIC as TWC1_MAGIC
+from tika_wrap_spark.core.errors import MAX_INFLATED
 from tika_wrap_spark.core.extract import (
     _ARCHIVE_PARSERS,
     _HANDLERS,
     _WRAPPER_DECODERS,
     extract_document,
 )
-from tika_wrap_spark.core.gzipbin import gzip_text
+from tika_wrap_spark.core.gzipbin import gzip_text, z_bytes
+from tika_wrap_spark.core.lz4bin import lz4_bytes
+from tika_wrap_spark.core.sevenzip import build_7z
+from tika_wrap_spark.core.zstdbin import zstd_bytes
 from tika_wrap_spark.core.pdfbin import is_real_pdf_text
 from tika_wrap_spark.core.sniff import sniff_kind
 from tika_wrap_spark.corpus import generate_corpus
@@ -153,3 +162,59 @@ def test_structural_robustness(samples, kind):
         if _reads_bytes(kind, text):  # err is the last variant's: U+20AC
             assert err == _NOT_BYTES % kind, (doc_id, err)
     assert escaped == []
+
+
+def _flate_bomb_pdf(data: bytes) -> bytes:
+    """A one-page PDF whose FlateDecode content stream inflates to ``data``."""
+    comp = zlib.compress(data, 9)
+    objs = [
+        b"<< /Type /Catalog /Pages 2 0 R >>",
+        b"<< /Type /Pages /Kids [3 0 R] /Count 1 >>",
+        b"<< /Type /Page /Parent 2 0 R /Contents 4 0 R >>",
+        b"<< /Length %d /Filter /FlateDecode >>\nstream\n%s\nendstream" % (len(comp), comp),
+    ]
+    doc = bytearray(b"%PDF-1.4\n")
+    offsets = []
+    for num, body in enumerate(objs, 1):
+        offsets.append(len(doc))
+        doc += b"%d 0 obj\n%s\nendobj\n" % (num, body)
+    xref = len(doc)
+    doc += b"xref\n0 %d\n0000000000 65535 f \n" % (len(objs) + 1)
+    doc += b"".join(b"%010d 00000 n \n" % off for off in offsets)
+    doc += b"trailer\n<< /Size %d /Root 1 0 R >>\nstartxref\n%d\n%%%%EOF\n" % (
+        len(objs) + 1, xref,
+    )
+    return bytes(doc)
+
+
+# kind -> builder of a payload that inflates to its argument. CAB's one
+# folder inflates block by block, the 7z folder is refused on its declared
+# size. The .Z and lz4 codecs are pure Python: their cases take ~10 s and
+# ~45 s to build and decode, and run untraced (tracemalloc slows them ~10x).
+BOMBS = {
+    "z": z_bytes,
+    "lz4": lz4_bytes,
+    "zstd": zstd_bytes,
+    "cab": lambda data: build_cab([("big.txt", data)]),
+    "7z": lambda data: build_7z([("big.txt", data)]),
+    "pdf": _flate_bomb_pdf,
+}
+UNTRACED = {"z", "lz4"}
+
+
+@pytest.mark.parametrize("kind", sorted(BOMBS))
+def test_bomb_hits_the_one_cap_in_the_bomb_class(kind):
+    payload = BOMBS[kind](bytes(65 << 20)).decode("latin-1")
+    assert len(payload) < 1 << 20 and sniff_kind(payload, "") == kind
+    if kind not in UNTRACED:
+        tracemalloc.start()
+    try:
+        res = extract_document([{"text": payload, "media_ref": ""}])
+        peak = tracemalloc.get_traced_memory()[1]  # 0 when untraced
+    finally:
+        tracemalloc.stop()
+    assert res["error"] == "%s: inflated payload exceeds %d bytes" % (kind, MAX_INFLATED)
+    assert _error_class(res["error"]) == "bomb"
+    # one bounded decompress call holds its output twice while CPython
+    # joins it into one bytes object (PDF Flate peaks at ~128 MiB)
+    assert peak < 2 * MAX_INFLATED + (8 << 20), peak

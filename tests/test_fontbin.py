@@ -178,7 +178,7 @@ def _zeros_woff(n_mib: int, orig: int, trim: int = 0) -> bytes:
 def test_woff_table_over_cap_is_bomb():
     """A table declaring more than the 64 MiB cap is refused before any
     inflate, in the ``bomb`` class."""
-    from tika_wrap_spark.core.gzipbin import MAX_INFLATED
+    from tika_wrap_spark.core.errors import MAX_INFLATED
 
     data = _zeros_woff(1, MAX_INFLATED + 1)
     want = "font: inflated payload exceeds %d bytes" % MAX_INFLATED

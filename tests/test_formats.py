@@ -181,17 +181,25 @@ def _leading_strings(expr: ast.expr) -> list[str]:
     return []
 
 
+# helpers that raise "<kind>: ..." for the kind given as their first argument:
+# the one decompression budget in core/errors.py and gzipbin's member loop
+_KIND_HELPERS = {"inflate", "over_budget", "_members"}
+
+
 def _core_error_prefixes() -> set[str]:
     """Every 'name:' prefix an ExtractError in core/ is raised with
-    (multi-line calls included: the source is walked as a tree). The one
-    '%s:' prefix is ``errors.payload_bytes``, whose prefix is the sniff
-    kind of a binary payload."""
+    (multi-line calls included: the source is walked as a tree), or that
+    is handed to a ``_KIND_HELPERS`` call as its kind. The one '%s:'
+    prefix is ``errors.payload_bytes``, whose prefix is the sniff kind of
+    a binary payload."""
     found: set[str] = set()
     for path in sorted((PKG / "core").glob("*.py")):
         for node in ast.walk(ast.parse(path.read_text())):
             if not isinstance(node, ast.Call):
                 continue
             fn = getattr(node.func, "id", getattr(node.func, "attr", ""))
+            if fn in _KIND_HELPERS and node.args:
+                found.update(_leading_strings(node.args[0]))
             if fn == "ExtractError" and node.args:
                 for text in _leading_strings(node.args[0]):
                     m = re.match(r"([A-Za-z0-9_%]+): ", text)

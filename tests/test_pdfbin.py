@@ -267,7 +267,7 @@ def test_flate_bomb_capped():
             % (len(comp), comp),
         }
     )
-    with pytest.raises(ExtractError, match="exceeds cap"):
+    with pytest.raises(ExtractError, match="pdf: inflated payload exceeds 67108864 bytes"):
         parse_real_pdf(doc)
 
 
@@ -1042,7 +1042,7 @@ def test_lzw_bomb_hits_the_cap_in_the_bomb_class(spark):
             % (len(bomb), bomb),
         }
     )
-    with pytest.raises(ExtractError, match="pdf: inflated stream exceeds cap") as exc:
+    with pytest.raises(ExtractError, match="pdf: inflated payload exceeds 67108864 bytes") as exc:
         parse_real_pdf(doc)
     df = spark.createDataFrame([(False, str(exc.value))], "parse_ok boolean, error string")
     assert df.select(_error_class_col().alias("cls")).first()["cls"] == "bomb"

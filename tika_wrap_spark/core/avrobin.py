@@ -40,11 +40,10 @@ import json
 import struct
 import zlib
 
-from tika_wrap_spark.core.errors import ExtractError
+from tika_wrap_spark.core.errors import ExtractError, inflate
 
 AVRO_MAGIC = b"Obj\x01"
 MAX_RECORDS = 100_000
-MAX_TOTAL_BYTES = 64 * 1024 * 1024
 
 _PRIMITIVES = (
     "null",
@@ -204,18 +203,10 @@ def avro_extract(data: bytes) -> tuple[str, str]:
             raise ExtractError("avro: negative block framing")
         block = r.take(size)
         if codec == "deflate":
-            # capped like gunzip: never flush() past the budget, and a
-            # block that stops short of its end marker is truncated
+            # a block that stops short of its end marker is truncated
             d = zlib.decompressobj(-15)
-            try:
-                block = d.decompress(block, MAX_TOTAL_BYTES + 1 - inflated)
-            except zlib.error as exc:
-                raise ExtractError("avro: deflate failed: %s" % exc)
+            block = inflate("avro", d, block, inflated)
             inflated += len(block)
-            if inflated > MAX_TOTAL_BYTES:
-                raise ExtractError(
-                    "avro: inflated payload exceeds %d bytes" % MAX_TOTAL_BYTES
-                )
             if not d.eof:
                 raise ExtractError("avro: truncated deflate block")
         if r.take(16) != sync:

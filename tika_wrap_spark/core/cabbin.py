@@ -37,10 +37,9 @@ from __future__ import annotations
 import struct
 import zlib
 
-from tika_wrap_spark.core.errors import ExtractError
+from tika_wrap_spark.core.errors import MAX_INFLATED, ExtractError, inflate
 
 CAB_MAGIC = b"MSCF\x00\x00\x00\x00"  # signature + reserved1 (always 0)
-MAX_TOTAL_BYTES = 64 * 1024 * 1024
 MAX_FILES = 4096
 _MSZIP_BLOCK = 32768
 
@@ -127,6 +126,7 @@ def parse_cab(data: bytes) -> list[tuple[str, bytes]]:
     # decompress each referenced folder once
     needed = {f[3] for f in files}
     streams: dict[int, bytes] = {}
+    inflated = 0  # the MSZIP blocks' share of the one decompression budget
     for fi in sorted(needed):
         coff, c_data, comp = folders[fi]
         if comp not in (_COMP_NONE, _COMP_MSZIP):
@@ -159,11 +159,8 @@ def parse_cab(data: bytes) -> list[tuple[str, bytes]]:
                 d = zlib.decompressobj(-15, zdict=history) if history else (
                     zlib.decompressobj(-15)
                 )
-                try:
-                    block = d.decompress(ab[2:], _MSZIP_BLOCK + 1)
-                    block += d.flush()
-                except zlib.error as exc:
-                    raise ExtractError("cab: MSZIP inflate failed: %s" % exc)
+                block = inflate("cab", d, ab[2:], inflated, _MSZIP_BLOCK)
+                inflated += len(block)
                 history = block[-32768:]
             if len(block) != cb_uncomp:
                 raise ExtractError(
@@ -171,8 +168,6 @@ def parse_cab(data: bytes) -> list[tuple[str, bytes]]:
                     % (len(block), cb_uncomp)
                 )
             out.extend(block)
-            if len(out) > MAX_TOTAL_BYTES:
-                raise ExtractError("cab: folder bytes exceed %d" % MAX_TOTAL_BYTES)
         streams[fi] = bytes(out)
 
     entries: list[tuple[str, bytes]] = []
@@ -182,8 +177,8 @@ def parse_cab(data: bytes) -> list[tuple[str, bytes]]:
         if uoff + cb_file > len(stream):
             raise ExtractError("cab: file %r overruns its folder stream" % name)
         total += cb_file
-        if total > MAX_TOTAL_BYTES:
-            raise ExtractError("cab: member bytes exceed %d" % MAX_TOTAL_BYTES)
+        if total > MAX_INFLATED:
+            raise ExtractError("cab: member bytes exceed %d" % MAX_INFLATED)
         entries.append((name, stream[uoff : uoff + cb_file]))
     return entries
 

@@ -1,3 +1,7 @@
+import lzma
+import zlib
+
+
 class ExtractError(Exception):
     """Per-document extraction failure.
 
@@ -10,7 +14,7 @@ class ExtractError(Exception):
     """
 
 
-# Import both names at module top level, never lazily: make_portable()
+# Import these names at module top level, never lazily: make_portable()
 # registers loaded modules for pickle-by-value at plan-build time, so a lazy
 # import would re-import this module from disk in the worker with its own
 # ExtractError class, the extraction core's `except ExtractError` would miss
@@ -26,3 +30,38 @@ def payload_bytes(text: str, kind: str) -> bytes:
         raise ExtractError(
             "%s: payload is not a byte stream (non-latin-1 chars)" % kind
         ) from None
+
+
+# The one decompression budget: a payload may inflate to at most this many
+# bytes, summed over its members, blocks and tables (the reference's Tika
+# applies analogous zip-bomb limits). Pixel buffers are sized against it too.
+MAX_INFLATED = 64 * 1024 * 1024
+
+# what a stdlib zlib / lzma / bz2 decoder raises on a corrupt stream
+_DECODE_ERRORS = (zlib.error, lzma.LZMAError, OSError)
+
+
+def over_budget(kind: str) -> ExtractError:
+    """The one cap message. ``error_taxonomy`` files it under ``bomb``."""
+    return ExtractError("%s: inflated payload exceeds %d bytes" % (kind, MAX_INFLATED))
+
+
+def inflate(kind: str, decoder, data: bytes, used: int = 0, size: int | None = None) -> bytes:
+    """One bounded ``decoder.decompress(data)`` for any stdlib zlib / lzma /
+    bz2 decoder object. ``used`` is what the payload has inflated so far and
+    ``size`` an optional declared output size: the decoder is never asked
+    for more than the remaining budget + 1 bytes, or ``size`` + 1 when that
+    is smaller, and is never ``flush()``ed (a flush inflates the rest of
+    the stream, unbounded). A corrupt stream raises ``<kind>: <error>``, a
+    payload past the cap :func:`over_budget`. End-of-stream and
+    declared-size checks are the caller's."""
+    limit = MAX_INFLATED - used
+    if size is not None and size < limit:
+        limit = size
+    try:  # a max_length of 0 would mean unbounded
+        out = decoder.decompress(data, max(limit, 0) + 1)
+    except _DECODE_ERRORS as exc:
+        raise ExtractError("%s: %s" % (kind, exc)) from None
+    if used + len(out) > MAX_INFLATED:
+        raise over_budget(kind)
+    return out

@@ -409,10 +409,7 @@ def _media(d, kind, text, media_ref, path, depth):
             data = b""
         dims = image_dims(data)
         if dims is not None:
-            try:
-                exif = jpeg_exif(data)
-            except ValueError:
-                exif = {}
+            exif = jpeg_exif(data)
             png = png_text_meta(data)
             d.meta.update(
                 media1_w=_stringify(dims[0]),

@@ -28,8 +28,7 @@ from __future__ import annotations
 import struct
 import zlib
 
-from tika_wrap_spark.core.errors import ExtractError
-from tika_wrap_spark.core.gzipbin import MAX_INFLATED
+from tika_wrap_spark.core.errors import MAX_INFLATED, ExtractError, inflate, over_budget
 
 SFNT_TTF = b"\x00\x01\x00\x00"
 SFNT_OTTO = b"OTTO"
@@ -79,6 +78,7 @@ def _woff_tables(data: bytes) -> dict[str, bytes]:
     if not 1 <= n <= _MAX_TABLES:
         raise ExtractError("font: implausible table count %d" % n)
     tables: dict[str, bytes] = {}
+    inflated = 0  # the tables' share of the one decompression budget
     for i in range(n):
         rec = 44 + 20 * i
         tag = data[rec : rec + 4]
@@ -91,13 +91,11 @@ def _woff_tables(data: bytes) -> dict[str, bytes]:
             raise ExtractError("font: woff table %r past end of file" % tag)
         raw = data[off : off + comp]
         if comp < orig:
-            if orig > MAX_INFLATED:
-                raise ExtractError("font: inflated payload exceeds %d bytes" % MAX_INFLATED)
+            if inflated + orig > MAX_INFLATED:
+                raise over_budget("font")
             d = zlib.decompressobj()
-            try:  # one byte past origLength is enough to refute it
-                raw = d.decompress(raw, orig + 1)
-            except zlib.error as exc:
-                raise ExtractError("font: woff table inflate failed: %s" % exc)
+            raw = inflate("font", d, raw, inflated, orig)  # origLength + 1 refutes it
+            inflated += len(raw)
             if len(raw) <= orig and not d.eof:
                 raise ExtractError("font: woff table inflate failed: truncated stream")
         if len(raw) != orig:

@@ -13,10 +13,10 @@ and ``.lzma`` both directions against ``xz --format=lzma``
 These are the wrapper shapes a real corpus carries around tar streams and
 single documents (.tar.gz / .tar.xz / .log.bz2 ...). gzip uses ``zlib``
 with ``wbits=31`` (full framing incl. the CRC32 + ISIZE trailer check);
-xz/bz2 use their stdlib incremental decompressors. Any framing/CRC error
+xz/bz2 use their stdlib incremental decompressors, all three through one
+member loop over :func:`core.errors.inflate`. Any framing/CRC error
 raises :class:`ExtractError` -> ``parse_ok=false`` rows, never task
-failures. Decompressed size is capped per stream (decompression-bomb
-guard — the zip-bomb analog for wrappers).
+failures.
 
 The extraction core hands it bytes (:func:`core.errors.payload_bytes`).
 """
@@ -27,7 +27,7 @@ import bz2 as _bz2
 import lzma as _lzma
 import zlib
 
-from tika_wrap_spark.core.errors import ExtractError
+from tika_wrap_spark.core.errors import MAX_INFLATED, ExtractError, inflate, over_budget
 
 MAGIC = b"\x1f\x8b"
 XZ_MAGIC = b"\xfd7zXZ\x00"
@@ -40,9 +40,30 @@ _Z_INIT_BITS = 9
 _Z_CLEAR = 256
 _Z_FIRST = 257
 
-# decompression-bomb guard: one member may inflate to at most this many
-# bytes (the reference's Tika applies analogous zip-bomb limits)
-MAX_INFLATED = 64 * 1024 * 1024
+
+def _members(kind: str, data: bytes, decoder, is_member, next_member) -> bytes:
+    """Decode one or more CONCATENATED members, each with a fresh
+    ``decoder()``, under one budget shared by all of them.
+    ``is_member(b)`` is the magic test; ``next_member(unused_data)`` strips
+    the padding after a member and returns the next one, or b"" at the end."""
+    if not is_member(data):
+        raise ExtractError("%s: bad magic" % kind)
+    out = bytearray()
+    while True:
+        d = decoder()
+        out += inflate(kind, d, data, len(out))
+        if not d.eof:
+            raise ExtractError("%s: truncated stream" % kind)
+        data = next_member(d.unused_data)
+        if not data:
+            return bytes(out)
+        if not is_member(data):
+            raise ExtractError("%s: trailing garbage after stream" % kind)
+
+
+def _nul_tail(rest: bytes) -> bytes:
+    """gzip/bzip2: trailing NUL padding ends the stream."""
+    return rest if rest.strip(b"\x00") else b""
 
 
 def gunzip(data: bytes) -> bytes:
@@ -50,27 +71,10 @@ def gunzip(data: bytes) -> bytes:
     gzip file consists of a series of members" — pigz, rotated logs and
     `cat a.gz b.gz` all produce these; the gzip CLI and commons-compress'
     decompressConcatenated both decode the concatenation)."""
-    if not data.startswith(MAGIC):
-        raise ExtractError("gzip: bad magic")
-    out = bytearray()
-    remaining = data
-    while True:
-        d = zlib.decompressobj(wbits=31)
-        try:
-            out += d.decompress(remaining, MAX_INFLATED + 1 - len(out))
-        except zlib.error as exc:
-            raise ExtractError("gzip: %s" % exc)
-        if d.unconsumed_tail or len(out) > MAX_INFLATED:
-            raise ExtractError(
-                "gzip: inflated payload exceeds %d bytes" % MAX_INFLATED
-            )
-        if not d.eof:
-            raise ExtractError("gzip: truncated stream")
-        remaining = d.unused_data
-        if not remaining.strip(b"\x00"):
-            return bytes(out)
-        if not remaining.startswith(MAGIC):
-            raise ExtractError("gzip: trailing garbage after stream")
+    return _members(
+        "gzip", data, lambda: zlib.decompressobj(wbits=31),
+        lambda b: b.startswith(MAGIC), _nul_tail,
+    )
 
 
 def gzip_bytes(data: bytes) -> bytes:
@@ -87,31 +91,17 @@ def unxz(data: bytes) -> bytes:
     to concatenate .xz files as is"). NUL stream padding after a stream is
     stripped when its length is a multiple of 4 and rejected otherwise,
     as the xz file format spec (§2.2) and ``xz -dc`` do."""
-    if not data.startswith(XZ_MAGIC):
-        raise ExtractError("xz: bad magic")
-    out = bytearray()
-    remaining = data
-    while True:
-        d = _lzma.LZMADecompressor(format=_lzma.FORMAT_XZ)
-        try:
-            out += d.decompress(remaining, MAX_INFLATED + 1 - len(out))
-        except _lzma.LZMAError as exc:
-            raise ExtractError("xz: %s" % exc)
-        if len(out) > MAX_INFLATED:
-            raise ExtractError("xz: inflated payload exceeds %d bytes" % MAX_INFLATED)
-        if not d.eof:
-            raise ExtractError(
-                "xz: truncated stream"
-                if d.needs_input
-                else "xz: inflated payload exceeds %d bytes" % MAX_INFLATED
-            )
-        remaining = d.unused_data.lstrip(b"\x00")  # inter-stream padding
-        if (len(d.unused_data) - len(remaining)) % 4:
+
+    def next_member(rest: bytes) -> bytes:
+        data = rest.lstrip(b"\x00")
+        if (len(rest) - len(data)) % 4:
             raise ExtractError("xz: stream padding is not a multiple of 4 bytes")
-        if not remaining:
-            return bytes(out)
-        if not remaining.startswith(XZ_MAGIC):
-            raise ExtractError("xz: trailing garbage after stream")
+        return data
+
+    return _members(
+        "xz", data, lambda: _lzma.LZMADecompressor(format=_lzma.FORMAT_XZ),
+        lambda b: b.startswith(XZ_MAGIC), next_member,
+    )
 
 
 def xz_bytes(data: bytes) -> bytes:
@@ -125,45 +115,15 @@ def xz_bytes(data: bytes) -> bytes:
     return _lzma.compress(data, format=_lzma.FORMAT_XZ, preset=0)
 
 
+def _is_bz2(data: bytes) -> bool:
+    return data.startswith(BZ2_MAGIC) and data[3:4].isdigit() and data[3:4] != b"0"
+
+
 def unbz2(data: bytes) -> bytes:
     """Decode one or more CONCATENATED bzip2 streams (pbzip2 emits
     multi-stream files by default; bzip2(1) and commons-compress both
     decode the concatenation)."""
-    if not (
-        data.startswith(BZ2_MAGIC)
-        and len(data) > 3
-        and data[3:4].isdigit()
-        and data[3:4] != b"0"
-    ):
-        raise ExtractError("bz2: bad magic")
-    out = bytearray()
-    remaining = data
-    while True:
-        d = _bz2.BZ2Decompressor()
-        try:
-            out += d.decompress(remaining, MAX_INFLATED + 1 - len(out))
-        except OSError as exc:
-            raise ExtractError("bz2: %s" % exc)
-        if len(out) > MAX_INFLATED:
-            raise ExtractError(
-                "bz2: inflated payload exceeds %d bytes" % MAX_INFLATED
-            )
-        if not d.eof:
-            raise ExtractError(
-                "bz2: truncated stream"
-                if d.needs_input
-                else "bz2: inflated payload exceeds %d bytes" % MAX_INFLATED
-            )
-        remaining = d.unused_data
-        if not remaining.strip(b"\x00"):
-            return bytes(out)
-        if not (
-            remaining.startswith(BZ2_MAGIC)
-            and len(remaining) > 3
-            and remaining[3:4].isdigit()
-            and remaining[3:4] != b"0"
-        ):
-            raise ExtractError("bz2: trailing garbage after stream")
+    return _members("bz2", data, _bz2.BZ2Decompressor, _is_bz2, _nul_tail)
 
 
 def bz2_bytes(data: bytes) -> bytes:
@@ -259,7 +219,7 @@ def unz(data: bytes) -> bytes:
         stack.append(finchar)
         out.extend(reversed(stack))
         if len(out) > MAX_INFLATED:
-            raise ExtractError("z: inflated payload exceeds %d bytes" % MAX_INFLATED)
+            raise over_budget("z")
         if free_ent < maxmax:
             prefix[free_ent] = oldcode
             suffix[free_ent] = finchar
@@ -371,16 +331,9 @@ def unlzma(data: bytes) -> bytes:
         # rule, so such bytes never route here in the pipeline)
         raise ExtractError("lzma: implausible declared size")
     d = _lzma.LZMADecompressor(format=_lzma.FORMAT_ALONE)
-    try:
-        out = d.decompress(data, MAX_INFLATED)
-    except _lzma.LZMAError as exc:
-        raise ExtractError("lzma: %s" % exc)
+    out = inflate("lzma", d, data)
     if not d.eof:
-        raise ExtractError(
-            "lzma: truncated stream"
-            if d.needs_input
-            else "lzma: inflated payload exceeds %d bytes" % MAX_INFLATED
-        )
+        raise ExtractError("lzma: truncated stream")
     if d.unused_data.strip(b"\x00"):
         raise ExtractError("lzma: trailing garbage after stream")
     return out

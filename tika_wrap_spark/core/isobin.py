@@ -31,7 +31,7 @@ names only once an ``RR`` entry marks the tree, so the builder's root
 ``.`` record carries one.
 
 Malformed images (missing PVD, record/extent overruns, cycles,
-over-budget member bytes) raise :class:`ExtractError` ("iso:" prefix)
+member bytes past ``core.errors.MAX_INFLATED``) raise :class:`ExtractError` ("iso:" prefix)
 -> ``parse_ok=false`` rows, never task failures. The extraction core
 hands it bytes (:func:`core.errors.payload_bytes`).
 """
@@ -40,11 +40,10 @@ from __future__ import annotations
 
 import struct
 
-from tika_wrap_spark.core.errors import ExtractError
+from tika_wrap_spark.core.errors import MAX_INFLATED, ExtractError
 
 SECTOR = 2048
 MAX_MEMBERS = 4096
-MAX_TOTAL_BYTES = 64 * 1024 * 1024  # shared decompression-bomb budget
 MAX_DIR_DEPTH = 16
 
 
@@ -178,10 +177,8 @@ def parse_iso(data: bytes) -> list[tuple[str, bytes]]:
                         "iso: file extent overruns image (%s)" % child_path
                     )
                 total += length
-                if total > MAX_TOTAL_BYTES:
-                    raise ExtractError(
-                        "iso: member bytes exceed %d" % MAX_TOTAL_BYTES
-                    )
+                if total > MAX_INFLATED:
+                    raise ExtractError("iso: member bytes exceed %d" % MAX_INFLATED)
                 entries.append((child_path, data[fstart : fstart + length]))
 
     walk(_le32(root, 2), _le32(root, 10), "", 0, True)

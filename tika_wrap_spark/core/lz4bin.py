@@ -20,17 +20,14 @@ modes decode (the CLI default is linked: matches may reach back across
 block boundaries into the previous 64 KB of output).
 
 Any framing / checksum / sequence error raises ExtractError ->
-``parse_ok=false`` rows, never task failures. Decompressed size is
-capped per stream (the decompression-bomb guard shared with the other
-wrappers).
+``parse_ok=false`` rows, never task failures.
 """
 
 from __future__ import annotations
 
 import struct
 
-from tika_wrap_spark.core.errors import ExtractError
-from tika_wrap_spark.core.gzipbin import MAX_INFLATED
+from tika_wrap_spark.core.errors import MAX_INFLATED, ExtractError, over_budget
 
 LZ4_MAGIC = b"\x04\x22\x4d\x18"
 
@@ -110,7 +107,7 @@ def _block_decode(src: bytes, out: bytearray, window_base: int, limit: int) -> N
             raise ExtractError("lz4: literal run past block end")
         out += src[i : i + lit]
         if len(out) > limit:
-            raise ExtractError("lz4: inflated payload exceeds %d bytes" % limit)
+            raise over_budget("lz4")
         i += lit
         if i == n:
             return  # last sequence carries literals only
@@ -134,7 +131,7 @@ def _block_decode(src: bytes, out: bytearray, window_base: int, limit: int) -> N
                 if b != 255:
                     break
         if len(out) + mlen > limit:
-            raise ExtractError("lz4: inflated payload exceeds %d bytes" % limit)
+            raise over_budget("lz4")
         # overlap-safe copy: the source range may extend into bytes this
         # very match is producing (offset < mlen), so copy in chunks no
         # wider than the current distance-to-end
@@ -241,9 +238,7 @@ def _un_frame(data: bytes, start: int, budget: int) -> tuple[bytes, int]:
         if stored:
             out += block
             if len(out) > budget:
-                raise ExtractError(
-                    "lz4: inflated payload exceeds %d bytes" % MAX_INFLATED
-                )
+                raise over_budget("lz4")
         else:
             base = len(out) if indep else 0
             _block_decode(block, out, base, budget)

@@ -26,7 +26,7 @@ import zlib
 # make_portable's pickle-by-value shipping and raise ModuleNotFoundError
 # on any worker without the package on its path
 from tika_wrap_spark.core.exifbin import build_exif_app1, read_ifd, read_ifd_value
-from tika_wrap_spark.core.gzipbin import MAX_INFLATED
+from tika_wrap_spark.core.errors import MAX_INFLATED
 
 PNG_MAGIC = b"\x89PNG\r\n\x1a\n"
 JPEG_MAGIC = b"\xff\xd8"
@@ -780,21 +780,16 @@ def build_bmp_pixels(width: int, height: int, rgb: bytes, top_down: bool = False
     )
 
 
-def _png_unfilter(raw: bytes, width: int, height: int, bpp: int = 3) -> bytes | None:
+def png_unfilter(raw: bytes, rowlen: int, bpp: int) -> bytes | None:
     """Undo the five RFC 2083 row filters (None/Sub/Up/Average/Paeth) over
-    ``height`` rows of ``width*bpp`` bytes, each prefixed by a filter-type
-    byte. Returns the raw scanlines or None on malformed input, a length
-    other than exactly ``height`` rows included."""
-    rowlen = width * bpp
-    if len(raw) != (rowlen + 1) * height:
-        return None
+    whole rows of ``rowlen`` bytes, each prefixed by a filter-type byte,
+    with ``bpp`` bytes per pixel. Returns the raw scanlines, or None at an
+    unknown filter type. Shared by PNG pixels and PDF predictors."""
     out = bytearray()
     prev = bytearray(rowlen)
-    pos = 0
-    for _ in range(height):
+    for pos in range(0, len(raw), rowlen + 1):
         ft = raw[pos]
         row = bytearray(raw[pos + 1 : pos + 1 + rowlen])
-        pos += 1 + rowlen
         if ft == 0:
             pass
         elif ft == 1:  # Sub
@@ -860,7 +855,9 @@ def png_pixels(data: bytes) -> tuple[int, int, bytes] | None:
         raw = zlib.decompressobj().decompress(bytes(idat), h * (1 + 3 * w) + 1)
     except zlib.error:
         return None
-    rgb = _png_unfilter(raw, w, h, 3)
+    if len(raw) != (1 + 3 * w) * h:
+        return None
+    rgb = png_unfilter(raw, 3 * w, 3)
     if rgb is None:
         return None
     return (w, h, rgb)

@@ -41,7 +41,7 @@ x asc)) is the single reading-order implementation for both parsers.
 Malformations (missing ``startxref``, bad xref, unsupported filter,
 truncated stream, cyclic page tree) raise :class:`ExtractError`; the
 extraction core converts that to ``parse_ok=false`` rows — never a task
-failure. Decompression is bomb-capped (``MAX_INFLATED``).
+failure.
 
 The extraction core hands :func:`parse_real_pdf` bytes
 (:func:`core.errors.payload_bytes`).
@@ -57,10 +57,10 @@ import struct
 import zlib
 
 from tika_wrap_spark.core.aes import cbc_decrypt, cbc_encrypt
-from tika_wrap_spark.core.errors import ExtractError
+from tika_wrap_spark.core.errors import MAX_INFLATED, ExtractError, inflate, over_budget
+from tika_wrap_spark.core.media import png_unfilter
 from tika_wrap_spark.core.procmemo import proc_memo
 
-MAX_INFLATED = 64 * 1024 * 1024  # per-stream decompression bomb cap
 MAX_PAGES = 50_000
 MAX_OBJECTS = 1_000_000
 
@@ -235,44 +235,16 @@ def parse_object(data: bytes, i: int) -> tuple[object, int]:
 
 
 def _apply_png_predictor(data: bytes, colors: int, bpc: int, columns: int) -> bytes:
+    """PNG predictors (Predictor >= 10): a short last row is zero-padded,
+    an unknown filter type raises."""
     bpp = max(1, (colors * bpc) // 8)
     rowlen = (columns * colors * bpc + 7) // 8
-    out = bytearray()
-    prev = bytearray(rowlen)
-    i = 0
-    n = len(data)
-    while i < n:
-        ft = data[i]
-        row = bytearray(data[i + 1 : i + 1 + rowlen])
-        if len(row) < rowlen:
-            row.extend(b"\x00" * (rowlen - len(row)))
-        if ft == 0:
-            pass
-        elif ft == 1:  # Sub
-            for k in range(bpp, rowlen):
-                row[k] = (row[k] + row[k - bpp]) & 0xFF
-        elif ft == 2:  # Up
-            for k in range(rowlen):
-                row[k] = (row[k] + prev[k]) & 0xFF
-        elif ft == 3:  # Average
-            for k in range(rowlen):
-                left = row[k - bpp] if k >= bpp else 0
-                row[k] = (row[k] + ((left + prev[k]) >> 1)) & 0xFF
-        elif ft == 4:  # Paeth
-            for k in range(rowlen):
-                a = row[k - bpp] if k >= bpp else 0
-                b = prev[k]
-                cc = prev[k - bpp] if k >= bpp else 0
-                p = a + b - cc
-                pa, pb, pc = abs(p - a), abs(p - b), abs(p - cc)
-                pred = a if (pa <= pb and pa <= pc) else (b if pb <= pc else cc)
-                row[k] = (row[k] + pred) & 0xFF
-        else:
-            raise ExtractError("pdf: unsupported PNG predictor filter type %d" % ft)
-        out.extend(row)
-        prev = row
-        i += 1 + rowlen
-    return bytes(out)
+    data += bytes(-len(data) % (rowlen + 1))
+    out = png_unfilter(data, rowlen, bpp)
+    if out is None:
+        ft = next(b for b in data[:: rowlen + 1] if b > 4)
+        raise ExtractError("pdf: unsupported PNG predictor filter type %d" % ft)
+    return out
 
 
 def _lzw_decode(data: bytes, early: int = 1) -> bytes:
@@ -319,7 +291,7 @@ def _lzw_decode(data: bytes, early: int = 1) -> bytes:
                 raise ExtractError("pdf: LZW code out of sequence")
             out += entry
             if len(out) > MAX_INFLATED:
-                raise ExtractError("pdf: inflated stream exceeds cap")
+                raise over_budget("pdf")
             prev = entry
             # the decoder's table lags the encoder's by one entry (the
             # KwKwK asymmetry), so it must widen one code EARLIER than
@@ -406,7 +378,7 @@ def _rle_decode(data: bytes) -> bytes:
             out += data[i : i + 1] * (257 - length)
             i += 1
         if len(out) > MAX_INFLATED:
-            raise ExtractError("pdf: inflated stream exceeds cap")
+            raise over_budget("pdf")
     return bytes(out)
 
 
@@ -458,23 +430,9 @@ def decode_stream(sdict: dict, raw: bytes, resolve) -> bytes:
         flt = resolve(flt)
         pm = resolve(pm) or {}
         if flt == "FlateDecode":
-            try:
-                dec = zlib.decompressobj()
-                data = dec.decompress(data, MAX_INFLATED + 1)
-            except zlib.error as exc:
-                raise ExtractError("pdf: FlateDecode failed: %s" % exc)
-            if len(data) > MAX_INFLATED:
-                raise ExtractError("pdf: inflated stream exceeds cap")
-            pred = resolve(pm.get("Predictor", 1)) or 1
-            if pred >= 10:
-                data = _apply_png_predictor(
-                    data,
-                    int(resolve(pm.get("Colors", 1)) or 1),
-                    int(resolve(pm.get("BitsPerComponent", 8)) or 8),
-                    int(resolve(pm.get("Columns", 1)) or 1),
-                )
-            elif pred != 1:
-                raise ExtractError("pdf: unsupported predictor %d" % pred)
+            # each stream has the whole budget; one that stops short of its
+            # end marker keeps what it inflated
+            data = inflate("pdf", zlib.decompressobj(), data)
         elif flt == "ASCIIHexDecode":
             body = data.split(b">", 1)[0]
             hx = re.sub(rb"[^0-9a-fA-F]", b"", body)
@@ -490,6 +448,11 @@ def decode_stream(sdict: dict, raw: bytes, resolve) -> bytes:
                 raise ExtractError("pdf: ASCII85Decode failed: %s" % exc)
         elif flt == "LZWDecode":
             data = _lzw_decode(data, int(resolve(pm.get("EarlyChange", 1)) or 0))
+        elif flt == "RunLengthDecode":
+            data = _rle_decode(data)
+        else:
+            raise ExtractError("pdf: unsupported stream filter %s" % flt)
+        if flt in ("FlateDecode", "LZWDecode"):
             pred = resolve(pm.get("Predictor", 1)) or 1
             if pred >= 10:
                 data = _apply_png_predictor(
@@ -500,10 +463,6 @@ def decode_stream(sdict: dict, raw: bytes, resolve) -> bytes:
                 )
             elif pred != 1:
                 raise ExtractError("pdf: unsupported predictor %d" % pred)
-        elif flt == "RunLengthDecode":
-            data = _rle_decode(data)
-        else:
-            raise ExtractError("pdf: unsupported stream filter %s" % flt)
     return data
 
 

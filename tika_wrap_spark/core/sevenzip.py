@@ -40,7 +40,7 @@ import lzma as _lzma
 import struct
 import zlib
 
-from tika_wrap_spark.core.errors import ExtractError
+from tika_wrap_spark.core.errors import MAX_INFLATED, ExtractError, inflate, over_budget
 
 SEVENZ_MAGIC = b"7z\xbc\xaf\x27\x1c"
 
@@ -67,7 +67,6 @@ _LZMA2 = b"\x21"
 _LZMA1 = b"\x03\x01\x01"
 
 MAX_MEMBERS = 10_000
-MAX_FOLDER_OUT = 256 * 1024 * 1024  # decode bomb guard (pre-cap check)
 
 
 class _Reader:
@@ -126,9 +125,14 @@ class _Reader:
         return self.bitfield(n)
 
 
-def _decode_folder(coder_id: bytes, props: bytes, packed: bytes, out_size: int) -> bytes:
-    if out_size > MAX_FOLDER_OUT:
-        raise ExtractError("7z: folder output %d exceeds cap" % out_size)
+def _decode_folder(
+    coder_id: bytes, props: bytes, packed: bytes, out_size: int, used: int
+) -> bytes:
+    """One folder's output; ``used`` is what the archive's earlier folders
+    took of the one decompression budget. A declared output past the budget
+    is refused before anything is decoded."""
+    if used + out_size > MAX_INFLATED:
+        raise over_budget("7z")
     if coder_id == _COPY:
         if len(packed) < out_size:
             raise ExtractError("7z: copy stream shorter than declared")
@@ -162,15 +166,12 @@ def _decode_folder(coder_id: bytes, props: bytes, packed: bytes, out_size: int) 
     else:
         raise ExtractError("7z: unsupported coder %s" % coder_id.hex())
     dec = _lzma.LZMADecompressor(format=_lzma.FORMAT_RAW, filters=filters)
-    try:
-        out = dec.decompress(packed, out_size)
-    except _lzma.LZMAError as exc:
-        raise ExtractError("7z: %s" % exc)
-    if len(out) != out_size:
+    out = inflate("7z", dec, packed, used, out_size)
+    if len(out) < out_size:
         raise ExtractError(
             "7z: folder decoded %d bytes, declared %d" % (len(out), out_size)
         )
-    return out
+    return out[:out_size]  # a stream running past its declared size is cut there
 
 
 def _parse_streams_info(r: _Reader):
@@ -317,6 +318,7 @@ def _decode_all_folders(
     out: list[bytes] = []
     off = base + pack_pos
     pi = 0
+    used = 0
     for cid, props, n_pack, out_size, crc in folders:
         packed = b""
         for _ in range(n_pack):
@@ -328,7 +330,8 @@ def _decode_all_folders(
             packed += data[off : off + size]
             off += size
             pi += 1
-        blob = _decode_folder(cid, props, packed, out_size)
+        blob = _decode_folder(cid, props, packed, out_size, used)
+        used += len(blob)
         if crc is not None and zlib.crc32(blob) != crc:
             raise ExtractError("7z: folder CRC mismatch")
         out.append(blob)

@@ -37,12 +37,9 @@ from __future__ import annotations
 import sqlite3
 import struct
 
-from tika_wrap_spark.core.errors import ExtractError
+from tika_wrap_spark.core.errors import MAX_INFLATED, ExtractError
 
 SQLITE_MAGIC = b"SQLite format 3\x00"
-
-# total extracted chars cap (bomb policy analog)
-_MAX_TEXT = 64 << 20
 
 _PAGE_LEAF_TABLE = 13
 _PAGE_INTERIOR_TABLE = 5
@@ -304,7 +301,7 @@ def sqlite_extract(data: bytes) -> list[tuple[str, str]]:
             lines.append(",".join(_render(v) for v in values[: len(cols)]))
         block = "\n".join(lines)
         total += len(block)
-        if total > _MAX_TEXT:
+        if total > MAX_INFLATED:  # total extracted chars
             raise ExtractError("sqlite: extracted text exceeds cap")
         out.append((name, block))
     return out

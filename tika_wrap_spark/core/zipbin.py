@@ -30,8 +30,7 @@ from __future__ import annotations
 import struct
 import zlib
 
-from tika_wrap_spark.core.errors import ExtractError
-from tika_wrap_spark.core.gzipbin import MAX_INFLATED
+from tika_wrap_spark.core.errors import ExtractError, inflate
 
 LOCAL_MAGIC = b"PK\x03\x04"
 CENTRAL_MAGIC = b"PK\x01\x02"
@@ -99,6 +98,7 @@ def parse_zip(data: bytes) -> list[tuple[str, bytes]]:
         if n_total > 10_000_000:
             raise ExtractError("zip: zip64 member count exceeds cap")
     entries: list[tuple[str, bytes]] = []
+    inflated = 0  # the members' share of the one decompression budget
     pos = cd_off
     for _ in range(n_total):
         if pos + _CENTRAL_LEN > n or data[pos : pos + 4] != CENTRAL_MAGIC:
@@ -150,15 +150,10 @@ def parse_zip(data: bytes) -> list[tuple[str, bytes]]:
                 raise ExtractError("zip: stored member size mismatch in %r" % name[:40])
             payload = raw
         elif method == METHOD_DEFLATE:
-            # capped like gunzip: one byte past the declared size (and never
-            # past the bomb cap), no flush(), and the stream must end
+            # one byte past the declared size at most, and the stream must end
             d = zlib.decompressobj(-15)  # raw deflate, no zlib header
-            try:
-                payload = d.decompress(raw, min(usize, MAX_INFLATED) + 1)
-            except zlib.error as exc:
-                raise ExtractError("zip: bad deflate stream in %r (%s)" % (name[:40], exc))
-            if len(payload) > MAX_INFLATED:
-                raise ExtractError("zip: inflated payload exceeds %d bytes" % MAX_INFLATED)
+            payload = inflate("zip", d, raw, inflated, usize)
+            inflated += len(payload)
             if len(payload) == usize and not d.eof:
                 raise ExtractError("zip: truncated deflate stream in %r" % name[:40])
         else:

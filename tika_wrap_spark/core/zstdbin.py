@@ -22,8 +22,7 @@ format documentation), pure Python:
 
 Dictionaries raise (the declared unsupported seam — corpora ship
 self-contained frames). Every error raises :class:`ExtractError` ->
-``parse_ok=false`` rows, never task failures; decompressed size is
-capped per stream (the shared decompression-bomb guard).
+``parse_ok=false`` rows, never task failures.
 
 The builder twin :func:`zstd_bytes` emits spec-valid STORE frames (raw
 and RLE blocks only, content checksum on) — any zstd tool reads them.
@@ -37,8 +36,7 @@ from __future__ import annotations
 
 import struct
 
-from tika_wrap_spark.core.errors import ExtractError
-from tika_wrap_spark.core.gzipbin import MAX_INFLATED
+from tika_wrap_spark.core.errors import MAX_INFLATED, ExtractError, over_budget
 
 ZSTD_MAGIC = b"\x28\xb5\x2f\xfd"
 _SKIPPABLE_LO = 0x184D2A50
@@ -548,8 +546,6 @@ def _decode_sequences(ctx: _FrameCtx, src: bytes, lits: bytes) -> None:
         i = 3
     if nseq == 0:
         ctx.out += lits
-        if len(ctx.out) > MAX_INFLATED:
-            raise ExtractError("zstd: inflated payload exceeds %d bytes" % MAX_INFLATED)
         return
     if i >= len(src):
         raise ExtractError("zstd: missing compression modes byte")
@@ -626,14 +622,12 @@ def _decode_sequences(ctx: _FrameCtx, src: bytes, lits: bytes) -> None:
             pos += take
             remaining -= take
         if len(out) > MAX_INFLATED:
-            raise ExtractError("zstd: inflated payload exceeds %d bytes" % MAX_INFLATED)
+            raise over_budget("zstd")
         if s < nseq - 1:
             ll_s.update(bits)
             ml_s.update(bits)
             of_s.update(bits)
     out += lits[lit_pos:]
-    if len(out) > MAX_INFLATED:
-        raise ExtractError("zstd: inflated payload exceeds %d bytes" % MAX_INFLATED)
 
 
 def _decode_block(ctx: _FrameCtx, src: bytes) -> None:
@@ -742,9 +736,7 @@ def unzstd(data: bytes) -> bytes:
             else:
                 raise ExtractError("zstd: reserved block type")
             if len(out) + len(ctx.out) > MAX_INFLATED:
-                raise ExtractError(
-                    "zstd: inflated payload exceeds %d bytes" % MAX_INFLATED
-                )
+                raise over_budget("zstd")
             if last:
                 break
         if content_size is not None and len(ctx.out) != content_size:

@@ -1497,7 +1497,7 @@ N_ADVERSARIAL = 40
 
 def _wrapper_bombs() -> tuple[str, str, str]:
     """One decode bomb per compression wrapper: a payload that inflates past
-    ``gzipbin.MAX_INFLATED`` (64 MiB), pinning the bomb cap as corpus data —
+    ``errors.MAX_INFLATED`` (64 MiB), pinning the bomb cap as corpus data —
     the cap must register in the error taxonomy at soak scale, never fail a
     task. Memoized in the PROCESS-global store, for two stacked reasons:
     (1) an ``functools.lru_cache`` wrapper is not a plain function, so
