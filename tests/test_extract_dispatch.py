@@ -4,15 +4,17 @@
   pinned by one digest, so a dispatch change that moves any span, status,
   error or meta item (key order included — meta flows through Arrow into
   the store) fails here. The goldens cannot catch such drift: they are
-  generated by the same ``extract_document``.
+  generated by the same ``extract_document``. A second digest pins the
+  corpus rows themselves, doc ids included.
 * Every container and wrapper kind, reached 8 gzip layers deep, must
   report the depth cap (pdf parses first and reports its own error).
 * Truncated, bit-flipped and non-byte-stream payloads of every dispatched
   kind must fail in their format's error class, never as ``internal:`` or
   ``other``; a binary payload that is not a byte stream fails with the one
   message of ``errors.payload_bytes``.
-* A bomb of each kind with a hand-rolled or block-wise decoder fails with
-  the one cap message of ``errors.over_budget`` in the ``bomb`` class.
+* A bomb of each kind with a hand-rolled or block-wise decoder, and a PDF
+  attachment bomb, fail with the one cap message of
+  ``errors.over_budget`` in the ``bomb`` class.
 """
 
 import hashlib
@@ -36,14 +38,17 @@ from tika_wrap_spark.core.gzipbin import gzip_text, z_bytes
 from tika_wrap_spark.core.lz4bin import lz4_bytes
 from tika_wrap_spark.core.sevenzip import build_7z
 from tika_wrap_spark.core.zstdbin import zstd_bytes
-from tika_wrap_spark.core.pdfbin import is_real_pdf_text
+from tika_wrap_spark.core.pdfbin import build_pdf, is_real_pdf_text
 from tika_wrap_spark.core.sniff import sniff_kind
-from tika_wrap_spark.corpus import generate_corpus
+from tika_wrap_spark.corpus import adversarial_rows, generate_corpus
 from tika_wrap_spark.formats import error_classes
 
 # md5 over json.dumps([spans, parse_ok, error, list(meta.items())]) of
 # every document of generate_corpus(2000, seed=42), in corpus order
 CORPUS_42_DIGEST = "8270a1cdf715fa48fa750b571b3ff1d8"
+# md5 over json.dumps([doc_id, spans]) of every row of
+# generate_corpus(2000, seed=42) and then of adversarial_rows(3000)
+CORPUS_42_INPUT_DIGEST = "7aae90732587d3cc71677b9cf002bb93"
 
 _DEPTH_ERROR = "container nesting exceeds depth 8"
 # error of a truncated sample of each kind under 8 gzip layers; a pdf
@@ -125,6 +130,15 @@ def test_corpus_output_digest(corpus42):
     assert h.hexdigest() == CORPUS_42_DIGEST
 
 
+def test_corpus_input_digest(corpus42):
+    """The corpus rows themselves, doc ids included, which the output
+    digest never sees."""
+    h = hashlib.md5()
+    for row in corpus42 + adversarial_rows(3000):
+        h.update(json.dumps([row["doc_id"], row["spans"]]).encode())
+    assert h.hexdigest() == CORPUS_42_INPUT_DIGEST
+
+
 @pytest.mark.parametrize("kind", sorted(DEPTH_CAP_ERRORS))
 def test_depth_cap_order(samples, kind):
     text = next(t for _d, t, _m in samples[kind] if sniff_kind(t, "") == kind)
@@ -187,10 +201,13 @@ def _flate_bomb_pdf(data: bytes) -> bytes:
     return bytes(doc)
 
 
-# kind -> builder of a payload that inflates to its argument. CAB's one
-# folder inflates block by block, the 7z folder is refused on its declared
-# size. The .Z and lz4 codecs are pure Python: their cases take ~10 s and
-# ~45 s to build and decode, and run untraced (tracemalloc slows them ~10x).
+# case -> builder of a payload that inflates to its argument; a case is
+# named by its sniff kind, then "-" and a variant. CAB's one folder
+# inflates block by block, the 7z folder is refused on its declared size,
+# and a PDF attachment bomb fails the document rather than being dropped
+# like an attachment that does not decode. The .Z codec is pure Python:
+# its case takes ~10 s to build and decode, and runs untraced
+# (tracemalloc slows it ~10x).
 BOMBS = {
     "z": z_bytes,
     "lz4": lz4_bytes,
@@ -198,13 +215,17 @@ BOMBS = {
     "cab": lambda data: build_cab([("big.txt", data)]),
     "7z": lambda data: build_7z([("big.txt", data)]),
     "pdf": _flate_bomb_pdf,
+    "pdf-attachment": lambda data: build_pdf(
+        [[(72.0, 700.0, "x")]], attachments=[("big.bin", data)]
+    ),
 }
-UNTRACED = {"z", "lz4"}
+UNTRACED = {"z"}
 
 
-@pytest.mark.parametrize("kind", sorted(BOMBS))
-def test_bomb_hits_the_one_cap_in_the_bomb_class(kind):
-    payload = BOMBS[kind](bytes(65 << 20)).decode("latin-1")
+@pytest.mark.parametrize("case", sorted(BOMBS))
+def test_bomb_hits_the_one_cap_in_the_bomb_class(case):
+    kind = case.split("-")[0]
+    payload = BOMBS[case](bytes(65 << 20)).decode("latin-1")
     assert len(payload) < 1 << 20 and sniff_kind(payload, "") == kind
     if kind not in UNTRACED:
         tracemalloc.start()

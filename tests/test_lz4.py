@@ -71,6 +71,17 @@ def test_roundtrip():
         assert unlz4(lz4_bytes(payload)) == payload, len(payload)
 
 
+@pytest.mark.parametrize("period", [1, 2, 3, 7, 13])
+def test_periodic_payloads_roundtrip(period):
+    """A periodic payload encodes as overlapping matches (offset = period <
+    match length), which the decoder copies in doubling chunks from a fixed
+    source start; lengths off a multiple of the period end mid-period."""
+    unit = bytes(range(65, 65 + period))
+    for n in (period * 997 + period // 2, period * 20011 + period - 1):
+        payload = (unit * (n // period + 1))[:n]
+        assert unlz4(lz4_bytes(payload)) == payload, n
+
+
 def test_bad_frames_raise():
     good = lz4_bytes(b"hello lz4 world " * 64)
     with pytest.raises(ExtractError):

@@ -148,3 +148,23 @@ def test_registry_store_build_keeps_a_cached_corpus(spark, corpus, tmp_path, mon
     monkeypatch.setattr(tempfile, "gettempdir", lambda: str(tmp_path))
     assert qt._extracted_df(spark, str(tmp_path)).count() == 120  # noqa: SLF001
     assert corpus.storageLevel != StorageLevel.NONE
+
+
+def test_registry_store_completion_is_read_from_lineage(spark, corpus, tmp_path, monkeypatch):
+    """A store whose lineage commits every part is complete: the registry
+    reads one that ``run_extraction`` built with no further run."""
+    import tempfile
+
+    from tika_wrap_spark import pipeline
+    from tika_wrap_spark import queries_training as qt
+
+    monkeypatch.setattr(qt, "_corpus_df", lambda spark, d: corpus)
+    monkeypatch.setattr(qt, "_corpus_docs", lambda spark, d: 80)
+    monkeypatch.setattr(tempfile, "gettempdir", lambda: str(tmp_path))
+    # the registry's store dir for 80 docs, which make one ~64-doc part
+    out = str(tmp_path / ("tws_extract_store_%s" % qt._extract_store_key(80)))  # noqa: SLF001
+    run_extraction(spark, corpus, out, parts=1)
+    calls = []
+    monkeypatch.setattr(pipeline, "run_extraction", lambda *a, **kw: calls.append(a))
+    assert qt._extracted_df(spark, str(tmp_path)).count() == 120  # noqa: SLF001
+    assert calls == []

@@ -133,12 +133,13 @@ def _block_decode(src: bytes, out: bytearray, window_base: int, limit: int) -> N
         if len(out) + mlen > limit:
             raise over_budget("lz4")
         # overlap-safe copy: the source range may extend into bytes this
-        # very match is producing (offset < mlen), so copy in chunks no
-        # wider than the current distance-to-end
+        # very match is producing (offset < mlen). Everything from ``pos``
+        # on repeats with period ``offset``, so each turn copies all of it
+        # from the fixed start and the chunk doubles: log2(mlen/offset)
+        # turns, not mlen/offset
         while mlen > 0:
             take = min(mlen, len(out) - pos)
             out += out[pos : pos + take]
-            pos += take
             mlen -= take
 
 

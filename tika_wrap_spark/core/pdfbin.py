@@ -1183,7 +1183,8 @@ class RealPdf:
         (display name, decoded bytes) in tree order — [] when the
         document has no attachments. Depth/cycle-guarded; a malformed
         filespec degrades to fewer attachments, never an error (the
-        page text already extracted)."""
+        page text already extracted), but an attachment past the
+        decompression budget fails the document as a bomb."""
         root = self.resolve(self.trailer.get("Root"))
         if not isinstance(root, dict):
             return []
@@ -1220,7 +1221,9 @@ class RealPdf:
                         sdict, raw = fobj
                         try:
                             body = decode_stream(sdict, raw, self.resolve)
-                        except ExtractError:
+                        except ExtractError as exc:
+                            if str(exc) == str(over_budget("pdf")):
+                                raise  # a bomb fails the row, in class bomb
                             continue
                         out.append((label_of(pairs[k], spec), body))
             kids = self.resolve(node.get("Kids"))

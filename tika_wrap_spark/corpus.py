@@ -1515,375 +1515,220 @@ def _wrapper_bombs() -> tuple[str, str, str]:
     return memo["v"]
 
 
-def adversarial_rows(base: int) -> list[dict[str, Any]]:
-    """The ``N_ADVERSARIAL`` deterministic malformed docs appended after doc
-    index ``base`` — every parser's failure path pinned as corpus data."""
-    rows: list[dict[str, Any]] = []
-    rows.append(
-        {
-            "doc_id": "doc_%07d" % base,  # malformed html: unterminated tag
-            "spans": _make_spans(
-                [("html", "<!DOCTYPE html><html><body><p>broken <a href=" + "x" * 2000, "")]
-            ),
-        }
-    )
-    rows.append(
-        {
-            "doc_id": "doc_%07d" % (base + 1),  # truncated pdf: no %%EOF
-            "spans": _make_spans(
-                [("pdf", "%PDF-1.4\n%%Page: 1\nBT 72.0 700.0 Td (cut", "")]
-            ),
-        }
-    )
-    rows.append({"doc_id": "doc_%07d" % (base + 2), "spans": []})  # empty doc
-    rows.append(
-        {
-            "doc_id": "doc_%07d" % (base + 3),  # truncated container body
-            "spans": _make_spans(
-                [("zip", "PK\x03\x04TWC1\nE 8 5000\nbig.long payload cut short", "")]
-            ),
-        }
-    )
-    # container-depth bomb: self-nested past MAX_CONTAINER_DEPTH
-    bomb = "x"
+def _flip(text: str, index: int, mask: int) -> str:
+    """``text`` with the char at ``index`` (negative counts from the end)
+    XORed with ``mask``: a one-byte corruption of a byte-stream payload."""
+    i = index % len(text)
+    return text[:i] + chr(ord(text[i]) ^ mask) + text[i + 1 :]
+
+
+def _adversarial_payloads() -> list[tuple[str, str] | None]:
+    """The ``N_ADVERSARIAL`` malformed payloads as ``(kind hint, text)``
+    pairs in doc order, ``None`` for the empty doc. Each comment names the
+    failure path its entry pins; a new pin is one appended entry plus an
+    ``N_ADVERSARIAL`` bump."""
+    depth_bomb = "x"
     for _ in range(12):
-        bomb = build_container([("deep.twc", bomb)])
-    rows.append(
-        {"doc_id": "doc_%07d" % (base + 4), "spans": _make_spans([("zip", bomb, "")])}
-    )
-    # REAL zip, EOCD cut off: binary-parser truncation path
-    cut_zip = build_zip_text([("a.log", "member body text")])[:-12]
-    rows.append(
-        {"doc_id": "doc_%07d" % (base + 5), "spans": _make_spans([("zip", cut_zip, "")])}
-    )
-    # REAL zip with corrupted member bytes: CRC-mismatch path
-    bad_crc = build_zip_text([("x.log", "hello archive world")]).replace(
-        "hello", "jello", 1
-    )
-    rows.append(
-        {"doc_id": "doc_%07d" % (base + 6), "spans": _make_spans([("zip", bad_crc, "")])}
-    )
-    # REAL tar, end-of-archive zero blocks cut off
-    cut_tar = build_tar_text([("t.log", "tar member body")])[:-1024]
-    rows.append(
-        {"doc_id": "doc_%07d" % (base + 7), "spans": _make_spans([("tar", cut_tar, "")])}
-    )
-    # REAL gzip with a corrupted byte mid-stream: inflate/CRC failure path
+        depth_bomb = build_container([("deep.twc", depth_bomb)])
     gz = gzip_text("gzip wrapped text payload " * 4)
-    bad_gz = gz[:15] + chr((ord(gz[15]) + 1) % 256) + gz[16:]
-    rows.append(
-        {"doc_id": "doc_%07d" % (base + 8), "spans": _make_spans([("gzip", bad_gz, "")])}
-    )
-    # REAL binary pdf with a dangling xref pointer: pdfbin malformed-xref path
-    bad_pdf = build_pdf_text([[(72.0, 700.0, "doomed page")]])
-    bad_pdf = bad_pdf[: bad_pdf.rfind("startxref")] + "startxref\n999999999\n%%EOF\n"
-    rows.append(
-        {"doc_id": "doc_%07d" % (base + 9), "spans": _make_spans([("pdf", bad_pdf, "")])}
-    )
-    # decompression bombs, one per wrapper: inflate past the 64 MiB cap
     gz_bomb, xz_bomb, bz2_bomb = _wrapper_bombs()
-    rows.append(
-        {"doc_id": "doc_%07d" % (base + 10), "spans": _make_spans([("gzip", gz_bomb, "")])}
-    )
-    rows.append(
-        {"doc_id": "doc_%07d" % (base + 11), "spans": _make_spans([("gzip", xz_bomb, "")])}
-    )
-    rows.append(
-        {"doc_id": "doc_%07d" % (base + 12), "spans": _make_spans([("gzip", bz2_bomb, "")])}
-    )
-    # malformed rtf: group opened and never closed (core/rtf.py raise path)
-    rows.append(
-        {
-            "doc_id": "doc_%07d" % (base + 13),
-            "spans": _make_spans(
-                [("rtf", "{\\rtf1\\ansi {\\b bold run never closed", "")]
-            ),
-        }
-    )
-    # malformed eml: multipart whose closing --boundary-- is cut off
-    cut_eml = build_eml(
-        "truncated message",
-        "mailer@example.invalid",
-        "inbox@example.invalid",
-        "body before the cut",
-        "<html><body><p>html part body</p></body></html>",
-    ).rsplit("--=_twc_boundary_001--", 1)[0]
-    rows.append(
-        {"doc_id": "doc_%07d" % (base + 14), "spans": _make_spans([("eml", cut_eml, "")])}
-    )
-    # truncated CFB: header intact, sectors cut (olebin sector-bounds path)
-    cut_ole = build_doc("doomed legacy document body")[:700].decode("latin-1")
-    rows.append(
-        {"doc_id": "doc_%07d" % (base + 15), "spans": _make_spans([("ole", cut_ole, "")])}
-    )
-    # .doc with an out-of-bounds Clx pointer (olebin FIB-validation path)
-    bad_doc = bytearray(build_doc("clx pointer goes nowhere"))
     # WordDocument stream rides the mini-stream; corrupt fcClx via the raw
     # bytes: find the FIB ident and overwrite fcClx at +0x01A2
+    bad_doc = bytearray(build_doc("clx pointer goes nowhere"))
     ident = bad_doc.find(b"\xec\xa5")
     bad_doc[ident + 0x01A2 : ident + 0x01A6] = b"\xff\xff\xff\x0f"
-    rows.append(
-        {
-            "doc_id": "doc_%07d" % (base + 16),
-            "spans": _make_spans([("ole", bytes(bad_doc).decode("latin-1"), "")]),
-        }
-    )
-    # RC4-encrypted pdf with a NON-empty user password: the transparent
-    # empty-password open fails -> "pdf: encrypted (password required)"
-    locked_pdf = build_pdf_text(
-        [[(72.0, 700.0, "locked away")]], encrypt="rc4-128", encrypt_user_pw=b"secret"
-    )
-    rows.append(
-        {"doc_id": "doc_%07d" % (base + 17), "spans": _make_spans([("pdf", locked_pdf, "")])}
-    )
-    # unterminated iCalendar: VEVENT opened, END cut off (core/ical.py
-    # raise path -> 'ics' taxonomy class)
-    cut_ics = build_ics([{"summary": "meeting that never ends"}]).rsplit(
-        "END:VEVENT", 1
-    )[0]
-    rows.append(
-        {"doc_id": "doc_%07d" % (base + 18), "spans": _make_spans([("ics", cut_ics, "")])}
-    )
-    # Outlook .msg with property streams but neither subject nor body
-    # (olebin msg-validation path -> 'msg:' prefix, 'ole' taxonomy class)
-    empty_msg = build_cfb(
-        [
-            ("__substg1.0_0C1A001F", "Orphan Sender".encode("utf-16-le")),
-            ("__properties_version1.0", b"\x00" * 32),
-        ]
-    ).decode("latin-1")
-    rows.append(
-        {"doc_id": "doc_%07d" % (base + 19), "spans": _make_spans([("ole", empty_msg, "")])}
-    )
-    # truncated SQLite database: header intact, b-tree pages cut
-    # (sqlitebin bounds-check path -> 'sqlite' taxonomy class)
-    cut_db = build_sqlite(
-        [("doomed", ["id_n", "body"], [(1, "row that will never be read")])]
-    )[:300].decode("latin-1")
-    rows.append(
-        {
-            "doc_id": "doc_%07d" % (base + 20),
-            "spans": _make_spans([("sqlite", cut_db, "")]),
-        }
-    )
-    # truncated font: offset table intact, name table past EOF
-    # (fontbin bounds-check path -> 'font' taxonomy class)
-    cut_font = build_sfnt("Doomed Grotesk")[:40].decode("latin-1")
-    rows.append(
-        {
-            "doc_id": "doc_%07d" % (base + 21),
-            "spans": _make_spans([("font", cut_font, "")]),
-        }
-    )
-    # truncated WARC: Content-Length overruns the payload (warcbin
-    # bounds-check path -> 'warc' taxonomy class)
-    cut_warc = build_warc(
-        [("https://cut.example.org/page", "text/html", "<html><body>doomed")]
-    )[:-40]
-    rows.append(
-        {
-            "doc_id": "doc_%07d" % (base + 22),
-            "spans": _make_spans([("warc", cut_warc, "")]),
-        }
-    )
-    # mbox with an EMPTY envelope sender in the From_ separator (the '@'
-    # sniff corroborator sits after the double space, so the payload still
-    # routes mbox; parse_mbox raise path -> 'mbox' taxonomy class)
-    bad_mbox = (
-        "From  doomed@example.invalid Thu Jan  1 00:00:00 2026\n"
-        "From: doomed@example.invalid\n"
-        "Subject: empty envelope sender\n\nbody line\n"
-    )
-    rows.append(
-        {
-            "doc_id": "doc_%07d" % (base + 23),
-            "spans": _make_spans([("mbox", bad_mbox, "")]),
-        }
-    )
-    # truncated binary plist: magic intact, trailer cut (plistbin
-    # bounds-check path -> 'plist' taxonomy class)
-    cut_plist = build_bplist({"doomed": ["never", "read"]})[:-12].decode("latin-1")
-    rows.append(
-        {
-            "doc_id": "doc_%07d" % (base + 24),
-            "spans": _make_spans([("plist", cut_plist, "")]),
-        }
-    )
-    # truncated ar archive: global magic + member header intact, member
-    # data cut (arbin bounds-check path -> 'archive' taxonomy class via
-    # the 'ar:' error prefix)
-    cut_ar = build_ar_text(
-        [("debian-binary", "2.0\n"), ("doomed.txt", "x" * 400)]
-    )[:-200]
-    rows.append(
-        {
-            "doc_id": "doc_%07d" % (base + 25),
-            "spans": _make_spans([("ar", cut_ar, "")]),
-        }
-    )
-    # truncated cpio archive: entry header intact, data cut before the
-    # TRAILER!!! terminator (cpiobin bounds-check path -> 'archive'
-    # taxonomy class via the 'cpio:' error prefix)
-    cut_cpio = build_cpio_text([("doomed/d.txt", "y" * 400)])[:-200]
-    rows.append(
-        {
-            "doc_id": "doc_%07d" % (base + 26),
-            "spans": _make_spans([("cpio", cut_cpio, "")]),
-        }
-    )
-    # corrupt .Z compress stream: valid magic + flags, then a first code
-    # outside the literal range (0x1ff at 9 bits) — unz's
-    # first-code-must-be-a-literal check -> 'z:' prefix in the 'archive'
-    # taxonomy class (a merely-truncated .Z decodes short by design: the
-    # format carries no trailer, exactly like the reference decoder)
-    bad_z = "\x1f\x9d\x90\xff\xff\xff\xff"
-    rows.append(
-        {
-            "doc_id": "doc_%07d" % (base + 27),
-            "spans": _make_spans([("z", bad_z, "")]),
-        }
-    )
-    # truncated dBase table: header promises more records than the payload
-    # carries (dbfbin record-overrun check -> 'dbf' taxonomy class)
-    cut_dbf = build_dbf_text(
-        ["ID", "NAME"], [[str(i), "row_%d" % i] for i in range(8)]
-    )[:-40]
-    rows.append(
-        {
-            "doc_id": "doc_%07d" % (base + 28),
-            "spans": _make_spans([("dbf", cut_dbf, "")]),
-        }
-    )
-    # corrupted TNEF stream: one attachment-data byte flipped so the
-    # attribute checksum fails (tnefbin verify path -> 'tnef' taxonomy
-    # class) — the checksum is the format's only integrity device
-    good_tnef = build_tnef_text("doomed", "body", [("a.txt", "x" * 200)])
-    bad_tnef = good_tnef[:-50] + chr(ord(good_tnef[-50]) ^ 0x01) + good_tnef[-49:]
-    rows.append(
-        {
-            "doc_id": "doc_%07d" % (base + 29),
-            "spans": _make_spans([("tnef", bad_tnef, "")]),
-        }
-    )
-    # corrupt LZ4 frame: a flipped content-checksum byte (unlz4's xxh32
-    # verify path -> 'lz4:' prefix in the 'archive' taxonomy class; the
-    # strict decoder also catches truncated blocks and bad header HC)
-    good_lz4 = lz4_text("doomed lz4 payload " * 40)
-    bad_lz4 = good_lz4[:-1] + chr(ord(good_lz4[-1]) ^ 0xFF)
-    rows.append(
-        {
-            "doc_id": "doc_%07d" % (base + 30),
-            "spans": _make_spans([("lz4", bad_lz4, "")]),
-        }
-    )
-    # truncated MIDI: the last track's declared MTrk length overruns the
-    # cut file (midibin track-bounds check -> 'midi' taxonomy class)
-    cut_midi = build_midi_text([[("track_name", "Doomed"), ("lyric", "x" * 80)]])[:-60]
-    rows.append(
-        {
-            "doc_id": "doc_%07d" % (base + 31),
-            "spans": _make_spans([("midi", cut_midi, "")]),
-        }
-    )
-    # CRC-corrupt 7z: one flipped Copy-coded pack-stream byte so the
-    # substream CRC verify fails ('7z:' prefix, 'archive' taxonomy class;
-    # Copy guarantees the CRC path fires — an LZMA flip would usually
-    # trip the entropy decoder first)
-    good_7z = build_7z_text([("doomed.txt", "y" * 300)], codec="copy")
-    bad_7z = good_7z[:40] + chr(ord(good_7z[40]) ^ 0xFF) + good_7z[41:]
-    rows.append(
-        {
-            "doc_id": "doc_%07d" % (base + 32),
-            "spans": _make_spans([("7z", bad_7z, "")]),
-        }
-    )
-    # CRC-corrupt RAR5: one flipped stored-member data byte so the member
-    # CRC verify fails ('rar:' prefix in the 'archive' taxonomy class;
-    # header CRCs stay intact — the data area sits between them)
-    good_rar = build_rar_text([("doomed.txt", "w" * 250)])
-    bad_rar = good_rar[:-30] + chr(ord(good_rar[-30]) ^ 0x01) + good_rar[-29:]
-    rows.append(
-        {
-            "doc_id": "doc_%07d" % (base + 33),
-            "spans": _make_spans([("rar", bad_rar, "")]),
-        }
-    )
-    # checksum-corrupt zstd frame: one flipped content-checksum byte
-    # (unzstd's xxh64 verify path -> 'zstd:' prefix in the 'archive'
-    # taxonomy class; the strict decoder also catches truncated blocks,
-    # reserved bits and frame-size mismatches)
-    good_zst = zstd_text("doomed zstd payload " * 30)
-    bad_zst = good_zst[:-1] + chr(ord(good_zst[-1]) ^ 0xFF)
-    rows.append(
-        {
-            "doc_id": "doc_%07d" % (base + 34),
-            "spans": _make_spans([("zstd", bad_zst, "")]),
-        }
-    )
-    # truncated .lzma alone stream: the 13-byte header declares an
-    # EOS-terminated stream but the cut body never reaches the end
-    # marker (liblzma's needs_input path -> 'lzma: truncated stream',
-    # 'archive' taxonomy class)
     good_lzma = lzma_text("doomed lzma payload " * 30)
-    rows.append(
-        {
-            "doc_id": "doc_%07d" % (base + 35),
-            "spans": _make_spans([("lzma", good_lzma[: len(good_lzma) // 2], "")]),
-        }
-    )
-    # truncated ISO 9660 image: the directory tree survives the cut but a
-    # file extent points past end-of-image ('iso: file extent overruns
-    # image' -> 'iso:' prefix, 'archive' taxonomy class)
-    good_iso = build_iso_text(
-        [("doomed.txt", "iso payload " * 40), ("sub/deep.txt", "x" * 3000)]
-    )
-    rows.append(
-        {
-            "doc_id": "doc_%07d" % (base + 36),
-            "spans": _make_spans([("iso", good_iso[: 23 * 2048], "")]),
-        }
-    )
-    # checksum-corrupt MSZIP cabinet: one flipped compressed-data byte so
-    # the [MS-CAB] CFDATA checksum verify fails ('cab:' prefix, 'archive'
-    # taxonomy class; the strict parser also catches bad CK signatures
-    # and block/stream overruns)
-    good_cab = build_cab_text([("doomed.txt", "cab payload " * 50)], mszip=True)
-    bad_cab = good_cab[:-2] + chr(ord(good_cab[-2]) ^ 0x55) + good_cab[-1]
-    rows.append(
-        {
-            "doc_id": "doc_%07d" % (base + 37),
-            "spans": _make_spans([("cab", bad_cab, "")]),
-        }
-    )
-    # sync-corrupt Avro container: one flipped byte in the trailing sync
-    # marker so the per-block verify fails ('avro:' prefix -> 'avro'
-    # taxonomy class)
-    good_avro = build_avro_text(
-        [("id_0", "long"), ("name_1", "string")],
-        [[i, "doomed"] for i in range(8)],
-    )
-    bad_avro = good_avro[:-1] + chr(ord(good_avro[-1]) ^ 0xFF)
-    rows.append(
-        {
-            "doc_id": "doc_%07d" % (base + 38),
-            "spans": _make_spans([("avro", bad_avro, "")]),
-        }
-    )
-    # footer-corrupt Parquet: the high byte of the LE metadata-length
-    # word blows the declared footer past the file ('parquet:' prefix ->
-    # 'parquet' taxonomy class; framing magics stay intact — a flip
-    # inside created_by would parse clean, the LENGTH field cannot)
     good_pq = build_parquet_text(
         ["id_0", "name_1"], [[i, "doomed"] for i in range(8)], ["long", "string"]
     )
-    bad_pq = good_pq[:-6] + "\xff" + good_pq[-5:]
-    rows.append(
+    return [
+        # malformed html: unterminated tag
+        ("html", "<!DOCTYPE html><html><body><p>broken <a href=" + "x" * 2000),
+        # truncated pdf: no %%EOF
+        ("pdf", "%PDF-1.4\n%%Page: 1\nBT 72.0 700.0 Td (cut"),
+        None,  # empty doc
+        # truncated container body
+        ("zip", "PK\x03\x04TWC1\nE 8 5000\nbig.long payload cut short"),
+        # container-depth bomb: self-nested past MAX_CONTAINER_DEPTH
+        ("zip", depth_bomb),
+        # REAL zip, EOCD cut off: binary-parser truncation path
+        ("zip", build_zip_text([("a.log", "member body text")])[:-12]),
+        # REAL zip with corrupted member bytes: CRC-mismatch path
+        ("zip", build_zip_text([("x.log", "hello archive world")]).replace("hello", "jello", 1)),
+        # REAL tar, end-of-archive zero blocks cut off
+        ("tar", build_tar_text([("t.log", "tar member body")])[:-1024]),
+        # REAL gzip with a corrupted byte mid-stream: inflate/CRC failure path
+        ("gzip", gz[:15] + chr((ord(gz[15]) + 1) % 256) + gz[16:]),
+        # REAL binary pdf with a dangling xref pointer: pdfbin malformed-xref path
+        (
+            "pdf",
+            build_pdf_text([[(72.0, 700.0, "doomed page")]]).rsplit("startxref", 1)[0]
+            + "startxref\n999999999\n%%EOF\n",
+        ),
+        # decompression bombs, one per wrapper: inflate past the 64 MiB cap
+        ("gzip", gz_bomb),
+        ("gzip", xz_bomb),
+        ("gzip", bz2_bomb),
+        # malformed rtf: group opened and never closed (core/rtf.py raise path)
+        ("rtf", "{\\rtf1\\ansi {\\b bold run never closed"),
+        # malformed eml: multipart whose closing --boundary-- is cut off
+        (
+            "eml",
+            build_eml(
+                "truncated message",
+                "mailer@example.invalid",
+                "inbox@example.invalid",
+                "body before the cut",
+                "<html><body><p>html part body</p></body></html>",
+            ).rsplit("--=_twc_boundary_001--", 1)[0],
+        ),
+        # truncated CFB: header intact, sectors cut (olebin sector-bounds path)
+        ("ole", build_doc("doomed legacy document body")[:700].decode("latin-1")),
+        # .doc with an out-of-bounds Clx pointer (olebin FIB-validation path)
+        ("ole", bytes(bad_doc).decode("latin-1")),
+        # RC4-encrypted pdf with a NON-empty user password: the transparent
+        # empty-password open fails -> "pdf: encrypted (password required)"
+        (
+            "pdf",
+            build_pdf_text(
+                [[(72.0, 700.0, "locked away")]], encrypt="rc4-128", encrypt_user_pw=b"secret"
+            ),
+        ),
+        # unterminated iCalendar: VEVENT opened, END cut off (core/ical.py
+        # raise path -> 'ics' taxonomy class)
+        ("ics", build_ics([{"summary": "meeting that never ends"}]).rsplit("END:VEVENT", 1)[0]),
+        # Outlook .msg with property streams but neither subject nor body
+        # (olebin msg-validation path -> 'msg:' prefix, 'ole' taxonomy class)
+        (
+            "ole",
+            build_cfb(
+                [
+                    ("__substg1.0_0C1A001F", "Orphan Sender".encode("utf-16-le")),
+                    ("__properties_version1.0", b"\x00" * 32),
+                ]
+            ).decode("latin-1"),
+        ),
+        # truncated SQLite database: header intact, b-tree pages cut
+        # (sqlitebin bounds-check path -> 'sqlite' taxonomy class)
+        (
+            "sqlite",
+            build_sqlite([("doomed", ["id_n", "body"], [(1, "row that will never be read")])])[
+                :300
+            ].decode("latin-1"),
+        ),
+        # truncated font: offset table intact, name table past EOF
+        # (fontbin bounds-check path -> 'font' taxonomy class)
+        ("font", build_sfnt("Doomed Grotesk")[:40].decode("latin-1")),
+        # truncated WARC: Content-Length overruns the payload (warcbin
+        # bounds-check path -> 'warc' taxonomy class)
+        (
+            "warc",
+            build_warc([("https://cut.example.org/page", "text/html", "<html><body>doomed")])[:-40],
+        ),
+        # mbox with an EMPTY envelope sender in the From_ separator (the '@'
+        # sniff corroborator sits after the double space, so the payload still
+        # routes mbox; parse_mbox raise path -> 'mbox' taxonomy class)
+        (
+            "mbox",
+            "From  doomed@example.invalid Thu Jan  1 00:00:00 2026\n"
+            "From: doomed@example.invalid\n"
+            "Subject: empty envelope sender\n\nbody line\n",
+        ),
+        # truncated binary plist: magic intact, trailer cut (plistbin
+        # bounds-check path -> 'plist' taxonomy class)
+        ("plist", build_bplist({"doomed": ["never", "read"]})[:-12].decode("latin-1")),
+        # truncated ar archive: global magic + member header intact, member
+        # data cut (arbin bounds-check path -> 'archive' taxonomy class via
+        # the 'ar:' error prefix)
+        ("ar", build_ar_text([("debian-binary", "2.0\n"), ("doomed.txt", "x" * 400)])[:-200]),
+        # truncated cpio archive: entry header intact, data cut before the
+        # TRAILER!!! terminator (cpiobin bounds-check path -> 'archive'
+        # taxonomy class via the 'cpio:' error prefix)
+        ("cpio", build_cpio_text([("doomed/d.txt", "y" * 400)])[:-200]),
+        # corrupt .Z compress stream: valid magic + flags, then a first code
+        # outside the literal range (0x1ff at 9 bits) — unz's
+        # first-code-must-be-a-literal check -> 'z:' prefix in the 'archive'
+        # taxonomy class (a merely-truncated .Z decodes short by design: the
+        # format carries no trailer, exactly like the reference decoder)
+        ("z", "\x1f\x9d\x90\xff\xff\xff\xff"),
+        # truncated dBase table: header promises more records than the payload
+        # carries (dbfbin record-overrun check -> 'dbf' taxonomy class)
+        ("dbf", build_dbf_text(["ID", "NAME"], [[str(i), "row_%d" % i] for i in range(8)])[:-40]),
+        # corrupted TNEF stream: one attachment-data byte flipped so the
+        # attribute checksum fails (tnefbin verify path -> 'tnef' taxonomy
+        # class) — the checksum is the format's only integrity device
+        ("tnef", _flip(build_tnef_text("doomed", "body", [("a.txt", "x" * 200)]), -50, 0x01)),
+        # corrupt LZ4 frame: a flipped content-checksum byte (unlz4's xxh32
+        # verify path -> 'lz4:' prefix in the 'archive' taxonomy class; the
+        # strict decoder also catches truncated blocks and bad header HC)
+        ("lz4", _flip(lz4_text("doomed lz4 payload " * 40), -1, 0xFF)),
+        # truncated MIDI: the last track's declared MTrk length overruns the
+        # cut file (midibin track-bounds check -> 'midi' taxonomy class)
+        ("midi", build_midi_text([[("track_name", "Doomed"), ("lyric", "x" * 80)]])[:-60]),
+        # CRC-corrupt 7z: one flipped Copy-coded pack-stream byte so the
+        # substream CRC verify fails ('7z:' prefix, 'archive' taxonomy class;
+        # Copy guarantees the CRC path fires — an LZMA flip would usually
+        # trip the entropy decoder first)
+        ("7z", _flip(build_7z_text([("doomed.txt", "y" * 300)], codec="copy"), 40, 0xFF)),
+        # CRC-corrupt RAR5: one flipped stored-member data byte so the member
+        # CRC verify fails ('rar:' prefix in the 'archive' taxonomy class;
+        # header CRCs stay intact — the data area sits between them)
+        ("rar", _flip(build_rar_text([("doomed.txt", "w" * 250)]), -30, 0x01)),
+        # checksum-corrupt zstd frame: one flipped content-checksum byte
+        # (unzstd's xxh64 verify path -> 'zstd:' prefix in the 'archive'
+        # taxonomy class; the strict decoder also catches truncated blocks,
+        # reserved bits and frame-size mismatches)
+        ("zstd", _flip(zstd_text("doomed zstd payload " * 30), -1, 0xFF)),
+        # truncated .lzma alone stream: the 13-byte header declares an
+        # EOS-terminated stream but the cut body never reaches the end
+        # marker (liblzma's needs_input path -> 'lzma: truncated stream',
+        # 'archive' taxonomy class)
+        ("lzma", good_lzma[: len(good_lzma) // 2]),
+        # truncated ISO 9660 image: the directory tree survives the cut but a
+        # file extent points past end-of-image ('iso: file extent overruns
+        # image' -> 'iso:' prefix, 'archive' taxonomy class)
+        (
+            "iso",
+            build_iso_text([("doomed.txt", "iso payload " * 40), ("sub/deep.txt", "x" * 3000)])[
+                : 23 * 2048
+            ],
+        ),
+        # checksum-corrupt MSZIP cabinet: one flipped compressed-data byte so
+        # the [MS-CAB] CFDATA checksum verify fails ('cab:' prefix, 'archive'
+        # taxonomy class; the strict parser also catches bad CK signatures
+        # and block/stream overruns)
+        ("cab", _flip(build_cab_text([("doomed.txt", "cab payload " * 50)], mszip=True), -2, 0x55)),
+        # sync-corrupt Avro container: one flipped byte in the trailing sync
+        # marker so the per-block verify fails ('avro:' prefix -> 'avro'
+        # taxonomy class)
+        (
+            "avro",
+            _flip(
+                build_avro_text(
+                    [("id_0", "long"), ("name_1", "string")], [[i, "doomed"] for i in range(8)]
+                ),
+                -1,
+                0xFF,
+            ),
+        ),
+        # footer-corrupt Parquet: the high byte of the LE metadata-length
+        # word blows the declared footer past the file ('parquet:' prefix ->
+        # 'parquet' taxonomy class; framing magics stay intact — a flip
+        # inside created_by would parse clean, the LENGTH field cannot)
+        ("parquet", good_pq[:-6] + "\xff" + good_pq[-5:]),
+    ]
+
+
+def adversarial_rows(base: int) -> list[dict[str, Any]]:
+    """The ``N_ADVERSARIAL`` deterministic malformed docs appended after doc
+    index ``base`` — every parser's failure path pinned as corpus data."""
+    return [
         {
-            "doc_id": "doc_%07d" % (base + 39),
-            "spans": _make_spans([("parquet", bad_pq, "")]),
+            "doc_id": "doc_%07d" % (base + position),
+            "spans": _make_spans([(*pair, "")] if pair else []),
         }
-    )
-    return rows
+        for position, pair in enumerate(_adversarial_payloads())
+    ]
 
 
 def generate_corpus(n_docs: int, seed: int = 42, adversarial: bool = True) -> list[dict[str, Any]]:

@@ -3536,68 +3536,62 @@ def _extracted_df(spark, d):
     consistent read (`read_extracted` — partition-pruned, shuffle-free),
     instead of re-running extraction per query. The first caller per
     (corpus size, content key) builds the store under the system temp dir;
-    later callers get the pruned scan. Crash-safe: the completion marker
-    is written only after run_extraction commits all lineage, and
-    run_extraction itself resumes any partial store. The live-extraction
+    later callers get the pruned scan. Crash-safe: the store is complete
+    once lineage commits every part (run_extraction commits a row for each
+    part, empty ones included, after its data lands), and run_extraction
+    itself resumes any partial store. The live-extraction
     benchmarks (`extract_pipeline`, `container_extract`, `fixture_verify`)
     deliberately do NOT use this — they measure extraction itself."""
     import tempfile  # noqa: PLC0415
+    import time  # noqa: PLC0415
 
-    from tika_wrap_spark.pipeline import read_extracted, run_extraction  # noqa: PLC0415
+    from tika_wrap_spark import pipeline  # noqa: PLC0415
 
     n = _corpus_docs(spark, d)
     # ~64 docs a part; stable per store, since n is in the store key
-    parts = min(64, max(1, n // 64))
+    parts = range(min(64, max(1, n // 64)))
     out = os.path.join(
         tempfile.gettempdir(), "tws_extract_store_%s" % _extract_store_key(n)
     )
-    marker = os.path.join(out, "_COMPLETE")
-    if not os.path.exists(marker):
+    if not pipeline.committed_parts(spark, out).issuperset(parts):
         # cross-process guard: one builder at a time (the driver runs
         # queries sequentially — this only matters for concurrent dev
-        # sessions). mkdir is atomic; a second process waits for the
-        # marker, then falls through to a resumed (idempotent) build if
-        # the first builder died and left a stale lock.
-        import time  # noqa: PLC0415
-
+        # sessions). mkdir is atomic; a second process waits for the lock
+        # to go, then checks lineage again, and resumes the (idempotent)
+        # build if the first builder died and left its work or a stale
+        # lock behind. A build takes well under 3 min.
         lock = out + ".lock"
         try:
             os.mkdir(lock)
             owner = True
         except FileExistsError:
             owner = False
-            for _ in range(180):  # a build takes well under 3 min; a
-                # stale lock (crashed builder) falls through to a
-                # resumed idempotent build
-                if os.path.exists(marker):
+            for _ in range(180):
+                if not os.path.exists(lock):
                     break
                 time.sleep(1)
-        if not os.path.exists(marker):
-            # the build reads its corpus twice (snapshot hash, extraction):
-            # persist it so it is synthesized once, unless the caller's
-            # frame is already cached (then it is theirs to unpersist)
-            corpus = _corpus_df(spark, d)
-            own_cache = corpus.storageLevel == StorageLevel.NONE
-            if own_cache:
-                corpus.persist()
-            try:
-                run_extraction(spark, corpus, out, parts=parts)
-                with open(marker, "w") as f:
-                    f.write("ok")
-            finally:
+        try:
+            if not pipeline.committed_parts(spark, out).issuperset(parts):
+                # the build reads its corpus twice (snapshot hash,
+                # extraction): persist it so it is synthesized once, unless
+                # the caller's frame is already cached (then it is theirs
+                # to unpersist)
+                corpus = _corpus_df(spark, d)
+                own_cache = corpus.storageLevel == StorageLevel.NONE
                 if own_cache:
-                    corpus.unpersist()
-                if owner:
-                    try:
-                        os.rmdir(lock)
-                    except OSError:
-                        pass
-        elif owner:
-            try:
-                os.rmdir(lock)
-            except OSError:
-                pass
-    return read_extracted(spark, out)
+                    corpus.persist()
+                try:
+                    pipeline.run_extraction(spark, corpus, out, parts=len(parts))
+                finally:
+                    if own_cache:
+                        corpus.unpersist()
+        finally:
+            if owner:
+                try:
+                    os.rmdir(lock)
+                except OSError:
+                    pass
+    return pipeline.read_extracted(spark, out)
 
 
 def q_extract_pipeline(spark, d):
