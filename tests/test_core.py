@@ -5,7 +5,7 @@ import pytest
 from tika_wrap_spark.core.errors import ExtractError
 from tika_wrap_spark.core.extract import _stringify, extract_document
 from tika_wrap_spark.core.html import extract_html_blocks
-from tika_wrap_spark.core.pdf import extract_pdf_pages, parse_pdf_pages
+from tika_wrap_spark.core.pdf import pages_to_texts, parse_pdf_pages
 from tika_wrap_spark.core.sniff import sniff_kind
 
 
@@ -162,7 +162,7 @@ class TestPdf:
     )
 
     def test_layout_reorder(self):
-        pages = extract_pdf_pages(self.PDF)
+        pages = pages_to_texts(parse_pdf_pages(self.PDF))
         assert pages == ["first left\nfirst right\nsecond line", "page two (escaped)"]
 
     def test_missing_eof_raises(self):

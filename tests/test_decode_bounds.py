@@ -7,6 +7,9 @@ stay within a small memory bound whatever their headers and LZW streams
 declare."""
 
 import ast
+import bz2
+import lzma
+import random
 import struct
 import tracemalloc
 import zlib
@@ -16,7 +19,7 @@ import pytest
 
 import tika_wrap_spark
 from tika_wrap_spark.core.cabbin import _MSZIP_BLOCK, build_cab, parse_cab
-from tika_wrap_spark.core.errors import MAX_INFLATED, ExtractError
+from tika_wrap_spark.core.errors import MAX_INFLATED, ExtractError, inflate
 from tika_wrap_spark.core.jpegbin import build_jpeg_pixels, jpeg_pixels
 from tika_wrap_spark.core.media import (
     MAX_PIXELS,
@@ -120,6 +123,55 @@ def test_no_decompressor_is_flushed():
 
 def test_stdlib_decompress_runs_only_in_inflate():
     assert decompress_call_sites() - MEDIA_READS == {"errors.py:inflate"}
+
+
+def _raw_deflate(data: bytes) -> bytes:
+    c = zlib.compressobj(6, zlib.DEFLATED, -15)
+    return c.compress(data) + c.flush()
+
+
+CODECS = {  # name -> (compress, new decoder)
+    "zlib": (zlib.compress, zlib.decompressobj),
+    "deflate": (_raw_deflate, lambda: zlib.decompressobj(-15)),
+    "xz": (lzma.compress, lzma.LZMADecompressor),
+    "bz2": (bz2.compress, bz2.BZ2Decompressor),
+}
+
+
+@pytest.mark.parametrize("codec", sorted(CODECS))
+def test_inflate_in_steps_equals_one_bounded_call(codec):
+    """Output past one 1 MiB step, with and without a declared size either
+    side of the true one: the same bytes, end-of-stream flag and trailing
+    data as one ``decompress`` call bounded the same way."""
+    compress, decoder = CODECS[codec]
+    block = random.Random(3).randbytes(4096)
+    for n in (1 << 20, (3 << 20) + 7):
+        raw = (block * (n // 4096 + 1))[:n]
+        data = compress(raw) + b"TAIL"
+        for size in (None, n, n - 1, n + 5):
+            ours, ref = decoder(), decoder()
+            want = (MAX_INFLATED if size is None else size) + 1
+            assert inflate(codec, ours, data, 0, size) == ref.decompress(data, want)
+            assert (ours.eof, ours.unused_data) == (ref.eof, ref.unused_data)
+
+
+def test_a_stream_within_one_step_costs_one_decompress_call():
+    """KB-sized PDF Flate streams sit on the extraction hot path."""
+    calls = []
+
+    class Counting:
+        def __init__(self):
+            self.d = zlib.decompressobj()
+
+        def decompress(self, *args):
+            calls.append(args[1])
+            return self.d.decompress(*args)
+
+        def __getattr__(self, name):
+            return getattr(self.d, name)
+
+    assert inflate("pdf", Counting(), zlib.compress(b"x" * 5000)) == b"x" * 5000
+    assert len(calls) == 1
 
 
 def test_7z_folder_declared_past_the_budget_is_refused_before_decoding():

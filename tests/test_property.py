@@ -146,7 +146,7 @@ def test_container_truncation_never_crashes_extract(entries, cut):
 # --- pdf parser robustness --------------------------------------------------
 
 from tika_wrap_spark.core.errors import ExtractError
-from tika_wrap_spark.core.pdf import extract_pdf_pages
+from tika_wrap_spark.core.pdf import pages_to_texts, parse_pdf_pages
 
 _pdf_noise = st.one_of(
     st.text(alphabet="BT ETdjTj()\\ %Page:0123456789.\n-", max_size=30),
@@ -162,14 +162,14 @@ def test_pdf_parser_total_on_garbage(parts):
     deterministically."""
     stream = "%PDF-1.4\n" + "\n".join(parts)
     try:
-        a = extract_pdf_pages(stream)
+        a = pages_to_texts(parse_pdf_pages(stream))
     except ExtractError:
         try:
-            extract_pdf_pages(stream)
+            pages_to_texts(parse_pdf_pages(stream))
             raise AssertionError("nondeterministic raise")
         except ExtractError:
             return
-    assert extract_pdf_pages(stream) == a
+    assert pages_to_texts(parse_pdf_pages(stream)) == a
 
 
 _rtf_alphabet = st.sampled_from(list("{}\\rtf1u c0'9ab \n-_~*binpa"))

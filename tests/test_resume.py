@@ -102,98 +102,3 @@ def test_lineage_scan_partition_prunes(spark, corpus, tmp_path_factory):
     assert "PartitionFilters" in plan and "part_key" in plan.split("PartitionFilters", 1)[1][:200], plan
     got = {r["part_key"] for r in lin.collect()}
     assert got <= {2, 3}
-
-
-def test_compaction_preserves_content_and_reduces_files(spark, corpus, tmp_path_factory):
-    import glob
-
-    from tika_wrap_spark.pipeline import compact_extracted
-
-    out = str(tmp_path_factory.mktemp("run_compact"))
-    # high task count -> many files per partition dir
-    run_extraction(spark, corpus, out, parts=4, num_partitions=16)
-    files_before = glob.glob(out + "/extracted/part_key=*/*.parquet")
-    before = extracted_to_rows(read_extracted(spark, out).drop("part_key"))
-
-    m = compact_extracted(spark, out)
-    assert m["parts_compacted"] == 4
-    files_after = glob.glob(out + "/extracted/part_key=*/*.parquet")
-    assert len(files_after) < len(files_before), (len(files_after), len(files_before))
-    after = extracted_to_rows(read_extracted(spark, out).drop("part_key"))
-    assert after == before  # byte-identical content through the rewrite
-
-
-def test_compaction_clusters_doc_id_for_row_group_skipping(spark, corpus, tmp_path_factory):
-    """Compacted files must hold doc_id in sorted runs so parquet row-group
-    min/max stats prune point lookups (the hot write stays salt-random)."""
-    import glob
-
-    import pyarrow.parquet as pq
-
-    from tika_wrap_spark.pipeline import compact_extracted
-
-    out = str(tmp_path_factory.mktemp("run_cluster"))
-    run_extraction(spark, corpus, out, parts=4, num_partitions=16)
-    compact_extracted(spark, out)
-    files = glob.glob(out + "/extracted/part_key=*/*.parquet")
-    assert files
-    for f in files:
-        ids = pq.read_table(f, columns=["doc_id"])["doc_id"].to_pylist()
-        assert ids == sorted(ids), f
-
-
-def test_compaction_writes_up_to_k_files_per_part(spark, corpus, tmp_path_factory):
-    """``files_per_partition=k`` splits each part over doc_id hash
-    sub-buckets: more than one file a part, never more than k."""
-    import glob
-    import os
-
-    from tika_wrap_spark.pipeline import compact_extracted
-
-    out = str(tmp_path_factory.mktemp("run_compact_k"))
-    run_extraction(spark, corpus, out, parts=4, num_partitions=16)
-    before = extracted_to_rows(read_extracted(spark, out).drop("part_key"))
-    compact_extracted(spark, out, files_per_partition=4)
-    part_dirs = sorted(glob.glob(out + "/extracted/part_key=*"))
-    assert len(part_dirs) == 4
-    for d in part_dirs:
-        n = len(glob.glob(os.path.join(d, "*.parquet")))
-        assert 1 < n <= 4, (d, n)
-    assert extracted_to_rows(read_extracted(spark, out).drop("part_key")) == before
-
-
-def test_incremental_refresh_extracts_only_delta(spark):
-    from tika_wrap_spark.corpus import generate_corpus
-    from tika_wrap_spark.data import corpus_to_df
-    from tika_wrap_spark.pipeline import changed_docs, run_incremental
-
-    old_rows = generate_corpus(50, seed=44, adversarial=False)
-    new_rows = [dict(r) for r in old_rows]
-    # change 2 docs, add 1, remove 1
-    new_rows[3] = {
-        "doc_id": old_rows[3]["doc_id"],
-        "spans": [{"kind": "text", "text": "rewritten body", "media_ref": "", "offset": 0}],
-    }
-    new_rows[7] = {
-        "doc_id": old_rows[7]["doc_id"],
-        "spans": [{"kind": "text", "text": "also rewritten", "media_ref": "", "offset": 0}],
-    }
-    removed = new_rows.pop(10)
-    new_rows.append({
-        "doc_id": "doc_new_1",
-        "spans": [{"kind": "text", "text": "brand new document", "media_ref": "", "offset": 0}],
-    })
-    old_df = corpus_to_df(spark, old_rows)
-    new_df = corpus_to_df(spark, new_rows)
-
-    delta = {(r["doc_id"], r["status"]) for r in changed_docs(old_df, new_df).collect()}
-    assert delta == {
-        (old_rows[3]["doc_id"], "changed"),
-        (old_rows[7]["doc_id"], "changed"),
-        (removed["doc_id"], "removed"),
-        ("doc_new_1", "added"),
-    }
-    out = run_incremental(spark, old_df, new_df)
-    assert {r["doc_id"] for r in out.select("doc_id").collect()} == {
-        old_rows[3]["doc_id"], old_rows[7]["doc_id"], "doc_new_1",
-    }

@@ -9,16 +9,17 @@ pipeline over an interleaved-document corpus table
 Architecture (see SURVEY.md):
   - ``core/``      pure-Python extraction core (no Spark imports): magic-byte
                    sniffing, HTML boilerplate stripping (Arc90-style
-                   text-density / link-density), synthetic-PDF content-stream
-                   parsing with x/y layout reordering, metadata maps.
+                   text-density / link-density), PDF parsing (``pdfbin.py``
+                   reads real files: xref, object streams, filters, fonts)
+                   with x/y layout reordering, metadata maps.
                    The SAME code generates golden fixtures and runs inside the
                    Spark UDFs, so span equality is byte-identical by
                    construction.
   - ``operators/`` Spark-side operators: Arrow-batched mapInPandas extraction,
                    skew salting, lineage/checkpoint/resume, dedup family
                    (exact / MinHash-LSH / SimHash / n-gram Jaccard),
-                   similarity search, declarative text analysis, multimodal
-                   stubs.
+                   similarity search, declarative text analysis, media
+                   operators over real pixel codecs (PNG, JPEG, GIF, BMP).
   - ``corpus.py``  deterministic seeded corpus generator (FIXTURES.md §1).
   - ``pipeline.py`` end-to-end extraction pipeline + lineage.
 """

@@ -2,9 +2,11 @@
 parquet directories otherwise (SURVEY §7 degradation path — same semantics:
 append-only writes, snapshot-id string, partition pruning by ``part_key``).
 
-The production deployment (north_rule) targets Iceberg tables; this sandbox
-has no Iceberg jars, so ``iceberg_available()`` gates format selection and
-everything else is identical DataFrame code.
+The production deployment (north_rule) targets Iceberg tables. A location
+with the ``iceberg:`` prefix selects the Iceberg format and any other
+location is a parquet directory; everything else is identical DataFrame
+code. ``iceberg_available()`` reports whether the connector is on the
+classpath, and no format choice reads it.
 """
 
 from __future__ import annotations
@@ -29,14 +31,11 @@ def read_table(spark: SparkSession, location: str) -> DataFrame:
     return spark.read.parquet(location)
 
 
-def append_table(df: DataFrame, location: str, partition_by: list[str] | None = None) -> None:
+def append_table(df: DataFrame, location: str) -> None:
     if location.startswith("iceberg:"):
         df.writeTo(location[len("iceberg:") :]).append()
         return
-    writer = df.write.mode("append")
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(location)
+    df.write.mode("append").parquet(location)
 
 
 def overwrite_partitions(df: DataFrame, location: str, partition_by: list[str]) -> None:

@@ -114,7 +114,6 @@ def build_dbf(
     names: list[str],
     rows: list[list[str]],
     deleted: set[int] | None = None,
-    last_update: tuple[int, int, int] = (124, 6, 15),
 ) -> bytes:
     """Deterministic dBase III+ table — the test/corpus builder twin.
     Field lengths size to the longest value (min 1); all fields type C.
@@ -128,7 +127,7 @@ def build_dbf(
     record_size = 1 + sum(lengths)
     out = bytearray()
     out.append(0x03)
-    out.extend(bytes(last_update))
+    out.extend(bytes((124, 6, 15)))  # last update: 2024-06-15
     out.extend(struct.pack("<IHH", len(rows), header_size, record_size))
     out.extend(b"\x00" * 20)
     for name, ln in zip(names, lengths):

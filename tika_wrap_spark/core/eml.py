@@ -208,7 +208,6 @@ def build_eml(
     text_body: str,
     html_body: str = "",
     attachments: list[tuple[str, str]] | None = None,
-    boundary: str = "=_twc_boundary_001",
 ) -> str:
     """Deterministic message builder for corpus/tests. With only
     ``text_body``: a simple singlepart message. Otherwise multipart/mixed
@@ -226,6 +225,7 @@ def build_eml(
             + "Content-Type: text/plain; charset=utf-8\n\n"
             + text_body.encode("utf-8").decode("latin-1")
         )
+    boundary = "=_twc_boundary_001"
     out = [head + 'Content-Type: multipart/mixed; boundary="%s"\n' % boundary]
     out.append("\npreamble is ignored\n")
     qp = quopri.encodestring(text_body.encode("utf-8")).decode("latin-1")

@@ -46,22 +46,43 @@ def over_budget(kind: str) -> ExtractError:
     return ExtractError("%s: inflated payload exceeds %d bytes" % (kind, MAX_INFLATED))
 
 
+# output asked of one decompress call: one call's output is held twice while
+# CPython joins its blocks, so a bomb decoded in steps peaks near 1x the cap
+_STEP = 1 << 20
+
+
 def inflate(kind: str, decoder, data: bytes, used: int = 0, size: int | None = None) -> bytes:
-    """One bounded ``decoder.decompress(data)`` for any stdlib zlib / lzma /
-    bz2 decoder object. ``used`` is what the payload has inflated so far and
+    """Bounded ``decoder.decompress(data)`` for any stdlib zlib / lzma / bz2
+    decoder object. ``used`` is what the payload has inflated so far and
     ``size`` an optional declared output size: the decoder is never asked
     for more than the remaining budget + 1 bytes, or ``size`` + 1 when that
     is smaller, and is never ``flush()``ed (a flush inflates the rest of
-    the stream, unbounded). A corrupt stream raises ``<kind>: <error>``, a
-    payload past the cap :func:`over_budget`. End-of-stream and
-    declared-size checks are the caller's."""
+    the stream, unbounded). Output comes in ``_STEP`` calls, so a stream
+    that fits one step costs one call, and a bomb stops one step past the
+    cap. A corrupt stream raises ``<kind>: <error>``, a payload past the cap
+    :func:`over_budget`. End-of-stream and declared-size checks are the
+    caller's."""
     limit = MAX_INFLATED - used
     if size is not None and size < limit:
         limit = size
-    try:  # a max_length of 0 would mean unbounded
-        out = decoder.decompress(data, max(limit, 0) + 1)
+    want = max(limit, 0) + 1  # a max_length of 0 would mean unbounded
+    try:
+        out = decoder.decompress(data, min(want, _STEP))
+        if len(out) == _STEP < want:  # past one step: the rest into one buffer
+            out = bytearray(out)
+            while len(out) < want and not decoder.eof:
+                n = min(want - len(out), _STEP)
+                if hasattr(decoder, "unconsumed_tail"):  # zlib hands back unread input
+                    chunk = decoder.decompress(decoder.unconsumed_tail, n)
+                elif decoder.needs_input:  # lzma and bz2 buffer it themselves
+                    break
+                else:
+                    chunk = decoder.decompress(b"", n)
+                if not chunk:
+                    break
+                out += chunk
     except _DECODE_ERRORS as exc:
         raise ExtractError("%s: %s" % (kind, exc)) from None
     if used + len(out) > MAX_INFLATED:
         raise over_budget(kind)
-    return out
+    return bytes(out)  # no copy when one step held it all

@@ -187,17 +187,17 @@ def _table_checksum(raw: bytes) -> int:
     return sum(struct.unpack(">%dI" % (len(padded) // 4), padded)) & 0xFFFFFFFF
 
 
-def _build_name_table(names: dict[int, str], mac_copy: bool = True) -> bytes:
+def _build_name_table(names: dict[int, str]) -> bytes:
     records = []
     strings = b""
-    # Windows 3/1/0x409 utf-16be records for every name, then (optionally)
-    # a Macintosh 1/0/0 roman copy of the family — exercises both decode
+    # Windows 3/1/0x409 utf-16be records for every name, then a Macintosh
+    # 1/0/0 roman copy of the family — exercises both decode
     # paths the parser implements
     for nid in sorted(names):
         raw = names[nid].encode("utf-16-be")
         records.append((3, 1, 0x409, nid, len(raw), len(strings)))
         strings += raw
-    if mac_copy and 1 in names:
+    if 1 in names:
         try:
             raw = names[1].encode("mac-roman")
             records.append((1, 0, 0, 1, len(raw), len(strings)))

@@ -358,8 +358,8 @@ def bz2_text(text: str) -> str:
     return bz2_bytes(text.encode("latin-1")).decode("latin-1")
 
 
-def z_text(text: str, max_bits: int = 16) -> str:
-    return z_bytes(text.encode("latin-1"), max_bits).decode("latin-1")
+def z_text(text: str) -> str:
+    return z_bytes(text.encode("latin-1")).decode("latin-1")
 
 
 def lzma_text(text: str) -> str:

@@ -252,7 +252,7 @@ def _dir_record(
     return rec
 
 
-def build_iso(entries: list[tuple[str, bytes]], volume_id: str = "TWS") -> bytes:
+def build_iso(entries: list[tuple[str, bytes]]) -> bytes:
     """Serialize ``[(path, payload_bytes), ...]`` as a minimal-but-valid
     ISO 9660 image: PVD + terminator, L/M path tables, directory extents
     with SUSP ``SP`` + Rock Ridge ``NM`` names, file extents. Nested paths
@@ -409,7 +409,7 @@ def build_iso(entries: list[tuple[str, bytes]], volume_id: str = "TWS") -> bytes
     pvd[0] = 1
     pvd[1:7] = b"CD001\x01"
     pvd[8:40] = b" " * 32
-    pvd[40:72] = volume_id.upper().encode("ascii")[:32].ljust(32, b" ")
+    pvd[40:72] = b"TWS".ljust(32, b" ")  # volume id
     pvd[80:88] = _both32(total_sectors)
     pvd[120:124] = _both16(1)
     pvd[124:128] = _both16(1)

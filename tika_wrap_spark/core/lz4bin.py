@@ -312,21 +312,19 @@ def _block_encode(src: bytes) -> bytes:
     return bytes(out)
 
 
-def lz4_bytes(data: bytes, block_size: int = 65536) -> bytes:
+def lz4_bytes(data: bytes) -> bytes:
     """Deterministic LZ4 frame around ``data`` — the test/corpus builder
     twin of :func:`unlz4`. Block-independent 64 KB blocks, content
     checksum on (the strictest verifiable layout); every output frame
     must decode through the system ``lz4`` CLI (pinned in tests)."""
-    if block_size != 65536:
-        raise ValueError("builder emits BD code 4 (64 KB) frames only")
     flg = 0x40 | 0x20 | 0x04  # version 01 | block-independent | content checksum
     bd = 0x40  # block max size code 4 = 64 KB
     desc = bytes([flg, bd])
     out = bytearray(LZ4_MAGIC)
     out += desc
     out.append((xxh32(desc) >> 8) & 0xFF)
-    for off in range(0, len(data), block_size):
-        chunk = data[off : off + block_size]
+    for off in range(0, len(data), 65536):
+        chunk = data[off : off + 65536]
         comp = _block_encode(chunk)
         if len(comp) >= len(chunk):
             out += struct.pack("<I", 0x80000000 | len(chunk))

@@ -105,11 +105,3 @@ def pages_to_texts(pages: list[list[tuple[float, float, str]]]) -> list[str]:
             out.append(page_text)
     return out
 
-
-def extract_pdf_pages(stream: str) -> list[str]:
-    """Return one reading-order text string per page.
-
-    Runs are sorted by (y descending, x ascending, appearance order) within
-    each page and joined with newlines. Empty pages yield no entry.
-    """
-    return pages_to_texts(parse_pdf_pages(stream))

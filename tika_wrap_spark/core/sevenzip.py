@@ -72,9 +72,9 @@ MAX_MEMBERS = 10_000
 class _Reader:
     __slots__ = ("data", "i")
 
-    def __init__(self, data: bytes, i: int = 0) -> None:
+    def __init__(self, data: bytes) -> None:
         self.data = data
-        self.i = i
+        self.i = 0
 
     def byte(self) -> int:
         if self.i >= len(self.data):

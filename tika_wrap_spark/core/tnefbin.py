@@ -121,15 +121,12 @@ def build_tnef(
     subject: str,
     body: str,
     attachments: list[tuple[str, bytes]] | None = None,
-    msg_class: str = "IPM.Note",
 ) -> bytes:
     """Deterministic TNEF stream — the test/corpus builder twin."""
     out = bytearray(MAGIC)
     out.extend(struct.pack("<H", 1))  # legacy key
     out.extend(_attr(LVL_MESSAGE, ATT_TNEF_VERSION, struct.pack("<I", 0x00010000)))
-    out.extend(
-        _attr(LVL_MESSAGE, ATT_MESSAGE_CLASS, msg_class.encode("latin-1") + b"\x00")
-    )
+    out.extend(_attr(LVL_MESSAGE, ATT_MESSAGE_CLASS, b"IPM.Note\x00"))
     out.extend(_attr(LVL_MESSAGE, ATT_SUBJECT, subject.encode("latin-1") + b"\x00"))
     out.extend(_attr(LVL_MESSAGE, ATT_BODY, body.encode("latin-1") + b"\x00"))
     for name, payload in attachments or []:
@@ -145,7 +142,6 @@ def build_tnef_text(
     subject: str,
     body: str,
     attachments: list[tuple[str, str]] | None = None,
-    msg_class: str = "IPM.Note",
 ) -> str:
     atts = [(n, p.encode("latin-1")) for n, p in attachments or []]
-    return build_tnef(subject, body, atts, msg_class).decode("latin-1")
+    return build_tnef(subject, body, atts).decode("latin-1")

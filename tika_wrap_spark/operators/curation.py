@@ -61,35 +61,29 @@ def stratified_sample(
     df: DataFrame,
     strata_col: str,
     rates_4096: dict[str, int],
-    key_col: str = "doc_id",
-    salt: str = "samp:",
-    default_rate: int = 4096,
 ) -> DataFrame:
-    """Deterministic stratified sampling: keep a row iff its md5 bucket
-    (12 bits) falls below its stratum's threshold out of 4096 — per-stratum
-    Bernoulli sampling with a reproducible, retry-stable coin."""
-    bucket = bucket_expr(F.col(key_col).cast("string"), salt, 3)
+    """Deterministic stratified sampling: keep a row iff its doc_id's md5
+    bucket (12 bits) falls below its stratum's threshold out of 4096 — per-
+    stratum Bernoulli sampling with a reproducible, retry-stable coin. A
+    stratum with no rate keeps every row."""
+    bucket = bucket_expr(F.col("doc_id").cast("string"), "samp:", 3)
     thr = None
     for stratum, rate in rates_4096.items():
         cond = F.col(strata_col) == stratum
         thr = F.when(cond, rate) if thr is None else thr.when(cond, rate)
-    thr = thr.otherwise(default_rate) if thr is not None else F.lit(default_rate)
+    thr = thr.otherwise(4096) if thr is not None else F.lit(4096)
     return df.withColumn("bucket", bucket).filter(F.col("bucket") < thr)
 
 
-def shard_assign(
-    df: DataFrame, n_shards: int, key_col: str = "doc_id", salt: str = "shard:"
-) -> DataFrame:
+def shard_assign(df: DataFrame, n_shards: int, key_col: str = "doc_id") -> DataFrame:
     """Deterministic training-shard assignment: shard = md5 bucket mod
     n_shards. Uniform by construction (no hot shard), stable across runs
     and retries — the property a resumable multi-day export needs."""
-    bucket = bucket_expr(F.col(key_col).cast("string"), salt, 2)
+    bucket = bucket_expr(F.col(key_col).cast("string"), "shard:", 2)
     return df.withColumn("shard", (bucket % n_shards).cast("long"))
 
 
-def shard_shuffle(
-    df: DataFrame, n_shards: int, epoch: int = 0, key_col: str = "doc_id"
-) -> DataFrame:
+def shard_shuffle(df: DataFrame, n_shards: int, epoch: int = 0) -> DataFrame:
     """Deterministic global training-order shuffle — the 'shuffled shards'
     construction every pretraining data loader consumes: each doc draws a
     32-bit md5 shuffle key (salted by ``epoch``, so every epoch is an
@@ -103,11 +97,11 @@ def shard_shuffle(
     n_shards, so size n_shards to the cluster (docs/10M shards keeps a
     10^12-doc sort bounded at ~10M rows per task). No global sort exists
     anywhere in the plan."""
-    key = bucket_expr(F.col(key_col).cast("string"), "shuf%d:" % epoch, 8)
+    key = bucket_expr(F.col("doc_id").cast("string"), "shuf%d:" % epoch, 8)
     keyed = df.withColumn("shuffle_key", key).withColumn(
         "shard", (F.col("shuffle_key") % n_shards).cast("long")
     )
-    w = Window.partitionBy("shard").orderBy("shuffle_key", key_col)
+    w = Window.partitionBy("shard").orderBy("shuffle_key", "doc_id")
     return keyed.withColumn("pos", F.row_number().over(w).cast("long"))
 
 
@@ -115,12 +109,10 @@ PACK_BUDGET = 512
 PACK_FANOUT = 4096
 
 
-def pack_sequences(
-    toks: DataFrame, budget: int = PACK_BUDGET, fanout: int = PACK_FANOUT
-) -> DataFrame:
+def pack_sequences(toks: DataFrame, fanout: int = PACK_FANOUT) -> DataFrame:
     """Concat-and-chunk sequence packing — the standard LLM-pretraining
     step that concatenates the token stream in deterministic doc_id order
-    and chunks it into fixed ``budget``-token training sequences. Input:
+    and chunks it into fixed ``PACK_BUDGET``-token training sequences. Input:
     (doc_id, n_toks). Output per doc: its global token offset and the
     first/last sequence ids it lands in (a doc can straddle a boundary).
 
@@ -177,10 +169,10 @@ def pack_sequences(
         .join(leaf_base, "b1")
         .withColumn("start_off", (F.col("b1base") + F.col("local_off")).cast("long"))
     )
-    seq_first = F.expr(f"start_off div {budget}")
+    seq_first = F.expr(f"start_off div {PACK_BUDGET}")
     seq_last = F.expr(
-        f"CASE WHEN n_toks > 0 THEN (start_off + n_toks - 1) div {budget} "
-        f"ELSE start_off div {budget} END"
+        f"CASE WHEN n_toks > 0 THEN (start_off + n_toks - 1) div {PACK_BUDGET} "
+        f"ELSE start_off div {PACK_BUDGET} END"
     )
     return placed.select(
         "doc_id",
@@ -305,17 +297,16 @@ def contamination_check(grams: DataFrame) -> DataFrame:
     )
 
 
-def bloom_positions(fp: Column, k: int = 3, salt: str = "bloom") -> Column:
+def bloom_positions(fp: Column, k: int = 3) -> Column:
     """Array of k bit positions (12-bit space, m=4096) for a fingerprint:
-    position_i = bucket of md5('{salt}{i}:' || fp). k independent positions
+    position_i = bucket of md5('bloom{i}:' || fp). k independent positions
     via salted digests — the standard k-hash bloom construction."""
-    return F.array(*[bucket_expr(fp, f"{salt}{i}:", 3) for i in range(k)])
+    return F.array(*[bucket_expr(fp, f"bloom{i}:", 3) for i in range(k)])
 
 
 def bloom_prune_flags(
     incoming: DataFrame,
     seen: DataFrame,
-    fp_col: str = "fp",
     k: int = 3,
 ) -> DataFrame:
     """Per-incoming-row bloom verdict against the seen-set, fully
@@ -330,12 +321,12 @@ def bloom_prune_flags(
     distinct fingerprints — both broadcast; the incoming corpus is never
     shuffled. At 100 TB only the bloom-maybe sliver pays join (b)."""
     seen_pos = (
-        seen.select(F.explode(bloom_positions(F.col(fp_col), k)).alias("pos"))
+        seen.select(F.explode(bloom_positions(F.col("fp"), k)).alias("pos"))
         .distinct()
         .withColumn("present", F.lit(1))
     )
-    seen_fps = seen.select(fp_col).distinct().withColumn("seen_dup", F.lit(True))
-    inc = incoming.withColumn("_positions", bloom_positions(F.col(fp_col), k))
+    seen_fps = seen.select("fp").distinct().withColumn("seen_dup", F.lit(True))
+    inc = incoming.withColumn("_positions", bloom_positions(F.col("fp"), k))
     hits = (
         inc.select("doc_id", F.explode("_positions").alias("pos"))
         .join(F.broadcast(seen_pos), "pos", "left")
@@ -344,7 +335,7 @@ def bloom_prune_flags(
     )
     return (
         inc.join(hits, "doc_id")
-        .join(F.broadcast(seen_fps), fp_col, "left")
+        .join(F.broadcast(seen_fps), "fp", "left")
         .select(
             "doc_id",
             (F.col("hits") == k).alias("bloom_maybe"),
@@ -356,15 +347,13 @@ def bloom_prune_flags(
 TEMP_SCALE = 4096
 
 
-def temperature_rates(
-    df: DataFrame, strata_col: str, scale: int = TEMP_SCALE
-) -> DataFrame:
+def temperature_rates(df: DataFrame, strata_col: str) -> DataFrame:
     """Temperature-resampling keep rates (alpha = 0.5) per stratum — the
     multilingual/domain rebalancing step of a pretraining mix: the rarest
     stratum keeps everything, a stratum k times larger keeps ~1/sqrt(k) of
     its docs, flattening the mixture toward p^alpha.
 
-    rate_q = min(scale, floor(scale * sqrt(n_min / n_s))), computed with
+    rate_q = min(S, floor(S * sqrt(n_min / n_s))), S = TEMP_SCALE, computed with
     IEEE-exact ops only (division and sqrt are correctly rounded, the
     scale multiply and floor are exact) so both engines produce the
     identical integer rate. The per-stratum count table is one
@@ -376,23 +365,21 @@ def temperature_rates(
         .withColumn(
             "rate_q",
             F.least(
-                F.lit(scale),
-                F.floor(F.lit(scale) * F.sqrt(F.col("n_min") / F.col("n_docs"))),
+                F.lit(TEMP_SCALE),
+                F.floor(F.lit(TEMP_SCALE) * F.sqrt(F.col("n_min") / F.col("n_docs"))),
             ).cast("long"),
         )
         .select(strata_col, F.col("n_docs").cast("long").alias("n_docs"), "rate_q")
     )
 
 
-def temperature_sample(
-    df: DataFrame, strata_col: str, scale: int = TEMP_SCALE
-) -> DataFrame:
+def temperature_sample(df: DataFrame, strata_col: str) -> DataFrame:
     """Apply temperature_rates: keep a doc iff its md5 bucket falls under
     its stratum's rate (same deterministic coin as stratified_sample —
     retry-stable, partitioning-independent). Returns the per-stratum
     audit row (n_docs, rate_q, n_kept) rather than the kept rows, as the
     standing record of the achieved mixture."""
-    rates = temperature_rates(df, strata_col, scale)
+    rates = temperature_rates(df, strata_col)
     kept = (
         df.join(F.broadcast(rates), strata_col)
         .withColumn("b", bucket_expr(F.col("doc_id").cast("string"), "temp:", 3))
@@ -424,11 +411,9 @@ DSIR_SALT = "dsir:"
 DSIR_TARGET_SOURCE = "src0"
 
 
-def importance_weights(
-    df: DataFrame, target_source: str = DSIR_TARGET_SOURCE
-) -> DataFrame:
+def importance_weights(df: DataFrame) -> DataFrame:
     """Hashed-unigram importance weights over the documents table. Docs
-    from ``target_source`` define the TARGET feature profile; every other
+    from ``DSIR_TARGET_SOURCE`` define the TARGET feature profile; every other
     doc is the RAW pool to be scored. Per token, feature bucket =
     md5-bucket mod DSIR_BUCKETS; per-bucket ratio is the add-one-smoothed
     integer surrogate, quantized in two overflow-proof stages:
@@ -457,8 +442,8 @@ def importance_weights(
     bucketed = toks.withColumn(
         "b", bucket_expr(F.col("tok"), DSIR_SALT, 2) % DSIR_BUCKETS
     )
-    tgt = bucketed.filter(F.col("source") == target_source)
-    raw = bucketed.filter(F.col("source") != target_source)
+    tgt = bucketed.filter(F.col("source") == DSIR_TARGET_SOURCE)
+    raw = bucketed.filter(F.col("source") != DSIR_TARGET_SOURCE)
     tprof = tgt.groupBy("b").agg(F.count("*").alias("t_b"))
     rprof = raw.groupBy("b").agg(F.count("*").alias("r_b"))
     ttot = tgt.agg(F.count("*").alias("t_tot"))

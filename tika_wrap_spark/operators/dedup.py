@@ -292,21 +292,16 @@ def winnow_fingerprints(df: DataFrame, k: int = 8, w: int = 4) -> DataFrame:
     )
 
 
-def connected_components(
-    edges: DataFrame,
-    src: str = "doc_a",
-    dst: str = "doc_b",
-    max_iter: int = 64,
-) -> DataFrame:
-    """Min-label propagation over an undirected edge list: every node gets
-    ``cluster`` = the smallest node id reachable from it (the canonical
-    keeper of its near-dup group). Node ids may be ANY orderable type —
+def connected_components(edges: DataFrame) -> DataFrame:
+    """Min-label propagation over an undirected ``(doc_a, doc_b)`` edge
+    list: every node gets ``cluster`` = the smallest node id reachable from
+    it (the canonical keeper of its near-dup group). Node ids may be ANY orderable type —
     numeric or string (min/least are total orders either way).
 
     Iterative driver loop, each step fully distributed (join + partial-agg
     groupBy); converges in <= diameter steps — near-dup components are
     shallow (pairs share content), so the loop usually exits after 2-3
-    rounds via the converged check, but ``max_iter`` leaves headroom for
+    rounds via the converged check, but its 64-round cap leaves headroom for
     long-chain graphs (``tests/test_dedup_edge.py`` pins a diameter-19
     path).
 
@@ -326,8 +321,8 @@ def connected_components(
     # it, and without the cache each round would recompute the (expensive)
     # upstream candidate-pair pipeline from scratch
     sym = (
-        edges.select(F.col(src).alias("s"), F.col(dst).alias("d"))
-        .union(edges.select(F.col(dst).alias("s"), F.col(src).alias("d")))
+        edges.select(F.col("doc_a").alias("s"), F.col("doc_b").alias("d"))
+        .union(edges.select(F.col("doc_b").alias("s"), F.col("doc_a").alias("d")))
         .cache()
     )
     nodes = sym.select(F.col("s").alias("id")).distinct()
@@ -348,7 +343,7 @@ def connected_components(
         return out
 
     prev_blocks: list = []
-    for _it in range(max_iter):
+    for _it in range(64):
         prop = (
             sym.join(labels, sym["s"] == labels["id"])
             .groupBy(F.col("d").alias("id2"))

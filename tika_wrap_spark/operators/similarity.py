@@ -34,15 +34,15 @@ def int_dot(a: Column, b: Column) -> Column:
     )
 
 
-def cosine_q(dot: Column, na: Column, nb: Column, scale: int = 1000) -> Column:
-    """floor(scale * dot / (sqrt(na)*sqrt(nb))) — deterministic IEEE."""
+def cosine_q(dot: Column, na: Column, nb: Column) -> Column:
+    """floor(1000 * dot / (sqrt(na)*sqrt(nb))) — deterministic IEEE."""
     return F.floor(
-        F.lit(scale) * dot.cast("double") / (F.sqrt(na.cast("double")) * F.sqrt(nb.cast("double")))
+        F.lit(1000) * dot.cast("double") / (F.sqrt(na.cast("double")) * F.sqrt(nb.cast("double")))
     ).cast("long")
 
 
-def with_quantized(df: DataFrame, vec_col: str = "embedding") -> DataFrame:
-    q = quantize(F.col(vec_col))
+def with_quantized(df: DataFrame) -> DataFrame:
+    q = quantize(F.col("embedding"))
     return df.withColumn("eq", q).withColumn("nq", int_dot(F.col("eq"), F.col("eq")))
 
 
@@ -55,9 +55,7 @@ def with_quantized(df: DataFrame, vec_col: str = "embedding") -> DataFrame:
 BRUTE_FORCE_MAX_QUERIES = 10_000
 
 
-def brute_force_topk(
-    df: DataFrame, query_df: DataFrame, k: int = 10, vec_col: str = "embedding"
-) -> DataFrame:
+def brute_force_topk(df: DataFrame, query_df: DataFrame, k: int = 10) -> DataFrame:
     """Cosine top-k against a (small, broadcast) query set. The corpus side
     never shuffles; ranking is TakeOrderedAndProject per query.
 
@@ -76,10 +74,10 @@ def brute_force_topk(
             "query set makes cost |corpus|*|queries|. Use ivf_topk / "
             "lsh_topk_multi / pq_topk for corpus-sized query sets."
         )
-    corpus = with_quantized(df, vec_col).select(
+    corpus = with_quantized(df).select(
         F.col("vec_id").alias("cand_id"), "eq", "nq"
     )
-    qs = with_quantized(query_df, vec_col).select(
+    qs = with_quantized(query_df).select(
         F.col("vec_id").alias("query_id"),
         F.col("eq").alias("q_eq"),
         F.col("nq").alias("q_nq"),
@@ -119,21 +117,19 @@ def _bucket_expr(n_planes: int, plane_offset: int = 0) -> str:
     return "concat(" + ", ".join(bits) + ")"
 
 
-def lsh_bucket(df: DataFrame, n_planes: int = 8, vec_col: str = "embedding") -> DataFrame:
+def lsh_bucket(df: DataFrame, n_planes: int = 8) -> DataFrame:
     """Random-hyperplane LSH bucket id per vector (sign-concatenation).
     Comparisons at scale then happen within buckets only."""
-    out = with_quantized(df, vec_col)
+    out = with_quantized(df)
     return out.withColumn("bucket", F.expr(_bucket_expr(n_planes)))
 
 
-def lsh_buckets_multi(
-    df: DataFrame, n_planes: int = 8, n_tables: int = 4, vec_col: str = "embedding"
-) -> DataFrame:
+def lsh_buckets_multi(df: DataFrame, n_planes: int = 8, n_tables: int = 4) -> DataFrame:
     """L independent hash tables (table t uses planes t*n_planes ..):
     one (table_idx, bucket) row per vector per table. A true near neighbor
     only needs to collide in ONE table, so recall rises exponentially in L
     while candidate volume grows linearly."""
-    out = with_quantized(df, vec_col)
+    out = with_quantized(df)
     buckets = F.array(
         *[F.expr(_bucket_expr(n_planes, t * n_planes)) for t in range(n_tables)]
     )
@@ -384,30 +380,31 @@ def int_l2(a: Column, b: Column) -> Column:
     )
 
 
-def pq_subvectors(emb: DataFrame, m: int = PQ_M, id_col: str = "vec_id") -> DataFrame:
-    """(id, m, sv): each quantized vector split into ``m`` contiguous
-    subvectors of ``dim div m`` components (remainder dims dropped — same
+def pq_subvectors(emb: DataFrame) -> DataFrame:
+    """(vec_id, m, sv): each quantized vector split into ``PQ_M`` contiguous
+    subvectors of ``dim div PQ_M`` components (remainder dims dropped — same
     floor in the oracle). Pure per-row expressions, no shuffle."""
+    m = PQ_M
     arr = F.expr(
         f"transform(sequence(0, {m - 1}), j -> struct("
         f"cast(j as long) as m, "
         f"slice(eq, cast(j * (size(eq) div {m}) + 1 as int), size(eq) div {m}) as sv))"
     )
-    return emb.select(id_col, F.explode(arr).alias("s")).select(
-        id_col, F.col("s.m").alias("m"), F.col("s.sv").alias("sv")
+    return emb.select("vec_id", F.explode(arr).alias("s")).select(
+        "vec_id", F.col("s.m").alias("m"), F.col("s.sv").alias("sv")
     )
 
 
-def pq_codebooks(emb: DataFrame, m: int = PQ_M, k: int = PQ_K) -> DataFrame:
+def pq_codebooks(emb: DataFrame) -> DataFrame:
     """Product-quantization codebooks (Jégou et al. 2011, "Product
     Quantization for Nearest Neighbor Search"), integer-exact and
-    deterministic like ivf_centroids: per subspace, seed ``k`` codes with
-    the first k vectors' subvectors, assign every subvector to its nearest
+    deterministic like ivf_centroids: per subspace, seed ``PQ_K`` codes with
+    the first PQ_K vectors' subvectors, assign every subvector to its nearest
     seed by exact integer squared-L2 (packed argmin, code tie-break), then
     ONE Lloyd refinement (component-wise floor(avg)). Returns (m, code,
-    csv). The codebook is m*k rows — broadcastable everywhere."""
-    subs = pq_subvectors(emb, m)
-    seeds = subs.filter(F.col("vec_id") < k).select(
+    csv). The codebook is PQ_M*PQ_K rows — broadcastable everywhere."""
+    subs = pq_subvectors(emb)
+    seeds = subs.filter(F.col("vec_id") < PQ_K).select(
         "m", F.col("vec_id").cast("long").alias("code"), F.col("sv").alias("csv")
     )
     key0 = int_l2(F.col("sv"), F.col("csv")) * PQ_CODE_SCALE + F.col("code")
@@ -429,12 +426,12 @@ def pq_codebooks(emb: DataFrame, m: int = PQ_M, k: int = PQ_K) -> DataFrame:
     )
 
 
-def pq_codes(emb: DataFrame, codebooks: DataFrame, m: int = PQ_M) -> DataFrame:
-    """Encode every vector as ``m`` code bytes: nearest codebook entry per
+def pq_codes(emb: DataFrame, codebooks: DataFrame) -> DataFrame:
+    """Encode every vector as ``PQ_M`` code bytes: nearest codebook entry per
     subspace (exact packed argmin). Map-side against the broadcast
     codebook — THE compression step that lets 10^12 vectors fit an index:
-    m bytes per vector instead of the full embedding."""
-    subs = pq_subvectors(emb, m)
+    PQ_M bytes per vector instead of the full embedding."""
+    subs = pq_subvectors(emb)
     key = int_l2(F.col("sv"), F.col("csv")) * PQ_CODE_SCALE + F.col("code")
     return (
         subs.join(F.broadcast(codebooks), "m")
@@ -447,13 +444,11 @@ def pq_adc_topk(
     df: DataFrame,
     query_df: DataFrame,
     k: int = 10,
-    m: int = PQ_M,
-    kcodes: int = PQ_K,
 ) -> DataFrame:
     """PQ asymmetric-distance (ADC) top-k with the exact distance on the
-    record: each query precomputes its m x kcodes lookup table of
+    record: each query precomputes its PQ_M x PQ_K lookup table of
     subspace distances to every codebook entry; a candidate's estimated
-    distance is then just the SUM of m table lookups over its code row —
+    distance is then just the SUM of PQ_M table lookups over its code row —
     the corpus is scanned as codes only, never as full vectors. The kept
     top-k re-reads the true vectors once for the exact squared-L2 and the
     signed ADC error (the sketch-agreement discipline of sketch_kmv /
@@ -463,10 +458,10 @@ def pq_adc_topk(
     is one partial-aggregable groupBy over the code postings; only the
     top-k rows (queries x k) pay the exact re-read join."""
     emb = with_quantized(df)
-    cb = pq_codebooks(emb, m, kcodes)
-    codes = pq_codes(emb, cb, m).withColumnRenamed("vec_id", "cand_id")
+    cb = pq_codebooks(emb)
+    codes = pq_codes(emb, cb).withColumnRenamed("vec_id", "cand_id")
     qs = with_quantized(query_df)
-    qsubs = pq_subvectors(qs, m).withColumnRenamed("vec_id", "query_id")
+    qsubs = pq_subvectors(qs).withColumnRenamed("vec_id", "query_id")
     lut = qsubs.join(F.broadcast(cb), "m").select(
         "query_id", "m", "code", int_l2(F.col("sv"), F.col("csv")).alias("pdist")
     )
@@ -503,9 +498,7 @@ def pq_adc_topk(
 SEM_TAU_Q = 950
 
 
-def semantic_dedup(
-    df: DataFrame, n_cells: int | None = None, tau_q: int = SEM_TAU_Q
-) -> DataFrame:
+def semantic_dedup(df: DataFrame, n_cells: int | None = None) -> DataFrame:
     """SemDeDup-style semantic near-duplicate removal (Abbas et al. 2023,
     arXiv:2303.09540): embed -> cluster -> compare only WITHIN a cluster ->
     drop any vector with a smaller-id same-cell neighbor above the cosine
@@ -537,7 +530,7 @@ def semantic_dedup(
     close = (
         a.join(b, "cell")
         .filter(F.col("a_id") < F.col("b_id"))
-        .filter(cos >= tau_q)
+        .filter(cos >= SEM_TAU_Q)
         .groupBy("b_id")
         .agg(F.count("*").alias("n_close"))
     )

@@ -1,17 +1,19 @@
-"""Skew defense — explicit salting + salted range repartitioning (north_rule).
+"""Skew defense — an explicit salt, hash-partitioned (north_rule).
 
 Giant-PDF skew is *UDF-cost* skew: row counts per partition look balanced,
 but one 100x-payload document makes its partition the straggler. AQE's
 size-based stats cannot see this (SURVEY §4.2), so the salt is explicit:
 
-    salt = pmod(xxhash64(doc_id), salt_buckets)        # uniform random
-    repartitionByRange(N, salt, doc_id)                # even split of salts
+    salt = pmod(xxhash64(doc_id), max(16 * N, 1024))   # uniform random
+    repartition(N, salt)                                # hash on the salt
 
-Because the salt is uniform i.i.d. per doc, range-partitioning on it
-SPREADS the giant docs evenly across all N partitions (each partition gets
-~giants/N of them in expectation). ``salt_buckets >> N`` keeps the range
-boundaries fine-grained. At 1000 executors the same expression scales by
-raising ``num_partitions`` only.
+Because the salt is uniform i.i.d. per doc, partitioning on it SPREADS the
+giant docs evenly across all N partitions (each partition gets ~giants/N of
+them in expectation), and each partition draws many salt values. Every
+caller takes this hash path; ``salt_repartition(method="range")``
+range-partitions on ``(salt, doc_id)`` instead, at the price of a sampling
+job. At 1000 executors the same expression scales by raising
+``num_partitions`` only.
 
 Measured dead end, kept as a warning: an earlier version led the range key
 with a ``cost_bin = log2(payload)`` DESC column, intending "heavy docs
@@ -30,7 +32,7 @@ from pyspark.sql import functions as F
 
 def with_part_key(df: DataFrame, parts: int) -> DataFrame:
     """Stable checkpoint partition key: independent of runtime parallelism,
-    so resume (anti-join on part_key) survives cluster-size changes."""
+    so resume (an isin filter on part_key) survives cluster-size changes."""
     return df.withColumn(
         "part_key", F.pmod(F.xxhash64("doc_id"), F.lit(parts)).cast("int")
     )
@@ -52,7 +54,6 @@ def doc_cost(df: DataFrame) -> DataFrame:
 def salt_repartition(
     df: DataFrame,
     num_partitions: int,
-    salt_buckets: int | None = None,
     method: str = "hash",
 ) -> DataFrame:
     """Salted repartition ahead of the extraction UDF: uniform-random
@@ -66,8 +67,7 @@ def salt_repartition(
     boundaries, a whole extra stage the hash path doesn't pay (measured
     ~10-20% of job wall at sandbox scale, BENCH.md). Kept for inputs where
     salt-contiguous output partitions are wanted downstream."""
-    if salt_buckets is None:
-        salt_buckets = max(num_partitions * 16, 1024)
+    salt_buckets = max(num_partitions * 16, 1024)
     salted = df.withColumn(
         "salt", F.pmod(F.xxhash64("doc_id"), F.lit(salt_buckets))
     )

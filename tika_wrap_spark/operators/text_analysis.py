@@ -117,9 +117,10 @@ TFIDF_TOPK = 3
 TFIDF_IDF_SCALE = 1_000_000
 
 
-def tfidf_topk(df: DataFrame, k: int = TFIDF_TOPK) -> DataFrame:
-    """Per-document top-k salient terms by tf-idf — the keyword/topic
-    signal a curation pipeline uses for domain balancing and index keys.
+def tfidf_topk(df: DataFrame) -> DataFrame:
+    """Per-document top-``TFIDF_TOPK`` salient terms by tf-idf — the
+    keyword/topic signal a curation pipeline uses for domain balancing and
+    index keys.
 
     Arithmetic is INTEGER-exact in both engines: idf is the rational
     surrogate ``(SCALE * N) div df`` (monotone in the usual ln(N/df) —
@@ -149,7 +150,7 @@ def tfidf_topk(df: DataFrame, k: int = TFIDF_TOPK) -> DataFrame:
     w = Window.partitionBy("doc_id").orderBy(F.desc("score_q"), F.asc("term"))
     return (
         scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
+        .filter(F.col("rnk") <= TFIDF_TOPK)
         .select("doc_id", "rnk", "term", "tf", "df", "score_q")
     )
 
@@ -166,14 +167,14 @@ _PII_ORDER = [  # replacement order matters: emails first (they contain dots/dig
 ]
 
 
-def scrub_pii(df: DataFrame, text_col: str = "text") -> DataFrame:
+def scrub_pii(df: DataFrame) -> DataFrame:
     """PII redaction — the scrub pass every training-data pipeline runs
     before tokenization: replace emails / IPv4s / phone numbers with typed
     placeholder tokens, and surface per-doc match counts plus a digest of
     the scrubbed text (the audit trail proving WHAT was redacted, without
     retaining it). All JVM-side regexp built-ins, embarrassingly parallel,
     no shuffle."""
-    t = F.col(text_col)
+    t = F.col("text")
     red: Column = t
     for pat, token in _PII_ORDER:
         red = F.regexp_replace(red, pat, token)
@@ -371,8 +372,8 @@ def _cms_cells(key: Column) -> Column:
     )
 
 
-def cms_heavy_hitters(df: DataFrame, k: int = CMS_K) -> DataFrame:
-    """Count-min-sketch heavy hitters over the token stream: the top-k
+def cms_heavy_hitters(df: DataFrame) -> DataFrame:
+    """Count-min-sketch heavy hitters over the token stream: the top-CMS_K
     tokens by exact count, each with its CMS estimate and the (always
     non-negative) collision overestimate — a standing record of sketch
     accuracy, the KMV/HLL pattern applied to point frequencies.
@@ -388,7 +389,7 @@ def cms_heavy_hitters(df: DataFrame, k: int = CMS_K) -> DataFrame:
         F.explode(F.split(F.col("norm"), " ")).alias("tok")
     ).filter(F.col("tok") != "")
     exact = toks.groupBy("tok").agg(F.count("*").alias("exact_n"))
-    topk = exact.orderBy(F.desc("exact_n"), F.asc("tok")).limit(k)
+    topk = exact.orderBy(F.desc("exact_n"), F.asc("tok")).limit(CMS_K)
     sketch = (
         toks.select(F.explode(_cms_cells(F.col("tok"))).alias("c"))
         .select("c.r", "c.bucket")

@@ -213,84 +213,6 @@ def extract_in_memory(spark: SparkSession, corpus: DataFrame, num_partitions: in
     return extract_spans(salt_repartition(corpus, num_partitions))
 
 
-def compact_extracted(
-    spark: SparkSession, out_dir: str, files_per_partition: int = 1
-) -> dict:
-    """Small-files compaction: rewrite each COMMITTED partition's data as
-    ``files_per_partition`` files (default 1) via dynamic partition
-    overwrite, content-preserving.
-
-    The append/resume pattern leaves one file per task per partition dir;
-    at 10^12 docs that debris degrades every subsequent scan (file-listing
-    + per-file open cost dominate). Compaction clusters rows by part_key
-    (one shuffle over the committed store — the same cost a single read
-    pays) and atomically replaces only the committed partitions;
-    uncommitted partitions are untouched."""
-    df = read_extracted(spark, out_dir)
-    n_parts = len(committed_parts(spark, out_dir))
-    if n_parts == 0:
-        return {"parts_compacted": 0}
-    # k doc_id hash sub-buckets per part: a part lands in at most k tasks,
-    # so at most k files (part_key alone gives one task, one file). Murmur3,
-    # not xxhash64: part_key is pmod(xxhash64(doc_id), parts), so an xxhash64
-    # bucket would repeat it whenever k and parts share a factor.
-    # sortWithinPartitions(doc_id): each compacted file carries a monotone
-    # doc_id run, so parquet row-group min/max stats prune a point lookup
-    # to one row group per file. The HOT write path stays salt-randomized
-    # (sorting there would concentrate giants again); clustering belongs to
-    # this already-shuffling maintenance pass.
-    k = files_per_partition
-    sub_bucket = F.pmod(F.hash("doc_id"), F.lit(k))
-    compacted = df.repartition(
-        n_parts * k, F.col("part_key"), sub_bucket
-    ).sortWithinPartitions("part_key", "doc_id")
-    catalog.overwrite_partitions(
-        compacted, _extracted_path(out_dir), partition_by=["part_key"]
-    )
-    return {"parts_compacted": n_parts}
-
-
-def changed_docs(old_corpus: DataFrame, new_corpus: DataFrame) -> DataFrame:
-    """Snapshot-to-snapshot change detection: full outer join on doc_id of
-    the order-sensitive span-sequence hashes -> one row per differing doc,
-    tagged added / removed / changed. Unchanged docs drop out, so a daily
-    refresh of a 10^12-doc corpus re-extracts only the delta. The hash is
-    computed scan-side (codegen'd span fold) — the join carries 2 slim
-    columns, never payloads."""
-    from tika_wrap_spark import functions as tw  # noqa: PLC0415
-
-    o = old_corpus.select("doc_id", tw.span_seq_hash("spans").alias("old_h"))
-    n = new_corpus.select("doc_id", tw.span_seq_hash("spans").alias("new_h"))
-    joined = o.join(n, "doc_id", "full_outer")
-    return joined.filter(
-        F.col("old_h").isNull()
-        | F.col("new_h").isNull()
-        | (F.col("old_h") != F.col("new_h"))
-    ).select(
-        "doc_id",
-        F.when(F.col("old_h").isNull(), F.lit("added"))
-        .when(F.col("new_h").isNull(), F.lit("removed"))
-        .otherwise(F.lit("changed"))
-        .alias("status"),
-    )
-
-
-def run_incremental(
-    spark: SparkSession,
-    old_corpus: DataFrame,
-    new_corpus: DataFrame,
-    num_partitions: int | None = None,
-) -> DataFrame:
-    """Incremental refresh: extract ONLY the added/changed documents of the
-    new snapshot (semi join against the delta — broadcast when small,
-    shuffle otherwise; removed docs are the caller's delete list)."""
-    delta = changed_docs(old_corpus, new_corpus).filter(
-        F.col("status").isin("added", "changed")
-    )
-    todo = new_corpus.join(delta.select("doc_id"), "doc_id", "left_semi")
-    return extract_in_memory(spark, todo, num_partitions=num_partitions)
-
-
 def write_shards(
     df: DataFrame,
     out_dir: str,

@@ -22,12 +22,10 @@ ARROW_MAX_RECORDS = 2048
 def get_spark(
     master: str = "local[32]",
     app_name: str = "tika_wrap_spark",
-    shuffle_partitions: int | None = None,
     driver_memory: str = "48g",
 ) -> SparkSession:
-    if shuffle_partitions is None:
-        n = master[master.find("[") + 1 : master.find("]")] if "[" in master else "32"
-        shuffle_partitions = 32 if n == "*" else max(int(n), 1)
+    n = master[master.find("[") + 1 : master.find("]")] if "[" in master else "32"
+    shuffle_partitions = 32 if n == "*" else max(int(n), 1)
     builder = (
         SparkSession.builder.master(master)
         .appName(app_name)

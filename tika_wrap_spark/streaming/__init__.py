@@ -9,8 +9,8 @@ fused extraction operator (``extract_spans`` works unchanged on streaming
 DataFrames — mapInPandas is streaming-compatible), and appended exactly-once
 via the streaming checkpoint.
 
-``trigger(availableNow=True)`` drains the backlog and stops — the streaming
-equivalent of a resumable batch run; leave it off for continuous tailing.
+``stream_extract`` triggers with ``availableNow=True``: it drains the
+backlog and stops — the streaming equivalent of a resumable batch run.
 """
 
 from __future__ import annotations
@@ -22,42 +22,24 @@ from tika_wrap_spark.portability import enter_worker, make_portable
 from tika_wrap_spark.schemas import CORPUS_SCHEMA
 
 
-def read_corpus_stream(
-    spark: SparkSession, input_dir: str, max_files_per_trigger: int | None = None
-) -> DataFrame:
-    """File-source stream over a growing directory of corpus parquet files.
-    ``maxFilesPerTrigger`` bounds per-microbatch work (backpressure knob)."""
-    reader = spark.readStream.schema(CORPUS_SCHEMA)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    return reader.parquet(input_dir)
-
-
-def stream_extract(
-    spark: SparkSession,
-    input_dir: str,
-    out_dir: str,
-    checkpoint_dir: str,
-    available_now: bool = True,
-    max_files_per_trigger: int | None = None,
-):
-    """Stream corpus files -> fused extraction -> parquet sink.
+def stream_extract(spark: SparkSession, input_dir: str, out_dir: str, checkpoint_dir: str):
+    """Stream the corpus parquet files of a growing directory -> fused
+    extraction -> parquet sink, drained with ``availableNow``.
 
     Exactly-once per input file via the streaming checkpoint (the streaming
-    analog of pipeline.py's lineage anti-join). Returns the StreamingQuery;
-    with ``available_now`` call ``.awaitTermination()`` to drain-and-stop.
+    analog of pipeline.py's lineage commit). Returns the StreamingQuery;
+    call ``.awaitTermination()`` to drain-and-stop.
     """
-    stream = read_corpus_stream(spark, input_dir, max_files_per_trigger)
-    extracted = extract_spans(stream)
-    writer = (
-        extracted.writeStream.format("parquet")
+    stream = spark.readStream.schema(CORPUS_SCHEMA).parquet(input_dir)
+    return (
+        extract_spans(stream)
+        .writeStream.format("parquet")
         .option("path", out_dir)
         .option("checkpointLocation", checkpoint_dir)
         .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 # ---------------------------------------------------------------------------
